@@ -36,7 +36,7 @@ from .analyzer import (
     ParsedSimpleQuery,
     ParsedTemporalAggregatedQuery,
 )
-from .model import DEFAULT_SHARD_INTERVAL_MS, SHARD_COL, MetricSchema
+from .model import DEFAULT_SHARD_INTERVAL_MS, SHARD_COL, MetricSchema, shard_start
 from .sql import ast
 
 
@@ -159,16 +159,16 @@ def serving_sql(
     schema: MetricSchema,
     ctx: TimeContext,
     view: str,
-    shard_ivs: list[tuple[int, int | None]],
-    shard_interval_ms: int,
+    shards: list[tuple[int, int | None]],
 ) -> tuple[str, dict]:
     """One parameterized SQL statement equivalent to the plain
     non-DISTINCT pipeline compile()/_simple builds Column-by-Column:
-    projection (timestamp+value always), shard conjunct ANDed into the
-    SAME WHERE as the condition, ORDER BY, LIMIT. The engine's point
-    route feeds this to serving_session.sql(text, args) — a single py4j
-    roundtrip replaces the per-node Column construction chatter that
-    dominated the uncached point-statement floor."""
+    projection (timestamp+value always), the shard_ranges() conjunct
+    `shards` ANDed into the SAME WHERE as the condition, ORDER BY,
+    LIMIT. The engine's point route feeds this to
+    serving_session.sql(text, args) — a single py4j roundtrip replaces
+    the per-node Column construction chatter that dominated the uncached
+    point-statement floor."""
     stmt = parsed.statement
     args: dict = {}
     fields = parsed.fields
@@ -179,15 +179,12 @@ def serving_sql(
         cols += [f for f in fields if f not in ("timestamp", "value")]
     parts = [f"SELECT {', '.join(_sql_ident(c) for c in cols)} FROM {_sql_ident(view)}"]
     conjuncts = []
-    if shard_ivs:
+    if shards:
         ors = []
-        for lo, hi in shard_ivs:
-            p = f"{_sql_ident(SHARD_COL)} >= {bind_named(args, (lo // shard_interval_ms) * shard_interval_ms)}"
-            if hi is not None:
-                p = (
-                    f"({p} AND {_sql_ident(SHARD_COL)} <= "
-                    f"{bind_named(args, (hi // shard_interval_ms) * shard_interval_ms)})"
-                )
+        for first, last in shards:
+            p = f"{_sql_ident(SHARD_COL)} >= {bind_named(args, first)}"
+            if last is not None:
+                p = f"({p} AND {_sql_ident(SHARD_COL)} <= {bind_named(args, last)})"
             ors.append(p)
         conjuncts.append("(" + " OR ".join(ors) + ")")
     if stmt.condition is not None:
@@ -378,6 +375,39 @@ def _complement(ivs: list[tuple[int, int | None]]) -> list[tuple[int, int | None
     return out
 
 
+def shard_ranges(
+    ivs: list[tuple[int, int | None]], shard_interval_ms: int
+) -> list[tuple[int, int | None]]:
+    """The [first, last] shard_start range each time interval touches
+    (last None = unbounded) — the one statement of the shard-pruning
+    arithmetic behind SELECT partition filters, the point route's gate and
+    EXPLAIN (NSDb location filtering analogue, ReadNodesSelection.scala:40-49).
+    It assumes every shard start is aligned to shard_interval_ms; DELETE,
+    which must not miss a shard written under an older interval, uses an
+    overlap test instead."""
+    return [
+        (
+            shard_start(lo, shard_interval_ms),
+            None if hi is None else shard_start(hi, shard_interval_ms),
+        )
+        for lo, hi in ivs
+    ]
+
+
+def touched_shards(
+    locations: list[int], ivs: list[tuple[int, int | None]], shard_interval_ms: int
+) -> list[int]:
+    """The shard starts among `locations` that an interval set touches;
+    all of them when ivs is [] (no time constraint)."""
+    if not ivs:
+        return list(locations)
+    ranges = shard_ranges(ivs, shard_interval_ms)
+    return [
+        s for s in locations
+        if any(first <= s and (last is None or s <= last) for first, last in ranges)
+    ]
+
+
 def envelope(ivs: list[tuple[int, int | None]]) -> tuple[int | None, int | None]:
     """(lowest lower bound, highest upper bound) of a set of intervals."""
     if not ivs:
@@ -419,27 +449,18 @@ class QueryCompiler:
         parsed: ParsedQuery,
         ctx: TimeContext | None = None,
         locations: list[int] | None = None,
-        pre_filter: Column | None = None,
     ) -> DataFrame:
         """locations: known shard_start values (partition listing). For
         temporal queries they give the bucket upper bound without a data
         scan — at scale this is a metadata lookup, parity with NSDb's
-        location filtering (ReadCoordinator.scala:210-214).
-
-        pre_filter: an extra predicate (the engine's shard-pruning
-        conjunct) ANDed into the SAME filter as the WHERE condition —
-        one Dataset fewer on the point-serving path, where every eager
-        analysis pass is measurable."""
+        location filtering (ReadCoordinator.scala:210-214)."""
         ctx = ctx or TimeContext(_now_ms())
         stmt = parsed.statement
-        cond = (
-            compile_expression(stmt.condition.expression, ctx)
+        filtered = (
+            df.filter(compile_expression(stmt.condition.expression, ctx))
             if stmt.condition is not None
-            else None
+            else df
         )
-        if pre_filter is not None:
-            cond = pre_filter if cond is None else (pre_filter & cond)
-        filtered = df if cond is None else df.filter(cond)
 
         if isinstance(parsed, ParsedSimpleQuery):
             return self._simple(filtered, schema, parsed)

@@ -9,6 +9,7 @@ HashAggregate partial/final replaces the shard/node reduce tree.
 from __future__ import annotations
 
 import dataclasses
+import functools
 import hashlib
 import logging
 import os
@@ -16,7 +17,7 @@ import shutil
 import threading
 import time
 from collections import OrderedDict
-from typing import Any
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,9 +27,10 @@ from .catalog import Warehouse
 from .compiler import (
     QueryCompiler,
     TimeContext,
-    envelope,
     extract_time_range,
     serving_sql,
+    shard_ranges,
+    touched_shards,
 )
 from .model import (
     Bit,
@@ -46,6 +48,69 @@ _log = logging.getLogger(__name__)
 class RetentionError(Exception):
     """Bit outside the retention window rejected at write
     (MetadataCoordinator.scala:485-489 parity)."""
+
+
+class TokenCache:
+    """A bounded LRU map whose entries are valid only under the token they
+    were stored with (NsdbEngine._cache_token) — the one policy behind the
+    engine's plan, row, frame and serving-view caches:
+
+    - get(key, token) hits only on an EXACT token match, so nothing stale
+      is ever served;
+    - put(key, token, value) replaces an entry unless the stored token's
+      in-process version (token[0]) is newer. That version is the only
+      monotone token component — the mtime components can REGRESS (an
+      out-of-process drop+recreate restarts them), and comparing full
+      tuples would wedge a key into permanent misses. A put that loses a
+      race costs one re-execution, never stale data;
+    - past CAP entries the least recently served entry is evicted."""
+
+    CAP = 256
+
+    def __init__(self):
+        self._entries: "OrderedDict[tuple, tuple]" = OrderedDict()
+        self._lock = threading.Lock()
+
+    def get(self, key: tuple, token: tuple):
+        """The value stored under exactly `token`, else None."""
+        with self._lock:
+            ent = self._entries.get(key)
+            if ent is None or ent[0] != token:
+                return None
+            self._entries.move_to_end(key)
+            return ent[1]
+
+    def put(self, key: tuple, token: tuple, value, publish=None) -> None:
+        """Store value under token (see the class rule). `publish`, when
+        given, runs under the lock only if the put wins, so global state
+        it sets (a temp view) changes in the same order as the entries."""
+        with self._lock:
+            cur = self._entries.get(key)
+            if cur is not None and cur[0][0] > token[0]:
+                return
+            if publish is not None:
+                publish()
+            self._entries[key] = (token, value)
+            self._entries.move_to_end(key)
+            while len(self._entries) > self.CAP:
+                self._entries.popitem(last=False)
+
+    def clear(self) -> None:
+        with self._lock:
+            self._entries.clear()
+
+
+class _Planned(NamedTuple):
+    """A plan-cache entry."""
+
+    plan: tuple  # (DataFrame, analyzed plan, rollup-routed?)
+    rows: list | None = None  # collected rows, at most _CACHED_ROWS_MAX
+    complete: bool = False  # rows are the statement's whole result
+
+
+def _serving_view(db: str, ns: str, metric: str) -> str:
+    """Name of a metric's serving temp view on the point-serving session."""
+    return "nsdb_pt_" + hashlib.md5(repr((db, ns, metric)).encode()).hexdigest()[:16]
 
 
 class NsdbEngine:
@@ -67,28 +132,31 @@ class NsdbEngine:
         # serialize per metric (the Warehouse._schema_lock discipline)
         self._rollup_locks: dict[tuple[str, str, str], threading.Lock] = {}
         self._rollup_locks_guard = threading.Lock()
-        # statement→plan cache for the point-query path: repeated identical
-        # SELECTs (the reference's signature Gatling/gRPC workload shape,
-        # LoadSimulation.scala:47) re-pay parse→analyze→spark.read→compile
-        # on every call — ~99 ms/rpc of pure plan build at local[32]. Keyed
-        # on (db, ns, metric, statement fingerprint) and guarded by a
-        # per-metric mutation counter + schema-file mtime, so any write,
-        # delete, drop, restore, retention eviction, or rollup (de)registration
-        # invalidates. Time-dependent statements (relative `now`, SINCE
-        # grace) bypass — their compiled literals embed the clock.
-        self._plan_cache: "OrderedDict[tuple, tuple]" = OrderedDict()
-        self._plan_cache_lock = threading.Lock()
-        self._plan_cache_cap = 256
+        # statement→plan cache: repeated identical SELECTs (the
+        # reference's signature Gatling/gRPC workload shape,
+        # LoadSimulation.scala:47) would re-pay parse→analyze→spark.read→
+        # compile on every call — ~99 ms/rpc of pure plan build at
+        # local[32]. Keyed on (db, ns, metric, statement fingerprint); an
+        # entry holds the plan plus, up to _CACHED_ROWS_MAX, its collected
+        # rows (see collect_select). Valid only under the _cache_token it
+        # was stored with, so any write, delete, drop, restore, retention
+        # eviction, or rollup (de)registration invalidates. Time-dependent
+        # statements (relative `now`, SINCE grace) bypass — their compiled
+        # literals embed the clock.
+        self._plans = TokenCache()
+        # (db, ns, metric, serving?) -> base metric frame on the analytics
+        # session or the point-serving session (a Dataset is bound to the
+        # session that analyzed it); storing a serving frame registers it
+        # as the metric's serving temp view (see _read_metric_frame)
+        self._frames = TokenCache()
+        # token[0] is (cache generation, in-process mutation counter of the
+        # metric); both written under self._lock, which also guards the lazy
+        # serving-session build. invalidate_plan_caches starts a new
+        # generation, so a put whose token predates it loses to every later
+        # put instead of outranking the restarted counters.
+        self._generation = 0
         self._metric_versions: dict[tuple[str, str, str], int] = {}
-        # (db, ns, metric) -> (token, base DataFrame): see read_metric
-        self._metric_frame_cache: dict[tuple, tuple] = {}
-        # shape-keyed cache for plain SELECTs with a LIMIT: key = the AST
-        # fingerprint with the LIMIT slot stripped; value = [token,
-        # pre-limit DataFrame, over-fetched row superset (or None),
-        # fetch bound, exhaustive?]. 100 statements identical but for the
-        # LIMIT literal (the dashboard shape) compile+execute ONCE and
-        # bind each limit as a row slice — see _collect_via_shape.
-        self._shape_cache: "OrderedDict[tuple, list]" = OrderedDict()
+        self._lock = threading.Lock()
         # point-query SERVING session: a newSession() sharing the
         # SparkContext but with codegen + AQE disabled. Novel point
         # statements (unique literals — no cache can serve them) pay
@@ -96,24 +164,23 @@ class NsdbEngine:
         # session, which dominates the ~60-90 ms uncached floor; for a
         # shard-pruned plain SELECT with a small LIMIT the interpreted
         # path is strictly faster (the scan is a few columnar batches and
-        # CollectLimit stops early). Built lazily; frames cached per
-        # token like _metric_frame_cache.
+        # CollectLimit stops early). Built lazily.
         self._serving_spark: SparkSession | None = None
-        self._serving_frame_cache: dict[tuple, tuple] = {}
-        # (db, ns, metric) -> token of the frame currently registered as
-        # that metric's serving temp view (see _serving_view)
-        self._serving_view_tokens: dict[tuple, tuple] = {}
 
     # ------------------------------------------------------ plan-cache plumbing
-    def _metric_version(self, db: str, ns: str, metric: str) -> int:
-        return self._metric_versions.get((db, ns, metric), 0)
+    def _metric_version(self, db: str, ns: str, metric: str) -> tuple[int, int]:
+        # generation first: invalidate_plan_caches clears the counters
+        # before it bumps the generation, so a new generation is never
+        # paired with a pre-clear counter
+        gen = self._generation
+        return (gen, self._metric_versions.get((db, ns, metric), 0))
 
     def _bump_metric_version(self, db: str, ns: str, metric: str) -> None:
         """Any mutation that can change a compiled plan's result: data
         writes/deletes, schema unions, drops, restores, retention
         eviction, rollup materialization/invalidation."""
         key = (db, ns, metric)
-        with self._plan_cache_lock:
+        with self._lock:
             self._metric_versions[key] = self._metric_versions.get(key, 0) + 1
 
     def _schema_mtime(self, db: str, ns: str, metric: str) -> int:
@@ -126,10 +193,12 @@ class NsdbEngine:
             return -1
 
     def _cache_token(self, db: str, ns: str, metric: str) -> tuple:
-        """Validity token shared by the plan/result/frame caches.
+        """Validity token of every entry in the engine's two TokenCaches:
+        _plans (plans with their collected rows) and _frames (base metric
+        frames and the serving temp views registered with them).
 
-        Coverage, precisely: (a) the in-process mutation counter covers
-        EVERY mutation made through this engine; (b) schema.json mtime
+        Coverage, precisely: (a) the in-process version (_metric_version)
+        covers EVERY mutation made through this engine; (b) schema.json mtime
         covers out-of-process INSERTS (update_schema rewrites the file on
         every write) and schema unions; (c) the data-dir mtime covers
         out-of-process DELETE / DROP / retention eviction (each removes or
@@ -154,17 +223,25 @@ class NsdbEngine:
             dir_mtime,
         )
 
+    def _cache_slot(self, stmt: ast.SelectSQLStatement) -> tuple:
+        """(plan-cache key, token) for a deterministic statement, keyed by
+        the frozen-dataclass AST fingerprint; (None, None) when its
+        compiled literals embed the clock (relative `now`, SINCE grace)."""
+        fp = repr(stmt)
+        if stmt.grace_period is not None or "RelativeComparisonValue" in fp:
+            return None, None
+        db, ns = stmt.db or "default", stmt.namespace or "default"
+        return (db, ns, stmt.metric, fp), self._cache_token(db, ns, stmt.metric)
+
     def invalidate_plan_caches(self) -> None:
         """Drop every cached plan, result set, and base frame — the seam
         for out-of-process maintenance (compaction/Z-order from another
         engine) that the mtime-based token cannot observe."""
-        with self._plan_cache_lock:
-            self._plan_cache.clear()
-            self._metric_frame_cache.clear()
-            self._serving_frame_cache.clear()
-            self._serving_view_tokens.clear()
-            self._shape_cache.clear()
+        self._plans.clear()
+        self._frames.clear()
+        with self._lock:
             self._metric_versions.clear()
+            self._generation += 1
 
     def _serving_session(self) -> SparkSession:
         """The interpreted point-serving session (see __init__). AQE,
@@ -174,7 +251,7 @@ class NsdbEngine:
         s = self._serving_spark
         if s is not None:
             return s
-        with self._plan_cache_lock:
+        with self._lock:
             if self._serving_spark is None:
                 from .session import apply_tuned_sql_confs
 
@@ -548,50 +625,26 @@ class NsdbEngine:
         JVM file index on every call (~tens of ms), which dominates the
         plan path for DISTINCT statements over the same metric. Any
         mutation bumps the version and the next read re-lists."""
-        return self._read_metric_frame(
-            db, ns, metric, self.spark, self._metric_frame_cache
-        )
-
-    def _read_metric_serving(self, db: str, ns: str, metric: str) -> DataFrame:
-        """read_metric against the interpreted point-serving session —
-        its own frame cache because a Dataset is bound to the session
-        that analyzed it."""
-        return self._read_metric_frame(
-            db, ns, metric, self._serving_session(), self._serving_frame_cache
-        )
-
-    def _serving_view(self, db: str, ns: str, metric: str, sdf: DataFrame) -> str:
-        """Temp-view name for a metric's serving frame, registering (or
-        re-registering) the view when the metric's cache token moved.
-        spark.sql ANALYZES EAGERLY, so a returned DataFrame binds the
-        view's relation at call time — replacing the view later never
-        retargets an already-planned statement. Registration happens
-        under the cache lock: the view is named global state, and an
-        older-token registration racing past a newer one would serve
-        deleted rows for a full token cycle (the in-process version
-        counter, token[0], is the only monotone component — same policy
-        as the shape cache)."""
-        key = (db, ns, metric)
-        token = self._cache_token(db, ns, metric)
-        name = "nsdb_pt_" + hashlib.md5(repr(key).encode()).hexdigest()[:16]
-        with self._plan_cache_lock:
-            cur = self._serving_view_tokens.get(key)
-            if cur == token:
-                return name
-            if cur is None or cur[0] <= token[0]:
-                sdf.createOrReplaceTempView(name)
-                self._serving_view_tokens[key] = token
-        return name
+        return self._read_metric_frame(db, ns, metric, serving=False)
 
     def _read_metric_frame(
-        self, db: str, ns: str, metric: str, session: SparkSession, cache: dict
+        self, db: str, ns: str, metric: str, serving: bool
     ) -> DataFrame:
-        key = (db, ns, metric)
+        """read_metric on the analytics session, or (serving=True) on the
+        interpreted point-serving session. Storing a serving frame also
+        registers it as the metric's serving temp view, _serving_view(),
+        under the frame cache's lock and its monotone-replace rule: the
+        view is named global state, and an older-token registration
+        racing past a newer one would serve deleted rows for a full token
+        cycle. spark.sql ANALYZES EAGERLY, so a planned statement binds
+        the view's relation at call time — replacing the view later never
+        retargets it."""
+        key = (db, ns, metric, serving)
         token = self._cache_token(db, ns, metric)
-        with self._plan_cache_lock:
-            hit = cache.get(key)
-            if hit is not None and hit[0] == token:
-                return hit[1]
+        df = self._frames.get(key, token)
+        if df is not None:
+            return df
+        session = self._serving_session() if serving else self.spark
         schema = self.warehouse.get_schema(db, ns, metric)
         dp = self.warehouse.data_path(db, ns, metric)
         if not self.warehouse.locations(db, ns, metric):
@@ -607,10 +660,11 @@ class NsdbEngine:
                 .option("ignoreMissingFiles", "true")
                 .parquet(dp)
             )
-        with self._plan_cache_lock:
-            cache[key] = (token, df)
-            while len(cache) > self._plan_cache_cap:
-                cache.pop(next(iter(cache)))
+        publish = (
+            functools.partial(df.createOrReplaceTempView, _serving_view(db, ns, metric))
+            if serving else None
+        )
+        self._frames.put(key, token, df, publish)
         return df
 
     def execute(
@@ -657,71 +711,59 @@ class NsdbEngine:
         df, _parsed, _routed = self._plan_select(stmt, time_context)
         return df
 
-    #: result rows are cached alongside the plan only under this bound —
-    #: the cache is for the dashboard/point-query shape, not bulk scans
-    _RESULT_CACHE_MAX_ROWS = 10_000
+    #: collected rows are cached alongside a plan only under this bound —
+    #: the cache is for the dashboard/point-query shape, not bulk scans.
+    #: It is also the shape over-fetch: the first execution of a LIMIT-k
+    #: plain SELECT fetches max(k, this) rows, so every later limit up to
+    #: the bound binds as a slice with NO Spark job (CollectLimit /
+    #: TakeOrdered make the over-fetch nearly free at point-query scale).
+    _CACHED_ROWS_MAX = 10_000
 
     def collect_select(
         self, stmt: ast.SelectSQLStatement, time_context: TimeContext | None = None
     ) -> list:
-        """execute_select + collect, with the collected rows cached under
-        the SAME (statement fingerprint, metric version, schema mtime)
-        token as the compiled plan: a repeated identical point query (the
-        reference's Gatling/gRPC load shape) skips Spark's per-action
-        overhead entirely, and any mutation invalidates rows and plan
-        together. Results above _RESULT_CACHE_MAX_ROWS rows are returned
-        but not retained. Cache hits return a COPY of the stored list —
-        callers may mutate their result without poisoning the cache.
+        """execute_select + collect, with the collected rows cached in the
+        SAME plan-cache entry as the compiled plan: a repeated identical
+        point query (the reference's Gatling/gRPC load shape) skips
+        Spark's per-action overhead entirely, and any mutation invalidates
+        rows and plan together. Results above _CACHED_ROWS_MAX rows are
+        returned but not retained. Cache hits return a COPY of the stored
+        list — callers may mutate their result without poisoning the
+        cache.
 
         Statements that differ only in the LIMIT literal additionally
-        share one shape-keyed execution (see _collect_via_shape)."""
-        db, ns = stmt.db or "default", stmt.namespace or "default"
-        fp = repr(stmt)
-        cacheable = (
-            stmt.grace_period is None and "RelativeComparisonValue" not in fp
-        )
-        key = token = None
-        if cacheable:
-            key = (db, ns, stmt.metric, fp)
-            token = self._cache_token(db, ns, stmt.metric)
-            with self._plan_cache_lock:
-                hit = self._plan_cache.get(key)
-                if hit is not None and hit[0] == token and hit[2] is not None:
-                    self._plan_cache.move_to_end(key)
-                    return list(hit[2])
+        share one execution of the LIMIT-stripped statement (see
+        _collect_via_shape)."""
+        slot = self._cache_slot(stmt)
+        key, token = slot
+        if key is not None:
+            hit = self._plans.get(key, token)
+            if hit is not None and hit.complete:
+                return list(hit.rows)
             if stmt.limit is not None:
-                shaped = self._collect_via_shape(db, ns, stmt, time_context, token)
+                shaped = self._collect_via_shape(stmt, time_context, key, token)
                 if shaped is not None:
                     return shaped
-        rows = self.execute_select(stmt, time_context).collect()
-        if cacheable and len(rows) <= self._RESULT_CACHE_MAX_ROWS:
-            with self._plan_cache_lock:
-                hit = self._plan_cache.get(key)
-                # only attach to an entry still carrying the same token —
-                # a mutation mid-collect must not resurrect stale rows
-                if hit is not None and hit[0] == token:
-                    hit[2] = list(rows)
+        plan = self._plan_select(stmt, time_context, slot=slot)
+        rows = plan[0].collect()
+        if key is not None and len(rows) <= self._CACHED_ROWS_MAX:
+            self._plans.put(key, token, _Planned(plan, list(rows), True))
         return rows
-
-    #: over-fetch bound for the shape cache: the first execution of a
-    #: LIMIT-k plain SELECT fetches max(k, this) rows so every later
-    #: limit ≤ the bound binds as a slice with NO Spark job. CollectLimit
-    #: / TakeOrdered make the over-fetch nearly free at point-query scale.
-    _SHAPE_OVERFETCH = 10_000
 
     def _collect_via_shape(
         self,
-        db: str,
-        ns: str,
         stmt: ast.SelectSQLStatement,
         time_context: TimeContext | None,
+        key: tuple,
         token: tuple,
     ) -> list | None:
         """Shape-keyed LIMIT binding for the distinct-statement dashboard
         workload: statements identical but for the LIMIT literal compile
-        and execute ONCE — the cached entry holds the pre-limit DataFrame
-        plus an over-fetched row superset, and each limit binds at serve
-        time as a prefix slice.
+        and execute ONCE — the plan-cache entry of the LIMIT-stripped
+        statement holds its plan plus an over-fetched row prefix, and
+        each limit binds at serve time as a prefix slice. When the prefix
+        is the whole result, the entry also answers the statement without
+        a LIMIT.
 
         Scope is deliberately the plain (ParsedSimpleQuery) class only,
         where LIMIT k = "the first k matching rows" and a prefix of a
@@ -731,61 +773,39 @@ class NsdbEngine:
         limit (global count clamps to LIMIT; temporal LIMIT = takeRight —
         SURVEY §2.5), not just their row count. Returns None when the
         statement isn't shape-eligible (the caller falls through to the
-        normal path, which also surfaces analyze errors)."""
+        normal path)."""
         k = stmt.limit.value
         if k <= 0:
             return None
-        # cache lookup FIRST — a hit under a matching token already
-        # proved eligibility at store time, so the serve path pays no
-        # schema-file read and no analyze pass
         nolimit = dataclasses.replace(stmt, limit=None)
-        skey = (db, ns, stmt.metric, repr(nolimit))
-        df_nolimit = None
-        with self._plan_cache_lock:
-            ent = self._shape_cache.get(skey)
-            if ent is not None and ent[0] == token:
-                self._shape_cache.move_to_end(skey)
-                rows, exhaustive = ent[2], ent[3]
-                if rows is not None and (exhaustive or len(rows) >= k):
-                    return list(rows[:k])
-                df_nolimit = ent[1]
-        if df_nolimit is None:
-            # miss: eligibility check (schema read + analyze) happens
-            # only here; errors fall through to the normal path, which
-            # surfaces them with full context
-            try:
-                schema = self.warehouse.get_schema(db, ns, stmt.metric)
-                parsed = analyzer.analyze(stmt, schema)
-            except Exception:
+        skey = key[:3] + (repr(nolimit),)
+        # cache lookup FIRST — a hit proves eligibility through its
+        # analyzed plan, so the serve path pays no schema-file read and
+        # no analyze pass
+        ent = self._plans.get(skey, token)
+        if ent is None:
+            # the analysis the normal path would run (LIMIT plays no part
+            # in it), so an invalid statement raises the same error
+            schema = self.warehouse.get_schema(*key[:3])
+            if not isinstance(analyzer.analyze(stmt, schema), analyzer.ParsedSimpleQuery):
                 return None
-            if not isinstance(parsed, analyzer.ParsedSimpleQuery):
-                return None
-            df_nolimit, _parsed, _routed = self._plan_select(
+            plan = self._plan_select(
                 nolimit,
                 time_context,
                 point_serve=k <= self._POINT_SERVE_MAX_LIMIT,
+                slot=(skey, token),
             )
-        bound = max(k, self._SHAPE_OVERFETCH)
-        rows = df_nolimit.limit(bound).collect()
-        exhaustive = len(rows) < bound
-        keep = rows if len(rows) <= self._RESULT_CACHE_MAX_ROWS else None
-        with self._plan_cache_lock:
-            cur = self._shape_cache.get(skey)
-            # replace stale entries; the only newer-vs-older signal that
-            # is actually monotone is the in-process mutation counter
-            # (token[0]) — mtime components can REGRESS (an
-            # out-of-process drop+recreate restarts them), and comparing
-            # full tuples would wedge the key into permanent misses.
-            # Serving requires exact token equality, so a lost race here
-            # costs one wasted re-execution, never stale data.
-            if cur is None or cur[0][0] <= token[0]:
-                self._shape_cache[skey] = [
-                    token, df_nolimit, keep, exhaustive and keep is not None,
-                ]
-                self._shape_cache.move_to_end(skey)
-                while len(self._shape_cache) > self._plan_cache_cap:
-                    self._shape_cache.popitem(last=False)
-        return list(rows[:k])
+        elif not isinstance(ent.plan[1], analyzer.ParsedSimpleQuery):
+            return None
+        elif ent.rows is not None and (ent.complete or len(ent.rows) >= k):
+            return ent.rows[:k]
+        else:
+            plan = ent.plan
+        bound = max(k, self._CACHED_ROWS_MAX)
+        rows = plan[0].limit(bound).collect()
+        if len(rows) <= self._CACHED_ROWS_MAX:
+            self._plans.put(skey, token, _Planned(plan, rows, len(rows) < bound))
+        return rows[:k]
 
     #: point-serving gates: route a plain SELECT through the interpreted
     #: serving session only when the caller wants at most this many rows
@@ -801,111 +821,74 @@ class NsdbEngine:
         stmt: ast.SelectSQLStatement,
         time_context: TimeContext | None = None,
         point_serve: bool = False,
+        slot: tuple | None = None,
     ) -> tuple[DataFrame, Any, bool]:
         """Shared SELECT planning: (DataFrame, analyzed plan, rollup-routed?).
         execute_select returns the frame; explain_select reports the rest.
 
-        point_serve: the caller (the shape cache, which strips LIMIT
+        point_serve: the caller (the shape path, which strips LIMIT
         before planning) vouches that only a point-read-sized prefix of
         the result will be fetched — makes the statement eligible for
-        the interpreted serving session even without its own LIMIT."""
+        the interpreted serving session even without its own LIMIT.
+        slot: the caller's _cache_slot(stmt), when it already has one."""
+        key, token = slot or self._cache_slot(stmt)
+        if key is not None:
+            hit = self._plans.get(key, token)
+            if hit is not None:
+                return hit.plan
         db, ns = stmt.db or "default", stmt.namespace or "default"
-        # plan-cache fast path: deterministic statements (no relative `now`,
-        # no SINCE grace — both compile clock-dependent literals) keyed by
-        # the frozen-dataclass AST fingerprint, validated against the
-        # per-metric mutation counter + schema-file mtime
-        fp = repr(stmt)
-        cacheable = (
-            stmt.grace_period is None and "RelativeComparisonValue" not in fp
-        )
-        if cacheable:
-            key = (db, ns, stmt.metric, fp)
-            token = self._cache_token(db, ns, stmt.metric)
-            with self._plan_cache_lock:
-                hit = self._plan_cache.get(key)
-                if hit is not None and hit[0] == token:
-                    self._plan_cache.move_to_end(key)
-                    return hit[1]
         schema = self.warehouse.get_schema(db, ns, stmt.metric)
         parsed = analyzer.analyze(stmt, schema)
         ctx = time_context or TimeContext(self.now_fn())
         info = self.warehouse.get_info(db, ns, stmt.metric)
+        si = info["shardInterval"]
         routed = self._route_via_rollup(db, ns, stmt, parsed, info)
         if routed is not None:
             out = (routed, parsed, True)
-        elif self._point_route(stmt, parsed, ctx, info, point_serve):
-            # interpreted serving session, and the WHOLE statement as one
-            # parameterized spark.sql text (shard conjunct folded into the
-            # WHERE) — a single py4j roundtrip instead of ~2 per Column
-            # node, which dominated the uncached point-statement floor
-            # (BASELINE.md decomposition). Any statement the text
-            # generator can't express falls back to the Column pipeline
-            # on the same session; parity between the two routes is
-            # pinned by the grid + hypothesis tests.
-            sdf = self._read_metric_serving(db, ns, stmt.metric)
-            out = None
-            try:
-                ivs = (
-                    extract_time_range(stmt.condition.expression, ctx)
-                    if stmt.condition is not None and SHARD_COL in sdf.columns
-                    else []
-                )
+        else:
+            ivs = extract_time_range(
+                stmt.condition.expression if stmt.condition else None, ctx
+            )
+            locations = self.warehouse.locations(db, ns, stmt.metric)
+            if self._point_route(stmt, parsed, locations, ivs, si, point_serve):
+                # interpreted serving session, and the WHOLE statement as
+                # one parameterized spark.sql text over the serving view
+                # (shard conjunct folded into the WHERE) — a single py4j
+                # roundtrip instead of ~2 per Column node, which dominated
+                # the uncached point-statement floor (BASELINE.md
+                # decomposition). Parity with the Column pipeline is
+                # pinned by the grid + hypothesis tests.
+                self._read_metric_frame(db, ns, stmt.metric, serving=True)
                 text, args = serving_sql(
                     parsed, schema, ctx,
-                    view=self._serving_view(db, ns, stmt.metric, sdf),
-                    shard_ivs=ivs,
-                    shard_interval_ms=info["shardInterval"],
+                    view=_serving_view(db, ns, stmt.metric),
+                    shards=shard_ranges(ivs, si),
                 )
-                out = (
-                    self._serving_session().sql(text, args=args),
-                    parsed,
-                    False,
-                )
-            except Exception:  # pragma: no cover - defensive fallback
-                out = None
-            if out is None:
-                pred = self._shard_predicate(
-                    stmt.condition, ctx, info["shardInterval"]
-                ) if SHARD_COL in sdf.columns else None
+                out = (self._serving_session().sql(text, args=args), parsed, False)
+            else:
+                df = self._prune_shards(self.read_metric(db, ns, stmt.metric), ivs, si)
                 compiler = QueryCompiler(
-                    self._serving_session(),
-                    shard_interval_ms=info["shardInterval"],
+                    self.spark,
+                    shard_interval_ms=si,
                     approx_count_distinct=self.approx_count_distinct,
                 )
                 out = (
-                    compiler.compile(sdf, schema, parsed, ctx, pre_filter=pred),
+                    compiler.compile(
+                        df.drop(SHARD_COL), schema, parsed, ctx, locations=locations or None
+                    ),
                     parsed,
                     False,
                 )
-        else:
-            df = self.read_metric(db, ns, stmt.metric)
-            df = self._prune_shards(df, stmt.condition, ctx, info["shardInterval"])
-            compiler = QueryCompiler(
-                self.spark,
-                shard_interval_ms=info["shardInterval"],
-                approx_count_distinct=self.approx_count_distinct,
-            )
-            locations = self.warehouse.locations(db, ns, stmt.metric)
-            out = (
-                compiler.compile(
-                    df.drop(SHARD_COL), schema, parsed, ctx, locations=locations or None
-                ),
-                parsed,
-                False,
-            )
-        if cacheable:
-            with self._plan_cache_lock:
-                # [token, (df, parsed, routed), collected-rows-or-None]
-                self._plan_cache[key] = [token, out, None]
-                self._plan_cache.move_to_end(key)
-                while len(self._plan_cache) > self._plan_cache_cap:
-                    self._plan_cache.popitem(last=False)
+        if key is not None:
+            self._plans.put(key, token, _Planned(out))
         return out
 
-    def _point_route(self, stmt, parsed, ctx, info, point_serve: bool) -> bool:
+    def _point_route(
+        self, stmt, parsed, locations, ivs, shard_interval: int, point_serve: bool
+    ) -> bool:
         """True when a statement should plan on the interpreted serving
         session: a non-DISTINCT plain SELECT whose caller fetches at most
-        _POINT_SERVE_MAX_LIMIT rows (its own LIMIT, or the shape cache's
+        _POINT_SERVE_MAX_LIMIT rows (its own LIMIT, or the shape path's
         vouched prefix) and whose shard pruning leaves at most
         _POINT_SERVE_MAX_SHARDS shards. DISTINCT and wide scans keep the
         codegen session — they are data-sized regardless of LIMIT."""
@@ -916,26 +899,8 @@ class NsdbEngine:
             or stmt.limit.value > self._POINT_SERVE_MAX_LIMIT
         ):
             return False
-        db, ns = stmt.db or "default", stmt.namespace or "default"
-        locations = self.warehouse.locations(db, ns, stmt.metric)
-        ivs = (
-            extract_time_range(stmt.condition.expression, ctx)
-            if stmt.condition is not None
-            else []
-        )
-        if not ivs:
-            return len(locations) <= self._POINT_SERVE_MAX_SHARDS
-        interval = info["shardInterval"]
-        scanned = sum(
-            1
-            for s in locations
-            if any(
-                s >= (lo // interval) * interval
-                and (hi is None or s <= (hi // interval) * interval)
-                for lo, hi in ivs
-            )
-        )
-        return scanned <= self._POINT_SERVE_MAX_SHARDS
+        scanned = touched_shards(locations, ivs, shard_interval)
+        return len(scanned) <= self._POINT_SERVE_MAX_SHARDS
 
     def explain_select(
         self,
@@ -967,26 +932,11 @@ class NsdbEngine:
         sdb, sns = stmt.db or "default", stmt.namespace or "default"
         ctx = time_context or TimeContext(self.now_fn())
         info = self.warehouse.get_info(sdb, sns, stmt.metric)
-        interval = info["shardInterval"]
         locations = self.warehouse.locations(sdb, sns, stmt.metric)
-        ivs = (
-            extract_time_range(stmt.condition.expression, ctx)
-            if stmt.condition
-            else []
+        ivs = extract_time_range(
+            stmt.condition.expression if stmt.condition else None, ctx
         )
-        if ivs:
-            # the exact shard predicate _prune_shards builds, previewed
-            scanned = [
-                s
-                for s in locations
-                if any(
-                    s >= (lo // interval) * interval
-                    and (hi is None or s <= (hi // interval) * interval)
-                    for lo, hi in ivs
-                )
-            ]
-        else:
-            scanned = list(locations)
+        scanned = touched_shards(locations, ivs, info["shardInterval"])
         df, parsed, routed = self._plan_select(stmt, ctx)
         return {
             "plan_class": type(parsed).__name__,
@@ -1108,6 +1058,8 @@ class NsdbEngine:
         ivs = extract_time_range(stmt.condition.expression, ctx)
         locations = self.warehouse.locations(db, ns, stmt.metric)
         if ivs:
+            # an overlap test, not touched_shards: a shard written before a
+            # shardInterval change can start off the current alignment
             affected = [
                 s for s in locations
                 if any((hi is None or s <= hi) and (s + si - 1 >= lo) for lo, hi in ivs)
@@ -1498,29 +1450,16 @@ class NsdbEngine:
         return out
 
     # ------------------------------------------------------------- pruning
-    def _shard_predicate(self, condition, ctx, shard_interval: int):
-        """The shard_start pruning predicate implied by the WHERE's time
-        intervals, or None when the condition bounds nothing."""
-        if condition is None:
-            return None
-        ivs = extract_time_range(condition.expression, ctx)
-        if not ivs:
-            return None
-        pred = None
-        for lo, hi in ivs:
-            p = F.col(SHARD_COL) >= (lo // shard_interval) * shard_interval
-            if hi is not None:
-                p = p & (F.col(SHARD_COL) <= (hi // shard_interval) * shard_interval)
-            pred = p if pred is None else (pred | p)
-        return pred
-
-    def _prune_shards(self, df, condition, ctx, shard_interval: int):
+    def _prune_shards(self, df, ivs, shard_interval: int):
         """Turn WHERE-implied time intervals into shard_start predicates so
         Catalyst does *partition* pruning, not just row-group skipping
         (NSDb location filtering analogue, ReadNodesSelection.scala:40-49)."""
-        if SHARD_COL not in df.columns:
-            return df
-        pred = self._shard_predicate(condition, ctx, shard_interval)
+        pred = None
+        for first, last in shard_ranges(ivs, shard_interval):
+            p = F.col(SHARD_COL) >= first
+            if last is not None:
+                p = p & (F.col(SHARD_COL) <= last)
+            pred = p if pred is None else (pred | p)
         return df if pred is None else df.filter(pred)
 
     # ------------------------------------------------------------- retention

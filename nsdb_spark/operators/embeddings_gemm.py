@@ -27,8 +27,13 @@ def embedding_cosine_pairs_gemm(
 
     Result-identical to dedup.embedding_cosine_pairs (scores rounded to 6
     decimals; BLAS vs fold summation differs at ~1e-13, far below the
-    rounding grain).
+    rounding grain). Like it, rejects threshold <= 0.
     """
+    if threshold <= 0:
+        # the expression path rejects it (its -0.0 cosine argument needs
+        # the filter to drop everything <= 0); identical results require
+        # the same contract here
+        raise ValueError("embedding_cosine_pairs_gemm: threshold must be > 0")
     import numpy as np
     import pandas as pd
 

@@ -27,6 +27,12 @@ The knobs, all measured and scale-independent:
   default 240 MB code cache, silently disabling JIT compilation for
   every later query in the session.
 
+Both entry points below also install py4j_cache's reflection caches,
+and that patch is PROCESS-GLOBAL: it replaces py4j's ``JVMView`` /
+``JavaClass`` attribute lookups for every gateway and every session in
+the Python process — including sessions this library never built —
+and stays installed for the life of the process. There is no opt-out.
+
 ``hugeMethodLimit`` is a dynamic SQL conf — apply_tuned_sql_confs() can
 retrofit it onto an existing session (the engine does this for the
 sessions it owns; note newSession() shares the parent context's static
@@ -58,6 +64,8 @@ def apply_tuned_sql_confs(spark: SparkSession) -> SparkSession:
 
     Static confs can't be modified on a live session; they arrive via
     tuned_builder() (and newSession() inheritance from a tuned parent).
+    Also installs the process-global py4j reflection patch (see the
+    module docstring).
     """
     from . import py4j_cache
 
@@ -74,7 +82,8 @@ def tuned_builder(
 
     Callers layer their own workload confs (shuffle partitions, AQE,
     memory) on top; this only owns the session-independent knobs
-    documented above.
+    documented above. Like apply_tuned_sql_confs(), it installs the
+    process-global py4j reflection patch.
     """
     from . import py4j_cache
 

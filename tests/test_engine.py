@@ -636,6 +636,19 @@ def test_retention_eviction(engine):
     assert rows(engine.execute("select count(*) from m")) == [(0,)]
 
 
+def test_delete_reaches_shards_written_under_an_older_interval(engine):
+    """Re-initialising a metric can change shardInterval under existing
+    data, leaving shard starts off the new alignment; DELETE selects
+    shards by overlap, so it still removes rows in them."""
+    engine.warehouse.init_metric("default", "default", "ri", shard_interval_ms=1000)
+    engine.insert_bits("default", "default", "ri", [Bit(1500, 1), Bit(2500, 2)])
+    assert sorted(engine.warehouse.locations("default", "default", "ri")) == [1000, 2000]
+    engine.warehouse.init_metric("default", "default", "ri", shard_interval_ms=3000)
+    engine.execute("delete from ri where timestamp = 2500")
+    got = engine.execute("select timestamp from ri order by timestamp")
+    assert [r["timestamp"] for r in got.collect()] == [1500]
+
+
 def test_retention_eviction_invalidates_rollups(engine):
     engine.warehouse.init_metric(
         "default", "default", "rr", shard_interval_ms=1000, retention_ms=2000
@@ -1862,6 +1875,69 @@ def test_shape_cache_mutation_replaces_stale_entry(long_engine):
     assert plans == []
 
 
+def test_token_cache_exact_token_monotone_put_and_lru():
+    """TokenCache, the engine's one cache policy: a hit needs the exact
+    token; a put loses only to a stored entry with a NEWER in-process
+    version (token[0]) — so it still wins after the mtime components
+    regress — and runs its publish hook only when it wins; past the cap
+    the least recently SERVED entry goes first."""
+    from nsdb_spark.engine import TokenCache
+
+    c = TokenCache()
+    c.put("k", (1, 5, 5), "v1")
+    assert c.get("k", (1, 5, 5)) == "v1"
+    assert c.get("k", (1, 5, 6)) is None and c.get("k", (2, 5, 5)) is None
+    # mtime regression at the same version: the put wins
+    c.put("k", (1, 100, 100), "v2")
+    c.put("k", (1, 3, 3), "v3")
+    assert c.get("k", (1, 3, 3)) == "v3"
+    # an older version loses to the stored newer one, and does not publish
+    published = []
+    c.put("k", (2, 1, 1), "v4", publish=lambda: published.append("v4"))
+    c.put("k", (1, 9, 9), "v5", publish=lambda: published.append("v5"))
+    assert c.get("k", (1, 9, 9)) is None and c.get("k", (2, 1, 1)) == "v4"
+    assert published == ["v4"]
+    # LRU by service: at the cap, serving "k" (the oldest put) makes the
+    # next-oldest entry the eviction victim
+    for i in range(TokenCache.CAP - 1):
+        c.put(i, (0, 0, 0), i)
+    assert c.get("k", (2, 1, 1)) == "v4"
+    c.put("m", (0, 0, 0), "m")
+    assert c.get(0, (0, 0, 0)) is None
+    assert c.get(1, (0, 0, 0)) == 1
+    assert c.get("k", (2, 1, 1)) == "v4" and c.get("m", (0, 0, 0)) == "m"
+    c.clear()
+    assert c.get("k", (2, 1, 1)) is None
+
+
+def test_limit_read_complete_rows_serve_unlimited_statement(long_engine, monkeypatch):
+    """A LIMIT read whose over-fetch exhausted the result stores the
+    complete row set under the LIMIT-stripped statement's plan-cache
+    entry; the same statement without LIMIT is then answered from those
+    rows with no Spark action."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    from nsdb_spark.sql.parser import parse
+
+    def stmt(suffix):
+        return parse(
+            f"select * from longMetric order by timestamp{suffix}",
+            db="default", namespace="default",
+        )
+
+    limited = long_engine.collect_select(stmt(" limit 2"))
+    assert [r["timestamp"] for r in limited] == [1, 2]
+    actions = []
+    orig = ClassicDataFrame.collect
+    monkeypatch.setattr(
+        ClassicDataFrame, "collect",
+        lambda self: (actions.append(1), orig(self))[1],
+    )
+    full = long_engine.collect_select(stmt(""))
+    assert [r["timestamp"] for r in full] == [1, 2, 4, 6, 8, 10]
+    assert actions == []
+
+
 def test_shape_cache_store_survives_mtime_regression(long_engine):
     """An out-of-process drop+recreate can REGRESS the token's mtime
     components; the store guard compares only the monotone in-process
@@ -1877,16 +1953,21 @@ def test_shape_cache_store_survives_mtime_regression(long_engine):
         )
 
     long_engine.collect_select(stmt(2))
-    ((skey, ent),) = list(long_engine._shape_cache.items())
+    entries = long_engine._plans._entries
+    ((skey, (tok, ent)),) = list(entries.items())
+    assert "limit=None" in skey[3]
     # simulate a stored token whose mtime components sit in the future
-    # of every token this engine will ever compute again
-    ent[0] = (ent[0][0], ent[0][1] + 10**15, ent[0][2] + 10**15)
-    ent[2] = None  # and force the serve path to miss
+    # of every token this engine will ever compute again, with no rows
+    # (so the serve path misses)
+    entries[skey] = (
+        (tok[0], tok[1] + 10**15, tok[2] + 10**15),
+        ent._replace(rows=None, complete=False),
+    )
     rows = long_engine.collect_select(stmt(3))
     assert len(rows) == 3
-    cur = long_engine._shape_cache[skey]
-    assert cur[0] == long_engine._cache_token("default", "default", "longMetric")
-    assert cur[2] is not None  # re-primed: later limits serve as slices
+    cur_tok, cur = entries[skey]
+    assert cur_tok == long_engine._cache_token("default", "default", "longMetric")
+    assert cur.rows is not None  # re-primed: later limits serve as slices
 
 
 def test_shape_cache_excludes_aggregate_classes(long_engine):
@@ -1902,7 +1983,8 @@ def test_shape_cache_excludes_aggregate_classes(long_engine):
         )
         assert long_engine.collect_select(stmt)[0][0] == want
     assert not any(
-        "count" in key[3] for key in long_engine._shape_cache
+        "count" in key[3] and "limit=None" in key[3]
+        for key in long_engine._plans._entries
     )
 
 
@@ -2074,20 +2156,59 @@ def test_point_serving_view_reregisters_on_mutation(agg_engine):
         "select * from aggregationLongMetric where timestamp = 77 limit 5",
         db="default", namespace="default",
     )
+    # the serving frame entry's token is the token of the frame the
+    # view was registered with
+    key = ("default", "default", "aggregationLongMetric", True)
     assert agg_engine.collect_select(stmt) == []
-    tok0 = agg_engine._serving_view_tokens[
-        ("default", "default", "aggregationLongMetric")]
+    tok0 = agg_engine._frames._entries[key][0]
     agg_engine.insert_bits(
         "default", "default", "aggregationLongMetric",
         [Bit(77, 9, {"surname": "Doe"}, {"name": "Zed", "age": 1, "height": 2.0})],
     )
     got = agg_engine.collect_select(stmt)
     assert [r["timestamp"] for r in got] == [77]
-    tok1 = agg_engine._serving_view_tokens[
-        ("default", "default", "aggregationLongMetric")]
+    tok1 = agg_engine._frames._entries[key][0]
     assert tok1 != tok0
     agg_engine.execute("delete from aggregationLongMetric where timestamp = 77")
     assert agg_engine.collect_select(stmt) == []
+
+
+def test_point_serving_view_put_from_before_invalidate_loses(agg_engine):
+    """invalidate_plan_caches restarts the mutation counters. A serving
+    frame put that was in flight across it (token computed before the
+    clear, at a counter above anything later tokens will reach) must
+    lose to the next read's put, so the view it published is replaced
+    and a row inserted afterwards is served."""
+    import functools
+
+    from nsdb_spark.engine import _serving_view
+    from nsdb_spark.sql.parser import parse
+
+    metric = "aggregationLongMetric"
+    stmt = parse(
+        f"select * from {metric} where timestamp = 77 limit 5",
+        db="default", namespace="default",
+    )
+    key = ("default", "default", metric, True)
+    assert agg_engine.collect_select(stmt) == []
+    for _ in range(5):
+        agg_engine._bump_metric_version("default", "default", metric)
+    stale_df = agg_engine._read_metric_frame("default", "default", metric, serving=True)
+    stale_tok = agg_engine._frames._entries[key][0]
+    agg_engine.invalidate_plan_caches()
+    # the in-flight put lands after the clear
+    agg_engine._frames.put(
+        key, stale_tok, stale_df,
+        functools.partial(
+            stale_df.createOrReplaceTempView, _serving_view("default", "default", metric)
+        ),
+    )
+    agg_engine.insert_bits(
+        "default", "default", metric,
+        [Bit(77, 9, {"surname": "Doe"}, {"name": "Zed", "age": 1, "height": 2.0})],
+    )
+    assert [r["timestamp"] for r in agg_engine.collect_select(stmt)] == [77]
+    assert agg_engine._frames._entries[key][0] != stale_tok
 
 
 def test_point_serving_escapes_exotic_field_names(engine):

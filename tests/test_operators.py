@@ -118,6 +118,11 @@ def test_gemm_pairs_equal_expression_pairs(emb):
         tuple(r) for r in embedding_cosine_pairs_gemm(emb, threshold=0.5, num_blocks=2).collect()
     )
     assert gemm_pairs == expr_pairs
+    # same input contract: a threshold <= 0 is rejected by both
+    for fn in (dedup.embedding_cosine_pairs, embedding_cosine_pairs_gemm):
+        for bad in (0.0, -0.5):
+            with pytest.raises(ValueError, match="threshold must be > 0"):
+                fn(emb, threshold=bad)
 
 
 def test_cosine_topk_gemm_equals_expr(emb):
@@ -6419,8 +6424,12 @@ def test_explode_nonempty_call_sites_match_inner_explode(spark, monkeypatch):
     whitespace-only text) with the helpers as shipped and again with them
     swapped for the INNER explode; the row sets must be identical. A new
     call site that violates the contract fails here."""
-    from nsdb_spark.operators import bpe
+    from nsdb_spark.operators import bpe, embeddings_gemm
 
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.0, 1.0]), (3, [0.1, 0.9])],
+        "vec_id long, embedding array<double>",
+    )
     docs = spark.createDataFrame(
         [
             (1, "the quick brown fox jumps over the lazy dog the quick"),
@@ -6446,6 +6455,12 @@ def test_explode_nonempty_call_sites_match_inner_explode(spark, monkeypatch):
         ),
         "top_bigrams": lambda: text.top_bigrams(docs, k=5),
         "bpe_train": lambda: bpe.bpe_train(docs, num_merges=5)[1],
+        # the block-pair replication explode (a literal-length array)
+        "embedding_cosine_pairs_gemm": lambda: (
+            embeddings_gemm.embedding_cosine_pairs_gemm(
+                emb, threshold=0.5, num_blocks=2
+            )
+        ),
     }
 
     def rows(df):

@@ -1131,7 +1131,7 @@ def test_identical_agg_subscriptions_execute_once_per_tick(manager, engine):
     independent payload dicts — and a tick with NO intervening write
     costs ZERO executions: the historical scan populated the engine's
     token-guarded result cache and the tick serves it. Every
-    Spark-touching path in the tick goes through execute_select, so an
+    Spark-touching path in the tick plans through _plan_select, so an
     empty spy log == zero Spark jobs. (The reference re-executes per
     subscription every tick — PublisherActor.scala:205-218 — so both the
     coalescing and the cache serve are improvements, not parity breaks:
@@ -1144,13 +1144,13 @@ def test_identical_agg_subscriptions_execute_once_per_tick(manager, engine):
     manager.subscribe("select count(*) from people", other)
 
     execs = []
-    orig = engine.execute_select
+    orig = engine._plan_select
 
-    def spy(stmt, tc=None):
+    def spy(stmt, tc=None, **kw):
         execs.append(repr(stmt))
-        return orig(stmt, tc)
+        return orig(stmt, tc, **kw)
 
-    engine.execute_select = spy
+    engine._plan_select = spy
     try:
         manager.tick(5100)
         # no write landed since the historical scans → zero executions,
@@ -1170,7 +1170,7 @@ def test_identical_agg_subscriptions_execute_once_per_tick(manager, engine):
         )
         manager.tick(10100)
     finally:
-        engine.execute_select = orig
+        engine._plan_select = orig
     assert len(execs) == 2 and len(set(execs)) == 2
     for cb in same:
         assert len(cb.pushes) == 3
