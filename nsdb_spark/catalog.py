@@ -6,6 +6,7 @@ Layout (SURVEY.md §1.6):  <root>/<db>/<namespace>/<metric>/
     data/shard_start=<n>/*.parquet — natural-time partitions
       (shard_start = floor(timestamp / interval) * interval,
        MetadataCoordinator.scala:89-91)
+    rollups/registry.json + rollups/<store>/ — materialized rollups
 
 The partition listing doubles as NSDb's "locations" metadata: temporal
 queries derive bucket bounds from it without touching data
@@ -13,6 +14,7 @@ queries derive bucket bounds from it without touching data
 """
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import re
@@ -26,6 +28,33 @@ class MetricNotFound(Exception):
     pass
 
 
+@dataclasses.dataclass(frozen=True)
+class RollupSpec:
+    """One materialized rollup of a metric (operators/rollup.py): its kind
+    ("temporal", "group", "quantile" or "hll"), the field it is keyed on
+    (group, hll), its bucket grain (temporal, quantile, hll), the
+    (lower, upper] time axis it was pinned to at build, and the kind's own
+    parameters: the pinned value grid (quantile) and the HLL precision."""
+
+    kind: str
+    field: str | None = None
+    fine_ms: int | None = None
+    bounds: tuple[int, int] | None = None
+    value_range: tuple[float, float] | None = None
+    nbins: int | None = None
+    p: int | None = None
+
+    @property
+    def store(self) -> str:
+        """The store directory name under <metric>/rollups/."""
+        return {
+            "temporal": f"{self.fine_ms}",
+            "group": f"group_{self.field}",
+            "quantile": f"q_{self.fine_ms}",
+            "hll": f"hll_{self.field}_{self.fine_ms}",
+        }[self.kind]
+
+
 class Warehouse:
     def __init__(self, root: str):
         self.root = root
@@ -36,7 +65,7 @@ class Warehouse:
         # lost field would read as NULL forever)
         self._schema_lock = threading.Lock()
         # rollup registrations are the same read-modify-write pattern over
-        # their meta JSONs: two concurrent materializations (different
+        # registry.json: two concurrent materializations (different
         # grains/fields for one metric) must not lose one side's entry —
         # the loser's rollup data would sit on disk never routed to
         self._rollup_meta_lock = threading.Lock()
@@ -126,8 +155,20 @@ class Warehouse:
 
     def init_metric(
         self, db: str, ns: str, metric: str,
-        shard_interval_ms: int = DEFAULT_SHARD_INTERVAL_MS, retention_ms: int = 0,
+        shard_interval_ms: int | None = None, retention_ms: int = 0,
     ) -> None:
+        """Set the metric's shardInterval (None keeps the current one) and
+        retention. A metric with data keeps its shardInterval: every
+        shard-pruning path (compiler.touched_shards) assumes the shard
+        starts on disk are aligned to the current interval."""
+        si = self.get_info(db, ns, metric)["shardInterval"]
+        if shard_interval_ms is None:
+            shard_interval_ms = si
+        elif shard_interval_ms != si and self.locations(db, ns, metric):
+            raise ValueError(
+                f"{db}.{ns}.{metric} has data sharded at {si} ms; "
+                f"its shardInterval cannot change to {shard_interval_ms} ms"
+            )
         mp = self.metric_path(db, ns, metric)
         os.makedirs(mp, exist_ok=True)
         with open(os.path.join(mp, "meta.json"), "w") as fh:
@@ -189,169 +230,43 @@ class Warehouse:
         return out
 
     # -- rollup registry ----------------------------------------------------
-    # Materialized temporal rollups (operators/rollup.py). rollups.json
-    # maps fine_ms -> {lower, upper} (the pinned bucket-axis bounds the
-    # rollup was built against). ANY write to the metric invalidates all
-    # of its rollups — the engine falls back to the raw path until a
-    # re-materialization (or incremental merge) runs.
-    def rollup_path(self, db: str, ns: str, metric: str, fine_ms: int) -> str:
-        return os.path.join(self.metric_path(db, ns, metric), "rollups", str(fine_ms))
+    # <metric>/rollups/registry.json maps each store directory name
+    # (RollupSpec.store) to that rollup's spec; the store itself is
+    # <metric>/rollups/<store>. One rollups dir holds every kind, so
+    # invalidate_rollups drops all stores and their registrations at once
+    # — the engine then serves raw until a re-materialization.
+    def _rollups_dir(self, db: str, ns: str, metric: str) -> str:
+        return os.path.join(self.metric_path(db, ns, metric), "rollups")
 
-    def _rollup_meta_path(self, db: str, ns: str, metric: str) -> str:
-        return os.path.join(self.metric_path(db, ns, metric), "rollups", "rollups.json")
+    def rollup_path(self, db: str, ns: str, metric: str, spec: RollupSpec) -> str:
+        return os.path.join(self._rollups_dir(db, ns, metric), spec.store)
 
-    def register_rollup(
-        self, db: str, ns: str, metric: str, fine_ms: int, bounds: tuple[int, int]
-    ) -> None:
+    def register_rollup(self, db: str, ns: str, metric: str, spec: RollupSpec) -> None:
+        """Add spec, replacing any registered spec with the same store."""
         with self._rollup_meta_lock:
-            meta = self.rollups(db, ns, metric)
-            meta[fine_ms] = bounds
-            p = self._rollup_meta_path(db, ns, metric)
+            specs = {s.store: s for s in self.rollups(db, ns, metric)}
+            specs[spec.store] = spec
+            p = os.path.join(self._rollups_dir(db, ns, metric), "registry.json")
             os.makedirs(os.path.dirname(p), exist_ok=True)
             tmp = p + ".tmp"
             with open(tmp, "w") as fh:
-                json.dump({str(k): list(v) for k, v in meta.items()}, fh)
+                json.dump({k: dataclasses.asdict(s) for k, s in specs.items()}, fh)
             os.replace(tmp, p)
 
-    def rollups(self, db: str, ns: str, metric: str) -> dict[int, tuple[int, int]]:
-        p = self._rollup_meta_path(db, ns, metric)
+    def rollups(self, db: str, ns: str, metric: str) -> list[RollupSpec]:
+        p = os.path.join(self._rollups_dir(db, ns, metric), "registry.json")
         if not os.path.isfile(p):
-            return {}
+            return []
         with open(p) as fh:
             raw = json.load(fh)
-        return {int(k): (v[0], v[1]) for k, v in raw.items()}
-
-    # group rollups: per-group mergeable partials keyed by group field.
-    # Tracked in a separate meta file (group_rollups.json) in the same
-    # rollups dir, so invalidate_rollups drops both kinds at once.
-    def group_rollup_path(self, db: str, ns: str, metric: str, field: str) -> str:
-        return os.path.join(self.metric_path(db, ns, metric), "rollups", f"group_{field}")
-
-    def _group_rollup_meta_path(self, db: str, ns: str, metric: str) -> str:
-        return os.path.join(self.metric_path(db, ns, metric), "rollups", "group_rollups.json")
-
-    def register_group_rollup(self, db: str, ns: str, metric: str, field: str) -> None:
-        with self._rollup_meta_lock:
-            fields = self.group_rollups(db, ns, metric)
-            fields.add(field)
-            p = self._group_rollup_meta_path(db, ns, metric)
-            os.makedirs(os.path.dirname(p), exist_ok=True)
-            tmp = p + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(sorted(fields), fh)
-            os.replace(tmp, p)
-
-    def group_rollups(self, db: str, ns: str, metric: str) -> set[str]:
-        p = self._group_rollup_meta_path(db, ns, metric)
-        if not os.path.isfile(p):
-            return set()
-        with open(p) as fh:
-            return set(json.load(fh))
-
-    # quantile rollups: mergeable fixed-grid sketch partials
-    # (operators/rollup.build_quantile_rollup). quantile_rollups.json maps
-    # fine_ms -> {bounds, value_range, nbins} — the pinned grids; lives in
-    # the same rollups dir so invalidate_rollups drops all kinds at once.
-    # distinct (HLL) rollups: never-saturating count-distinct registers
-    # keyed by (field, fine grain). Same rollups dir → one invalidation.
-    def distinct_rollup_path(
-        self, db: str, ns: str, metric: str, field: str, fine_ms: int
-    ) -> str:
-        return os.path.join(
-            self.metric_path(db, ns, metric), "rollups", f"hll_{field}_{fine_ms}"
-        )
-
-    def _distinct_rollup_meta_path(self, db: str, ns: str, metric: str) -> str:
-        return os.path.join(
-            self.metric_path(db, ns, metric), "rollups", "distinct_rollups.json"
-        )
-
-    def register_distinct_rollup(
-        self,
-        db: str, ns: str, metric: str,
-        field: str,
-        fine_ms: int,
-        bounds: tuple[int, int],
-        p: int,
-    ) -> None:
-        with self._rollup_meta_lock:
-            meta = self.distinct_rollups(db, ns, metric)
-            meta[(field, fine_ms)] = (bounds, p)
-            mp = self._distinct_rollup_meta_path(db, ns, metric)
-            os.makedirs(os.path.dirname(mp), exist_ok=True)
-            tmp = mp + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(
-                    {f"{f}|{k}": {"bounds": list(b), "p": pp}
-                     for (f, k), (b, pp) in meta.items()},
-                    fh,
-                )
-            os.replace(tmp, mp)
-
-    def distinct_rollups(
-        self, db: str, ns: str, metric: str
-    ) -> dict[tuple[str, int], tuple[tuple[int, int], int]]:
-        mp = self._distinct_rollup_meta_path(db, ns, metric)
-        if not os.path.isfile(mp):
-            return {}
-        with open(mp) as fh:
-            raw = json.load(fh)
-        out = {}
-        for key, v in raw.items():
-            field, fine = key.rsplit("|", 1)
-            out[(field, int(fine))] = ((v["bounds"][0], v["bounds"][1]), v["p"])
-        return out
-
-    def quantile_rollup_path(self, db: str, ns: str, metric: str, fine_ms: int) -> str:
-        return os.path.join(self.metric_path(db, ns, metric), "rollups", f"q_{fine_ms}")
-
-    def _quantile_rollup_meta_path(self, db: str, ns: str, metric: str) -> str:
-        return os.path.join(
-            self.metric_path(db, ns, metric), "rollups", "quantile_rollups.json"
-        )
-
-    def register_quantile_rollup(
-        self,
-        db: str, ns: str, metric: str,
-        fine_ms: int,
-        bounds: tuple[int, int],
-        value_range: tuple[float, float],
-        nbins: int,
-    ) -> None:
-        with self._rollup_meta_lock:
-            meta = self.quantile_rollups(db, ns, metric)
-            meta[fine_ms] = (bounds, value_range, nbins)
-            p = self._quantile_rollup_meta_path(db, ns, metric)
-            os.makedirs(os.path.dirname(p), exist_ok=True)
-            tmp = p + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(
-                    {str(k): {"bounds": list(b), "range": list(r), "nbins": n}
-                     for k, (b, r, n) in meta.items()},
-                    fh,
-                )
-            os.replace(tmp, p)
-
-    def quantile_rollups(
-        self, db: str, ns: str, metric: str
-    ) -> dict[int, tuple[tuple[int, int], tuple[float, float], int]]:
-        p = self._quantile_rollup_meta_path(db, ns, metric)
-        if not os.path.isfile(p):
-            return {}
-        with open(p) as fh:
-            raw = json.load(fh)
-        return {
-            int(k): (
-                (v["bounds"][0], v["bounds"][1]),
-                (v["range"][0], v["range"][1]),
-                v["nbins"],
-            )
-            for k, v in raw.items()
-        }
+        return [
+            RollupSpec(**{k: tuple(v) if isinstance(v, list) else v for k, v in d.items()})
+            for d in raw.values()
+        ]
 
     def invalidate_rollups(self, db: str, ns: str, metric: str) -> None:
         with self._rollup_meta_lock:
-            d = os.path.join(self.metric_path(db, ns, metric), "rollups")
+            d = self._rollups_dir(db, ns, metric)
             if os.path.isdir(d):
                 shutil.rmtree(d)
 

@@ -381,10 +381,8 @@ def shard_ranges(
     """The [first, last] shard_start range each time interval touches
     (last None = unbounded) — the one statement of the shard-pruning
     arithmetic behind SELECT partition filters, the point route's gate and
-    EXPLAIN (NSDb location filtering analogue, ReadNodesSelection.scala:40-49).
-    It assumes every shard start is aligned to shard_interval_ms; DELETE,
-    which must not miss a shard written under an older interval, uses an
-    overlap test instead."""
+    EXPLAIN and DELETE (NSDb location filtering analogue,
+    ReadNodesSelection.scala:40-49)."""
     return [
         (
             shard_start(lo, shard_interval_ms),

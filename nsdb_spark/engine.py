@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import analyzer
-from .catalog import Warehouse
+from .catalog import RollupSpec, Warehouse
 from .compiler import (
     QueryCompiler,
     TimeContext,
@@ -528,66 +528,19 @@ class NsdbEngine:
             return self._rollup_locks.setdefault(key, threading.Lock())
 
     def _maintain_rollups_locked(self, db, ns, metric, lo, hi, batch_df) -> None:
-        from .operators import rollup as rollup_ops
-
-        registered = self.warehouse.rollups(db, ns, metric)
-        group_regs = self.warehouse.group_rollups(db, ns, metric)
-        q_regs = self.warehouse.quantile_rollups(db, ns, metric)
-        d_regs = self.warehouse.distinct_rollups(db, ns, metric)
-        if not registered and not group_regs and not q_regs and not d_regs:
+        specs = self.warehouse.rollups(db, ns, metric)
+        if not specs:
             return
-        if (
-            any(lo < bounds[0] or hi > bounds[1] for bounds in registered.values())
-            or any(lo < bounds[0] or hi > bounds[1] for bounds, _r, _n in q_regs.values())
-            or any(lo < bounds[0] or hi > bounds[1] for bounds, _p in d_regs.values())
-        ):
+        if self._outside_pins(specs, lo, hi, batch_df):
             self.warehouse.invalidate_rollups(db, ns, metric)
             return
-        # a batch value outside a quantile sketch's pinned grid would
-        # change the binning — invalidate, same rule as the time axis
-        if q_regs:
-            vr = batch_df.agg(F.min("value"), F.max("value")).first()
-            if vr[0] is not None and any(
-                float(vr[0]) < r[0] or float(vr[1]) > r[1]
-                for _b, r, _n in q_regs.values()
-            ):
-                self.warehouse.invalidate_rollups(db, ns, metric)
-                return
         si = self.warehouse.get_info(db, ns, metric)["shardInterval"]
         try:
-            for fine, bounds in registered.items():
-                path = self.warehouse.rollup_path(db, ns, metric, fine)
-                batch_r, _ = rollup_ops.build_temporal_rollup(
-                    batch_df, fine, si, bounds=bounds
-                )
+            for spec in specs:
+                path = self.warehouse.rollup_path(db, ns, metric, spec)
+                batch, _ = self._rollup_partials(spec, batch_df, si)
                 stored = self.spark.read.parquet(path)
-                merged = rollup_ops.merge_rollups(stored, batch_r)
-                self._atomic_overwrite(merged, path)
-            for fine, (bounds, vrange, nbins) in q_regs.items():
-                path = self.warehouse.quantile_rollup_path(db, ns, metric, fine)
-                batch_q, _, _ = rollup_ops.build_quantile_rollup(
-                    batch_df, fine, si, nbins=nbins,
-                    bounds=bounds, value_range=vrange,
-                )
-                stored = self.spark.read.parquet(path)
-                merged = rollup_ops.merge_quantile_rollups(stored, batch_q)
-                self._atomic_overwrite(merged, path)
-            for (field, fine), (bounds, p) in d_regs.items():
-                if field not in batch_df.columns:
-                    continue  # batch carries no values for this field
-                path = self.warehouse.distinct_rollup_path(db, ns, metric, field, fine)
-                batch_h, _ = rollup_ops.build_hll_rollup(
-                    batch_df, field, fine, si, p=p, bounds=bounds
-                )
-                stored = self.spark.read.parquet(path)
-                merged = rollup_ops.merge_hll_rollups(stored, batch_h)
-                self._atomic_overwrite(merged, path)
-            for field in group_regs:
-                path = self.warehouse.group_rollup_path(db, ns, metric, field)
-                batch_g = rollup_ops.build_group_rollup(batch_df, field)
-                stored = self.spark.read.parquet(path)
-                merged = rollup_ops.merge_group_rollups(field, stored, batch_g)
-                self._atomic_overwrite(merged, path)
+                self._atomic_overwrite(self._merge_partials(spec, stored, batch), path)
         except Exception:
             # maintenance must never be less safe than invalidation (e.g.
             # a batch that widens the value type mid-merge) — but log it:
@@ -599,6 +552,21 @@ class NsdbEngine:
                 db, ns, metric, exc_info=True,
             )
             self.warehouse.invalidate_rollups(db, ns, metric)
+
+    @staticmethod
+    def _outside_pins(specs: list[RollupSpec], lo, hi, batch_df) -> bool:
+        """True when the batch leaves a spec's pinned time axis or value
+        grid — merging it would change that rollup's bucket grid or
+        binning, so every rollup is invalidated instead."""
+        if any(s.bounds and (lo < s.bounds[0] or hi > s.bounds[1]) for s in specs):
+            return True
+        grids = [s.value_range for s in specs if s.value_range]
+        if not grids:
+            return False
+        vlo, vhi = batch_df.agg(F.min("value"), F.max("value")).first()
+        return vlo is not None and any(
+            float(vlo) < g[0] or float(vhi) > g[1] for g in grids
+        )
 
     def _atomic_overwrite(self, df: DataFrame, path: str) -> None:
         """Materialize df (which may read `path`) into a staging dir, then
@@ -1053,19 +1021,12 @@ class NsdbEngine:
         ctx = time_context or TimeContext(self.now_fn())
         # validate fields/types with the same rules as SELECT
         analyzer._check_expression(stmt.condition.expression, schema)
-        info = self.warehouse.get_info(db, ns, stmt.metric)
-        si = info["shardInterval"]
         ivs = extract_time_range(stmt.condition.expression, ctx)
-        locations = self.warehouse.locations(db, ns, stmt.metric)
-        if ivs:
-            # an overlap test, not touched_shards: a shard written before a
-            # shardInterval change can start off the current alignment
-            affected = [
-                s for s in locations
-                if any((hi is None or s <= hi) and (s + si - 1 >= lo) for lo, hi in ivs)
-            ]
-        else:
-            affected = locations
+        affected = touched_shards(
+            self.warehouse.locations(db, ns, stmt.metric),
+            ivs,
+            self.warehouse.get_info(db, ns, stmt.metric)["shardInterval"],
+        )
         if not affected:
             return 0
         from .compiler import compile_expression
@@ -1101,36 +1062,93 @@ class NsdbEngine:
     #: stay on the raw path)
     _ROLLUP_AGGS = frozenset({ast.AGG_COUNT, ast.AGG_SUM, ast.AGG_MAX, ast.AGG_AVG})
 
+    #: group-by aggs answerable from per-group partials. Group-by MIN has
+    #: no cross-shard zero-skip quirk (that is temporal-only), so it IS
+    #: rollup-servable here. first/last/count-distinct stay raw.
+    _GROUP_ROLLUP_AGGS = frozenset(
+        {ast.AGG_COUNT, ast.AGG_SUM, ast.AGG_MIN, ast.AGG_MAX, ast.AGG_AVG}
+    )
+
+    @staticmethod
+    def _rollup_partials(spec: RollupSpec, df: DataFrame, si: int):
+        """The one build call per rollup kind: df's mergeable partials on
+        spec's pinned axis and grid, and spec with the value grid the
+        build pinned (a quantile spec without one takes df's range)."""
+        from .operators import rollup as rollup_ops
+
+        if spec.kind == "group":
+            return rollup_ops.build_group_rollup(df, spec.field), spec
+        if spec.kind == "quantile":
+            r, _, vrange = rollup_ops.build_quantile_rollup(
+                df, spec.fine_ms, si, nbins=spec.nbins,
+                bounds=spec.bounds, value_range=spec.value_range,
+            )
+            return r, dataclasses.replace(spec, value_range=vrange)
+        if spec.kind == "hll":
+            r, _ = rollup_ops.build_hll_rollup(
+                df, spec.field, spec.fine_ms, si, p=spec.p, bounds=spec.bounds
+            )
+            return r, spec
+        r, _ = rollup_ops.build_temporal_rollup(df, spec.fine_ms, si, bounds=spec.bounds)
+        return r, spec
+
+    @staticmethod
+    def _merge_partials(spec: RollupSpec, stored: DataFrame, batch: DataFrame) -> DataFrame:
+        """The one merge call per rollup kind: stored partials + a batch's."""
+        from .operators import rollup as rollup_ops
+
+        if spec.kind == "group":
+            return rollup_ops.merge_group_rollups(spec.field, stored, batch)
+        return {
+            "temporal": rollup_ops.merge_rollups,
+            "quantile": rollup_ops.merge_quantile_rollups,
+            "hll": rollup_ops.merge_hll_rollups,
+        }[spec.kind](stored, batch)
+
+    def _materialize(self, db: str, ns: str, metric: str, spec: RollupSpec):
+        """Build, persist and register one rollup over the metric's whole
+        history; returns the registered spec. A time-bucketed kind pins
+        its axis to the SHARD grid exactly like the raw temporal path
+        (the compiler derives bucket bounds from locations).
+
+        Under the per-metric lock: a concurrent insert's maintenance merge
+        interleaving with this read-build-overwrite-register would read a
+        half-written store or base its merge on the pre-materialize state
+        and clobber the fresh build."""
+        with self._metric_rollup_lock(db, ns, metric):
+            si = self.warehouse.get_info(db, ns, metric)["shardInterval"]
+            if spec.fine_ms is not None:
+                locations = self.warehouse.locations(db, ns, metric)
+                if not locations:
+                    raise ValueError(f"no data to roll up for {db}.{ns}.{metric}")
+                spec = dataclasses.replace(
+                    spec, bounds=(min(locations), max(locations) + si)
+                )
+            if (
+                spec.field is not None
+                and self.warehouse.get_schema(db, ns, metric).field_class(spec.field) is None
+            ):
+                raise ValueError(f"unknown {spec.kind} field {spec.field!r}")
+            df = self.read_metric(db, ns, metric).drop(SHARD_COL)
+            r, spec = self._rollup_partials(spec, df, si)
+            r.write.mode("overwrite").parquet(
+                self.warehouse.rollup_path(db, ns, metric, spec)
+            )
+            self.warehouse.register_rollup(db, ns, metric, spec)
+            self._bump_metric_version(db, ns, metric)
+            return spec
+
     def materialize_rollup(self, db: str, ns: str, metric: str, fine_ms: int) -> tuple[int, int]:
         """Build + persist the fine-grained temporal rollup for a metric
         (the facet-index analogue — SURVEY.md §4 row 3). Subsequent
         `GROUP BY INTERVAL n` queries whose interval is a multiple of
         fine_ms (no WHERE / SINCE / count-distinct / min) are answered
-        from the rollup without scanning raw data. Any write invalidates
-        it; re-run to refresh. Returns the pinned (lower, upper) bounds.
-        """
-        from .operators import rollup as rollup_ops
-
-        # under the per-metric lock: a concurrent insert's maintenance
-        # merge interleaving with this read-build-overwrite-register
-        # would read a half-written store or base its merge on the
-        # pre-materialize state and clobber the fresh build
-        with self._metric_rollup_lock(db, ns, metric):
-            info = self.warehouse.get_info(db, ns, metric)
-            si = info["shardInterval"]
-            locations = self.warehouse.locations(db, ns, metric)
-            if not locations:
-                raise ValueError(f"no data to roll up for {db}.{ns}.{metric}")
-            # anchor to the SHARD grid exactly like the raw temporal path
-            # (compiler derives bucket bounds from locations when available)
-            bounds = (min(locations), max(locations) + si)
-            df = self.read_metric(db, ns, metric).drop(SHARD_COL)
-            r, _ = rollup_ops.build_temporal_rollup(df, fine_ms, si, bounds=bounds)
-            path = self.warehouse.rollup_path(db, ns, metric, fine_ms)
-            r.write.mode("overwrite").parquet(path)
-            self.warehouse.register_rollup(db, ns, metric, fine_ms, bounds)
-            self._bump_metric_version(db, ns, metric)
-            return bounds
+        from the rollup without scanning raw data. In-axis writes merge
+        into it; any other mutation invalidates it until a re-run.
+        Returns the pinned (lower, upper) bounds."""
+        return self._materialize(
+            db, ns, metric, RollupSpec("temporal", fine_ms=fine_ms)
+        ).bounds
 
     def materialize_quantile_rollup(
         self, db: str, ns: str, metric: str, fine_ms: int, nbins: int = 256
@@ -1142,26 +1160,10 @@ class NsdbEngine:
         rollup (counts add); a batch whose values fall outside the pinned
         value grid invalidates it (grid change ⇒ rebuild), mirroring the
         time-axis rule. Returns the pinned (bounds, value_range)."""
-        from .operators import rollup as rollup_ops
-
-        with self._metric_rollup_lock(db, ns, metric):  # vs maintenance merges
-            info = self.warehouse.get_info(db, ns, metric)
-            si = info["shardInterval"]
-            locations = self.warehouse.locations(db, ns, metric)
-            if not locations:
-                raise ValueError(f"no data to roll up for {db}.{ns}.{metric}")
-            bounds = (min(locations), max(locations) + si)
-            df = self.read_metric(db, ns, metric).drop(SHARD_COL)
-            r, _, vrange = rollup_ops.build_quantile_rollup(
-                df, fine_ms, si, nbins=nbins, bounds=bounds
-            )
-            path = self.warehouse.quantile_rollup_path(db, ns, metric, fine_ms)
-            r.write.mode("overwrite").parquet(path)
-            self.warehouse.register_quantile_rollup(
-                db, ns, metric, fine_ms, bounds, vrange, nbins
-            )
-            self._bump_metric_version(db, ns, metric)
-            return bounds, vrange
+        spec = self._materialize(
+            db, ns, metric, RollupSpec("quantile", fine_ms=fine_ms, nbins=nbins)
+        )
+        return spec.bounds, spec.value_range
 
     def materialize_distinct_rollup(
         self, db: str, ns: str, metric: str, field: str, fine_ms: int, p: int = 10
@@ -1173,23 +1175,39 @@ class NsdbEngine:
         semantics (`approx_count_distinct=True` — NSDb's count distinct
         is exact, so routing an estimate must be an explicit choice).
         Maintained incrementally per insert batch (register-wise max);
-        writes outside the pinned axis invalidate, like every rollup."""
-        from .operators import rollup as rollup_ops
+        writes outside the pinned axis invalidate, like every rollup.
+        Returns the pinned (lower, upper) bounds."""
+        return self._materialize(
+            db, ns, metric, RollupSpec("hll", field=field, fine_ms=fine_ms, p=p)
+        ).bounds
 
-        with self._metric_rollup_lock(db, ns, metric):  # vs maintenance merges
-            info = self.warehouse.get_info(db, ns, metric)
-            si = info["shardInterval"]
-            locations = self.warehouse.locations(db, ns, metric)
-            if not locations:
-                raise ValueError(f"no data to roll up for {db}.{ns}.{metric}")
-            bounds = (min(locations), max(locations) + si)
-            df = self.read_metric(db, ns, metric).drop(SHARD_COL)
-            r, _ = rollup_ops.build_hll_rollup(df, field, fine_ms, si, p=p, bounds=bounds)
-            path = self.warehouse.distinct_rollup_path(db, ns, metric, field, fine_ms)
-            r.write.mode("overwrite").parquet(path)
-            self.warehouse.register_distinct_rollup(db, ns, metric, field, fine_ms, bounds, p)
-            self._bump_metric_version(db, ns, metric)
-            return bounds
+    def materialize_group_rollup(self, db: str, ns: str, metric: str, field: str) -> int:
+        """Build + persist per-group mergeable partials (n, sum, min, max
+        of value) keyed by a tag/dimension. Subsequent `GROUP BY <field>`
+        queries with count/sum/min/max/avg on value (no WHERE, no
+        DISTINCT) are answered from this table — at scale it has one row
+        per group value versus the raw metric's row per point, so a
+        dashboard group-by scans kilobytes. The partials are additive
+        (count/sum) or re-reducible (min/max), so per-batch increments
+        can be merged without rescanning history — same maintenance model
+        as operators/rollup.merge_rollups. Returns the group count."""
+        spec = self._materialize(db, ns, metric, RollupSpec("group", field=field))
+        return self.spark.read.parquet(
+            self.warehouse.rollup_path(db, ns, metric, spec)
+        ).count()
+
+    def _rollup_spec(
+        self, db, ns, metric, kind: str, field=None, interval_ms=None
+    ) -> RollupSpec | None:
+        """The coarsest registered `kind` rollup keyed on `field` whose
+        grain divides interval_ms (any grain when interval_ms is None) —
+        the coarsest usable grain scans the fewest rows."""
+        fits = [
+            s for s in self.warehouse.rollups(db, ns, metric)
+            if s.kind == kind and s.field == field
+            and (interval_ms is None or interval_ms % s.fine_ms == 0)
+        ]
+        return max(fits, key=lambda s: s.fine_ms or 0, default=None)
 
     def percentile(
         self,
@@ -1207,68 +1225,29 @@ class NsdbEngine:
         percentile scan."""
         from .operators import rollup as rollup_ops
 
-        regs = self.warehouse.quantile_rollups(db, ns, metric)
-        fines = [
-            f for f in regs if coarse_ms is None or coarse_ms % f == 0
-        ]
-        if not fines:
+        spec = self._rollup_spec(db, ns, metric, "quantile", interval_ms=coarse_ms)
+        if spec is None:
             raise ValueError(
                 f"no quantile rollup registered for {db}.{ns}.{metric}"
                 + (f" serving interval {coarse_ms}" if coarse_ms else "")
             )
-        fine = max(fines)
-        bounds, vrange, nbins = regs[fine]
-        stored = self._read_rollup_store(
-            self.warehouse.quantile_rollup_path(db, ns, metric, fine),
-            db, ns, metric,
-        )
+        stored = self._read_rollup_store(db, ns, metric, spec)
         if stored is None:
             raise ValueError(
                 f"quantile rollup for {db}.{ns}.{metric} is being rebuilt; retry"
             )
         if coarse_ms is None:
             return rollup_ops.percentiles_from_quantile_rollup(
-                self.spark, stored, qs, vrange, nbins=nbins
+                self.spark, stored, qs, spec.value_range, nbins=spec.nbins
             )
         if len(qs) != 1:
             raise ValueError("temporal percentile takes exactly one q")
         return rollup_ops.temporal_percentile_from_quantile_rollup(
-            self.spark, stored, qs[0], bounds, fine, coarse_ms, vrange, nbins=nbins
+            self.spark, stored, qs[0], spec.bounds, spec.fine_ms, coarse_ms,
+            spec.value_range, nbins=spec.nbins,
         )
 
-    #: group-by aggs answerable from per-group partials. Group-by MIN has
-    #: no cross-shard zero-skip quirk (that is temporal-only), so it IS
-    #: rollup-servable here. first/last/count-distinct stay raw.
-    _GROUP_ROLLUP_AGGS = frozenset(
-        {ast.AGG_COUNT, ast.AGG_SUM, ast.AGG_MIN, ast.AGG_MAX, ast.AGG_AVG}
-    )
-
-    def materialize_group_rollup(self, db: str, ns: str, metric: str, field: str) -> int:
-        """Build + persist per-group mergeable partials (n, sum, min, max
-        of value) keyed by a tag/dimension. Subsequent `GROUP BY <field>`
-        queries with count/sum/min/max/avg on value (no WHERE, no
-        DISTINCT) are answered from this table — at scale it has one row
-        per group value versus the raw metric's row per point, so a
-        dashboard group-by scans kilobytes. The partials are additive
-        (count/sum) or re-reducible (min/max), so per-batch increments
-        can be merged without rescanning history — same maintenance model
-        as operators/rollup.merge_rollups. Returns the group count."""
-        with self._metric_rollup_lock(db, ns, metric):  # vs maintenance merges
-            df = self.read_metric(db, ns, metric)
-            schema = self.warehouse.get_schema(db, ns, metric)
-            if schema.field_class(field) is None:
-                raise ValueError(f"unknown group field {field!r}")
-            from .operators import rollup as rollup_ops
-
-            r = rollup_ops.build_group_rollup(df, field)
-            path = self.warehouse.group_rollup_path(db, ns, metric, field)
-            r.write.mode("overwrite").parquet(path)
-            self.warehouse.register_group_rollup(db, ns, metric, field)
-            self._bump_metric_version(db, ns, metric)
-            return self.spark.read.parquet(path).count()
-
-
-    def _read_rollup_store(self, path: str, db: str, ns: str, metric: str):
+    def _read_rollup_store(self, db: str, ns: str, metric: str, spec: RollupSpec):
         """Open a rollup store for SERVING, tolerating a concurrent
         maintenance swap: the directory can vanish between routing and
         read (the _atomic_overwrite window) or between read and execute
@@ -1281,6 +1260,7 @@ class NsdbEngine:
         instead of the fallback silently masking the corruption forever."""
         from pyspark.errors import AnalysisException
 
+        path = self.warehouse.rollup_path(db, ns, metric, spec)
         try:
             # localCheckpoint(eager) PINS the store's contents at routing
             # time — rollup tables are small by design (bounded by the
@@ -1315,9 +1295,10 @@ class NsdbEngine:
     def _route_via_rollup(self, db, ns, stmt, parsed, info):
         """Return a rollup-served DataFrame for an eligible temporal or
         group-by query, else None (raw path). Temporal: agg in
-        _ROLLUP_AGGS, no WHERE, no SINCE, interval a multiple of a
-        registered fresh rollup; ORDER BY timestamp and LIMIT keep their
-        quirk semantics (takeRight). Group-by: agg on value in
+        _ROLLUP_AGGS (or count-distinct from HLL registers), no WHERE, no
+        SINCE, interval a multiple of a registered rollup's grain whose
+        pinned axis is still current; ORDER BY timestamp and LIMIT keep
+        their quirk semantics (takeRight). Group-by: agg on value in
         _GROUP_ROLLUP_AGGS, no WHERE, field has a registered rollup."""
         from .analyzer import ParsedAggregatedQuery, ParsedTemporalAggregatedQuery
         from .compiler import agg_alias
@@ -1331,87 +1312,47 @@ class NsdbEngine:
             return None
         if stmt.order and stmt.order.dimension != "timestamp":
             return None
-        if parsed.aggregation.kind == ast.AGG_COUNT_DISTINCT:
-            return self._route_distinct_via_rollup(db, ns, stmt, parsed, info)
-        if parsed.aggregation.kind not in self._ROLLUP_AGGS:
-            return None
+        a = parsed.aggregation
+        if a.kind == ast.AGG_COUNT_DISTINCT:
+            # HLL registers serve an ESTIMATE — only when the engine opted
+            # into approximate semantics (NSDb's count distinct is exact;
+            # the same opt-in switches the raw path to approx_count_distinct)
+            if not self.approx_count_distinct:
+                return None
+            spec = self._rollup_spec(db, ns, stmt.metric, "hll", a.target, parsed.interval_ms)
         # the rollup stores VALUE partials (count over rows == count over
         # non-null values only because ingest rejects NULL values);
         # count(<tag>) skips NULL tags on the raw path, which no stored
         # partial can reproduce — same target rule as the group route
-        if parsed.aggregation.target not in ("value", "*"):
+        elif a.kind in self._ROLLUP_AGGS and a.target in ("value", "*"):
+            spec = self._rollup_spec(
+                db, ns, stmt.metric, "temporal", interval_ms=parsed.interval_ms
+            )
+        else:
             return None
-        registered = self.warehouse.rollups(db, ns, stmt.metric)
-        fines = [f for f in registered if parsed.interval_ms % f == 0]
-        if not fines:
+        if spec is None:
             return None
-        fine = max(fines)  # coarsest usable grain = fewest rows scanned
-        bounds = registered[fine]
         locations = self.warehouse.locations(db, ns, stmt.metric)
-        si = info["shardInterval"]
-        if not locations or bounds != (min(locations), max(locations) + si):
+        if not locations or spec.bounds != (
+            min(locations), max(locations) + info["shardInterval"]
+        ):
             return None  # axis moved (e.g. retention dropped shards) — stale
-        stored = self._read_rollup_store(
-            self.warehouse.rollup_path(db, ns, stmt.metric, fine),
-            db, ns, stmt.metric,
-        )
+        stored = self._read_rollup_store(db, ns, stmt.metric, spec)
         if stored is None:
             return None  # swapped away mid-route — raw path serves
-        return rollup_ops.temporal_from_rollup(
-            self.spark,
-            stored,
-            bounds,
-            fine,
-            parsed.interval_ms,
-            parsed.aggregation.kind,
-            agg_alias(parsed.aggregation),
-            limit=stmt.limit.value if stmt.limit else None,
-            descending=bool(stmt.order and stmt.order.descending),
-        )
-
-    def _route_distinct_via_rollup(self, db, ns, stmt, parsed, info):
-        """Serve temporal count-distinct from HLL registers — ONLY when
-        the engine opted into approximate semantics (NSDb's count
-        distinct is exact; an estimate must be an explicit choice, the
-        same opt-in that switches the raw path to approx_count_distinct).
-        The estimate rounds to a whole count so the routed answer has the
-        raw path's column shape."""
-        from .compiler import agg_alias
-        from .operators import rollup as rollup_ops
-
-        if not self.approx_count_distinct:
-            return None
-        d_regs = self.warehouse.distinct_rollups(db, ns, stmt.metric)
-        field = parsed.aggregation.target
-        fines = [
-            f for (fl, f) in d_regs if fl == field and parsed.interval_ms % f == 0
-        ]
-        if not fines:
-            return None
-        fine = max(fines)
-        bounds, p = d_regs[(field, fine)]
-        locations = self.warehouse.locations(db, ns, stmt.metric)
-        si = info["shardInterval"]
-        if not locations or bounds != (min(locations), max(locations) + si):
-            return None  # axis moved — stale
-        stored = self._read_rollup_store(
-            self.warehouse.distinct_rollup_path(db, ns, stmt.metric, field, fine),
-            db, ns, stmt.metric,
-        )
-        if stored is None:
-            return None  # swapped away mid-route — raw path serves
-        alias = agg_alias(parsed.aggregation)
+        alias = agg_alias(a)
+        limit = stmt.limit.value if stmt.limit else None
+        descending = bool(stmt.order and stmt.order.descending)
+        if spec.kind == "temporal":
+            return rollup_ops.temporal_from_rollup(
+                self.spark, stored, spec.bounds, spec.fine_ms, parsed.interval_ms,
+                a.kind, alias, limit=limit, descending=descending,
+            )
         out = rollup_ops.temporal_hll_from_rollup(
-            self.spark,
-            stored,
-            bounds,
-            fine,
-            parsed.interval_ms,
-            p=p,
-            alias=alias,
-            limit=stmt.limit.value if stmt.limit else None,
-            descending=bool(stmt.order and stmt.order.descending),
+            self.spark, stored, spec.bounds, spec.fine_ms, parsed.interval_ms,
+            p=spec.p, alias=alias, limit=limit, descending=descending,
         )
+        # the estimate rounds to a whole count: the raw path's column shape
         return out.withColumn(alias, F.round(F.col(alias)).cast("long"))
 
     def _route_group_via_rollup(self, db, ns, stmt, parsed):
@@ -1422,12 +1363,10 @@ class NsdbEngine:
             return None
         if a.kind not in self._GROUP_ROLLUP_AGGS or a.target != "value":
             return None
-        if parsed.group_field not in self.warehouse.group_rollups(db, ns, stmt.metric):
+        spec = self._rollup_spec(db, ns, stmt.metric, "group", parsed.group_field)
+        if spec is None:
             return None
-        stored = self._read_rollup_store(
-            self.warehouse.group_rollup_path(db, ns, stmt.metric, parsed.group_field),
-            db, ns, stmt.metric,
-        )
+        stored = self._read_rollup_store(db, ns, stmt.metric, spec)
         if stored is None:
             return None  # swapped away mid-route — raw path serves
         alias = agg_alias(a)

@@ -636,17 +636,66 @@ def test_retention_eviction(engine):
     assert rows(engine.execute("select count(*) from m")) == [(0,)]
 
 
-def test_delete_reaches_shards_written_under_an_older_interval(engine):
-    """Re-initialising a metric can change shardInterval under existing
-    data, leaving shard starts off the new alignment; DELETE selects
-    shards by overlap, so it still removes rows in them."""
-    engine.warehouse.init_metric("default", "default", "ri", shard_interval_ms=1000)
+def test_shard_interval_change_refused_once_metric_has_data(engine):
+    """Every shard-pruning path assumes the shard starts on disk are
+    aligned to the current shardInterval, so a metric with data keeps its
+    interval: a change raises (on the API and over gRPC), while a
+    same-interval or retention-only re-init still goes through."""
+    from nsdb_spark.grpc.client import NsdbGrpcClient
+    from nsdb_spark.grpc.server import serve_grpc
+
+    wh = engine.warehouse
+    wh.init_metric("default", "default", "ri", shard_interval_ms=1000)
     engine.insert_bits("default", "default", "ri", [Bit(1500, 1), Bit(2500, 2)])
-    assert sorted(engine.warehouse.locations("default", "default", "ri")) == [1000, 2000]
-    engine.warehouse.init_metric("default", "default", "ri", shard_interval_ms=3000)
-    engine.execute("delete from ri where timestamp = 2500")
-    got = engine.execute("select timestamp from ri order by timestamp")
-    assert [r["timestamp"] for r in got.collect()] == [1500]
+    assert wh.locations("default", "default", "ri") == [1000, 2000]
+    with pytest.raises(ValueError, match="shardInterval"):
+        wh.init_metric("default", "default", "ri", shard_interval_ms=3000)
+    wh.init_metric("default", "default", "ri", shard_interval_ms=1000, retention_ms=10**9)
+    assert wh.get_info("default", "default", "ri") == {
+        "shardInterval": 1000, "retention": 10**9,
+    }
+    wh.init_metric("default", "default", "ri", retention_ms=5)
+    assert wh.get_info("default", "default", "ri") == {"shardInterval": 1000, "retention": 5}
+    server = serve_grpc(engine, port=0)
+    client = NsdbGrpcClient(server.host, server.port)
+    try:
+        out = client.init_metric("default", "default", "ri", shard_interval="3s")
+        assert not out.get("completedSuccessfully", False)
+        assert "shardInterval" in out["errorMsg"]
+        out = client.init_metric("default", "default", "ri", retention="2h")
+        assert out["completedSuccessfully"] is True
+    finally:
+        client.close()
+        server.stop()
+    assert wh.get_info("default", "default", "ri") == {
+        "shardInterval": 1000, "retention": 7_200_000,
+    }
+    # the point SELECT the old interval change made prune to the wrong shard
+    got = engine.execute("select timestamp from ri where timestamp = 2500")
+    assert [r["timestamp"] for r in got.collect()] == [2500]
+
+
+def _registered(engine, metric):
+    """(kind, field, fine_ms) of every rollup registered for a metric."""
+    return {
+        (s.kind, s.field, s.fine_ms)
+        for s in engine.warehouse.rollups("default", "default", metric)
+    }
+
+
+_ALL_KINDS = {
+    ("temporal", None, 500),
+    ("group", "name", None),
+    ("quantile", None, 500),
+    ("hll", "name", 500),
+}
+
+
+def _materialize_all_kinds(engine, metric):
+    engine.materialize_rollup("default", "default", metric, 500)
+    engine.materialize_group_rollup("default", "default", metric, "name")
+    engine.materialize_quantile_rollup("default", "default", metric, 500, nbins=8)
+    engine.materialize_distinct_rollup("default", "default", metric, "name", 500)
 
 
 def test_retention_eviction_invalidates_rollups(engine):
@@ -661,15 +710,12 @@ def test_retention_eviction_invalidates_rollups(engine):
     engine.insert_bits(
         "default", "default", "rr", [Bit(4500, 2, {}, {"name": "b"})]
     )
-    engine.materialize_rollup("default", "default", "rr", 500)
-    engine.materialize_group_rollup("default", "default", "rr", "name")
-    assert engine.warehouse.rollups("default", "default", "rr")
-    assert engine.warehouse.group_rollups("default", "default", "rr")
+    _materialize_all_kinds(engine, "rr")
+    assert _registered(engine, "rr") == _ALL_KINDS
     engine.now_fn = lambda: 5_000
     assert engine.enforce_retention("default", "default", "rr") == [0]
-    # evicted shard changed every aggregate -> both rollup kinds dropped
-    assert not engine.warehouse.rollups("default", "default", "rr")
-    assert not engine.warehouse.group_rollups("default", "default", "rr")
+    # evicted shard changed every aggregate -> every rollup kind dropped
+    assert engine.warehouse.rollups("default", "default", "rr") == []
     got = sorted(tuple(r) for r in engine.execute(
         "select sum(value) from rr group by name"
     ).collect())
@@ -983,7 +1029,7 @@ def test_quantile_rollup_serves_and_maintains(engine, spark):
     # registration survives, and the median reflects the new point
     mid_v = int((vrange[0] + vrange[1]) / 2)  # metric value type is BIGINT
     engine.insert_bits("default", "default", "qr", [Bit(1500, mid_v, {}, {"name": "x"})])
-    assert engine.warehouse.quantile_rollups("default", "default", "qr")
+    assert ("quantile", None, 1000) in _registered(engine, "qr")
     after = {r["q"]: r["pvalue"]
              for r in engine.percentile("default", "default", "qr", [0.5]).collect()}
     values.append(mid_v)
@@ -1027,13 +1073,14 @@ def test_quantile_rollup_invalidated_by_out_of_grid_value(engine, spark):
 
     load(engine, "qv", TEMPORAL_LONG_METRIC, shard_interval_ms=10000)
     engine.materialize_quantile_rollup("default", "default", "qv", 1000, nbins=64)
-    _, vrange = engine.warehouse.quantile_rollups("default", "default", "qv")[1000][0], \
-        engine.warehouse.quantile_rollups("default", "default", "qv")[1000][1]
+    [spec] = engine.warehouse.rollups("default", "default", "qv")
+    assert (spec.kind, spec.fine_ms) == ("quantile", 1000)
+    vrange = spec.value_range
     engine.insert_bits(
         "default", "default", "qv",
         [Bit(1500, int(vrange[1] + 1000), {}, {"name": "y"})],
     )
-    assert not engine.warehouse.quantile_rollups("default", "default", "qv")
+    assert not engine.warehouse.rollups("default", "default", "qv")
     with _pytest.raises(ValueError):
         engine.percentile("default", "default", "qv", [0.5])
 
@@ -1236,9 +1283,7 @@ def test_distinct_rollup_maintained_and_invalidated(engine, spark):
         "default", "default", "dmm",
         [Bit(31000, 9, {}, {"name": "Zoe", "age": 1, "height": 1.0})],
     )
-    assert ("name", 1000) in engine.warehouse.distinct_rollups(
-        "default", "default", "dmm"
-    )
+    assert ("hll", "name", 1000) in _registered(engine, "dmm")
     approx = NsdbEngine(spark, engine.warehouse.root, approx_count_distinct=True)
     assert _rows(approx.execute(sql)) == _rows(engine.execute(sql))
     # out-of-axis write invalidates (next shard)
@@ -1246,7 +1291,20 @@ def test_distinct_rollup_maintained_and_invalidated(engine, spark):
         "default", "default", "dmm",
         [Bit(10**7 + 1000, 1, {}, {"name": "Far", "age": 1, "height": 1.0})],
     )
-    assert engine.warehouse.distinct_rollups("default", "default", "dmm") == {}
+    assert engine.warehouse.rollups("default", "default", "dmm") == []
+
+
+def test_distinct_rollup_rejects_unknown_field(engine):
+    """Both field-keyed rollup kinds check the field before building: an
+    unknown field raises ValueError and registers nothing."""
+    from fixtures import TEMPORAL_LONG_METRIC, load
+
+    load(engine, "du", TEMPORAL_LONG_METRIC, shard_interval_ms=10000)
+    with pytest.raises(ValueError, match="unknown hll field 'nope'"):
+        engine.materialize_distinct_rollup("default", "default", "du", "nope", 1000)
+    with pytest.raises(ValueError, match="unknown group field 'nope'"):
+        engine.materialize_group_rollup("default", "default", "du", "nope")
+    assert engine.warehouse.rollups("default", "default", "du") == []
 
 
 def test_not_over_mixed_predicate_does_not_prune(engine):
@@ -1431,8 +1489,9 @@ def test_corrupt_rollup_store_invalidates_and_serves_raw(engine):
         Bit(2000, 2, {}, {"host": "b"}),
     ])
     engine.materialize_group_rollup("default", "default", "cr", "host")
-    assert "host" in engine.warehouse.group_rollups("default", "default", "cr")
-    path = engine.warehouse.group_rollup_path("default", "default", "cr", "host")
+    [spec] = engine.warehouse.rollups("default", "default", "cr")
+    assert (spec.kind, spec.field) == ("group", "host")
+    path = engine.warehouse.rollup_path("default", "default", "cr", spec)
     files = glob.glob(os.path.join(path, "*.parquet"))
     assert files  # the store we are about to damage exists
     for f in files:
@@ -1443,7 +1502,7 @@ def test_corrupt_rollup_store_invalidates_and_serves_raw(engine):
         "select sum(value) from cr group by host"
     ).collect())
     assert got == [("a", 1.0), ("b", 2.0)] or got == [("a", 1), ("b", 2)]
-    assert "host" not in engine.warehouse.group_rollups("default", "default", "cr")
+    assert engine.warehouse.rollups("default", "default", "cr") == []
 
 
 def test_insert_rejects_negative_timestamp(engine, spark):
@@ -1576,18 +1635,26 @@ def test_dump_restore_preserves_rollup_registrations(engine, spark, tmp_path):
     from fixtures import TEMPORAL_LONG_METRIC, load
 
     load(engine, "rm", TEMPORAL_LONG_METRIC, shard_interval_ms=10000)
-    engine.materialize_rollup("default", "default", "rm", 1000)
+    _materialize_all_kinds(engine, "rm")
     engine.dump_metric_bundle("default", "default", "rm", str(tmp_path / "b"))
     other = _fresh_engine(spark, tmp_path, "wh3")
     other.restore_metric_bundle(str(tmp_path / "b"))
+    assert _registered(other, "rm") == _ALL_KINDS
     assert other.warehouse.rollups("default", "default", "rm") == \
         engine.warehouse.rollups("default", "default", "rm")
-    # the restored rollup store still routes temporal queries
+    # the restored rollup stores still serve: temporal and group routes,
+    # and the percentile sketch
     sql = "select count(*) from rm group by interval 2 s"
     routed = other.execute(sql)
     plan = routed._jdf.queryExecution().executedPlan().toString()
     assert _rollup_scan(plan)
     assert _rows(routed) == _rows(engine.execute(sql))
+    sql = "select sum(value) from rm group by name"
+    routed = other.execute(sql)
+    assert _is_group_rollup_plan(routed._jdf.queryExecution().executedPlan().toString())
+    assert sorted(routed.collect()) == sorted(engine.execute(sql).collect())
+    assert other.percentile("default", "default", "rm", [0.5]).collect() == \
+        engine.percentile("default", "default", "rm", [0.5]).collect()
 
 
 def test_restore_under_new_name_and_overwrite_rules(engine, spark, tmp_path):

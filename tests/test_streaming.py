@@ -280,7 +280,9 @@ def test_streaming_ingest_maintains_quantile_rollup(engine, spark, tmp_path):
         checkpoint_dir=str(tmp_path / "ck"), available_now=True,
     )
     q.awaitTermination(60)
-    assert engine.warehouse.quantile_rollups("default", "default", "sq")  # still fresh
+    assert [s.kind for s in engine.warehouse.rollups("default", "default", "sq")] == [
+        "quantile"
+    ]  # still fresh
     after = engine.percentile("default", "default", "sq", [0.5]).collect()[0]["pvalue"]
     assert after > 80  # sketch absorbed the streamed batch
 
@@ -546,7 +548,10 @@ def test_streaming_ingest_maintains_distinct_rollup(engine, spark, tmp_path):
         checkpoint_dir=str(tmp_path / "ck"), available_now=True,
     )
     q.awaitTermination(60)
-    assert ("tag", 1000) in engine.warehouse.distinct_rollups("default", "default", "sd")
+    assert [
+        (s.kind, s.field, s.fine_ms)
+        for s in engine.warehouse.rollups("default", "default", "sd")
+    ] == [("hll", "tag", 1000)]
     after = approx.execute(sql).collect()[0][-1]
     assert after == 8  # 3 old + 5 streamed-new distinct tags (LC-exact range)
 
