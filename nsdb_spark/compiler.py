@@ -415,6 +415,104 @@ def envelope(ivs: list[tuple[int, int | None]]) -> tuple[int | None, int | None]
     return (lo, hi)
 
 
+# --------------------------------------------------- backward bucket axis
+# Temporal buckets align BACKWARD from the axis top, the oldest bucket
+# truncated and closed (TimeRangeManager.scala:74-90, SURVEY.md §4.3). This
+# is the correctness invariant the raw temporal compiler shares with every
+# rollup family in operators/rollup.py, so the bucket count, index, bounds,
+# axis join and takeRight are each defined once, here.
+
+#: global bucket index column of a bucket-axis join
+BUCKET = "__bucket"
+
+#: the per-bucket side of an axis join broadcasts only while the axis is
+#: dashboard-sized: it has up to n rows, and n scales as extent/interval — a
+#: 1 s interval over a year of shards is ~31M buckets, which would OOM the
+#: driver as a broadcast. Past the cap both sides are equally-sized n-row
+#: frames; AQE picks the join.
+_BROADCAST_BUCKETS_MAX = 1_000_000
+
+
+def in_axis(lower: int, upper: int) -> Column:
+    """Rows whose timestamp lies on the closed axis [lower, upper]."""
+    return (F.col("timestamp") >= lower) & (F.col("timestamp") <= upper)
+
+
+def bucket_count(lower: int, upper: int, width: int) -> int:
+    """Buckets of `width` backward from `upper` down to `lower` (ceil); a
+    degenerate [x, x] interval still gets its one bucket."""
+    return max(1, -((upper - lower) // -width))
+
+
+def bucket_index(age: Column, width: int, n: int) -> Column:
+    """Backward bucket of `age`, the distance below the axis top: `upper -
+    timestamp` with the interval as width, or a stored fine index `k` with
+    coarse/fine as width when re-bucketing. The oldest (truncated) bucket
+    is clamped to n - 1, so ts == lower stays on the axis."""
+    return F.least(F.floor(age / F.lit(width)), F.lit(n - 1))
+
+
+def bucket_bounds(idx: Column, lower: int, upper: int, width: int) -> tuple[Column, Column]:
+    """(lower_bound, upper_bound) of bucket `idx`, the oldest truncated at
+    `lower`."""
+    return (
+        F.greatest(F.lit(upper) - (idx + 1) * width, F.lit(lower)),
+        F.lit(upper) - idx * width,
+    )
+
+
+def bucket_segments(
+    ivs: list[tuple[int, int]], width: int
+) -> list[tuple[int, int, int, int]]:
+    """(offset, lower, upper, n) of one backward axis per closed interval,
+    ordered by DESCENDING upper bound: the global bucket index (offset +
+    local backward bucket) is then monotone in descending upper_bound,
+    which axis_join's takeRight relies on. Intervals are disjoint
+    (extract_time_range unions), so the order is total."""
+    segs, off = [], 0
+    for lower, upper in sorted(ivs, key=lambda t: t[1], reverse=True):
+        n = bucket_count(lower, upper, width)
+        segs.append((off, lower, upper, n))
+        off += n
+    return segs
+
+
+def axis_join(
+    spark: SparkSession,
+    segs: list[tuple[int, int, int, int]],
+    width: int,
+    per_bucket: DataFrame,
+    values: list[Column],
+    limit: int | None = None,
+    descending: bool = False,
+) -> DataFrame:
+    """(timestamp, lower_bound, upper_bound, *values) over the full bucket
+    axis, empty buckets included: one codegen'd range frame per segment (no
+    data scan) left-joined to `per_bucket` on BUCKET. LIMIT is takeRight of
+    the time-sorted axis (post_proc/package.scala:62-66): the most recent
+    buckets ascending, the oldest descending. Rows are ordered by
+    timestamp."""
+    axis = None
+    for off, lower, upper, nb in segs:
+        lb, ub = bucket_bounds(F.col("id"), lower, upper, width)
+        frame = spark.range(nb).select(
+            (F.col("id") + F.lit(off)).alias(BUCKET),
+            ub.alias("upper_bound"),
+            lb.alias("lower_bound"),
+        )
+        axis = frame if axis is None else axis.unionByName(frame)
+    n = segs[-1][0] + segs[-1][3]
+    pb = F.broadcast(per_bucket) if n <= _BROADCAST_BUCKETS_MAX else per_bucket
+    out = axis.join(pb, BUCKET, "left").select(
+        F.col("upper_bound").alias("timestamp"), "lower_bound", "upper_bound",
+        *values, BUCKET,
+    )
+    if limit is not None:
+        out = out.filter(F.col(BUCKET) >= n - limit if descending else F.col(BUCKET) < limit)
+    order = F.col("timestamp").desc() if descending else F.col("timestamp").asc()
+    return out.drop(BUCKET).orderBy(order)
+
+
 # ------------------------------------------------------------------- compiler
 
 
@@ -621,48 +719,21 @@ class QueryCompiler:
         if not eff:
             return self._empty_temporal(q, df)
 
-        # segments ordered by DESCENDING upper bound: the global __bucket index
-        # (per-interval offset + local backward bucket) is then monotone in
-        # DESCENDING upper_bound, which the temporal-LIMIT takeRight below
-        # relies on. Intervals are disjoint (extract_time_range unions), so
-        # the order is total.
-        eff.sort(key=lambda t: t[1], reverse=True)
-        segs = []  # (offset, lower, upper, n_buckets)
-        off = 0
-        for l, u in eff:
-            # ceil; a degenerate [x, x] interval still gets its one bucket
-            nb = max(1, -((u - l) // -interval))
-            segs.append((off, l, u, nb))
-            off += nb
-        n = off  # total buckets across all interval axes
+        segs = bucket_segments(eff, interval)
+        # one backward index per interval axis, offset into the global
+        # index; the oldest segment is the CASE fallback, so a single axis
+        # is the plain index expression with no CASE WHEN
+        in_any = k = None
+        for off, l, u, nb in reversed(segs):
+            seg = in_axis(l, u)
+            local = bucket_index(F.lit(u) - F.col("timestamp"), interval, nb)
+            if off:
+                local = F.lit(off) + local
+            k = local if k is None else F.when(seg, local).otherwise(k)
+            in_any = seg if in_any is None else (seg | in_any)
+        rows = df.filter(in_any)
+        k = k.alias(BUCKET)
         alias = agg_alias(q.aggregation)
-
-        if len(segs) == 1:
-            _, lower, upper, _ = segs[0]
-            rows = df.filter(
-                (F.col("timestamp") >= lower) & (F.col("timestamp") <= upper)
-            )
-            k = F.least(
-                F.floor((F.lit(upper) - F.col("timestamp")) / F.lit(interval)),
-                F.lit(n - 1),
-            ).alias("__bucket")
-        else:
-            in_any = None
-            key = None
-            for soff, l, u, nb in segs:
-                seg_pred = (F.col("timestamp") >= l) & (F.col("timestamp") <= u)
-                local = F.lit(soff) + F.least(
-                    F.floor((F.lit(u) - F.col("timestamp")) / F.lit(interval)),
-                    F.lit(nb - 1),
-                )
-                in_any = seg_pred if in_any is None else (in_any | seg_pred)
-                key = (
-                    F.when(seg_pred, local)
-                    if key is None
-                    else key.when(seg_pred, local)
-                )
-            rows = df.filter(in_any)
-            k = key.alias("__bucket")
         if q.aggregation.kind == ast.AGG_MIN:
             # ⚠ reference quirk (post_proc/package.scala:170-176): the
             # cross-shard temporal-min reduce drops ZERO shard partials
@@ -675,58 +746,22 @@ class QueryCompiler:
             partials = rows.groupBy(k, shard).agg(
                 F.min(q.aggregation.target).alias("__pmin")
             )
-            per_bucket = partials.groupBy("__bucket").agg(
+            per_bucket = partials.groupBy(BUCKET).agg(
                 F.coalesce(
                     F.min(F.when(F.col("__pmin") != 0, F.col("__pmin"))),
                     F.lit(0),
-                ).alias(agg_alias(q.aggregation))
+                ).alias(alias)
             )
         else:
             per_bucket = rows.groupBy(k).agg(self._agg_columns([q.aggregation])[0])
 
-        # bucket axis including empty buckets (spec emits them with 0);
-        # one range frame per interval axis, unioned — still a handful of
-        # driver-known segments, each a codegen'd Range, no data scan
-        seg_frames = []
-        for soff, l, u, nb in segs:
-            seg_frames.append(
-                self.spark.range(nb).select(
-                    (F.col("id") + F.lit(soff)).alias("__bucket"),
-                    (F.lit(u) - F.col("id") * interval).alias("upper_bound"),
-                    F.greatest(
-                        F.lit(u) - (F.col("id") + 1) * interval, F.lit(l)
-                    ).alias("lower_bound"),
-                )
-            )
-        buckets = seg_frames[0]
-        for extra in seg_frames[1:]:
-            buckets = buckets.unionByName(extra)
-        # broadcast only while the axis is dashboard-sized: per_bucket has
-        # up to n rows, and n scales as data-extent/interval — a 1 s
-        # interval over a year of shards is ~31M buckets, which would
-        # OOM the driver as a broadcast. Past the threshold both sides
-        # are equally-sized n-row frames; let AQE pick the join.
-        pb = F.broadcast(per_bucket) if n <= 1_000_000 else per_bucket
-        joined = buckets.join(pb, "__bucket", "left")
-        value_col = F.coalesce(F.col(alias), F.lit(0)).alias(alias)
-        out = joined.select(
-            F.col("upper_bound").alias("timestamp"),
-            "lower_bound",
-            "upper_bound",
-            value_col,
-            "__bucket",
-        )
-
-        # temporal LIMIT = takeRight of the sorted axis (post_proc:62-66)
+        # bucket axis including empty buckets (spec emits them with 0)
         desc = bool(stmt.order and stmt.order.descending and stmt.order.dimension == "timestamp")
-        if stmt.limit:
-            v = stmt.limit.value
-            out = out.filter(F.col("__bucket") < v) if not desc else out.filter(
-                F.col("__bucket") >= n - v
-            )
-        out = out.drop("__bucket")
-        order_col = F.col("timestamp").desc() if desc else F.col("timestamp").asc()
-        return out.orderBy(order_col)
+        return axis_join(
+            self.spark, segs, interval, per_bucket,
+            [F.coalesce(F.col(alias), F.lit(0)).alias(alias)],
+            stmt.limit.value if stmt.limit else None, desc,
+        )
 
     def _empty_temporal(
         self, q: ParsedTemporalAggregatedQuery, df: DataFrame

@@ -1674,7 +1674,7 @@ class NsdbEngine:
                 try:
                     self.enforce_all_retentions()
                 except Exception:  # keep the scheduler alive; next tick retries
-                    pass
+                    _log.exception("retention sweep failed")
 
         threading.Thread(target=loop, daemon=True).start()
         return stop

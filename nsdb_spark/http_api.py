@@ -109,6 +109,22 @@ class _Handler(BaseHTTPRequestHandler):
         except Exception:
             return b.get("metric", "")
 
+    def _query(self, b: dict, metric: str) -> None:
+        """/query (POST and GET): the metric-level read gate on `metric`,
+        then the enriched execution (from/to/filters) and its 200 answer."""
+        db, ns = b.get("db", "default"), b.get("namespace", "default")
+        if not self._authorized("metric", False, db, ns, metric):
+            return
+        filters = [
+            (f["dimension"], f["value"], f["operator"])
+            for f in b.get("filters") or []
+        ]
+        records = self.engine.query_records(
+            b["queryString"], db=db, ns=ns,
+            from_ts=b.get("from"), to_ts=b.get("to"), filters=filters,
+        )
+        self._send(200, {"records": records})
+
     # ------------------------------------------------------------ helpers
     def _send(self, code: int, payload) -> None:
         body = json.dumps(payload).encode()
@@ -170,28 +186,11 @@ class _Handler(BaseHTTPRequestHandler):
                         },
                     )
             elif self.path == "/query":
-                b = self._body()
                 # authorize the metric the statement EXECUTES against
                 # (parsed from queryString) — the body's `metric` field
                 # is client-supplied context, not what runs
-                if not self._authorized(
-                    "metric", False, b.get("db", "default"),
-                    b.get("namespace", "default"), self._stmt_metric(b),
-                ):
-                    return
-                filters = [
-                    (f["dimension"], f["value"], f["operator"])
-                    for f in b.get("filters") or []
-                ]
-                records = self.engine.query_records(
-                    b["queryString"],
-                    db=b.get("db", "default"),
-                    ns=b.get("namespace", "default"),
-                    from_ts=b.get("from"),
-                    to_ts=b.get("to"),
-                    filters=filters,
-                )
-                self._send(200, {"records": records})
+                b = self._body()
+                self._query(b, self._stmt_metric(b))
             elif self.path == "/data":
                 b = self._body()
                 if not self._authorized(
@@ -362,27 +361,10 @@ class _Handler(BaseHTTPRequestHandler):
                         {"error": f"statement {b['queryString']} is not a select statement"},
                     )
                     return
-                # same auth gate as POST /query — the GET variant must
-                # not be a side door around the metric-level check; the
-                # gate uses the PARSED statement's metric
-                if not self._authorized(
-                    "metric", False, b.get("db", "default"),
-                    b.get("namespace", "default"), stmt.metric,
-                ):
-                    return
-                filters = [
-                    (f["dimension"], f["value"], f["operator"])
-                    for f in b.get("filters") or []
-                ]
-                records = self.engine.query_records(
-                    b["queryString"],
-                    db=b.get("db", "default"),
-                    ns=b.get("namespace", "default"),
-                    from_ts=b.get("from"),
-                    to_ts=b.get("to"),
-                    filters=filters,
-                )
-                self._send(200, {"records": records})
+                # same handler and auth gate as POST /query — the GET
+                # variant must not be a side door around the metric-level
+                # check; the gate uses the PARSED statement's metric
+                self._query(b, stmt.metric)
                 return
             parts = [p.split("?")[0] for p in self.path.split("/") if p]
             if len(parts) == 2 and parts[0] == "poll":

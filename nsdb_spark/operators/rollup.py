@@ -14,14 +14,23 @@ Correct nesting: NSDb buckets align BACKWARD from the shard-interval top
 axes hang from the SAME global upper bound, so whenever
 coarse = m * fine, fine bucket k lands wholly inside coarse bucket
 k // m — including the truncated oldest bucket. Re-aggregation is exact
-for count/sum/max (and avg via sum/count); it is NOT valid for
-count-distinct (not mergeable without sketches) — that stays on the raw
-path.
+for count/sum/max (and avg via sum/count). Count-distinct is not
+mergeable as an exact set size, so it is served from sketch partials
+instead: the linear-counting bitmap (build_distinct_rollup) and the
+HyperLogLog registers (build_hll_rollup, which the engine routes
+`count(distinct ...) group by interval` to).
 """
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from ..compiler import (
+    BUCKET, axis_join, bucket_bounds, bucket_count, bucket_index,
+    bucket_segments, in_axis,
+)
 
 
 def temporal_bounds(metric_df: DataFrame, shard_ms: int) -> tuple[int, int]:
@@ -40,51 +49,146 @@ def temporal_bounds(metric_df: DataFrame, shard_ms: int) -> tuple[int, int]:
 
 
 # The backward-aligned bucket math is THE correctness invariant every
-# rollup shares with the raw temporal compiler — one definition each, so
-# a future change cannot be applied to four of five copies and silently
-# drift the rollup paths apart (or away from the oracle).
+# rollup shares with the raw temporal compiler. The bucket count, index,
+# bounds, axis join and takeRight are defined once, in compiler.py
+# (bucket_count, bucket_index, bucket_bounds, axis_join), so a future
+# change cannot reach one path and silently drift the others apart (or
+# away from the oracle).
+
+#: each family's combine map: how its partial columns re-reduce, both when
+#: per-batch partials merge (per fine bucket k) and when fine buckets
+#: re-bucket onto a coarse grid (per coarse bucket) — one statement serves
+#: both. The LC bitmap has none: its merge is set union (distinct).
+_TEMPORAL = {"count_value": F.sum, "sum_value": F.sum, "max_value": F.max}
+_GROUP = {"n": F.sum, "sum_value": F.sum, "min_value": F.min, "max_value": F.max}
+_COUNTS = {"cnt": F.sum}  # quantile bins, top-k items
+_HLL = {"rho": F.max}
+_MOMENTS = {c: F.sum for c in ("n", "s1", "s2", "s3", "s4")}
 
 
-def _fine_k(upper: int, fine_ms: int, n_fine: int) -> Column:
-    """Fine-bucket index of a row: backward-aligned from `upper`, the
-    oldest (truncated) bucket clamped to n_fine-1 — the raw compiler's
-    F.least(..., n-1) rule."""
-    return F.least(
-        F.floor((F.lit(upper) - F.col("timestamp")) / F.lit(fine_ms)),
-        F.lit(n_fine - 1),
-    ).alias("k")
+def _reduce(df: DataFrame, keys: list, combine: dict) -> DataFrame:
+    return df.groupBy(*keys).agg(*(fn(c).alias(c) for c, fn in combine.items()))
 
 
-def _bucket_axis(
-    spark: SparkSession, n: int, upper: int, lower: int, coarse_ms: int
-) -> DataFrame:
-    """(kc, upper_bound, lower_bound) coarse serving axis: n buckets
-    backward from `upper`, oldest truncated at `lower` — the serving
-    twin of compiler._temporal_agg's bucket frame."""
-    return spark.range(n).select(
-        F.col("id").alias("kc"),
-        (F.lit(upper) - F.col("id") * coarse_ms).alias("upper_bound"),
-        F.greatest(
-            F.lit(upper) - (F.col("id") + 1) * coarse_ms, F.lit(lower)
-        ).alias("lower_bound"),
+def _union(rollups) -> DataFrame:
+    return reduce(DataFrame.unionByName, rollups)
+
+
+def _fine(
+    metric_df: DataFrame,
+    fine_ms: int,
+    shard_ms: int,
+    bounds: tuple[int, int] | None,
+    *not_null: str,
+) -> tuple[DataFrame, Column, tuple[int, int]]:
+    """Build prologue of every temporal family: the axis bounds (pinned,
+    or the shard-snapped data extent), the rows on the closed axis whose
+    `not_null` columns are set, and their fine bucket index `k`."""
+    lower, upper = bounds if bounds else temporal_bounds(metric_df, shard_ms)
+    keep = in_axis(lower, upper)
+    for c in not_null:
+        keep = keep & F.col(c).isNotNull()
+    n_fine = bucket_count(lower, upper, fine_ms)
+    k = bucket_index(F.lit(upper) - F.col("timestamp"), fine_ms, n_fine)
+    return metric_df.filter(keep), k.alias("k"), (lower, upper)
+
+
+def _coarse(
+    bounds: tuple[int, int], fine_ms: int, coarse_ms: int
+) -> tuple[Column, list[tuple[int, int, int, int]]]:
+    """Serve prologue of every coarse read: the multiple-of-grain check,
+    then the coarse index of a stored fine index k (aliased BUCKET) and
+    the coarse axis segment for compiler.axis_join."""
+    if coarse_ms % fine_ms:
+        raise ValueError("coarse interval must be a multiple of the rollup grain")
+    segs = bucket_segments([bounds], coarse_ms)
+    kc = bucket_index(F.col("k"), coarse_ms // fine_ms, segs[0][3])
+    return kc.alias(BUCKET), segs
+
+
+def _grid(value_range: tuple[float, float], nbins: int) -> tuple[float, float]:
+    """(vlo, bin width) of the fixed quantile value grid."""
+    vlo, vhi = value_range
+    return vlo, (vhi - vlo) / nbins or 1.0
+
+
+def _value_bin(value_col: str, value_range: tuple[float, float], nbins: int) -> Column:
+    """The value's cell on the fixed grid, clamped into [0, nbins - 1]."""
+    vlo, w = _grid(value_range, nbins)
+    return F.greatest(
+        F.least(F.floor((F.col(value_col) - F.lit(vlo)) / F.lit(w)), F.lit(nbins - 1)),
+        F.lit(0),
+    ).cast("int").alias("bin")
+
+
+def _in_bin(value_range: tuple[float, float], nbins: int, q: Column) -> Column:
+    """Linear interpolation inside the selected bin struct `s` (bin, cnt,
+    cum) of an n-row histogram: vlo + w·(bin + (q·n − cum_before)/cnt)."""
+    vlo, w = _grid(value_range, nbins)
+    return F.lit(vlo) + F.lit(w) * (
+        F.col("s.bin")
+        + (q * F.col("n") - (F.col("s.cum") - F.col("s.cnt"))) / F.col("s.cnt")
     )
 
 
-def _take_right(
-    out: DataFrame, n: int, limit: int | None, descending: bool
+def _percentile_by(
+    hist: DataFrame, key: str, q: float, value_range: tuple[float, float],
+    nbins: int, alias: str,
 ) -> DataFrame:
-    """Temporal LIMIT = takeRight of the sorted axis (the engine-route
-    contract shared with compiler._temporal_agg), then drop the bucket
-    id and sort by timestamp."""
-    if limit is not None:
-        out = (
-            out.filter(F.col("kc") < limit)
-            if not descending
-            else out.filter(F.col("kc") >= n - limit)
-        )
-    out = out.drop("kc")
-    order = F.col("timestamp").desc() if descending else F.col("timestamp").asc()
-    return out.orderBy(order)
+    """(key, n, <alias>): the q-percentile of each `key`'s (bin, cnt)
+    histogram — a cumulative window partitioned by key (parallel, no
+    global sort), the first bin reaching q·n, in-bin interpolation,
+    rounded to 6."""
+    cum = hist.select(
+        key, "bin", "cnt",
+        F.sum("cnt").over(Window.partitionBy(key).orderBy("bin")).alias("cum"),
+        F.sum("cnt").over(Window.partitionBy(key)).alias("n"),
+    )
+    sel = (
+        cum.filter(F.col("cum") >= F.lit(q) * F.col("n"))
+        .groupBy(key, "n")
+        .agg(F.min_by(F.struct("bin", "cnt", "cum"), F.col("bin")).alias("s"))
+    )
+    return sel.select(key, "n", F.round(_in_bin(value_range, nbins, F.lit(q)), 6).alias(alias))
+
+
+def _lc_index(field: str, m_buckets: int) -> Column:
+    """Linear-counting bitmap index: portable_hash(value) mod M."""
+    from .dedup import portable_word_hash
+
+    return F.pmod(
+        portable_word_hash(F.col(field).cast("string")), F.lit(m_buckets)
+    ).cast("int").alias("idx")
+
+
+def _lc_estimate(m_buckets: int) -> Column:
+    """-M·ln(1-V/M) rounded to 3 from the bitmap population V; a
+    saturated bitmap (V == M) yields NULL, not a fabricated number."""
+    M = float(m_buckets)
+    return F.when(
+        F.col("V") < m_buckets,
+        F.round(-F.lit(M) * F.log(F.lit(1.0) - F.col("V") / F.lit(M)), 3),
+    ).otherwise(F.lit(None).cast("double"))
+
+
+def _moments(cnt: Column) -> list[Column]:
+    """mean, skewness and excess kurtosis (rounded to 6) from the power
+    sums s1..s4 over `cnt` values; m₂ = 0 yields NULL via try_divide."""
+    cnt = cnt.cast("double")
+    mu = F.col("s1") / cnt
+    m2 = F.col("s2") / cnt - mu * mu
+    m3 = F.col("s3") / cnt - 3.0 * mu * (F.col("s2") / cnt) + 2.0 * mu * mu * mu
+    m4 = (
+        F.col("s4") / cnt
+        - 4.0 * mu * (F.col("s3") / cnt)
+        + 6.0 * mu * mu * (F.col("s2") / cnt)
+        - 3.0 * mu * mu * mu * mu
+    )
+    return [
+        F.round(mu, 6).alias("mean"),
+        F.round(F.try_divide(m3, F.sqrt(m2 * m2 * m2)), 6).alias("skewness"),
+        F.round(F.try_divide(m4, m2 * m2) - 3.0, 6).alias("ex_kurtosis"),
+    ]
 
 
 def build_temporal_rollup(
@@ -106,26 +210,16 @@ def build_temporal_rollup(
     per-batch rollups destined for merge_rollups — all batches must share
     the same upper anchor; at scale that anchor is the fixed shard grid).
     """
-    lower, upper = bounds if bounds else temporal_bounds(metric_df, shard_ms)
-    # clamp into the axis: ts == lower belongs to the truncated oldest
-    # bucket, same as the raw temporal compiler's F.least(..., n-1)
-    n_fine = -((upper - lower) // -fine_ms)  # ceil
-    k = _fine_k(upper, fine_ms, n_fine)
-    rollup = (
-        metric_df.filter(
-            (F.col("timestamp") >= lower) & (F.col("timestamp") <= upper)
-        )
-        .groupBy(k)
-        .agg(
-            # row count == count(value): the write path rejects NULL
-            # values (a bit always carries one), so the rollup count
-            # cannot diverge from the raw path's F.count(target)
-            F.count(F.lit(1)).alias("count_value"),
-            F.sum("value").alias("sum_value"),
-            F.max("value").alias("max_value"),
-        )
+    rows, k, bounds = _fine(metric_df, fine_ms, shard_ms, bounds)
+    rollup = rows.groupBy(k).agg(
+        # row count == count(value): the write path rejects NULL
+        # values (a bit always carries one), so the rollup count
+        # cannot diverge from the raw path's F.count(target)
+        F.count(F.lit(1)).alias("count_value"),
+        F.sum("value").alias("sum_value"),
+        F.max("value").alias("max_value"),
     )
-    return rollup, (lower, upper)
+    return rollup, bounds
 
 
 def merge_rollups(*rollups: DataFrame) -> DataFrame:
@@ -137,14 +231,7 @@ def merge_rollups(*rollups: DataFrame) -> DataFrame:
     rollup(A ∪ B) exactly (same bounds assumed: fine buckets are
     bound-anchored, so batches must share the axis — at scale the anchor
     is the fixed shard grid, which never moves)."""
-    out = rollups[0]
-    for r in rollups[1:]:
-        out = out.unionByName(r)
-    return out.groupBy("k").agg(
-        F.sum("count_value").alias("count_value"),
-        F.sum("sum_value").alias("sum_value"),
-        F.max("max_value").alias("max_value"),
-    )
+    return _reduce(_union(rollups), ["k"], _TEMPORAL)
 
 
 def build_group_rollup(metric_df: DataFrame, field: str) -> DataFrame:
@@ -152,7 +239,8 @@ def build_group_rollup(metric_df: DataFrame, field: str) -> DataFrame:
     a tag/dimension — ONE definition shared by the engine's
     materialization and its incremental maintenance merge, so the
     partial set cannot silently desynchronize between the two (the
-    _fine_k/_bucket_axis discipline applied to the group axis)."""
+    one-definition discipline of the bucket axis applied to the group
+    axis)."""
     return metric_df.groupBy(field).agg(
         F.count("value").alias("n"),
         F.sum("value").alias("sum_value"),
@@ -163,15 +251,7 @@ def build_group_rollup(metric_df: DataFrame, field: str) -> DataFrame:
 
 def merge_group_rollups(field: str, *rollups: DataFrame) -> DataFrame:
     """Combine build_group_rollup partials: n/sum add, min/max re-reduce."""
-    out = rollups[0]
-    for r in rollups[1:]:
-        out = out.unionByName(r)
-    return out.groupBy(field).agg(
-        F.sum("n").alias("n"),
-        F.sum("sum_value").alias("sum_value"),
-        F.min("min_value").alias("min_value"),
-        F.max("max_value").alias("max_value"),
-    )
+    return _reduce(_union(rollups), [field], _GROUP)
 
 
 def temporal_from_rollup(
@@ -195,18 +275,8 @@ def temporal_from_rollup(
     paths and the engine can route eligible queries here transparently.
     Values are raw (no rounding): presentation rounding is the caller's.
     """
-    if coarse_ms % fine_ms:
-        raise ValueError("coarse interval must be a multiple of the rollup grain")
-    lower, upper = bounds
-    m = coarse_ms // fine_ms
-    n = -((upper - lower) // -coarse_ms)  # ceil
-    merged = rollup.groupBy(
-        F.least(F.floor(F.col("k") / m), F.lit(n - 1)).alias("kc")
-    ).agg(
-        F.sum("count_value").alias("count_value"),
-        F.sum("sum_value").alias("sum_value"),
-        F.max("max_value").alias("max_value"),
-    )
+    kc, segs = _coarse(bounds, fine_ms, coarse_ms)
+    merged = _reduce(rollup, [kc], _TEMPORAL)
     if agg == "count":
         v = F.col("count_value")
     elif agg == "sum":
@@ -217,16 +287,10 @@ def temporal_from_rollup(
         v = F.col("max_value")
     else:
         raise ValueError(f"aggregation {agg!r} is not rollup-mergeable")
-
-    axis = _bucket_axis(spark, n, upper, lower, coarse_ms)
-    out = axis.join(F.broadcast(merged), "kc", "left").select(
-        F.col("upper_bound").alias("timestamp"),
-        "lower_bound",
-        "upper_bound",
-        F.coalesce(v, F.lit(0)).alias(alias),
-        "kc",
+    return axis_join(
+        spark, segs, coarse_ms, merged, [F.coalesce(v, F.lit(0)).alias(alias)],
+        limit, descending,
     )
-    return _take_right(out, n, limit, descending)
 
 
 # ----------------------------------------------------- quantile rollups
@@ -269,38 +333,22 @@ def build_quantile_rollup(
     build_temporal_rollup — at scale the anchors are fixed at metric
     init, like the shard grid).
     """
-    lower, upper = bounds if bounds else temporal_bounds(metric_df, shard_ms)
-    vlo, vhi = value_range if value_range else value_bounds(metric_df, value_col)
-    w = (vhi - vlo) / nbins or 1.0
-    n_fine = -((upper - lower) // -fine_ms)  # ceil
-    k = _fine_k(upper, fine_ms, n_fine)
-    b = F.greatest(
-        F.least(F.floor((F.col(value_col) - F.lit(vlo)) / F.lit(w)), F.lit(nbins - 1)),
-        F.lit(0),
-    ).cast("int").alias("bin")
-    rollup = (
-        # NULL values must not enter the sketch: least()/greatest() skip
-        # NULL arguments, so a NULL row would silently land in the TOP
-        # bin and skew every served percentile upward — the raw path's
-        # percentile() excludes NULLs, and rollup == raw is the invariant
-        metric_df.filter(
-            (F.col("timestamp") >= lower)
-            & (F.col("timestamp") <= upper)
-            & F.col(value_col).isNotNull()
-        )
-        .groupBy(k, b)
-        .agg(F.count(F.lit(1)).alias("cnt"))
+    value_range = tuple(value_range or value_bounds(metric_df, value_col))
+    # NULL values must not enter the sketch: least()/greatest() skip
+    # NULL arguments, so a NULL row would silently land in the TOP
+    # bin and skew every served percentile upward — the raw path's
+    # percentile() excludes NULLs, and rollup == raw is the invariant
+    rows, k, bounds = _fine(metric_df, fine_ms, shard_ms, bounds, value_col)
+    rollup = rows.groupBy(k, _value_bin(value_col, value_range, nbins)).agg(
+        F.count(F.lit(1)).alias("cnt")
     )
-    return rollup, (lower, upper), (vlo, vhi)
+    return rollup, bounds, value_range
 
 
 def merge_quantile_rollups(*rollups: DataFrame) -> DataFrame:
     """Counts add per (k, bin): merge(sketch(A), sketch(B)) == sketch(A∪B)
     exactly, provided the grids (bounds + value_range) match."""
-    out = rollups[0]
-    for r in rollups[1:]:
-        out = out.unionByName(r)
-    return out.groupBy("k", "bin").agg(F.sum("cnt").alias("cnt"))
+    return _reduce(_union(rollups), ["k", "bin"], _COUNTS)
 
 
 def percentiles_from_quantile_rollup(
@@ -320,10 +368,6 @@ def percentiles_from_quantile_rollup(
     single-partition window in this operator is over the sketch, not the
     data), and each q picks its bin with a broadcast-size join. Output
     rounded to 6 (order-statistic discipline)."""
-    vlo, vhi = value_range
-    w = (vhi - vlo) / nbins or 1.0
-    from pyspark.sql import Window
-
     hist = rollup.groupBy("bin").agg(F.sum("cnt").alias("cnt"))
     cum = hist.select(
         "bin", "cnt", F.sum("cnt").over(Window.orderBy("bin")).alias("cum")
@@ -336,10 +380,7 @@ def percentiles_from_quantile_rollup(
         .groupBy("q", "n")
         .agg(F.min_by(F.struct("bin", "cnt", "cum"), F.col("bin")).alias("s"))
     )
-    value = F.lit(vlo) + F.lit(w) * (
-        F.col("s.bin")
-        + (F.col("q") * F.col("n") - (F.col("s.cum") - F.col("s.cnt"))) / F.col("s.cnt")
-    )
+    value = _in_bin(value_range, nbins, F.col("q"))
     return sel.select("q", F.round(value, 6).alias(alias)).orderBy("q")
 
 
@@ -354,22 +395,17 @@ def build_group_quantile_rollup(
     cnt) on one shared fixed value grid — the GROUP BY counterpart of
     build_quantile_rollup (same exact-merge property: counts add per
     (group, bin)). One map-side-combinable shuffle; ≤ groups×nbins rows."""
-    vlo, vhi = value_range if value_range else value_bounds(metric_df, value_col)
-    w = (vhi - vlo) / nbins or 1.0
-    b = F.greatest(
-        F.least(F.floor((F.col(value_col) - F.lit(vlo)) / F.lit(w)), F.lit(nbins - 1)),
-        F.lit(0),
-    ).cast("int").alias("bin")
+    value_range = tuple(value_range or value_bounds(metric_df, value_col))
     # NULL values would land in the top bin (see build_quantile_rollup);
     # NULL group keys are excluded like every group-keyed rollup
     rollup = (
         metric_df.filter(
             F.col(value_col).isNotNull() & F.col(field).isNotNull()
         )
-        .groupBy(F.col(field), b)
+        .groupBy(F.col(field), _value_bin(value_col, value_range, nbins))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    return rollup, (vlo, vhi)
+    return rollup, value_range
 
 
 def group_percentiles_from_quantile_rollup(
@@ -384,25 +420,7 @@ def group_percentiles_from_quantile_rollup(
     the group-keyed sketch alone — per-group cumulative window over ≤
     nbins rows each (partitioned by group: parallel, no global sort),
     same in-bin interpolation as the global/temporal paths."""
-    from pyspark.sql import Window
-
-    vlo, vhi = value_range
-    w = (vhi - vlo) / nbins or 1.0
-    cum = rollup.select(
-        field, "bin", "cnt",
-        F.sum("cnt").over(Window.partitionBy(field).orderBy("bin")).alias("cum"),
-        F.sum("cnt").over(Window.partitionBy(field)).alias("n"),
-    )
-    sel = (
-        cum.filter(F.col("cum") >= F.lit(q) * F.col("n"))
-        .groupBy(field, "n")
-        .agg(F.min_by(F.struct("bin", "cnt", "cum"), F.col("bin")).alias("s"))
-    )
-    value = F.lit(vlo) + F.lit(w) * (
-        F.col("s.bin")
-        + (F.lit(q) * F.col("n") - (F.col("s.cum") - F.col("s.cnt"))) / F.col("s.cnt")
-    )
-    return sel.select(field, "n", F.round(value, 6).alias(alias)).orderBy(field)
+    return _percentile_by(rollup, field, q, value_range, nbins, alias).orderBy(field)
 
 
 def temporal_percentile_from_quantile_rollup(
@@ -427,43 +445,12 @@ def temporal_percentile_from_quantile_rollup(
     Plan shape: one (kc, bin) partial-agg shuffle over sketch rows (≤
     buckets×nbins), a per-bucket cumulative window partitioned BY BUCKET
     (parallel, no single-partition sort), and a broadcast axis join."""
-    from pyspark.sql import Window
-
-    if coarse_ms % fine_ms:
-        raise ValueError("coarse interval must be a multiple of the rollup grain")
-    vlo, vhi = value_range
-    w = (vhi - vlo) / nbins or 1.0
-    lower, upper = bounds
-    m = coarse_ms // fine_ms
-    n = -((upper - lower) // -coarse_ms)  # ceil
-    hist = rollup.groupBy(
-        F.least(F.floor(F.col("k") / m), F.lit(n - 1)).alias("kc"), F.col("bin")
-    ).agg(F.sum("cnt").alias("cnt"))
-    cum = hist.select(
-        "kc", "bin", "cnt",
-        F.sum("cnt").over(Window.partitionBy("kc").orderBy("bin")).alias("cum"),
-        F.sum("cnt").over(Window.partitionBy("kc")).alias("n"),
-    )
-    sel = (
-        cum.filter(F.col("cum") >= F.lit(q) * F.col("n"))
-        .groupBy("kc", "n")
-        .agg(F.min_by(F.struct("bin", "cnt", "cum"), F.col("bin")).alias("s"))
-    )
-    value = F.lit(vlo) + F.lit(w) * (
-        F.col("s.bin")
-        + (F.lit(q) * F.col("n") - (F.col("s.cum") - F.col("s.cnt"))) / F.col("s.cnt")
-    )
-    per_bucket = sel.select("kc", F.round(value, 6).alias(alias))
-    axis = _bucket_axis(spark, n, upper, lower, coarse_ms)
-    return (
-        axis.join(F.broadcast(per_bucket), "kc", "left")
-        .select(
-            F.col("upper_bound").alias("timestamp"),
-            "lower_bound",
-            "upper_bound",
-            F.coalesce(F.col(alias), F.lit(0.0)).alias(alias),
-        )
-        .orderBy("timestamp")
+    kc, segs = _coarse(bounds, fine_ms, coarse_ms)
+    hist = _reduce(rollup, [kc, "bin"], _COUNTS)
+    per_bucket = _percentile_by(hist, BUCKET, q, value_range, nbins, alias)
+    return axis_join(
+        spark, segs, coarse_ms, per_bucket,
+        [F.coalesce(F.col(alias), F.lit(0.0)).alias(alias)],
     )
 
 
@@ -492,35 +479,16 @@ def build_distinct_rollup(
     ≈ sqrt(M·(ln 2))/… ~1/sqrt(M); keep cardinality ≤ ~0.7·M per bucket
     (past that the bitmap saturates and the estimate degrades; V == M
     yields NULL rather than a fabricated number)."""
-    from .dedup import portable_word_hash
-
-    lower, upper = bounds if bounds else temporal_bounds(metric_df, shard_ms)
-    n_fine = -((upper - lower) // -fine_ms)  # ceil
-    k = _fine_k(upper, fine_ms, n_fine)
-    idx = F.pmod(
-        portable_word_hash(F.col(field).cast("string")), F.lit(m_buckets)
-    ).cast("int").alias("idx")
-    rollup = (
-        metric_df.filter(
-            (F.col("timestamp") >= lower)
-            & (F.col("timestamp") <= upper)
-            # count distinct ignores NULLs (HLL path rule) — a NULL field
-            # would otherwise survive as its own (k, NULL) row and
-            # inflate V by one per bucket
-            & F.col(field).isNotNull()
-        )
-        .select(k, idx)
-        .distinct()
-    )
-    return rollup, (lower, upper)
+    # count distinct ignores NULLs (HLL path rule) — a NULL field would
+    # otherwise survive as its own (k, NULL) row and inflate V by one per
+    # bucket
+    rows, k, bounds = _fine(metric_df, fine_ms, shard_ms, bounds, field)
+    return rows.select(k, _lc_index(field, m_buckets)).distinct(), bounds
 
 
 def merge_distinct_rollups(*rollups: DataFrame) -> DataFrame:
     """Set union per bucket: merge(lc(A), lc(B)) == lc(A ∪ B) exactly."""
-    out = rollups[0]
-    for r in rollups[1:]:
-        out = out.unionByName(r)
-    return out.distinct()
+    return _union(rollups).distinct()
 
 
 def temporal_count_distinct_from_rollup(
@@ -538,40 +506,16 @@ def temporal_count_distinct_from_rollup(
     -M·ln(1-V/M) rounded to 3. Output contract matches the temporal
     compiler (timestamp, lower_bound, upper_bound, <alias>); empty
     buckets 0; a saturated bitmap (V == M) yields NULL."""
-    if coarse_ms % fine_ms:
-        raise ValueError("coarse interval must be a multiple of the rollup grain")
-    lower, upper = bounds
-    m = coarse_ms // fine_ms
-    n = -((upper - lower) // -coarse_ms)  # ceil
+    kc, segs = _coarse(bounds, fine_ms, coarse_ms)
     v = (
-        rollup.select(
-            F.least(F.floor(F.col("k") / m), F.lit(n - 1)).alias("kc"), "idx"
-        )
+        rollup.select(kc, "idx")
         .distinct()
-        .groupBy("kc")
+        .groupBy(BUCKET)
         .agg(F.count(F.lit(1)).alias("V"))
     )
-    M = float(m_buckets)
-    axis = _bucket_axis(spark, n, upper, lower, coarse_ms)
-    est = (
-        F.when(F.col("V").isNull(), F.lit(0.0))  # empty bucket
-        .when(
-            F.col("V") < m_buckets,
-            F.round(-F.lit(M) * F.log(F.lit(1.0) - F.col("V") / F.lit(M)), 3),
-        )
-        # saturated bitmap: no estimate, not a fabricated number
-        .otherwise(F.lit(None).cast("double"))
-    )
-    return (
-        axis.join(F.broadcast(v), "kc", "left")
-        .select(
-            F.col("upper_bound").alias("timestamp"),
-            "lower_bound",
-            "upper_bound",
-            est.alias(alias),
-        )
-        .orderBy("timestamp")
-    )
+    # an empty bucket has no bitmap: estimate 0
+    est = F.when(F.col("V").isNull(), F.lit(0.0)).otherwise(_lc_estimate(m_buckets))
+    return axis_join(spark, segs, coarse_ms, v, [est.alias(alias)])
 
 
 def build_group_distinct_rollup(
@@ -583,11 +527,6 @@ def build_group_distinct_rollup(
     """Group-keyed LC partials: DISTINCT (group, idx) rows — the
     'distinct users per tag' counterpart of build_distinct_rollup, same
     union-merge and bounded-size properties (≤ M rows per group)."""
-    from .dedup import portable_word_hash
-
-    idx = F.pmod(
-        portable_word_hash(F.col(distinct_field).cast("string")), F.lit(m_buckets)
-    ).cast("int").alias("idx")
     # count distinct ignores NULLs. NULL GROUP keys must be filtered here
     # too: groupBy retains NULL keys, so without this the serving path
     # would emit a (NULL, est) row no consumer asked for
@@ -595,7 +534,7 @@ def build_group_distinct_rollup(
         metric_df.filter(
             F.col(distinct_field).isNotNull() & F.col(group_field).isNotNull()
         )
-        .select(F.col(group_field), idx)
+        .select(F.col(group_field), _lc_index(distinct_field, m_buckets))
         .distinct()
     )
 
@@ -609,13 +548,8 @@ def group_count_distinct_from_rollup(
     """(group, <alias>): LC estimate per group from the bitmap alone;
     saturated groups (V == M) yield NULL. One count per group — the
     partials are already distinct."""
-    M = float(m_buckets)
     v = rollup.groupBy(group_field).agg(F.count(F.lit(1)).alias("V"))
-    est = F.when(
-        F.col("V") < m_buckets,
-        F.round(-F.lit(M) * F.log(F.lit(1.0) - F.col("V") / F.lit(M)), 3),
-    ).otherwise(F.lit(None).cast("double"))
-    return v.select(group_field, est.alias(alias)).orderBy(group_field)
+    return v.select(group_field, _lc_estimate(m_buckets).alias(alias)).orderBy(group_field)
 
 
 def temporal_agg_via_rollup(
@@ -666,12 +600,10 @@ def build_hll_rollup(
 
     m = 1 << p
     w_bits = 60 - p
-    lower, upper = bounds if bounds else temporal_bounds(metric_df, shard_ms)
-    n_fine = -((upper - lower) // -fine_ms)  # ceil
-    k = _fine_k(upper, fine_ms, n_fine)
+    # count distinct ignores NULLs
+    rows, k, bounds = _fine(metric_df, fine_ms, shard_ms, bounds, field)
     h = portable_word_hash(F.col(field).cast("string"))
     reg = F.pmod(h, F.lit(m)).cast("int").alias("reg")
-    not_null = F.col(field).isNotNull()  # count distinct ignores NULLs
     w = F.shiftright(h, p)
     rho = (
         F.when(w == 0, F.lit(w_bits + 1))
@@ -679,23 +611,12 @@ def build_hll_rollup(
         .cast("int")
         .alias("rho")
     )
-    rollup = (
-        metric_df.filter(
-            (F.col("timestamp") >= lower) & (F.col("timestamp") <= upper) & not_null
-        )
-        .select(k, reg, rho)
-        .groupBy("k", "reg")
-        .agg(F.max("rho").alias("rho"))
-    )
-    return rollup, (lower, upper)
+    return _reduce(rows.select(k, reg, rho), ["k", "reg"], _HLL), bounds
 
 
 def merge_hll_rollups(*rollups: DataFrame) -> DataFrame:
     """Register-wise max: merge(hll(A), hll(B)) == hll(A ∪ B) exactly."""
-    out = rollups[0]
-    for r in rollups[1:]:
-        out = out.unionByName(r)
-    return out.groupBy("k", "reg").agg(F.max("rho").alias("rho"))
+    return _reduce(_union(rollups), ["k", "reg"], _HLL)
 
 
 def hll_constants(p: int) -> tuple[int, int, float]:
@@ -731,22 +652,10 @@ def temporal_hll_from_rollup(
     The register sum is scaled to integers (2^-rho · 2^(W+1)), so T is
     exact and order-free — the only float ops are the final division and
     ln, identical in any engine. Empty buckets 0; round 3."""
-    if coarse_ms % fine_ms:
-        raise ValueError("coarse interval must be a multiple of the rollup grain")
+    kc, segs = _coarse(bounds, fine_ms, coarse_ms)
     m, w_bits, C = hll_constants(p)
-    lower, upper = bounds
-    span = coarse_ms // fine_ms
-    n = -((upper - lower) // -coarse_ms)  # ceil
-    regs = (
-        rollup.select(
-            F.least(F.floor(F.col("k") / span), F.lit(n - 1)).alias("kc"),
-            "reg",
-            "rho",
-        )
-        .groupBy("kc", "reg")
-        .agg(F.max("rho").alias("rho"))
-    )
-    per_bucket = regs.groupBy("kc").agg(
+    regs = _reduce(rollup, [kc, "reg"], _HLL)
+    per_bucket = regs.groupBy(BUCKET).agg(
         F.count(F.lit(1)).alias("present"),
         F.sum(
             # shiftleft's amount must be a literal in the python API —
@@ -767,16 +676,10 @@ def temporal_hll_from_rollup(
         )
         .otherwise(F.round(e_raw, 3))
     )
-    axis = _bucket_axis(spark, n, upper, lower, coarse_ms)
-    out = axis.join(F.broadcast(per_bucket), "kc", "left").select(
-        F.col("upper_bound").alias("timestamp"),
-        "lower_bound",
-        "upper_bound",
-        est.alias(alias),
-        "kc",
-    )
     # same takeRight LIMIT contract as temporal_from_rollup (engine route)
-    return _take_right(out, n, limit, descending)
+    return axis_join(
+        spark, segs, coarse_ms, per_bucket, [est.alias(alias)], limit, descending
+    )
 
 
 # ----------------------------------------------------------- top-k rollup
@@ -795,20 +698,13 @@ def build_group_temporal_rollup(
     bounded by buckets x field cardinality, so this fits tag-like fields
     (for unbounded fields pair it with the HLL rollup's hashing or a
     heavy-hitters pass first — operators/skew.py)."""
-    lower, upper = bounds if bounds else temporal_bounds(metric_df, shard_ms)
-    n_fine = -((upper - lower) // -fine_ms)  # ceil
-    k = _fine_k(upper, fine_ms, n_fine)
+    rows, k, bounds = _fine(metric_df, fine_ms, shard_ms, bounds, field)
     rollup = (
-        metric_df.filter(
-            (F.col("timestamp") >= lower)
-            & (F.col("timestamp") <= upper)
-            & F.col(field).isNotNull()
-        )
-        .select(k, F.col(field).alias("item"))
+        rows.select(k, F.col(field).alias("item"))
         .groupBy("k", "item")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    return rollup, (lower, upper)
+    return rollup, bounds
 
 
 def temporal_topk_from_rollup(
@@ -825,32 +721,22 @@ def temporal_topk_from_rollup(
     coarse bucket, the rank window runs per bucket over at most the
     field's cardinality rows (ties break on item for determinism);
     empty buckets emit no rows (a dashboard shows them empty)."""
-    if coarse_ms % fine_ms:
-        raise ValueError("coarse interval must be a multiple of the rollup grain")
-    lower, upper = bounds
-    span = coarse_ms // fine_ms
-    n = -((upper - lower) // -coarse_ms)  # ceil
-    merged = (
-        rollup.groupBy(
-            F.least(F.floor(F.col("k") / span), F.lit(n - 1)).alias("kc"), "item"
-        )
-        .agg(F.sum("cnt").alias("count_value"))
-    )
-    w = Window.partitionBy("kc").orderBy(F.desc("count_value"), F.asc("item"))
+    kc, segs = _coarse(bounds, fine_ms, coarse_ms)
+    merged = _reduce(rollup, [kc, "item"], _COUNTS)
+    w = Window.partitionBy(BUCKET).orderBy(F.desc("cnt"), F.asc("item"))
     top = (
         merged.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= n_top)
     )
-    axis_upper = F.lit(upper) - F.col("kc") * coarse_ms
+    _, lower, upper, _ = segs[0]
+    lb, ub = bucket_bounds(F.col(BUCKET), lower, upper, coarse_ms)
     return (
         top.select(
-            axis_upper.alias("timestamp"),
-            F.greatest(
-                F.lit(upper) - (F.col("kc") + 1) * coarse_ms, F.lit(lower)
-            ).alias("lower_bound"),
-            axis_upper.alias("upper_bound"),
+            ub.alias("timestamp"),
+            lb.alias("lower_bound"),
+            ub.alias("upper_bound"),
             "item",
-            "count_value",
+            F.col("cnt").alias("count_value"),
             "rank",
         )
         .orderBy("timestamp", "rank")
@@ -874,39 +760,22 @@ def build_moment_rollup(
 
     Same axis/anchor contract as build_temporal_rollup.
     """
-    lower, upper = bounds if bounds else temporal_bounds(metric_df, shard_ms)
-    n_fine = -((upper - lower) // -fine_ms)  # ceil
-    k = _fine_k(upper, fine_ms, n_fine)
+    rows, k, bounds = _fine(metric_df, fine_ms, shard_ms, bounds)
     v = F.col("value").cast("double")
-    rollup = (
-        metric_df.filter(
-            (F.col("timestamp") >= lower) & (F.col("timestamp") <= upper)
-        )
-        .groupBy(k)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(v).alias("s1"),
-            F.sum(v * v).alias("s2"),
-            F.sum(v * v * v).alias("s3"),
-            F.sum(v * v * v * v).alias("s4"),
-        )
+    rollup = rows.groupBy(k).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(v).alias("s1"),
+        F.sum(v * v).alias("s2"),
+        F.sum(v * v * v).alias("s3"),
+        F.sum(v * v * v * v).alias("s4"),
     )
-    return rollup, (lower, upper)
+    return rollup, bounds
 
 
 def merge_moment_rollups(*rollups: DataFrame) -> DataFrame:
     """Additive merge — power sums simply add per fine bucket, so
     merge(rollup(A), rollup(B)) == rollup(A ∪ B) exactly."""
-    out = rollups[0]
-    for r in rollups[1:]:
-        out = out.unionByName(r)
-    return out.groupBy("k").agg(
-        F.sum("n").alias("n"),
-        F.sum("s1").alias("s1"),
-        F.sum("s2").alias("s2"),
-        F.sum("s3").alias("s3"),
-        F.sum("s4").alias("s4"),
-    )
+    return _reduce(_union(rollups), ["k"], _MOMENTS)
 
 
 def temporal_skew_from_moment_rollup(
@@ -924,42 +793,10 @@ def temporal_skew_from_moment_rollup(
     rows ordered by timestamp). Degenerate buckets (constant values,
     m₂ = 0) yield NULL skew/kurt via try_divide.
     """
-    if coarse_ms % fine_ms:
-        raise ValueError("coarse interval must be a multiple of the rollup grain")
-    lower, upper = bounds
-    m = coarse_ms // fine_ms
-    n = -((upper - lower) // -coarse_ms)  # ceil
-    merged = rollup.groupBy(
-        F.least(F.floor(F.col("k") / m), F.lit(n - 1)).alias("kc")
-    ).agg(
-        F.sum("n").alias("cnt"),
-        F.sum("s1").alias("s1"),
-        F.sum("s2").alias("s2"),
-        F.sum("s3").alias("s3"),
-        F.sum("s4").alias("s4"),
-    )
-    cnt = F.col("cnt").cast("double")
-    mu = F.col("s1") / cnt
-    m2 = F.col("s2") / cnt - mu * mu
-    m3 = F.col("s3") / cnt - 3.0 * mu * (F.col("s2") / cnt) + 2.0 * mu * mu * mu
-    m4 = (
-        F.col("s4") / cnt
-        - 4.0 * mu * (F.col("s3") / cnt)
-        + 6.0 * mu * mu * (F.col("s2") / cnt)
-        - 3.0 * mu * mu * mu * mu
-    )
-    axis = _bucket_axis(spark, n, upper, lower, coarse_ms)
-    out = axis.join(F.broadcast(merged), "kc", "left").select(
-        F.col("upper_bound").alias("timestamp"),
-        "lower_bound",
-        "upper_bound",
-        F.coalesce(F.col("cnt"), F.lit(0)).cast("long").alias("n_value"),
-        F.round(mu, 6).alias("mean"),
-        F.round(F.try_divide(m3, F.sqrt(m2 * m2 * m2)), 6).alias("skewness"),
-        F.round(F.try_divide(m4, m2 * m2) - 3.0, 6).alias("ex_kurtosis"),
-        "kc",
-    )
-    return _take_right(out, n, None, False)
+    kc, segs = _coarse(bounds, fine_ms, coarse_ms)
+    merged = _reduce(rollup, [kc], _MOMENTS)
+    n_value = F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n_value")
+    return axis_join(spark, segs, coarse_ms, merged, [n_value, *_moments(F.col("n"))])
 
 
 def temporal_skew_via_rollup(
@@ -1002,20 +839,8 @@ def group_skew_from_moment_rollup(rollup: DataFrame, field: str) -> DataFrame:
     moment rollup — identical standardized-moment closed form (and
     expression order) as temporal_skew_from_moment_rollup; degenerate
     groups (m₂ = 0) yield NULL via try_divide."""
-    cnt = F.col("n").cast("double")
-    mu = F.col("s1") / cnt
-    m2 = F.col("s2") / cnt - mu * mu
-    m3 = F.col("s3") / cnt - 3.0 * mu * (F.col("s2") / cnt) + 2.0 * mu * mu * mu
-    m4 = (
-        F.col("s4") / cnt
-        - 4.0 * mu * (F.col("s3") / cnt)
-        + 6.0 * mu * mu * (F.col("s2") / cnt)
-        - 3.0 * mu * mu * mu * mu
-    )
     return rollup.select(
         F.col("g").alias(field),
         F.col("n").cast("long").alias("n_value"),
-        F.round(mu, 6).alias("mean"),
-        F.round(F.try_divide(m3, F.sqrt(m2 * m2 * m2)), 6).alias("skewness"),
-        F.round(F.try_divide(m4, m2 * m2) - 3.0, 6).alias("ex_kurtosis"),
+        *_moments(F.col("n")),
     )

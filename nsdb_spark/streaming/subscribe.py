@@ -174,8 +174,8 @@ class SubscriptionManager:
             while not stop.wait(self.agg_push_period_ms / 1000.0):
                 try:
                     self.tick()
-                except Exception:  # pragma: no cover — keep the beat alive
-                    pass
+                except Exception:  # keep the beat alive; next tick retries
+                    _log.exception("subscription scheduler tick failed")
 
         threading.Thread(target=loop, daemon=True).start()
 

@@ -796,6 +796,32 @@ def test_retention_scheduler_evicts(engine):
         stop.set()
 
 
+def test_retention_scheduler_logs_failed_sweep_and_keeps_running(engine, caplog, monkeypatch):
+    import logging
+    import time as _time
+
+    calls = []
+
+    def sweep():
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("sweep boom")
+        return {}
+
+    monkeypatch.setattr(engine, "enforce_all_retentions", sweep)
+    caplog.set_level(logging.ERROR, logger="nsdb_spark.engine")
+    stop = engine.start_retention_scheduler(interval_s=0.05)
+    try:
+        deadline = _time.time() + 5
+        while len(calls) < 2 and _time.time() < deadline:
+            _time.sleep(0.02)
+    finally:
+        stop.set()
+    assert len(calls) >= 2  # the failed tick did not end the loop
+    failed = [r for r in caplog.records if r.name == "nsdb_spark.engine" and r.exc_info]
+    assert failed and "sweep boom" in str(failed[0].exc_info[1])
+
+
 def test_approx_count_distinct_opt_in(engine):
     from nsdb_spark.engine import NsdbEngine
 

@@ -839,13 +839,28 @@ def test_rollup_count_type_and_avg(spark):
     assert avg[1000] == 0.0  # empty bucket emitted as zero
 
 
-def test_rollup_rejects_non_multiple_interval(spark):
+@pytest.mark.parametrize(
+    "family", ["temporal", "percentile", "lc", "hll", "topk", "skew"]
+)
+def test_rollup_rejects_non_multiple_interval(spark, family):
     from nsdb_spark.operators import rollup
 
     df = spark.createDataFrame([(100, 1.0)], "timestamp long, value double")
+    # the multiple-of-grain check is the shared serve prologue: it runs
+    # before any family reads its partials, so one rollup serves all six
     r, b = rollup.build_temporal_rollup(df, 300, 1000)
-    with pytest.raises(ValueError):
-        rollup.temporal_from_rollup(spark, r, b, 300, 500, "sum", "s")
+    serve = {
+        "temporal": lambda: rollup.temporal_from_rollup(spark, r, b, 300, 500, "sum", "s"),
+        "percentile": lambda: rollup.temporal_percentile_from_quantile_rollup(
+            spark, r, 0.5, b, 300, 500, (0.0, 1.0)
+        ),
+        "lc": lambda: rollup.temporal_count_distinct_from_rollup(spark, r, b, 300, 500),
+        "hll": lambda: rollup.temporal_hll_from_rollup(spark, r, b, 300, 500),
+        "topk": lambda: rollup.temporal_topk_from_rollup(spark, r, b, 300, 500),
+        "skew": lambda: rollup.temporal_skew_from_moment_rollup(spark, r, b, 300, 500),
+    }[family]
+    with pytest.raises(ValueError, match="multiple of the rollup grain"):
+        serve()
 
 
 def test_kmeans_separates_blobs(spark):

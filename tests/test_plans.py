@@ -194,6 +194,31 @@ def test_rollup_axis_join_is_broadcast(spark):
     assert "SortMergeJoin" not in plan
 
 
+def test_rollup_axis_join_broadcast_is_capped(spark):
+    """Rollup serving shares the raw compiler's broadcast cap: the
+    per-bucket side of a > 1M-bucket axis (1 s buckets over a month of
+    shards) must not broadcast, since that can OOM the driver; a
+    dashboard-sized axis still does. Plans only, nothing collected."""
+    from nsdb_spark.operators import rollup
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "-1")
+    try:
+        df = spark.createDataFrame([(100, 1.0)], "timestamp long, value double")
+        r, _ = rollup.build_temporal_rollup(df, 1000, 1000, bounds=(0, 1000))
+        month = (0, 30 * 86_400_000)  # 2.59M one-second buckets
+        big = rollup.temporal_from_rollup(spark, r, month, 1000, 1000, "sum", "s")
+        assert "BroadcastExchange" not in plan_of(big)
+        small = rollup.temporal_from_rollup(spark, r, (0, 60_000), 1000, 1000, "sum", "s")
+        assert "BroadcastExchange" in plan_of(small)
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
 def test_split_assignment_no_shuffle(spark):
     from nsdb_spark.operators import sampling
 

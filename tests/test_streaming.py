@@ -95,6 +95,34 @@ def test_subscribe_temporal_buckets_roll_and_amend(manager, engine):
     assert cb.pushes[-1][0]["count_value"] == 3  # unchanged
 
 
+def test_scheduler_logs_failed_tick_and_keeps_running(engine, caplog, monkeypatch):
+    import logging
+
+    mgr = SubscriptionManager(engine, agg_push_period_ms=50)
+    calls = []
+
+    def tick():
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("tick boom")
+
+    monkeypatch.setattr(mgr, "tick", tick)
+    caplog.set_level(logging.ERROR, logger="nsdb_spark.streaming.subscribe")
+    mgr.start_scheduler()
+    try:
+        deadline = time.time() + 5
+        while len(calls) < 2 and time.time() < deadline:
+            time.sleep(0.02)
+    finally:
+        mgr.stop_scheduler()
+    assert len(calls) >= 2  # the failed tick did not end the loop
+    failed = [
+        r for r in caplog.records
+        if r.name == "nsdb_spark.streaming.subscribe" and r.exc_info
+    ]
+    assert failed and "tick boom" in str(failed[0].exc_info[1])
+
+
 def test_eval_expression_matches_compiler_semantics():
     stmt = parse("select * from m where value >= 2 and (name like Fra$ or age is null)")
     e = stmt.condition.expression
