@@ -425,11 +425,12 @@ def envelope(ivs: list[tuple[int, int | None]]) -> tuple[int | None, int | None]
 #: global bucket index column of a bucket-axis join
 BUCKET = "__bucket"
 
-#: the per-bucket side of an axis join broadcasts only while the axis is
-#: dashboard-sized: it has up to n rows, and n scales as extent/interval — a
-#: 1 s interval over a year of shards is ~31M buckets, which would OOM the
-#: driver as a broadcast. Past the cap both sides are equally-sized n-row
-#: frames; AQE picks the join.
+#: on a session with more than one shuffle partition, the per-bucket side of
+#: an axis join broadcasts only while the axis is dashboard-sized: it has up
+#: to n rows, and n scales as extent/interval — a 1 s interval over a year
+#: of shards is ~31M buckets, which would OOM the driver as a broadcast.
+#: Past the cap both sides are equally-sized n-row frames; AQE picks the
+#: join.
 _BROADCAST_BUCKETS_MAX = 1_000_000
 
 
@@ -492,17 +493,29 @@ def axis_join(
     the time-sorted axis (post_proc/package.scala:62-66): the most recent
     buckets ascending, the oldest descending. Rows are ordered by
     timestamp."""
+    # a session that shuffles into ONE partition (the engine's serving
+    # session) plans the join inside the result job: a one-split axis
+    # merge-joined to the shuffled per-bucket side, which is co-partitioned
+    # with it, so the final sort needs no exchange either. A broadcast there
+    # would only add a job of its own (its collect), and the merge join
+    # spills, so it holds at any axis size.
+    single = int(spark.conf.get("spark.sql.shuffle.partitions")) == 1
     axis = None
     for off, lower, upper, nb in segs:
         lb, ub = bucket_bounds(F.col("id"), lower, upper, width)
-        frame = spark.range(nb).select(
+        frame = spark.range(0, nb, 1, 1 if single else None).select(
             (F.col("id") + F.lit(off)).alias(BUCKET),
             ub.alias("upper_bound"),
             lb.alias("lower_bound"),
         )
         axis = frame if axis is None else axis.unionByName(frame)
     n = segs[-1][0] + segs[-1][3]
-    pb = F.broadcast(per_bucket) if n <= _BROADCAST_BUCKETS_MAX else per_bucket
+    if single:
+        pb = per_bucket.hint("merge")
+    elif n <= _BROADCAST_BUCKETS_MAX:
+        pb = F.broadcast(per_bucket)
+    else:
+        pb = per_bucket
     out = axis.join(pb, BUCKET, "left").select(
         F.col("upper_bound").alias("timestamp"), "lower_bound", "upper_bound",
         *values, BUCKET,

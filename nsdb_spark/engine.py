@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import analyzer
-from .catalog import RollupSpec, Warehouse
+from .catalog import MetricNotFound, RollupSpec, Warehouse
 from .compiler import (
     QueryCompiler,
     TimeContext,
@@ -157,14 +157,20 @@ class NsdbEngine:
         self._generation = 0
         self._metric_versions: dict[tuple[str, str, str], int] = {}
         self._lock = threading.Lock()
-        # point-query SERVING session: a newSession() sharing the
-        # SparkContext but with codegen + AQE disabled. Novel point
-        # statements (unique literals — no cache can serve them) pay
+        # SERVING session: a newSession() sharing the SparkContext but
+        # with codegen + AQE disabled and one shuffle partition. It is the
+        # one route for shard-pruned reads (_point_route): small-LIMIT
+        # plain SELECTs and aggregates (tag group-by, global, temporal)
+        # whose pruning leaves at most _POINT_SERVE_MAX_SHARDS shards.
+        # Novel statements (unique literals — no cache can serve them) pay
         # Janino whole-stage compilation per literal on the default
-        # session, which dominates the ~60-90 ms uncached floor; for a
-        # shard-pruned plain SELECT with a small LIMIT the interpreted
-        # path is strictly faster (the scan is a few columnar batches and
-        # CollectLimit stops early). Built lazily.
+        # session, and an aggregate's shuffle fans out over every core
+        # plus AQE re-planning of a sub-MB exchange. A few shards are
+        # small enough that interpreted execution in one shuffle
+        # partition is cheaper: a point read is a few columnar batches
+        # that CollectLimit stops early, and an aggregate runs as ONE
+        # Spark job (no broadcast or range-sampling job, see
+        # compiler.axis_join). Built lazily.
         self._serving_spark: SparkSession | None = None
 
     # ------------------------------------------------------ plan-cache plumbing
@@ -244,10 +250,12 @@ class NsdbEngine:
             self._generation += 1
 
     def _serving_session(self) -> SparkSession:
-        """The interpreted point-serving session (see __init__). AQE,
-        whole-stage codegen, and expression codegen are per-SESSION SQL
-        confs, so the isolated newSession() flips them for point serves
-        without touching the analytics session's behaviour."""
+        """The interpreted serving session of point and shard-pruned
+        aggregate reads (see __init__ and _point_route). AQE, whole-stage
+        codegen, expression codegen and the shuffle partition count are
+        per-SESSION SQL confs, so the isolated newSession() flips them for
+        serving reads without touching the analytics session's
+        behaviour."""
         s = self._serving_spark
         if s is not None:
             return s
@@ -268,7 +276,10 @@ class NsdbEngine:
                 # One split per scan is the point-read ideal at any core
                 # count; real data-sized scans never route here (the
                 # _POINT_SERVE_* gates), and maxPartitionBytes still
-                # bounds a split if one ever grows.
+                # bounds a split if one ever grows. An aggregate's
+                # exchange gets one partition for the same reason: its
+                # partials are a few KB, and one partition lets the axis
+                # join and the final sort run in the same job.
                 s.conf.set("spark.sql.files.minPartitionNum", "1")
                 s.conf.set("spark.sql.leafNodeDefaultParallelism", "1")
                 s.conf.set("spark.sql.shuffle.partitions", "1")
@@ -372,7 +383,7 @@ class NsdbEngine:
             raise SchemaError("insert_frame takes a batch DataFrame")
         try:
             existing = self.warehouse.get_schema(db, ns, metric)
-        except Exception:
+        except MetricNotFound:
             existing = None
         known = (
             {n: existing.field_class(n) for n in existing.fields}
@@ -775,12 +786,14 @@ class NsdbEngine:
             self._plans.put(skey, token, _Planned(plan, rows, len(rows) < bound))
         return rows[:k]
 
-    #: point-serving gates: route a plain SELECT through the interpreted
-    #: serving session only when the caller wants at most this many rows
-    #: and shard pruning leaves at most this many shards — the dashboard
-    #: point-read shape, where per-literal Janino compilation dominates.
-    #: Larger limits or wide scans stay on the codegen session, whose
-    #: per-row throughput wins as soon as the scan is data-sized.
+    #: serving gates (see _point_route): a read plans on the interpreted
+    #: serving session only when shard pruning leaves at most
+    #: _POINT_SERVE_MAX_SHARDS shards, and a plain SELECT also only when
+    #: the caller wants at most _POINT_SERVE_MAX_LIMIT rows — the
+    #: dashboard shapes, where per-literal Janino compilation and a
+    #: many-partition shuffle dominate. Larger limits or wide scans stay
+    #: on the codegen session, whose per-row throughput wins as soon as
+    #: the scan is data-sized.
     _POINT_SERVE_MAX_LIMIT = 1_000
     _POINT_SERVE_MAX_SHARDS = 4
 
@@ -818,14 +831,14 @@ class NsdbEngine:
                 stmt.condition.expression if stmt.condition else None, ctx
             )
             locations = self.warehouse.locations(db, ns, stmt.metric)
-            if self._point_route(stmt, parsed, locations, ivs, si, point_serve):
-                # interpreted serving session, and the WHOLE statement as
-                # one parameterized spark.sql text over the serving view
-                # (shard conjunct folded into the WHERE) — a single py4j
-                # roundtrip instead of ~2 per Column node, which dominated
-                # the uncached point-statement floor (BASELINE.md
-                # decomposition). Parity with the Column pipeline is
-                # pinned by the grid + hypothesis tests.
+            serving = self._point_route(stmt, parsed, locations, ivs, si, point_serve)
+            if serving and isinstance(parsed, analyzer.ParsedSimpleQuery):
+                # a plain SELECT plans as ONE parameterized spark.sql text
+                # over the serving view (shard conjunct folded into the
+                # WHERE): a single py4j roundtrip instead of ~2 per Column
+                # node, which dominated the uncached point-statement floor
+                # (BASELINE.md decomposition). Parity with the Column
+                # pipeline is pinned by the grid + hypothesis tests.
                 self._read_metric_frame(db, ns, stmt.metric, serving=True)
                 text, args = serving_sql(
                     parsed, schema, ctx,
@@ -834,9 +847,11 @@ class NsdbEngine:
                 )
                 out = (self._serving_session().sql(text, args=args), parsed, False)
             else:
-                df = self._prune_shards(self.read_metric(db, ns, stmt.metric), ivs, si)
+                df = self._prune_shards(
+                    self._read_metric_frame(db, ns, stmt.metric, serving), ivs, si
+                )
                 compiler = QueryCompiler(
-                    self.spark,
+                    self._serving_session() if serving else self.spark,
                     shard_interval_ms=si,
                     approx_count_distinct=self.approx_count_distinct,
                 )
@@ -855,16 +870,25 @@ class NsdbEngine:
         self, stmt, parsed, locations, ivs, shard_interval: int, point_serve: bool
     ) -> bool:
         """True when a statement should plan on the interpreted serving
-        session: a non-DISTINCT plain SELECT whose caller fetches at most
-        _POINT_SERVE_MAX_LIMIT rows (its own LIMIT, or the shape path's
-        vouched prefix) and whose shard pruning leaves at most
-        _POINT_SERVE_MAX_SHARDS shards. DISTINCT and wide scans keep the
-        codegen session — they are data-sized regardless of LIMIT."""
-        if not isinstance(parsed, analyzer.ParsedSimpleQuery) or parsed.distinct:
-            return False
-        if not point_serve and (
-            stmt.limit is None
-            or stmt.limit.value > self._POINT_SERVE_MAX_LIMIT
+        session — the one serving route for point and aggregate reads.
+        The shard gate is shared: shard pruning must leave at most
+        _POINT_SERVE_MAX_SHARDS shards. The assumption behind it is that
+        a few shards are small enough that interpreted execution and one
+        shuffle partition cost less than a Janino compile of every novel
+        statement plus a shuffle fanned out over every core.
+
+        Past the gate, an aggregate (tag group-by, global, temporal)
+        always serves; a plain SELECT serves only when it is not DISTINCT
+        and its caller fetches at most _POINT_SERVE_MAX_LIMIT rows (its
+        own LIMIT, or the shape path's vouched prefix). DISTINCT and
+        LIMIT-less plain scans keep the codegen session — they are
+        data-sized regardless of the shard count."""
+        if isinstance(parsed, analyzer.ParsedSimpleQuery) and (
+            parsed.distinct
+            or not point_serve and (
+                stmt.limit is None
+                or stmt.limit.value > self._POINT_SERVE_MAX_LIMIT
+            )
         ):
             return False
         scanned = touched_shards(locations, ivs, shard_interval)

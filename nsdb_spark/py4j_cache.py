@@ -21,7 +21,16 @@ the JVM, so memoizing them is safe:
   meaning can change when a later ``java_import`` adds a matching
   class) are never cached;
 - keys carry ``id(gateway_client)`` so a restarted JVM/gateway starts
-  cold instead of serving stale handles.
+  cold instead of serving stale handles, and the caches hold one
+  gateway client at a time: a lookup through a client whose ``id``
+  differs from the cached one empties both dicts first, so they never
+  grow past one gateway's names.
+
+A cached handle keeps its gateway client alive (a JavaMember or
+JavaClass holds a reference to it), so a replaced client is not freed
+until the next lookup through the new one empties the caches. The same
+reference keeps the cached ``id`` from being reused by another client
+while entries for it remain.
 
 With this + ``spark.python.sql.dataFrameDebugging.enabled=false`` (see
 session.py), ``F.lit`` drops ~1000→170 µs and a Column binop ~2100→160
@@ -42,6 +51,28 @@ from py4j import java_gateway as _jg
 _installed = False
 _class_member_cache: dict = {}
 _view_class_cache: dict = {}
+#: id() of the gateway client whose handles the caches hold
+_client_id: int | None = None
+
+
+def _cached(cache: dict, key: tuple, client, resolve, keep: tuple):
+    """cache[key], else resolve() — stored when it is one of the `keep`
+    types. A `client` other than the cached one empties both caches
+    first (see the module docstring)."""
+    global _client_id
+    cid = id(client)
+    if cid != _client_id:
+        _class_member_cache.clear()
+        _view_class_cache.clear()
+        _client_id = cid
+    key += (cid,)
+    hit = cache.get(key)
+    if hit is not None:
+        return hit
+    v = resolve()
+    if isinstance(v, keep):
+        cache[key] = v
+    return v
 
 
 def install() -> None:
@@ -55,29 +86,21 @@ def install() -> None:
     jv_orig = _jg.JVMView.__getattr__
 
     def jc_getattr(self, name):
-        key = (self._fqn, name, id(self._gateway_client))
-        hit = _class_member_cache.get(key)
-        if hit is not None:
-            return hit
-        v = jc_orig(self, name)
         # JavaMember (static method) and JavaClass (nested class) are
         # stateless handles; a static *field* access returns its current
         # value and must never be cached
-        if isinstance(v, (_jg.JavaMember, _jg.JavaClass)):
-            _class_member_cache[key] = v
-        return v
+        return _cached(
+            _class_member_cache, (self._fqn, name), self._gateway_client,
+            lambda: jc_orig(self, name), (_jg.JavaMember, _jg.JavaClass),
+        )
 
     def jv_getattr(self, name):
-        key = (self._id, name, id(self._gateway_client))
-        hit = _view_class_cache.get(key)
-        if hit is not None:
-            return hit
-        v = jv_orig(self, name)
         # cache resolved classes only — JavaPackage resolution can
         # legitimately change after a later java_import
-        if isinstance(v, _jg.JavaClass):
-            _view_class_cache[key] = v
-        return v
+        return _cached(
+            _view_class_cache, (self._id, name), self._gateway_client,
+            lambda: jv_orig(self, name), (_jg.JavaClass,),
+        )
 
     _jg.JavaClass.__getattr__ = jc_getattr
     _jg.JVMView.__getattr__ = jv_getattr

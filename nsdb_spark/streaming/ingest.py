@@ -50,15 +50,17 @@ class CommittedBatchMarker:
         self._fs = self._path.getFileSystem(hconf)
 
     def last(self) -> int:
-        try:
-            st = self._fs.open(self._path)
-            try:
-                data = bytes(st.readAllBytes())
-            finally:
-                st.close()
-            return int(data.decode().strip())
-        except Exception:
+        """The last committed batch id, -1 when no marker exists yet. Any
+        other failure (a read error, a garbled marker) raises and fails
+        the batch: guessing -1 would re-apply committed batches."""
+        if not self._fs.exists(self._path):
             return -1
+        st = self._fs.open(self._path)
+        try:
+            data = bytes(st.readAllBytes())
+        finally:
+            st.close()
+        return int(data.decode().strip())
 
     def commit(self, batch_id: int) -> None:
         out = self._fs.create(self._tmp, True)

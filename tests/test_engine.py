@@ -1204,6 +1204,31 @@ def test_insert_frame_retention_rejects(engine, spark):
         engine.insert_frame("default", "default", "ret", df)
 
 
+def test_insert_frame_corrupt_schema_raises_before_any_work(engine, spark):
+    """A metric whose schema.json cannot be parsed is not a new metric:
+    insert_frame raises at once, before any Spark job, and leaves the
+    registry file as it was (it must not ingest the frame as a fresh
+    metric and drop the registered field classes)."""
+    import os
+
+    engine.insert_bits("default", "default", "cm", [Bit(1, 5, {}, {"name": "a"})])
+    p = os.path.join(engine.warehouse.metric_path("default", "default", "cm"), "schema.json")
+    with open(p, "w") as fh:
+        fh.write("{not json")
+    df = spark.createDataFrame([(2, 7, "b")], "timestamp long, value long, name string")
+    sc = spark.sparkContext
+    sc.setJobGroup("corrupt-schema", "corrupt-schema")
+    try:
+        with pytest.raises(ValueError):
+            engine.insert_frame("default", "default", "cm", df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("corrupt-schema")) == []
+    with open(p) as fh:
+        assert fh.read() == "{not json"
+
+
 def test_insert_from_csv_and_json(engine, spark, tmp_path):
     csv = tmp_path / "in.csv"
     csv.write_text("timestamp,value,host\n1,1.5,h1\n2,2.5,h2\n")
@@ -1866,6 +1891,39 @@ def test_serving_session_carries_tuned_and_point_confs(engine):
     assert engine.spark.conf.get("spark.sql.shuffle.partitions") != "1"
 
 
+def test_py4j_cache_holds_one_gateway_client():
+    """The reflection caches serve one gateway client at a time: a lookup
+    through a different client empties both dicts before it caches, so a
+    replaced gateway's handles are released and the caches stay bounded
+    by one gateway's names. Fake clients, no JVM involved."""
+    from nsdb_spark import py4j_cache
+
+    class Handle:
+        pass
+
+    client_a, client_b = object(), object()
+    calls = []
+
+    def resolve(v):
+        return lambda: calls.append(v) or v
+
+    member, view = py4j_cache._class_member_cache, py4j_cache._view_class_cache
+    h1, h2, h3 = Handle(), Handle(), Handle()
+    assert py4j_cache._cached(member, ("C", "m"), client_a, resolve(h1), (Handle,)) is h1
+    assert py4j_cache._cached(view, ("v", "C"), client_a, resolve(h2), (Handle,)) is h2
+    # a hit through the same client resolves nothing
+    assert py4j_cache._cached(member, ("C", "m"), client_a, resolve(h3), (Handle,)) is h1
+    assert calls == [h1, h2]
+    # a value of a type outside `keep` is returned but never cached
+    assert py4j_cache._cached(member, ("C", "f"), client_a, resolve(7), (Handle,)) == 7
+    assert ("C", "f", id(client_a)) not in member
+    # a second client empties BOTH caches, then caches its own handle
+    assert py4j_cache._cached(member, ("C", "m"), client_b, resolve(h3), (Handle,)) is h3
+    assert calls == [h1, h2, 7, h3]
+    assert list(member.items()) == [(("C", "m", id(client_b)), h3)]
+    assert view == {}
+
+
 def test_py4j_reflection_cache_semantics(spark):
     """The py4j reflection caches (session.py/py4j_cache.py) memoize
     only stateless handles: static-method members and resolved classes
@@ -2237,6 +2295,80 @@ def test_point_serving_sql_text_route_parity_grid(agg_engine):
             assert got == want, q
         else:
             assert sorted(got) == sorted(want), q
+
+
+def test_serving_aggregate_route_parity_grid(engine):
+    """Shard-pruned aggregates (tag group-by, global, temporal) plan with
+    the Column compiler on the interpreted one-partition serving session.
+    Each must return EXACTLY the ordered rows of the analytics route
+    (forced past the gate), including the LIMIT quirks (global count
+    clamp, temporal takeRight both ways), a multi-segment NOT-range axis,
+    the zero-skipping temporal MIN, first/last and count distinct."""
+    from nsdb_spark.sql.parser import parse
+
+    load(engine, "aggregationLongMetric", AGG_LONG_METRIC)
+    load(engine, "temporalLongMetric", TEMPORAL_LONG_METRIC, shard_interval_ms=100000)
+    load(engine, "zeroMinMetric", [
+        Bit(5000, 0, {}, {"name": "a"}),
+        Bit(15000, 7, {}, {"name": "b"}),
+        Bit(25000, 3, {}, {"name": "c"}),
+        Bit(35000, 9, {}, {"name": "d"}),
+    ], shard_interval_ms=20000)
+    ctx = TimeContext(200000)
+    grid = [
+        # tag group-by, ORDER BY value (no ties) and LIMIT
+        "select max(value) from aggregationLongMetric group by name "
+        "order by value desc limit 2",
+        "select min(value) from aggregationLongMetric where age > 14 "
+        "group by name order by value limit 3",
+        "select sum(value) from aggregationLongMetric group by name order by name",
+        # global count clamped to LIMIT
+        "select count(*) from aggregationLongMetric limit 4",
+        "select count(*) from aggregationLongMetric where age >= 15 limit 100",
+        # temporal takeRight LIMIT, ascending and descending
+        "select count(*) from temporalLongMetric group by interval 30s "
+        "order by timestamp limit 3",
+        "select sum(value) from temporalLongMetric group by interval 30s "
+        "order by timestamp desc limit 3",
+        # NOT-range: two disjoint axes
+        "select count(*) from temporalLongMetric where not timestamp in "
+        "(60000, 130000) group by interval 30s",
+        # zero-skipping MIN across the two 20 s shards of one 40 s bucket
+        "select min(value) from zeroMinMetric group by interval 40s",
+        # first/last
+        "select first(value) from aggregationLongMetric group by name order by name",
+        "select last(value) from aggregationLongMetric where age > 14 "
+        "group by name order by name",
+        # count distinct
+        "select count(distinct value) from aggregationLongMetric group by name "
+        "order by name",
+        "select count(distinct name) from temporalLongMetric group by interval 60s",
+    ]
+    for q in grid:
+        stmt = parse(q, db="default", namespace="default")
+        df, _, routed = engine._plan_select(stmt, ctx)
+        assert not routed, q
+        assert df.sparkSession is engine._serving_session(), q
+        got = [tuple(r) for r in df.collect()]
+        engine.invalidate_plan_caches()
+        orig = engine._point_route
+        engine._point_route = lambda *a, **k: False
+        try:
+            dfr, _, _ = engine._plan_select(stmt, ctx)
+            assert dfr.sparkSession is engine.spark, q
+            want = [tuple(r) for r in dfr.collect()]
+        finally:
+            engine._point_route = orig
+            engine.invalidate_plan_caches()
+        # every entry's row order is defined (ORDER BY, the time axis, or
+        # one global row), so rows compare in order
+        assert got and got == want, q
+    # the zero-skipping quirk survives the route change
+    stmt = parse(
+        "select min(value) from zeroMinMetric group by interval 40s",
+        db="default", namespace="default",
+    )
+    assert engine.collect_select(stmt, ctx)[0][3] == 3
 
 
 def test_point_serving_view_reregisters_on_mutation(agg_engine):

@@ -77,6 +77,57 @@ def test_temporal_bucket_join_is_broadcast(sharded_engine):
     assert "BroadcastExchange" in plan_of(df)
 
 
+def _jobs_of(engine, sql: str) -> tuple[int, list]:
+    """(Spark jobs, rows) of planning and collecting one statement."""
+    from nsdb_spark.sql.parser import parse
+
+    sc = engine.spark.sparkContext
+    group = f"jobs-{id(sql)}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = engine.collect_select(parse(sql, db="default", namespace="default"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), rows
+
+
+def test_shard_pruned_temporal_read_runs_one_job(sharded_engine):
+    """A temporal read whose pruning leaves 3 of planm's 10 shards plans
+    on the interpreted one-partition serving session: the axis join is a
+    merge join inside the result job (no broadcast collect job, no
+    range-sampling job for the final sort), so the whole read is ONE
+    Spark job and the plan has no BroadcastExchange and no
+    WholeStageCodegen span."""
+    sql = (
+        "select sum(value) from planm where timestamp >= 40000 and "
+        "timestamp < 70000 group by interval 10s"
+    )
+    df = sharded_engine.execute(sql)
+    assert df.sparkSession is sharded_engine._serving_session()
+    plan = plan_of(df)
+    assert "BroadcastExchange" not in plan
+    assert "WholeStageCodegen" not in plan
+    jobs, rows = _jobs_of(sharded_engine, sql)
+    assert jobs == 1
+    assert [tuple(r) for r in rows] == [
+        (49999, 40000, 49999, 85000),
+        (59999, 49999, 59999, 105000),
+        (69999, 59999, 69999, 125000),
+    ]
+
+
+def test_shard_pruned_tag_group_by_runs_one_job(sharded_engine):
+    """A shard-pruned tag group-by runs its partial/final aggregate in one
+    job on the serving session: no AQE shuffle-map job before it."""
+    sql = "select count(*) from planm where timestamp >= 40000 and timestamp < 70000 group by g"
+    assert sharded_engine.execute(sql).sparkSession is sharded_engine._serving_session()
+    jobs, rows = _jobs_of(sharded_engine, sql)
+    assert jobs == 1
+    assert [tuple(r) for r in rows] == [("x", 6)]
+
+
 def test_decontaminate_broadcasts_benchmark_grams(spark):
     """The corpus side must never shuffle for the match: benchmark gram
     hashes broadcast, and the only corpus-keyed exchange is the final

@@ -991,6 +991,29 @@ def test_stateful_boundary_timestamp_upper_inclusive(spark, tmp_path):
     assert by_ub[20000][2] == 1 and by_ub[20000][4] == 4.0
 
 
+def test_committed_batch_marker_fails_on_unreadable_marker(spark, tmp_path):
+    """Only a MISSING marker means "nothing applied yet" (-1). A garbled
+    marker or one that cannot be read raises, so the batch fails instead
+    of replaying already-applied batches as duplicate appends."""
+    from py4j.protocol import Py4JJavaError
+
+    from nsdb_spark.streaming.ingest import CommittedBatchMarker
+
+    fresh = CommittedBatchMarker(spark, str(tmp_path / "fresh"))
+    assert fresh.last() == -1
+    fresh.commit(3)
+    assert fresh.last() == 3
+    garbled = tmp_path / "garbled"
+    garbled.mkdir()
+    (garbled / "_nsdb_committed_batch").write_text("not-a-batch-id")
+    with pytest.raises(ValueError):
+        CommittedBatchMarker(spark, str(garbled)).last()
+    unreadable = tmp_path / "unreadable"
+    (unreadable / "_nsdb_committed_batch").mkdir(parents=True)
+    with pytest.raises(Py4JJavaError):
+        CommittedBatchMarker(spark, str(unreadable)).last()
+
+
 def test_neardup_index_replay_is_idempotent(engine, spark, tmp_path):
     """Re-processing a batch (crash between the index write and the
     marker commit) must not duplicate signature rows: each batch lands

@@ -6,13 +6,21 @@ Measures, in ONE process, the bench's serving scenarios:
   grpc_100_point_queries    — 100 identical rpcs (statement cache path)
   grpc_100_distinct_queries — 100 unique-LIMIT rpcs (shape cache path)
   grpc_100_distinct_shapes  — 100 unique-filter rpcs (full plan path)
+  grpc_100_distinct_aggs    — 100 unique-bound aggregate rpcs, tag
+                              group-by and temporal alternating (the
+                              shard-pruned aggregate route)
 
 Variant knobs (env):
   SPARK_GRAFT_CPUS     — core count (the 32-vs-8 axis)
   SERVING_MODE         — interp (current code), interp-nocap (reset the
                          r9 partition caps to the r8 defaults), codegen
-                         (disable the point route: plans stay on the
-                         codegen session)
+                         (disable the serving route for point AND
+                         aggregate reads: plans stay on the codegen
+                         session)
+
+`SERVING_MODE=codegen` against `SERVING_MODE=interp` is the before/after of
+serving shard-pruned aggregates on the interpreted session
+(grpc_100_distinct_aggs).
 
 Run it alternately across variants from a driver shell; each invocation
 prints one JSON line. 20-iteration warmup per scenario before timing
@@ -111,6 +119,21 @@ def main() -> None:
                 "default", "default",
                 f"select * from points where timestamp >= {i} limit 5")
         res["grpc_100_distinct_shapes"] = round(time.time() - t0, 3)
+
+        def agg_sql(lo: int) -> str:
+            where = f"where timestamp >= {lo} and timestamp < {lo + 100}"
+            if lo % 2:
+                return f"select sum(value) from points {where} group by interval 1s"
+            return f"select count(*) from points {where} group by k"
+
+        for i in range(20):
+            client.execute_sql("default", "default", agg_sql(100 + i))
+        t0 = time.time()
+        for i in range(100):
+            r = client.execute_sql("default", "default", agg_sql(i))
+            if not r.get("completedSuccessfully"):
+                raise RuntimeError(f"aggregate rpc failed: {r}")
+        res["grpc_100_distinct_aggs"] = round(time.time() - t0, 3)
         res["ok"] = ok
     finally:
         client.close()
