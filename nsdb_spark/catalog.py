@@ -7,6 +7,7 @@ Layout (SURVEY.md §1.6):  <root>/<db>/<namespace>/<metric>/
       (shard_start = floor(timestamp / interval) * interval,
        MetadataCoordinator.scala:89-91)
     rollups/registry.json + rollups/<store>/ — materialized rollups
+    .staging/ — in-flight rewrites, swapped in by rename (Warehouse._swap)
 
 The partition listing doubles as NSDb's "locations" metadata: temporal
 queries derive bucket bounds from it without touching data
@@ -14,14 +15,16 @@ queries derive bucket bounds from it without touching data
 """
 from __future__ import annotations
 
+import contextlib
 import dataclasses
 import json
 import os
 import re
 import shutil
+import tempfile
 import threading
 
-from .model import DEFAULT_SHARD_INTERVAL_MS, MetricSchema, SchemaError
+from .model import DEFAULT_SHARD_INTERVAL_MS, SHARD_COL, MetricSchema, SchemaError
 
 
 class MetricNotFound(Exception):
@@ -113,7 +116,11 @@ class Warehouse:
         p = os.path.join(self.root, self._safe(db), self._safe(ns))
         if not os.path.isdir(p):
             return []
-        return sorted(d for d in os.listdir(p) if os.path.isdir(os.path.join(p, d)))
+        # a restore stages under <ns>/.staging, which is no metric
+        return sorted(
+            d for d in os.listdir(p)
+            if self._NAME_RE.match(d) and os.path.isdir(os.path.join(p, d))
+        )
 
     def exists(self, db: str, ns: str, metric: str) -> bool:
         return os.path.isfile(os.path.join(self.metric_path(db, ns, metric), "schema.json"))
@@ -139,11 +146,22 @@ class Warehouse:
                     merged = MetricSchema.from_json(fh.read()).union(incoming)
             else:
                 merged = incoming
-            tmp = p + ".tmp"
-            with open(tmp, "w") as fh:
-                fh.write(merged.to_json())
-            os.replace(tmp, p)
+            self._write_json(p, merged.to_dict(), indent=2)
         return merged
+
+    @staticmethod
+    def _write_json(path: str, obj, **dump_kw) -> None:
+        """Replace the JSON file at path atomically: dump to a fresh temp
+        file beside it, then os.replace — a concurrent reader sees the old
+        document or the new one, never a truncated one."""
+        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
+        try:
+            with os.fdopen(fd, "w") as fh:
+                json.dump(obj, fh, **dump_kw)
+            os.replace(tmp, path)
+        except BaseException:
+            os.unlink(tmp)
+            raise
 
     # -- metric info (INIT METRIC parity: init.proto:22-41) ----------------
     def get_info(self, db: str, ns: str, metric: str) -> dict:
@@ -171,8 +189,24 @@ class Warehouse:
             )
         mp = self.metric_path(db, ns, metric)
         os.makedirs(mp, exist_ok=True)
-        with open(os.path.join(mp, "meta.json"), "w") as fh:
-            json.dump({"shardInterval": shard_interval_ms, "retention": retention_ms}, fh)
+        self._write_json(
+            os.path.join(mp, "meta.json"),
+            {"shardInterval": shard_interval_ms, "retention": retention_ms},
+        )
+
+    def mtimes(self, db: str, ns: str, metric: str) -> tuple[int, int]:
+        """mtime_ns of schema.json and of data/ (-1 when missing): the
+        marks of out-of-process change in NsdbEngine._cache_token. Every
+        insert rewrites schema.json; every shard added, swapped or removed
+        renames an entry of data/."""
+        mp = self.metric_path(db, ns, metric)
+        marks = []
+        for p in (os.path.join(mp, "schema.json"), os.path.join(mp, "data")):
+            try:
+                marks.append(os.stat(p).st_mtime_ns)
+            except OSError:
+                marks.append(-1)
+        return tuple(marks)
 
     # -- locations (shard partition listing) -------------------------------
     _SHARD_RE = re.compile(r"^shard_start=(-?\d+)$")
@@ -248,10 +282,7 @@ class Warehouse:
             specs[spec.store] = spec
             p = os.path.join(self._rollups_dir(db, ns, metric), "registry.json")
             os.makedirs(os.path.dirname(p), exist_ok=True)
-            tmp = p + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump({k: dataclasses.asdict(s) for k, s in specs.items()}, fh)
-            os.replace(tmp, p)
+            self._write_json(p, {k: dataclasses.asdict(s) for k, s in specs.items()})
 
     def rollups(self, db: str, ns: str, metric: str) -> list[RollupSpec]:
         p = os.path.join(self._rollups_dir(db, ns, metric), "registry.json")
@@ -270,6 +301,69 @@ class Warehouse:
             if os.path.isdir(d):
                 shutil.rmtree(d)
 
+    # -- rewrites -----------------------------------------------------------
+    # Every replacement of a warehouse directory (shards rewritten or
+    # evicted, rollup stores built or merged, a restored metric) is staged
+    # under <owner>/.staging — the metric directory, or the namespace
+    # directory for a restore — so its swap is a rename on one filesystem,
+    # outside data/ partition discovery and the metric listing.
+    _STAGING = ".staging"
+
+    @contextlib.contextmanager
+    def _staging(self, owner: str):
+        """A fresh staging directory under owner/.staging, removed on exit
+        with whatever is left in it."""
+        root = os.path.join(owner, self._STAGING)
+        os.makedirs(root, exist_ok=True)
+        stage = tempfile.mkdtemp(dir=root)
+        try:
+            yield stage
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+
+    @staticmethod
+    def _swap(new: str, dst: str, stage: str) -> None:
+        """Replace directory dst by new, or remove it when new does not
+        exist: dst is renamed aside into stage, new renamed in (dst renamed
+        back if that fails), then the old tree removed. A reader sees the
+        old tree or the new one, never a mix; between the renames, none."""
+        aside = os.path.join(stage, "old-" + os.path.basename(dst))
+        had = os.path.isdir(dst)
+        if had:
+            os.rename(dst, aside)
+        if os.path.isdir(new):
+            try:
+                os.rename(new, dst)
+            except BaseException:
+                if had:
+                    os.rename(aside, dst)
+                raise
+        if had:
+            shutil.rmtree(aside, ignore_errors=True)
+
+    def rewrite_shards(self, db: str, ns: str, metric: str, shards, write) -> None:
+        """Replace the listed shard directories by what write(path) stages
+        at path, partitioned by shard_start. A listed shard with no staged
+        rows is removed; shards not listed are untouched. If write raises,
+        nothing is swapped."""
+        dp = self.data_path(db, ns, metric)
+        with self._staging(self.metric_path(db, ns, metric)) as stage:
+            out = os.path.join(stage, "new")
+            write(out)
+            for s in shards:
+                name = f"{SHARD_COL}={s}"
+                self._swap(os.path.join(out, name), os.path.join(dp, name), stage)
+
+    def rewrite_rollup(self, db: str, ns: str, metric: str, spec: RollupSpec, write) -> None:
+        """Create or replace spec's store by what write(path) writes at
+        path. If write raises, the old store stays."""
+        dst = self.rollup_path(db, ns, metric, spec)
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        with self._staging(self.metric_path(db, ns, metric)) as stage:
+            out = os.path.join(stage, "new")
+            write(out)
+            self._swap(out, dst, stage)
+
     # -- dump / restore -----------------------------------------------------
     # Parity surface: the reference ships a restore tool + rpc endpoint
     # (nsdb-cli/src/main/scala/io/radicalbit/nsdb/cli/NsdbRestore.scala,
@@ -277,8 +371,8 @@ class Warehouse:
     # exported bundle. Here a bundle is the metric directory tree
     # (schema.json + meta.json + data/shard_start=* + rollups/*) plus a
     # manifest.json inventory; restore validates the manifest and swaps
-    # the tree into place atomically (single directory rename — a reader
-    # sees the old metric or the new one, never a half-copied mix).
+    # the tree into place with _swap (a reader sees the old metric or the
+    # new one, never a half-copied mix).
     BUNDLE_FORMAT = 1
     _BUNDLE_MANIFEST = "manifest.json"
 
@@ -287,9 +381,10 @@ class Warehouse:
         `dest` (must not exist). The schema/meta/rollup registry files are
         snapshotted under the registry locks (consistent with each other);
         data shard directories are copied as-is — quiesce writers for a
-        point-in-time data snapshot (shard swaps are atomic renames, so a
-        racing write surfaces as a copy error, not silent corruption).
-        Returns the manifest dict."""
+        point-in-time data snapshot (every shard rewrite is a rename swap,
+        _swap, so a racing rewrite surfaces as a copy error, not a shard
+        copied half old and half new). Staging is not copied. Returns the
+        manifest dict."""
         if not self.exists(db, ns, metric):
             raise MetricNotFound(f"{db}.{ns}.{metric}")
         if os.path.exists(dest):
@@ -299,7 +394,7 @@ class Warehouse:
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
         with self._schema_lock, self._rollup_meta_lock:
-            shutil.copytree(src, tmp)
+            shutil.copytree(src, tmp, ignore=shutil.ignore_patterns(self._STAGING))
         inventory = {}
         total = 0
         for base, _dirs, files in os.walk(tmp):
@@ -336,10 +431,11 @@ class Warehouse:
     ) -> dict:
         """Import a dump_metric bundle. Target identity defaults to the
         manifest's; pass db/ns/metric to restore under a different name.
-        The bundle is staged next to the target and verified (manifest
-        format, file inventory byte-for-byte sizes, parseable schema)
-        BEFORE the atomic swap — a truncated or tampered bundle never
-        becomes visible. Refuses an existing target unless overwrite."""
+        The bundle is verified (manifest format, file inventory
+        byte-for-byte sizes, parseable schema), then staged under the
+        namespace's .staging and swapped in (_swap) — a truncated or
+        tampered bundle never becomes visible. Refuses an existing target
+        unless overwrite."""
         mpath = os.path.join(bundle, self._BUNDLE_MANIFEST)
         if not os.path.isfile(mpath):
             raise ValueError(f"not a metric bundle (no manifest): {bundle}")
@@ -368,29 +464,21 @@ class Warehouse:
             raise ValueError("bundle has no schema.json")
         with open(schema_p) as fh:
             MetricSchema.from_json(fh.read())  # raises on corruption
-        os.makedirs(os.path.dirname(target), exist_ok=True)
-        stage = target + ".restore_tmp"
-        if os.path.exists(stage):
-            shutil.rmtree(stage)
-        shutil.copytree(
-            bundle, stage,
-            ignore=shutil.ignore_patterns(self._BUNDLE_MANIFEST),
-        )
-        with self._schema_lock, self._rollup_meta_lock:
-            old = None
-            if os.path.exists(target):
-                old = target + ".restore_old"
-                if os.path.exists(old):
-                    shutil.rmtree(old)
-                os.rename(target, old)
-            os.rename(stage, target)
-            if old:
-                shutil.rmtree(old)
+        ns_dir = os.path.dirname(target)
+        os.makedirs(ns_dir, exist_ok=True)
+        with self._staging(ns_dir) as stage:
+            new = os.path.join(stage, "new")
+            shutil.copytree(
+                bundle, new,
+                ignore=shutil.ignore_patterns(self._BUNDLE_MANIFEST),
+            )
+            with self._schema_lock, self._rollup_meta_lock:
+                self._swap(new, target, stage)
         out = dict(manifest)
         out.update({"db": db, "namespace": ns, "metric": metric})
         return out
 
-        # -- drop / retention ---------------------------------------------------
+    # -- drop / retention ---------------------------------------------------
     def drop_metric(self, db: str, ns: str, metric: str) -> None:
         p = self.metric_path(db, ns, metric)
         if os.path.isdir(p):
@@ -400,9 +488,9 @@ class Warehouse:
         """Retention eviction: drop whole shards whose upper bound is below
         the threshold (MetadataCoordinator.scala:335-348 analogue)."""
         si = self.get_info(db, ns, metric)["shardInterval"]
-        dropped = []
-        for start in self.locations(db, ns, metric):
-            if start + si <= threshold_ms:
-                shutil.rmtree(os.path.join(self.data_path(db, ns, metric), f"shard_start={start}"))
-                dropped.append(start)
+        dropped = [
+            s for s in self.locations(db, ns, metric) if s + si <= threshold_ms
+        ]
+        if dropped:
+            self.rewrite_shards(db, ns, metric, dropped, lambda _path: None)
         return dropped

@@ -500,16 +500,19 @@ def axis_join(
     # would only add a job of its own (its collect), and the merge join
     # spills, so it holds at any axis size.
     single = int(spark.conf.get("spark.sql.shuffle.partitions")) == 1
+    n = segs[-1][0] + segs[-1][3]
+    # a broadcast join streams the axis: one split is the whole axis in
+    # one task, where the default splits it over every core
+    one_split = single or n <= _BROADCAST_BUCKETS_MAX
     axis = None
     for off, lower, upper, nb in segs:
         lb, ub = bucket_bounds(F.col("id"), lower, upper, width)
-        frame = spark.range(0, nb, 1, 1 if single else None).select(
+        frame = spark.range(0, nb, 1, 1 if one_split else None).select(
             (F.col("id") + F.lit(off)).alias(BUCKET),
             ub.alias("upper_bound"),
             lb.alias("lower_bound"),
         )
         axis = frame if axis is None else axis.unionByName(frame)
-    n = segs[-1][0] + segs[-1][3]
     if single:
         pb = per_bucket.hint("merge")
     elif n <= _BROADCAST_BUCKETS_MAX:

@@ -12,8 +12,6 @@ import dataclasses
 import functools
 import hashlib
 import logging
-import os
-import shutil
 import threading
 import time
 from collections import OrderedDict
@@ -189,44 +187,28 @@ class NsdbEngine:
         with self._lock:
             self._metric_versions[key] = self._metric_versions.get(key, 0) + 1
 
-    def _schema_mtime(self, db: str, ns: str, metric: str) -> int:
-        """mtime_ns of schema.json — catches out-of-process schema unions
-        (a second engine over the same warehouse dir)."""
-        p = os.path.join(self.warehouse.metric_path(db, ns, metric), "schema.json")
-        try:
-            return os.stat(p).st_mtime_ns
-        except OSError:
-            return -1
-
     def _cache_token(self, db: str, ns: str, metric: str) -> tuple:
         """Validity token of every entry in the engine's two TokenCaches:
         _plans (plans with their collected rows) and _frames (base metric
         frames and the serving temp views registered with them).
 
         Coverage, precisely: (a) the in-process version (_metric_version)
-        covers EVERY mutation made through this engine; (b) schema.json mtime
-        covers out-of-process INSERTS (update_schema rewrites the file on
-        every write) and schema unions; (c) the data-dir mtime covers
-        out-of-process DELETE / DROP / retention eviction (each removes or
-        swaps shard_start= child dirs, touching the parent). NOT covered:
-        (1) an out-of-process compaction/Z-order rewrite (same rows, new
-        files inside existing shard dirs) — those are documented
-        writes-paused maintenance ops; a cooperating process should call
+        covers EVERY mutation made through this engine; (b) the two
+        Warehouse.mtimes marks cover out-of-process changes: schema.json's
+        covers INSERTS (update_schema rewrites the file on every write) and
+        schema unions, data/'s covers DELETE / DROP / retention eviction /
+        compaction / Z-order (each swaps or removes shard_start= child dirs
+        by rename, touching the parent). NOT covered: (1) out-of-process
+        rollup rebuilds — a cooperating process should call
         invalidate_plan_caches() (or simply restart) afterwards; (2) on
         filesystems with coarse mtime granularity (1 s on classic NFS /
         HFS+), an out-of-process INSERT landing within the same timestamp
         tick as a token read can serve stale cached plans/rows until the
         next tick — deploy multi-writer setups on a filesystem with ns
         mtimes (ext4/XFS/APFS) or route writes through one engine."""
-        dp = self.warehouse.data_path(db, ns, metric)
-        try:
-            dir_mtime = os.stat(dp).st_mtime_ns
-        except OSError:
-            dir_mtime = -1
         return (
             self._metric_version(db, ns, metric),
-            self._schema_mtime(db, ns, metric),
-            dir_mtime,
+            *self.warehouse.mtimes(db, ns, metric),
         )
 
     def _cache_slot(self, stmt: ast.SelectSQLStatement) -> tuple:
@@ -241,8 +223,8 @@ class NsdbEngine:
 
     def invalidate_plan_caches(self) -> None:
         """Drop every cached plan, result set, and base frame — the seam
-        for out-of-process maintenance (compaction/Z-order from another
-        engine) that the mtime-based token cannot observe."""
+        for out-of-process changes the mtime-based token cannot observe
+        (a rollup rebuilt by another engine)."""
         self._plans.clear()
         self._frames.clear()
         with self._lock:
@@ -528,10 +510,11 @@ class NsdbEngine:
 
     def _metric_rollup_lock(self, db: str, ns: str, metric: str) -> threading.Lock:
         """The per-metric lock serializing every rollup read-build-
-        overwrite-register sequence: insert maintenance AND the
-        materialize_* builders take it, so a materialize can't interleave
-        with a maintenance merge (which would read a half-written store
-        or clobber a fresh build with a merge of stale state). Entries
+        swap-register sequence and every shard rewrite: insert
+        maintenance, the materialize_* builders, DELETE, retention,
+        compaction and Z-order take it, so a materialize can't interleave
+        with a maintenance merge (which would clobber a fresh build with a
+        merge of stale state) or a shard swap. Entries
         are never evicted — a few hundred bytes per metric ever written,
         bounded by the catalog size."""
         key = (db, ns, metric)
@@ -548,10 +531,14 @@ class NsdbEngine:
         si = self.warehouse.get_info(db, ns, metric)["shardInterval"]
         try:
             for spec in specs:
-                path = self.warehouse.rollup_path(db, ns, metric, spec)
                 batch, _ = self._rollup_partials(spec, batch_df, si)
-                stored = self.spark.read.parquet(path)
-                self._atomic_overwrite(self._merge_partials(spec, stored, batch), path)
+                stored = self.spark.read.parquet(
+                    self.warehouse.rollup_path(db, ns, metric, spec)
+                )
+                self.warehouse.rewrite_rollup(
+                    db, ns, metric, spec,
+                    self._merge_partials(spec, stored, batch).write.parquet,
+                )
         except Exception:
             # maintenance must never be less safe than invalidation (e.g.
             # a batch that widens the value type mid-merge) — but log it:
@@ -578,21 +565,6 @@ class NsdbEngine:
         return vlo is not None and any(
             float(vlo) < g[0] or float(vhi) > g[1] for g in grids
         )
-
-    def _atomic_overwrite(self, df: DataFrame, path: str) -> None:
-        """Materialize df (which may read `path`) into a staging dir, then
-        swap — the write finishes consuming the old files before they go.
-        The swap is two renames (old aside, staging in) rather than an
-        rmtree-then-rename: a concurrent reader's no-directory window
-        shrinks from the full recursive delete to a metadata op, and
-        _read_rollup_store covers what remains."""
-        staging = path + ".staging"
-        trash = path + ".old"
-        df.write.mode("overwrite").parquet(staging)
-        shutil.rmtree(trash, ignore_errors=True)
-        os.rename(path, trash)
-        os.rename(staging, path)
-        shutil.rmtree(trash, ignore_errors=True)
 
     # ------------------------------------------------------------- read path
     def read_metric(self, db: str, ns: str, metric: str) -> DataFrame:
@@ -625,26 +597,29 @@ class NsdbEngine:
             return df
         session = self._serving_session() if serving else self.spark
         schema = self.warehouse.get_schema(db, ns, metric)
-        dp = self.warehouse.data_path(db, ns, metric)
         if not self.warehouse.locations(db, ns, metric):
             df = session.createDataFrame(
                 [], schema.to_struct_type(with_shard=True)
             )
         else:
-            df = (
-                session.read.schema(schema.to_struct_type(with_shard=True))
-                # retention eviction may drop a shard between query planning
-                # and execution; skip vanished files instead of failing the
-                # read (the role NSDb's Lucene searcher refcounts play)
-                .option("ignoreMissingFiles", "true")
-                .parquet(dp)
-            )
+            df = self._scan_shards(session, db, ns, metric, schema)
         publish = (
             functools.partial(df.createOrReplaceTempView, _serving_view(db, ns, metric))
             if serving else None
         )
         self._frames.put(key, token, df, publish)
         return df
+
+    def _scan_shards(self, session, db: str, ns: str, metric: str, schema) -> DataFrame:
+        """The one raw-shard reader (base frames, compaction, Z-order),
+        with the registry schema. Files that retention or a shard swap
+        removes between planning and execution are skipped, not fatal
+        (the role NSDb's Lucene searcher refcounts play)."""
+        return (
+            session.read.schema(schema.to_struct_type(with_shard=True))
+            .option("ignoreMissingFiles", "true")
+            .parquet(self.warehouse.data_path(db, ns, metric))
+        )
 
     def execute(
         self,
@@ -715,15 +690,16 @@ class NsdbEngine:
         _collect_via_shape)."""
         slot = self._cache_slot(stmt)
         key, token = slot
+        analysis = None
         if key is not None:
             hit = self._plans.get(key, token)
             if hit is not None and hit.complete:
                 return list(hit.rows)
             if stmt.limit is not None:
-                shaped = self._collect_via_shape(stmt, time_context, key, token)
+                shaped, analysis = self._collect_via_shape(stmt, time_context, key, token)
                 if shaped is not None:
                     return shaped
-        plan = self._plan_select(stmt, time_context, slot=slot)
+        plan = self._plan_select(stmt, time_context, slot=slot, analysis=analysis)
         rows = plan[0].collect()
         if key is not None and len(rows) <= self._CACHED_ROWS_MAX:
             self._plans.put(key, token, _Planned(plan, list(rows), True))
@@ -750,12 +726,13 @@ class NsdbEngine:
         globally ordered prefix, so the slice is the exact top-k).
         Aggregate classes are excluded because their VALUES depend on the
         limit (global count clamps to LIMIT; temporal LIMIT = takeRight —
-        SURVEY §2.5), not just their row count. Returns None when the
-        statement isn't shape-eligible (the caller falls through to the
-        normal path)."""
+        SURVEY §2.5), not just their row count. Returns (rows, None), or
+        (None, analysis) when the statement isn't shape-eligible: the
+        caller falls through to the normal path with the analysis this
+        ran, if any."""
         k = stmt.limit.value
         if k <= 0:
-            return None
+            return None, None
         nolimit = dataclasses.replace(stmt, limit=None)
         skey = key[:3] + (repr(nolimit),)
         # cache lookup FIRST — a hit proves eligibility through its
@@ -763,28 +740,29 @@ class NsdbEngine:
         # no analyze pass
         ent = self._plans.get(skey, token)
         if ent is None:
-            # the analysis the normal path would run (LIMIT plays no part
-            # in it), so an invalid statement raises the same error
-            schema = self.warehouse.get_schema(*key[:3])
-            if not isinstance(analyzer.analyze(stmt, schema), analyzer.ParsedSimpleQuery):
-                return None
+            # the one analysis: LIMIT plays no part in it, so it serves the
+            # normal path too, and the shape once rebound to `nolimit`
+            schema, parsed = analysis = self._analyze(stmt)
+            if not isinstance(parsed, analyzer.ParsedSimpleQuery):
+                return None, analysis
             plan = self._plan_select(
                 nolimit,
                 time_context,
                 point_serve=k <= self._POINT_SERVE_MAX_LIMIT,
                 slot=(skey, token),
+                analysis=(schema, dataclasses.replace(parsed, statement=nolimit)),
             )
         elif not isinstance(ent.plan[1], analyzer.ParsedSimpleQuery):
-            return None
+            return None, None
         elif ent.rows is not None and (ent.complete or len(ent.rows) >= k):
-            return ent.rows[:k]
+            return ent.rows[:k], None
         else:
             plan = ent.plan
         bound = max(k, self._CACHED_ROWS_MAX)
         rows = plan[0].limit(bound).collect()
         if len(rows) <= self._CACHED_ROWS_MAX:
             self._plans.put(skey, token, _Planned(plan, rows, len(rows) < bound))
-        return rows[:k]
+        return rows[:k], None
 
     #: serving gates (see _point_route): a read plans on the interpreted
     #: serving session only when shard pruning leaves at most
@@ -803,6 +781,7 @@ class NsdbEngine:
         time_context: TimeContext | None = None,
         point_serve: bool = False,
         slot: tuple | None = None,
+        analysis: tuple | None = None,
     ) -> tuple[DataFrame, Any, bool]:
         """Shared SELECT planning: (DataFrame, analyzed plan, rollup-routed?).
         execute_select returns the frame; explain_select reports the rest.
@@ -811,15 +790,15 @@ class NsdbEngine:
         before planning) vouches that only a point-read-sized prefix of
         the result will be fetched — makes the statement eligible for
         the interpreted serving session even without its own LIMIT.
-        slot: the caller's _cache_slot(stmt), when it already has one."""
+        slot: the caller's _cache_slot(stmt), when it already has one.
+        analysis: the caller's _analyze(stmt), when it already ran it."""
         key, token = slot or self._cache_slot(stmt)
         if key is not None:
             hit = self._plans.get(key, token)
             if hit is not None:
                 return hit.plan
         db, ns = stmt.db or "default", stmt.namespace or "default"
-        schema = self.warehouse.get_schema(db, ns, stmt.metric)
-        parsed = analyzer.analyze(stmt, schema)
+        schema, parsed = analysis or self._analyze(stmt)
         ctx = time_context or TimeContext(self.now_fn())
         info = self.warehouse.get_info(db, ns, stmt.metric)
         si = info["shardInterval"]
@@ -865,6 +844,13 @@ class NsdbEngine:
         if key is not None:
             self._plans.put(key, token, _Planned(out))
         return out
+
+    def _analyze(self, stmt: ast.SelectSQLStatement) -> tuple[MetricSchema, Any]:
+        """(registry schema, analyzed plan) of a SELECT."""
+        schema = self.warehouse.get_schema(
+            stmt.db or "default", stmt.namespace or "default", stmt.metric
+        )
+        return schema, analyzer.analyze(stmt, schema)
 
     def _point_route(
         self, stmt, parsed, locations, ivs, shard_interval: int, point_serve: bool
@@ -1057,25 +1043,11 @@ class NsdbEngine:
 
         df = self.read_metric(db, ns, stmt.metric).filter(F.col(SHARD_COL).isin(affected))
         keep = df.filter(~F.coalesce(compile_expression(stmt.condition.expression, ctx), F.lit(False)))
-        # Stage kept rows, then swap the affected shard directories. A plain
-        # dynamic-partition overwrite would silently skip shards whose kept
-        # set is empty. (On a real cluster this maps to Delta DELETE /
-        # replaceWhere; same partition-level rewrite granularity.)
-        import tempfile
-
-        data_path = self.warehouse.data_path(db, ns, stmt.metric)
-        staging = tempfile.mkdtemp(prefix="nsdb_delete_")
-        try:
-            keep.write.mode("overwrite").partitionBy(SHARD_COL).parquet(staging)
-            for s in affected:
-                dst = os.path.join(data_path, f"{SHARD_COL}={s}")
-                src = os.path.join(staging, f"{SHARD_COL}={s}")
-                if os.path.isdir(dst):
-                    shutil.rmtree(dst)
-                if os.path.isdir(src):
-                    shutil.move(src, dst)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
+        # affected shards are swapped for their kept rows; one left empty
+        # is removed (Delta DELETE / replaceWhere granularity)
+        self.warehouse.rewrite_shards(
+            db, ns, stmt.metric, affected, keep.write.partitionBy(SHARD_COL).parquet
+        )
         self.warehouse.invalidate_rollups(db, ns, stmt.metric)
         self._bump_metric_version(db, ns, stmt.metric)
         return len(affected)
@@ -1136,9 +1108,8 @@ class NsdbEngine:
         (the compiler derives bucket bounds from locations).
 
         Under the per-metric lock: a concurrent insert's maintenance merge
-        interleaving with this read-build-overwrite-register would read a
-        half-written store or base its merge on the pre-materialize state
-        and clobber the fresh build."""
+        interleaving with this read-build-swap-register would base its
+        merge on the pre-materialize state and clobber the fresh build."""
         with self._metric_rollup_lock(db, ns, metric):
             si = self.warehouse.get_info(db, ns, metric)["shardInterval"]
             if spec.fine_ms is not None:
@@ -1155,9 +1126,7 @@ class NsdbEngine:
                 raise ValueError(f"unknown {spec.kind} field {spec.field!r}")
             df = self.read_metric(db, ns, metric).drop(SHARD_COL)
             r, spec = self._rollup_partials(spec, df, si)
-            r.write.mode("overwrite").parquet(
-                self.warehouse.rollup_path(db, ns, metric, spec)
-            )
+            self.warehouse.rewrite_rollup(db, ns, metric, spec, r.write.parquet)
             self.warehouse.register_rollup(db, ns, metric, spec)
             self._bump_metric_version(db, ns, metric)
             return spec
@@ -1273,10 +1242,10 @@ class NsdbEngine:
 
     def _read_rollup_store(self, db: str, ns: str, metric: str, spec: RollupSpec):
         """Open a rollup store for SERVING, tolerating a concurrent
-        maintenance swap: the directory can vanish between routing and
-        read (the _atomic_overwrite window) or between read and execute
-        (ignoreMissingFiles covers that). Returns None when unreadable —
-        callers fall back to the raw path instead of failing the query.
+        maintenance swap (Warehouse._swap): the directory can vanish
+        between routing and the eager pin below. Returns None when
+        unreadable — callers fall back to the raw path instead of failing
+        the query.
         ONLY the missing-path case is the benign swap window; any other
         read failure (corrupt footers, bad schema) means the store itself
         is damaged, so the registration is invalidated — the query still
@@ -1489,9 +1458,9 @@ class NsdbEngine:
         Every insert/streaming batch appends new files; a hot shard
         accumulates hundreds of small parquet files, degrading scan
         planning and footer reads at scale. Compaction rewrites each shard
-        holding >= min_files files into ceil(bytes/target) sorted files
-        using Spark's dynamic partition overwrite (an atomic per-partition
-        commit). Returns the compacted shard starts.
+        holding >= min_files files into ceil(bytes/target) sorted files,
+        staged and swapped in shard by shard (Warehouse.rewrite_shards).
+        Returns the compacted shard starts.
 
         Concurrency contract (no snapshot layer on plain parquet):
         - a query PLANNED before a compaction and executed after it reads
@@ -1501,66 +1470,45 @@ class NsdbEngine:
           promptly, so the window is the query's own runtime; long-lived
           cached DataFrames must be re-created after compaction.
         - writes landing in a shard between compaction's read and its
-          overwrite are lost. Run compaction as a maintenance task with
+          swap are lost. Run compaction as a maintenance task with
           writes to the affected metric paused (or move the warehouse to
           a transactional table format to lift both caveats).
         """
         import math
 
-        dp = self.warehouse.data_path(db, ns, metric)
-        todo: list[int] = []
-        sizes: dict[int, int] = {}
-        for shard in self.warehouse.locations(db, ns, metric):
-            d = os.path.join(dp, f"{SHARD_COL}={shard}")
-            try:
-                names = os.listdir(d)
-            except FileNotFoundError:
-                continue  # retention scheduler evicted it mid-iteration
-            files = [
-                f for f in names
-                if f.endswith(".parquet") and not f.startswith(("_", "."))
-            ]
-            if len(files) >= min_files:
-                todo.append(shard)
-                sizes[shard] = sum(
-                    os.path.getsize(os.path.join(d, f)) for f in files
-                )
-        if not todo:
-            return []
         # under the per-metric rollup lock, like delete() and retention:
         # a materialize/maintenance merge scanning raw data while this
-        # overwrite swaps the files would (via ignoreMissingFiles) build
+        # rewrite swaps the shards would (via ignoreMissingFiles) build
         # and REGISTER a rollup from a fraction of the data; a delete()
-        # committing between our read and overwrite would be undone
-        # (its removed rows written back). Same caveats as documented
-        # above still apply to plain concurrent INSERTS.
+        # committing between our read and swap would be undone (its
+        # removed rows written back). Same caveats as documented above
+        # still apply to plain concurrent INSERTS.
         with self._metric_rollup_lock(db, ns, metric):
-            schema = self.warehouse.get_schema(db, ns, metric)
-            df = (
-                self.spark.read.schema(schema.to_struct_type(with_shard=True))
-                # same eviction-safe option every read path sets: a shard
-                # the retention scheduler drops mid-job must not fail
-                # compaction
-                .option("ignoreMissingFiles", "true")
-                .parquet(dp)
-                .filter(F.col(SHARD_COL).isin(todo))
+            todo = [
+                s for s in self.warehouse.shard_stats(db, ns, metric)
+                if s["n_files"] >= min_files
+            ]
+            if not todo:
+                return []
+            shards = [s["shard_start"] for s in todo]
+            n_files = max(
+                1, math.ceil(sum(s["bytes"] for s in todo) / target_file_bytes)
             )
-            n_files = max(1, math.ceil(sum(sizes.values()) / target_file_bytes))
-            with _spark_conf(
-                self.spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            ):
-                (
-                    df.repartition(n_files, F.col(SHARD_COL))
-                    .sortWithinPartitions("timestamp")
-                    .write.mode("overwrite")
-                    .partitionBy(SHARD_COL)
-                    .parquet(dp)
-                )
-        # same rows, new files: cached base frames hold a stale file
-        # index (reads survive via ignoreMissingFiles but would silently
-        # MISS the rewritten rows)
-        self._bump_metric_version(db, ns, metric)
-        return sorted(todo)
+            schema = self.warehouse.get_schema(db, ns, metric)
+            df = self._scan_shards(self.spark, db, ns, metric, schema)
+            self.warehouse.rewrite_shards(
+                db, ns, metric, shards,
+                df.filter(F.col(SHARD_COL).isin(shards))
+                .repartition(n_files, F.col(SHARD_COL))
+                .sortWithinPartitions("timestamp")
+                .write.partitionBy(SHARD_COL)
+                .parquet,
+            )
+            # same rows, new files: cached base frames hold a stale file
+            # index (reads survive via ignoreMissingFiles but would
+            # silently MISS the rewritten rows)
+            self._bump_metric_version(db, ns, metric)
+        return shards
 
     def optimize_metric_zorder(
         self,
@@ -1584,8 +1532,8 @@ class NsdbEngine:
         hyper-rectangle on those columns and parquet column stats skip
         files/row-groups on ANY of them — the lakehouse OPTIMIZE ZORDER
         pattern applied to the NSDb layout. Numeric fields quantize by
-        value, strings by a hash bucket. Same atomicity/concurrency
-        contract as compact_metric (dynamic partition overwrite).
+        value, strings by a hash bucket. Same staged shard swap and
+        concurrency contract as compact_metric.
         """
         from .operators.layout import zorder_key
 
@@ -1603,77 +1551,68 @@ class NsdbEngine:
         for f in cluster_fields:
             if not schema.has_field(f):
                 raise SchemaError(f"unknown cluster field {f}")
-        dp = self.warehouse.data_path(db, ns, metric)
-        shards = self.warehouse.locations(db, ns, metric)
-        if not shards:
-            return []
-        df = (
-            self.spark.read.schema(schema.to_struct_type(with_shard=True))
-            # retention eviction may drop a shard mid-rewrite; skip
-            # vanished files like every other read path
-            .option("ignoreMissingFiles", "true")
-            .parquet(dp)
-        )
-        mask = (1 << bits) - 1
-        # numeric fields quantize by RANGE position, not by masking the
-        # low bits: `v & mask` wraps every `mask+1` values, scattering
-        # near-identical values across cells and colliding distant ones
-        # — per-file min/max stats then stay wide and skipping gains
-        # nothing. One tiny min/max aggregate pins the grid.
-        num_fields = [
-            f for f in cluster_fields
-            if (t := schema.field_type(f)) is not None and t.is_numeric
-        ]
-        stats = {}
-        if num_fields:
-            row = df.agg(
-                *[F.min(f).alias(f"lo_{f}") for f in num_fields],
-                *[F.max(f).alias(f"hi_{f}") for f in num_fields],
-            ).first()
-            stats = {
-                f: (row[f"lo_{f}"], row[f"hi_{f}"]) for f in num_fields
-            }
-        quant = []
-        for f in cluster_fields:
-            t = schema.field_type(f)
-            if t is not None and t.is_numeric:
-                lo, hi = stats[f]
-                if lo is None or hi == lo:  # empty/constant: one cell
-                    quant.append(F.lit(0).cast("long"))
-                else:
-                    cell = F.floor(
-                        (F.col(f).cast("double") - float(lo))
-                        * mask
-                        / (float(hi) - float(lo))
-                    )
-                    quant.append(
-                        F.coalesce(
-                            F.least(cell, F.lit(mask)), F.lit(0)
-                        ).cast("long")
-                    )
-            else:
-                quant.append(F.abs(F.xxhash64(F.col(f))).bitwiseAND(F.lit(mask)))
-        keyed = df.withColumn("__z", zorder_key(quant, bits=bits))
-        # per-metric rollup lock, same rationale as compact_metric: a
-        # concurrent materialize scanning mid-swap would register a
-        # partial rollup, a concurrent delete would be resurrected
+        # per-metric rollup lock over listing, read and swap, same
+        # rationale as compact_metric: a concurrent materialize scanning
+        # mid-swap would register a partial rollup, and a delete swapping
+        # a shard after our listing would be undone or its shard dropped
         with self._metric_rollup_lock(db, ns, metric):
-            with _spark_conf(
-                self.spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            ):
-                (
-                    keyed.repartitionByRange(
-                        files_per_shard * len(shards), F.col(SHARD_COL), F.col("__z")
-                    )
-                    .sortWithinPartitions(SHARD_COL, "__z")
-                    .drop("__z")
-                    .write.mode("overwrite")
-                    .partitionBy(SHARD_COL)
-                    .parquet(dp)
+            shards = self.warehouse.locations(db, ns, metric)
+            if not shards:
+                return []
+            df = self._scan_shards(self.spark, db, ns, metric, schema)
+            mask = (1 << bits) - 1
+            # numeric fields quantize by RANGE position, not by masking the
+            # low bits: `v & mask` wraps every `mask+1` values, scattering
+            # near-identical values across cells and colliding distant ones
+            # — per-file min/max stats then stay wide and skipping gains
+            # nothing. One tiny min/max aggregate pins the grid.
+            num_fields = [
+                f for f in cluster_fields
+                if (t := schema.field_type(f)) is not None and t.is_numeric
+            ]
+            stats = {}
+            if num_fields:
+                row = df.agg(
+                    *[F.min(f).alias(f"lo_{f}") for f in num_fields],
+                    *[F.max(f).alias(f"hi_{f}") for f in num_fields],
+                ).first()
+                stats = {
+                    f: (row[f"lo_{f}"], row[f"hi_{f}"]) for f in num_fields
+                }
+            quant = []
+            for f in cluster_fields:
+                t = schema.field_type(f)
+                if t is not None and t.is_numeric:
+                    lo, hi = stats[f]
+                    if lo is None or hi == lo:  # empty/constant: one cell
+                        quant.append(F.lit(0).cast("long"))
+                    else:
+                        cell = F.floor(
+                            (F.col(f).cast("double") - float(lo))
+                            * mask
+                            / (float(hi) - float(lo))
+                        )
+                        quant.append(
+                            F.coalesce(
+                                F.least(cell, F.lit(mask)), F.lit(0)
+                            ).cast("long")
+                        )
+                else:
+                    quant.append(F.abs(F.xxhash64(F.col(f))).bitwiseAND(F.lit(mask)))
+            self.warehouse.rewrite_shards(
+                db, ns, metric, shards,
+                df.withColumn("__z", zorder_key(quant, bits=bits))
+                .repartitionByRange(
+                    files_per_shard * len(shards), F.col(SHARD_COL), F.col("__z")
                 )
-        # rewritten files: invalidate cached base frames (see compact_metric)
-        self._bump_metric_version(db, ns, metric)
-        return sorted(shards)
+                .sortWithinPartitions(SHARD_COL, "__z")
+                .drop("__z")
+                .write.partitionBy(SHARD_COL)
+                .parquet,
+            )
+            # rewritten files: invalidate cached base frames (see compact_metric)
+            self._bump_metric_version(db, ns, metric)
+        return shards
 
     def enforce_all_retentions(self) -> dict[tuple[str, str, str], list[int]]:
         """One eviction sweep over every metric in the warehouse; returns
@@ -1702,20 +1641,3 @@ class NsdbEngine:
 
         threading.Thread(target=loop, daemon=True).start()
         return stop
-
-
-class _spark_conf:
-    """Temporarily set a spark conf."""
-
-    def __init__(self, spark, key, value):
-        self.spark, self.key, self.value = spark, key, value
-
-    def __enter__(self):
-        self.old = self.spark.conf.get(self.key, None)
-        self.spark.conf.set(self.key, self.value)
-
-    def __exit__(self, *exc):
-        if self.old is None:
-            self.spark.conf.unset(self.key)
-        else:
-            self.spark.conf.set(self.key, self.old)

@@ -407,7 +407,9 @@ class NsdbGrpcServer:
 
     # ------------------------------------------------------ streaming rpc
     def _stream_sql(self, conn: Http2Connection, stream: Stream, headers: dict) -> None:
-        import queue as queue_mod
+        import time as time_mod
+
+        from ..streaming.subscribe import SubscriptionChannel
 
         raw = stream.read_message(timeout=30.0)
         if raw is None:
@@ -424,16 +426,11 @@ class NsdbGrpcServer:
             self._trailers_only(conn, stream.sid, st.code, st.message)
             return
 
-        schema_box: dict = {}
-        pushes: "queue_mod.Queue[list[dict] | None]" = queue_mod.Queue()
-
-        def callback(records: list[dict]) -> None:
-            pushes.put(records)
-
+        channel = SubscriptionChannel()  # bounded: see its docstring
         conn.send_headers(stream.sid, [(":status", "200"), ("content-type", "application/grpc")])
         try:
-            quid = self.subs.subscribe(statement, callback, db=db, ns=ns)
-            schema_box["schema"] = self.engine.warehouse.get_schema(
+            quid = self.subs.subscribe(statement, channel.push, db=db, ns=ns)
+            schema = self.engine.warehouse.get_schema(
                 db, ns, base["metric"] or self.subs.subs[quid].metric)
             base["metric"] = self.subs.subs[quid].metric
         except Exception as ex:
@@ -444,48 +441,29 @@ class NsdbGrpcServer:
             conn.send_headers(stream.sid, [("grpc-status", "0")], end_stream=True)
             return
 
-        try:
-            import time as time_mod
+        def send(kind: str, batches: list[list[dict]]) -> None:
+            bits = [proto.bit_to_proto(r, schema) for b in batches for r in b]
+            self._send_stream_msg(conn, stream, {**base, kind: {"quid": quid, "records": bits}})
 
+        try:
             # StreamActor parity (StreamActor.scala publish cycle, same
-            # floor the WS transport applies): the historical payload goes
-            # out immediately; live pushes buffer and flush at most once
-            # per refresh period, combined into ONE RecordsPublished
+            # floor the WS transport applies): the historical payload —
+            # pushed first, inside subscribe() — goes out immediately;
+            # live pushes wait in the channel and flush at most once per
+            # refresh period, combined into ONE RecordsPublished
             refresh_s = self.subs.refresh_period_ms / 1000.0
-            first = True
-            buffered: list[dict] = []
+            historical, *held = channel.drain(0)
+            send("subscribedByQueryString", [historical])
             last_flush = time_mod.monotonic()
             while not stream.reset and not conn.closed:
-                try:
-                    records = pushes.get(timeout=0.05)
-                except queue_mod.Empty:
-                    records = None
-                if records is not None:
-                    if first:
-                        bits = [
-                            proto.bit_to_proto(r, schema_box["schema"])
-                            for r in records
-                        ]
-                        self._send_stream_msg(conn, stream, {
-                            **base,
-                            "subscribedByQueryString": {"quid": quid, "records": bits},
-                        })
-                        first = False
-                        last_flush = time_mod.monotonic()
-                        continue
-                    buffered.extend(records)
-                now = time_mod.monotonic()
-                if buffered and now - last_flush >= refresh_s:
-                    bits = [
-                        proto.bit_to_proto(r, schema_box["schema"])
-                        for r in buffered
-                    ]
-                    buffered = []
-                    last_flush = now
-                    self._send_stream_msg(conn, stream, {
-                        **base,
-                        "recordsPublished": {"quid": quid, "records": bits},
-                    })
+                wait = last_flush + refresh_s - time_mod.monotonic()
+                if wait > 0:
+                    time_mod.sleep(min(wait, 0.05))
+                    continue
+                batches, held = held + channel.drain(0.05), []
+                if batches:
+                    send("recordsPublished", batches)
+                    last_flush = time_mod.monotonic()
         except (ConnectionClosed, OSError):
             pass
         finally:

@@ -43,34 +43,8 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from .engine import NsdbEngine
 from .model import Bit
-
-
-class _SubscriptionChannel:
-    """Queue + condition bridging SubscriptionManager callbacks to
-    long-poll readers (one channel per subscription uuid). Buffering is
-    BOUNDED like the WS path's retention_size: an abandoned
-    subscription (crashed client, lost uuid) must not accumulate every
-    matching insert forever — beyond the cap new batches are dropped
-    (the reference's OverflowStrategy.dropNew)."""
-
-    MAX_BATCHES = 1000
-
-    def __init__(self) -> None:
-        self.batches: list[list[dict]] = []
-        self.cond = threading.Condition()
-
-    def push(self, records: list[dict]) -> None:
-        with self.cond:
-            if len(self.batches) < self.MAX_BATCHES:
-                self.batches.append(records)
-            self.cond.notify_all()
-
-    def drain(self, timeout_s: float) -> list[list[dict]]:
-        with self.cond:
-            if not self.batches:
-                self.cond.wait(timeout=timeout_s)
-            out, self.batches = self.batches, []
-            return out
+# perfbench traces long-poll pushes under this name
+from .streaming.subscribe import SubscriptionChannel as _SubscriptionChannel
 
 
 class _Handler(BaseHTTPRequestHandler):

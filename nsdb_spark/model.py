@@ -212,17 +212,17 @@ class MetricSchema:
             struct = struct.add(T.StructField(SHARD_COL, T.LongType(), nullable=False))
         return struct
 
-    def to_json(self) -> str:
-        return json.dumps(
-            {
-                "value_type": self.value_type.value,
-                "fields": {
-                    n: {"fieldClass": f.field_class.value, "type": f.nsdb_type.value}
-                    for n, f in sorted(self.fields.items())
-                },
+    def to_dict(self) -> dict:
+        return {
+            "value_type": self.value_type.value,
+            "fields": {
+                n: {"fieldClass": f.field_class.value, "type": f.nsdb_type.value}
+                for n, f in sorted(self.fields.items())
             },
-            indent=2,
-        )
+        }
+
+    def to_json(self) -> str:
+        return json.dumps(self.to_dict(), indent=2)
 
     @classmethod
     def from_json(cls, raw: str) -> "MetricSchema":

@@ -147,6 +147,34 @@ class _Subscription:
     route_lock: threading.Lock = field(default_factory=threading.Lock)
 
 
+class SubscriptionChannel:
+    """Queue + condition bridging SubscriptionManager callbacks to one
+    reader (an HTTP long-poll subscription or a gRPC stream). BOUNDED like
+    the WS path's retention_size: an abandoned subscription or a stalled
+    reader (a gRPC sender blocked on flow control) must not accumulate
+    every matching insert forever — past the cap new batches are dropped
+    (the reference's OverflowStrategy.dropNew)."""
+
+    MAX_BATCHES = 1000
+
+    def __init__(self) -> None:
+        self.batches: list[list[dict]] = []
+        self.cond = threading.Condition()
+
+    def push(self, records: list[dict]) -> None:
+        with self.cond:
+            if len(self.batches) < self.MAX_BATCHES:
+                self.batches.append(records)
+            self.cond.notify_all()
+
+    def drain(self, timeout_s: float) -> list[list[dict]]:
+        with self.cond:
+            if not self.batches:
+                self.cond.wait(timeout=timeout_s)
+            out, self.batches = self.batches, []
+            return out
+
+
 class SubscriptionManager:
     """Registry of live query subscriptions fed by the engine's write path."""
 

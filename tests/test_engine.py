@@ -568,6 +568,47 @@ def test_delete_rewrites_only_affected_shards(engine):
     assert [r[0] for r in rows(df)] == [0, 30000, 60000, 90000]
 
 
+def test_delete_needs_no_process_temp_dir(engine, monkeypatch, tmp_path):
+    """DELETE stages inside the metric's own directory, so it works with
+    the process temp dir missing (and its swap never crosses
+    filesystems)."""
+    import os
+    import tempfile
+
+    load(engine, "m", TEMPORAL_LONG_METRIC, shard_interval_ms=100000)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "missing"))
+    engine.execute("delete from m where timestamp in (110000, 160000)")
+    monkeypatch.undo()
+    df = engine.execute("select * from m order by timestamp")
+    assert [r[0] for r in rows(df)] == [0, 30000, 60000, 90000]
+    # the staging area is left empty and is no metric
+    mp = engine.warehouse.metric_path("default", "default", "m")
+    assert os.listdir(os.path.join(mp, ".staging")) == []
+    assert engine.warehouse.metrics("default", "default") == ["m"]
+
+
+def test_failed_meta_json_write_keeps_previous_info(engine, monkeypatch):
+    """init_metric replaces meta.json atomically: a write that dies
+    half-way leaves the previous document readable, never a truncated
+    one (a concurrent get_info would raise JSONDecodeError)."""
+    import json
+
+    engine.warehouse.init_metric("default", "default", "mj", 10_000, 5_000)
+
+    def torn_dump(obj, fh, **kw):
+        fh.write('{"shardInterval": 2')
+        fh.flush()
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        engine.warehouse.init_metric("default", "default", "mj", 20_000, 0)
+    monkeypatch.undo()
+    assert engine.warehouse.get_info("default", "default", "mj") == {
+        "shardInterval": 10_000, "retention": 5_000,
+    }
+
+
 def test_drop_metric(engine):
     load(engine, "m", LONG_METRIC)
     engine.execute("drop metric m")
@@ -864,6 +905,62 @@ def test_compaction_merges_small_files(engine):
     assert len(files_in(200000)) == other_before  # untouched shard preserved
     after = engine.execute("select * from fragm order by timestamp").collect()
     assert after == before
+
+
+def test_concurrent_compactions_keep_untouched_shards(engine, monkeypatch):
+    """Two metrics compacted at once on the one shared session, with B's
+    write held until A's compact_metric has returned: B's untouched shard
+    keeps its rows. A compaction must not rest on a session conf that
+    another thread's compaction can reset mid-flight."""
+    import os
+    import threading
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    prefix = {}
+    for m in ("ca", "cb"):
+        engine.warehouse.init_metric("default", "default", m, 100000)
+        for i in range(4):
+            engine.execute(f"insert into {m} ts = {i * 10} tags (k = a) val = {float(i)}")
+        engine.execute(f"insert into {m} ts = 200000 tags (k = b) val = 99.0")
+        prefix[m] = engine.warehouse.metric_path("default", "default", m) + os.sep
+    before = engine.execute("select * from cb order by timestamp").collect()
+    a_writing, b_writing, a_done = threading.Event(), threading.Event(), threading.Event()
+    orig = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        if path.startswith(prefix["ca"]):
+            a_writing.set()
+            b_writing.wait(60)
+        elif path.startswith(prefix["cb"]):
+            b_writing.set()
+            a_done.wait(60)
+        return orig(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    errors, done = [], {}
+
+    def compact(m):
+        try:
+            done[m] = engine.compact_metric("default", "default", m, min_files=4)
+        except Exception as e:  # surfaced by the asserts below
+            errors.append(e)
+        finally:
+            if m == "ca":
+                a_done.set()
+
+    ta = threading.Thread(target=compact, args=("ca",))
+    ta.start()
+    assert a_writing.wait(60)
+    tb = threading.Thread(target=compact, args=("cb",))
+    tb.start()
+    ta.join(120)
+    tb.join(120)
+    monkeypatch.undo()
+    assert not ta.is_alive() and not tb.is_alive()
+    assert errors == [] and done == {"ca": [0], "cb": [0]}
+    assert engine.execute("select * from cb order by timestamp").collect() == before
+    assert engine.warehouse.locations("default", "default", "cb") == [0, 200000]
 
 
 # ------------------------------------------------------------ rollup routing
@@ -2024,6 +2121,45 @@ def test_shape_cache_mutation_replaces_stale_entry(long_engine):
     finally:
         long_engine._plan_select = orig
     assert plans == []
+
+
+def test_novel_limit_read_analyzes_once(long_engine, monkeypatch):
+    """A novel plain `... LIMIT k` read (the shape path's miss) reads the
+    schema and runs the analyzer once: LIMIT plays no part in analysis,
+    so the shape check's analysis is the plan's too. Its rows are the
+    LIMIT's prefix of the full result."""
+    from nsdb_spark import analyzer
+    from nsdb_spark.sql.parser import parse
+
+    def stmt(sql):
+        return parse(sql, db="default", namespace="default")
+
+    # warm the base frame, so its own schema read is not counted
+    long_engine.collect_select(stmt("select * from longMetric limit 1"))
+    calls = {"analyze": 0, "get_schema": 0}
+    orig_analyze = analyzer.analyze
+    orig_schema = long_engine.warehouse.get_schema
+
+    def analyze(*a, **kw):
+        calls["analyze"] += 1
+        return orig_analyze(*a, **kw)
+
+    def get_schema(*a, **kw):
+        calls["get_schema"] += 1
+        return orig_schema(*a, **kw)
+
+    monkeypatch.setattr(analyzer, "analyze", analyze)
+    monkeypatch.setattr(long_engine.warehouse, "get_schema", get_schema)
+    got = long_engine.collect_select(
+        stmt("select * from longMetric where timestamp >= 4 order by timestamp limit 2")
+    )
+    assert [r["timestamp"] for r in got] == [4, 6]
+    assert calls == {"analyze": 1, "get_schema": 1}
+    # an aggregate LIMIT read falls through the shape check: still once
+    calls.update(analyze=0, get_schema=0)
+    got = long_engine.collect_select(stmt("select count(*) from longMetric limit 3"))
+    assert [tuple(r) for r in got] == [(3,)]
+    assert calls == {"analyze": 1, "get_schema": 1}
 
 
 def test_token_cache_exact_token_monotone_put_and_lru():

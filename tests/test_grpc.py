@@ -409,6 +409,62 @@ def test_grpc_stream_sql_subscribe_then_live_push(engine, grpc_server, grpc_clie
     assert not grpc_server.subs.subs  # unsubscribed on RST_STREAM
 
 
+def test_grpc_stream_buffer_stops_at_cap_while_peer_stalls(
+    engine, grpc_server, grpc_client, monkeypatch
+):
+    """A subscriber that stops reading blocks the server's send on HTTP/2
+    flow control; live pushes meanwhile stop at the subscription
+    channel's cap (new batches dropped), as on the HTTP long-poll path."""
+    import threading
+
+    from nsdb_spark.grpc.server import NsdbGrpcServer
+    from nsdb_spark.streaming.subscribe import SubscriptionChannel
+
+    load(engine, "people", LONG_METRIC)
+    cap = 5
+    monkeypatch.setattr(SubscriptionChannel, "MAX_BATCHES", cap)
+    stalled, release = threading.Event(), threading.Event()
+    orig = NsdbGrpcServer._send_stream_msg
+    sent = []
+
+    def send(self, conn, stream, msg):
+        if sent:  # every send after the historical payload stalls
+            stalled.set()
+            release.wait(60)
+        sent.append(msg)
+        orig(self, conn, stream, msg)
+
+    monkeypatch.setattr(NsdbGrpcServer, "_send_stream_msg", send)
+    _, next_msg, cancel = grpc_client.stream_sql(
+        "default", "default", "select * from people")
+    try:
+        assert next_msg(timeout=30.0).get("subscribedByQueryString") is not None
+        subs = grpc_server.subs
+        [sub] = subs.subs.values()
+        row = {"timestamp": 100, "value": 1, "name": "x", "surname": "y"}
+        subs.publish("default", "default", "people", [row])
+        assert stalled.wait(30)
+        for i in range(3 * cap):
+            subs.publish("default", "default", "people", [dict(row, timestamp=200 + i)])
+        buffered = len(sub.callback.__self__.batches)
+        release.set()
+        # once the peer reads again it gets the stalled batch, then the
+        # first `cap` of the flood in one RecordsPublished; the rest were
+        # dropped
+        got = []
+        while True:
+            try:
+                msg = next_msg(timeout=2.0)
+            except TimeoutError:
+                break
+            got += [b["timestamp"] for b in msg["recordsPublished"]["records"]]
+    finally:
+        release.set()
+        cancel()
+    assert buffered == cap
+    assert got == [100] + [200 + i for i in range(cap)]
+
+
 def test_grpc_stream_sql_invalid_statement_fails_in_band(grpc_client):
     _, next_msg, cancel = grpc_client.stream_sql("default", "default", "selct x")
     msg = next_msg(timeout=30.0)

@@ -77,6 +77,17 @@ def test_temporal_bucket_join_is_broadcast(sharded_engine):
     assert "BroadcastExchange" in plan_of(df)
 
 
+def test_broadcast_bucket_axis_is_one_split(sharded_engine):
+    """An analytics-session temporal read broadcasts its per-bucket side
+    and streams the axis through the join: one range split (one task),
+    not one per core."""
+    df = sharded_engine.execute("select sum(value) from planm group by interval 20s")
+    assert df.sparkSession is sharded_engine.spark
+    plan = plan_of(df)
+    assert "BroadcastExchange" in plan
+    assert "splits=1)" in plan and "splits=" not in plan.replace("splits=1)", "")
+
+
 def _jobs_of(engine, sql: str) -> tuple[int, list]:
     """(Spark jobs, rows) of planning and collecting one statement."""
     from nsdb_spark.sql.parser import parse
