@@ -7,7 +7,9 @@ Layout (SURVEY.md §1.6):  <root>/<db>/<namespace>/<metric>/
       (shard_start = floor(timestamp / interval) * interval,
        MetadataCoordinator.scala:89-91)
     rollups/registry.json + rollups/<store>/ — materialized rollups
-    .staging/ — in-flight rewrites, swapped in by rename (Warehouse._swap)
+    .staging/ — in-flight writes: appended shard files, published by
+      renaming each into data/ (Warehouse.append_shards), and rewritten
+      directories, swapped in by rename (Warehouse._swap)
 
 The partition listing doubles as NSDb's "locations" metadata: temporal
 queries derive bucket bounds from it without touching data
@@ -17,18 +19,50 @@ from __future__ import annotations
 
 import contextlib
 import dataclasses
+import glob
 import json
 import os
 import re
 import shutil
 import tempfile
 import threading
+import time
 
 from .model import DEFAULT_SHARD_INTERVAL_MS, SHARD_COL, MetricSchema, SchemaError
 
 
 class MetricNotFound(Exception):
     pass
+
+
+def footer_stats(files: list[str]) -> tuple | None:
+    """(rows, NULL timestamps, NULL values, min timestamp, max timestamp)
+    of a set of shard files, from their parquet footers alone (no data
+    page is read); None when a footer lacks a statistic this needs."""
+    import pyarrow.parquet as pq
+
+    rows = ts_nulls = value_nulls = 0
+    lo = hi = None
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        names = [md.schema.column(i).path for i in range(md.num_columns)]
+        ts, value = names.index("timestamp"), names.index("value")
+        rows += md.num_rows
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            ts_s, value_s = rg.column(ts).statistics, rg.column(value).statistics
+            if ts_s is None or value_s is None or not (
+                ts_s.has_null_count and value_s.has_null_count
+            ):
+                return None
+            ts_nulls += ts_s.null_count
+            value_nulls += value_s.null_count
+            if ts_s.has_min_max:
+                lo = ts_s.min if lo is None else min(lo, ts_s.min)
+                hi = ts_s.max if hi is None else max(hi, ts_s.max)
+            elif ts_s.null_count < rg.num_rows:
+                return None
+    return rows, ts_nulls, value_nulls, lo, hi
 
 
 @dataclasses.dataclass(frozen=True)
@@ -197,7 +231,8 @@ class Warehouse:
     def mtimes(self, db: str, ns: str, metric: str) -> tuple[int, int]:
         """mtime_ns of schema.json and of data/ (-1 when missing): the
         marks of out-of-process change in NsdbEngine._cache_token. Every
-        insert rewrites schema.json; every shard added, swapped or removed
+        insert rewrites schema.json and, once its rows are visible, moves
+        data/'s mark (append_shards); every shard swapped or removed
         renames an entry of data/."""
         mp = self.metric_path(db, ns, metric)
         marks = []
@@ -301,25 +336,73 @@ class Warehouse:
             if os.path.isdir(d):
                 shutil.rmtree(d)
 
-    # -- rewrites -----------------------------------------------------------
-    # Every replacement of a warehouse directory (shards rewritten or
-    # evicted, rollup stores built or merged, a restored metric) is staged
-    # under <owner>/.staging — the metric directory, or the namespace
-    # directory for a restore — so its swap is a rename on one filesystem,
-    # outside data/ partition discovery and the metric listing.
+    # -- appends and rewrites ----------------------------------------------
+    # Every write into a warehouse directory (shard files appended, shards
+    # rewritten or evicted, rollup stores built or merged, a restored
+    # metric) is staged under <owner>/.staging — the metric directory, or
+    # the namespace directory for a restore — so its publication is a
+    # rename on one filesystem, outside data/ partition discovery and the
+    # metric listing.
     _STAGING = ".staging"
 
     @contextlib.contextmanager
     def _staging(self, owner: str):
         """A fresh staging directory under owner/.staging, removed on exit
-        with whatever is left in it."""
+        with whatever is left in it. When this call creates owner (the
+        first write of a metric), owner and the parents it created are
+        removed again if they are left empty, so a rejected first write
+        leaves no directory behind for the listings to show."""
         root = os.path.join(owner, self._STAGING)
-        os.makedirs(root, exist_ok=True)
-        stage = tempfile.mkdtemp(dir=root)
+        made, d = [], owner
+        while not os.path.isdir(d):
+            made.append(d)
+            d = os.path.dirname(d)
+        while True:
+            try:
+                os.makedirs(root, exist_ok=True)
+                stage = tempfile.mkdtemp(dir=root)
+                break
+            except FileNotFoundError:
+                continue  # a concurrent exit removed the empty directories
         try:
             yield stage
         finally:
             shutil.rmtree(stage, ignore_errors=True)
+            if made:
+                with contextlib.suppress(OSError):
+                    for d in (root, *made):
+                        os.rmdir(d)
+
+    def append_shards(self, db: str, ns: str, metric: str, write, check=None) -> list[str]:
+        """Add the rows that write(path) stages at path, partitioned by
+        shard_start, to the metric's shards; returns the published files.
+        check(files), when given, runs first on the staged parquet files;
+        if write or check raises, nothing is published. Each file is then
+        renamed into data/shard_start=<n>/ (its name, unique per write job,
+        is kept), and once all are in, data/'s mark is moved: mtimes
+        changes only after the rows are visible."""
+        dp = self.data_path(db, ns, metric)
+        with self._staging(self.metric_path(db, ns, metric)) as stage:
+            out = os.path.join(stage, "new")
+            write(out)
+            staged = sorted(
+                glob.glob(os.path.join(glob.escape(out), f"{SHARD_COL}=*", "*.parquet"))
+            )
+            if check is not None:
+                check(staged)
+            published = []
+            for f in staged:
+                shard = os.path.join(dp, os.path.basename(os.path.dirname(f)))
+                os.makedirs(shard, exist_ok=True)
+                dst = os.path.join(shard, os.path.basename(f))
+                os.rename(f, dst)
+                published.append(dst)
+            if published:
+                # file timestamps come from a coarse kernel clock: two
+                # appends inside one tick would leave the same mark
+                t = max(time.time_ns(), os.stat(dp).st_mtime_ns + 1)
+                os.utime(dp, ns=(t, t))
+        return published
 
     @staticmethod
     def _swap(new: str, dst: str, stage: str) -> None:

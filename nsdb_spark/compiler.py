@@ -434,6 +434,47 @@ BUCKET = "__bucket"
 _BROADCAST_BUCKETS_MAX = 1_000_000
 
 
+def temporal_axis(
+    q: ParsedTemporalAggregatedQuery,
+    ctx: TimeContext,
+    ivs: list[tuple[int, int | None]],
+    data_lower: int,
+    data_upper: int,
+) -> list[tuple[int, int]]:
+    """The closed intervals of a temporal read's bucket axes over the
+    shard-aligned data extent [data_lower, data_upper], its lower edge
+    raised to the grace period's.
+
+    Per-interval axes (TimeRangeManager.computeRangesForIntervalAndCondition,
+    TimeRangeManager.scala:102-124): ONE backward-aligned bucket axis per
+    extracted WHERE interval — a disjoint range (e.g. a NOT-complement)
+    yields disjoint axes with NO zero-filled buckets inside the excluded
+    gap, each aligned backward from its own interval's top. Each interval
+    is CLIPPED to the data extent, not taken verbatim as the reference
+    does: shards only exist where data is (ReadNodesSelection.scala:40-49),
+    and the verbatim WHERE bounds would generate a bucket row for every
+    interval of an arbitrarily wide range (`timestamp > 0` ⇒ ~10^9 empty
+    buckets joined and emitted)."""
+    glo = data_lower
+    if q.grace_period_ms is not None:
+        glo = max(glo, ctx.current_time - q.grace_period_ms)
+    if not ivs:
+        return [(glo, data_upper)]
+    eff = []
+    for ilo, ihi in ivs:
+        u = data_upper if ihi is None else min(ihi, data_upper)
+        l = max(ilo, glo)
+        # u == l is a DEGENERATE but non-empty interval ([x, x] contains
+        # x): the reference emits one inclusive bucket for it
+        # (computeRangeForInterval with upper == lower,
+        # TimeRangeManager.scala:96-99) — dropping it would lose rows that
+        # match the WHERE (e.g. `timestamp = x` or a NOT-complement whose
+        # edge lands on the data extent)
+        if u >= l:
+            eff.append((l, u))
+    return eff
+
+
 def in_axis(lower: int, upper: int) -> Column:
     """Rows whose timestamp lies on the closed axis [lower, upper]."""
     return (F.col("timestamp") >= lower) & (F.col("timestamp") <= upper)
@@ -704,34 +745,7 @@ class QueryCompiler:
                 return self._empty_temporal(q, df)
             data_lower = (row[0] // si) * si
             data_upper = (row[1] // si) * si + si
-        glo = data_lower
-        if q.grace_period_ms is not None:
-            glo = max(glo, ctx.current_time - q.grace_period_ms)
-        # Per-interval axes (TimeRangeManager.computeRangesForIntervalAndCondition,
-        # TimeRangeManager.scala:102-124): ONE backward-aligned bucket axis per
-        # extracted WHERE interval — a disjoint range (e.g. a NOT-complement)
-        # yields disjoint axes with NO zero-filled buckets inside the excluded
-        # gap, each aligned backward from its own interval's top. CLIP each
-        # interval to the data extent, not the reference's verbatim bounds:
-        # shards only exist where data is (ReadNodesSelection.scala:40-49), and
-        # taking the WHERE bounds verbatim would generate a bucket row for
-        # every interval of an arbitrarily wide range (`timestamp > 0` ⇒ ~10^9
-        # empty buckets joined and emitted).
-        if not ivs:
-            eff = [(glo, data_upper)]
-        else:
-            eff = []
-            for ilo, ihi in ivs:
-                u = data_upper if ihi is None else min(ihi, data_upper)
-                l = max(ilo, glo)
-                # u == l is a DEGENERATE but non-empty interval ([x, x]
-                # contains x): the reference emits one inclusive bucket
-                # for it (computeRangeForInterval with upper == lower,
-                # TimeRangeManager.scala:96-99) — dropping it would lose
-                # rows that match the WHERE (e.g. `timestamp = x` or a
-                # NOT-complement whose edge lands on the data extent)
-                if u >= l:
-                    eff.append((l, u))
+        eff = temporal_axis(q, ctx, ivs, data_lower, data_upper)
         if not eff:
             return self._empty_temporal(q, df)
 

@@ -21,13 +21,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import analyzer
-from .catalog import MetricNotFound, RollupSpec, Warehouse
+from .catalog import MetricNotFound, RollupSpec, Warehouse, footer_stats
 from .compiler import (
+    _BROADCAST_BUCKETS_MAX,
     QueryCompiler,
     TimeContext,
+    bucket_count,
     extract_time_range,
     serving_sql,
     shard_ranges,
+    temporal_axis,
     touched_shards,
 )
 from .model import (
@@ -195,10 +198,12 @@ class NsdbEngine:
         Coverage, precisely: (a) the in-process version (_metric_version)
         covers EVERY mutation made through this engine; (b) the two
         Warehouse.mtimes marks cover out-of-process changes: schema.json's
-        covers INSERTS (update_schema rewrites the file on every write) and
-        schema unions, data/'s covers DELETE / DROP / retention eviction /
-        compaction / Z-order (each swaps or removes shard_start= child dirs
-        by rename, touching the parent). NOT covered: (1) out-of-process
+        covers schema unions (update_schema rewrites the file on every
+        insert, before its rows are published), data/'s covers INSERTS
+        (Warehouse.append_shards moves it once the rows are visible) and
+        DELETE / DROP / retention eviction / compaction / Z-order (each
+        swaps or removes shard_start= child dirs by rename, touching the
+        parent). NOT covered: (1) out-of-process
         rollup rebuilds — a cooperating process should call
         invalidate_plan_caches() (or simply restart) afterwards; (2) on
         filesystems with coarse mtime granularity (1 s on classic NFS /
@@ -273,10 +278,12 @@ class NsdbEngine:
 
     # ------------------------------------------------------------- write path
     def insert_bits(self, db: str, ns: str, metric: str, bits: list[Bit]) -> int:
-        """Validate → union-merge schema → append to shard partitions.
+        """Validate → stage the shard files → union-merge schema → publish.
 
         WriteCoordinator.scala:387-441 analogue: schema update then
-        accumulate; Parquet's atomic commit replaces the commit log.
+        accumulate. The rows are staged and published by rename
+        (Warehouse.append_shards), which replaces the commit log: a
+        failed write leaves neither rows nor registered fields.
         """
         if not bits:
             return 0
@@ -300,7 +307,12 @@ class NsdbEngine:
         incoming = MetricSchema.infer(bits[0])
         for b in bits[1:]:
             incoming = incoming.union(MetricSchema.infer(b))
-        schema = self.warehouse.update_schema(db, ns, metric, incoming)
+        # the local union raises a type conflict before any row is staged;
+        # the registry is written only once the rows are (append_shards)
+        try:
+            schema = self.warehouse.get_schema(db, ns, metric).union(incoming)
+        except MetricNotFound:
+            schema = incoming
 
         si = info["shardInterval"]
         struct = schema.to_struct_type(with_shard=True)
@@ -312,22 +324,30 @@ class NsdbEngine:
             row.append(shard_start(b.timestamp, si))
             rows.append(row)
         df = self.spark.createDataFrame(rows, struct)
-        (
-            # sort within each shard so parquet row-group min/max stats give
-            # tight timestamp skipping (the point-tree role in the reference)
-            df.repartition(SHARD_COL)
-            .sortWithinPartitions("timestamp")
-            .write.mode("append")
-            .partitionBy(SHARD_COL)
-            .parquet(self.warehouse.data_path(db, ns, metric))
+        self.warehouse.append_shards(
+            db, ns, metric, self._shard_writer(df),
+            lambda _files: self.warehouse.update_schema(db, ns, metric, incoming),
         )
         # keep materialized rollups FRESH instead of dropping them: merge
         # this batch's partials in (classic incremental view maintenance);
         # only writes outside a rollup's pinned axis force invalidation
         lo = min(b.timestamp for b in bits)
         hi = max(b.timestamp for b in bits)
-        self._maintain_rollups_on_write(db, ns, metric, lo, hi, df.drop(SHARD_COL))
+        self._maintain_rollups_on_write(db, ns, metric, lo, hi, lambda: df.drop(SHARD_COL))
         return len(bits)
+
+    @staticmethod
+    def _shard_writer(frame: DataFrame):
+        """The bound parquet method that writes frame, partitioned by
+        shard, as one file per shard with rows sorted on timestamp, so
+        parquet row-group min/max stats give tight timestamp skipping (the
+        point-tree role in the reference)."""
+        return (
+            frame.repartition(SHARD_COL)
+            .sortWithinPartitions("timestamp")
+            .write.partitionBy(SHARD_COL)
+            .parquet
+        )
 
     def insert_frame(
         self,
@@ -347,17 +367,22 @@ class NsdbEngine:
         becomes a dimension (or a tag if named in `tags`). Same registry
         semantics as the record path: schema inferred from the frame,
         union-merged, type/class conflicts rejected (Schema.scala:116-129),
-        retention enforced (MetadataCoordinator.scala:485-489 — here as one
-        distributed count instead of a per-bit check).
+        retention enforced (MetadataCoordinator.scala:485-489 — here on
+        the written batch's timestamp range instead of per bit).
 
         widen_ints: map int32 columns to BIGINT (matching the record path,
         where Python ints infer BIGINT); with False, int32 stays INT —
         NSDb's exact-type-match union will then reject mixing the two.
 
-        Scale shape: ONE validation-stats pass over the persisted frame
-        (retention + NULL checks + bounds share a single aggregate), then
-        the append repartitioned by shard with rows sorted on timestamp
-        inside each — identical physical layout to the record path.
+        Scale shape: ONE Spark write stages the batch, repartitioned by
+        shard with rows sorted on timestamp inside each (the record path's
+        layout), under the metric's staging directory. The checks read
+        the staged files' parquet footers; only a rejected batch pays one
+        exact-count job, for its error message. A batch that passes
+        registers its schema and is published by rename
+        (Warehouse.append_shards); rollup maintenance reads back exactly
+        the published files, so a non-deterministic source (a CSV dir
+        modified mid-call) cannot merge partials for rows never written.
         """
         from .sources.bulk import frame_schema, conform_frame
 
@@ -377,6 +402,7 @@ class NsdbEngine:
         info = self.warehouse.get_info(db, ns, metric)
         retention = info["retention"]
         si = info["shardInterval"]
+        now = self.now_fn()
         # Validate EVERYTHING before mutating the schema registry
         # (insert_bits' validate-then-mutate order): the local union both
         # surfaces type conflicts and gives conform_frame its target
@@ -384,10 +410,6 @@ class NsdbEngine:
         # register fields/widenings the write never lands (reads would
         # project a phantom NULL column forever, and a later legitimate
         # ingest of that field could then conflict).
-        # error PRECEDENCE mirrors insert_bits: retention and NULL checks
-        # fire before a schema conflict surfaces (there, the union runs
-        # after per-bit validation) — so a union failure is parked and
-        # re-raised only once the data checks pass
         union_err: SchemaError | None = None
         merged = incoming
         if existing is not None:
@@ -395,76 +417,88 @@ class NsdbEngine:
                 merged = existing.union(incoming)
             except SchemaError as e:
                 union_err = e
-        # pinned: the frame feeds the stats action, the parquet append,
-        # AND the rollup-maintenance aggregates — three evaluations of a
-        # non-deterministic source (a CSV dir modified mid-call) would
-        # otherwise let the rollup merge deltas for rows never written
-        # (on a parked union error, the raw frame still carries the
-        # timestamp/value columns the stats checks need)
-        out = (
-            conform_frame(df, merged, si) if union_err is None else df
-        ).persist()
-        # ONE stats action carries every validation count (the retention
-        # check was previously a separate full scan of the un-persisted
-        # source — a whole extra read pass per bulk ingest). A bit
-        # without timestamp or value does not exist in NSDb (Bit.scala's
-        # fields are mandatory) — and admitting NULL values would make
-        # rollup-served count/avg diverge from the raw path's
-        # NULL-skipping count(target).
-        now = self.now_fn()
-        ret_bad_col = (
-            F.count(F.when(
-                (F.col("timestamp") < now - retention)
-                | (F.col("timestamp") > now + retention),
-                1,
-            ))
-            if retention
-            else F.lit(0)
+        if union_err is not None:
+            # error PRECEDENCE mirrors insert_bits: retention and NULL
+            # checks fire before a schema conflict surfaces (there, the
+            # union runs after per-bit validation) — the raw frame still
+            # carries the timestamp/value columns they need
+            self._reject_invalid(self._batch_figures(df, retention, now), retention)
+            raise union_err
+        figures = None
+
+        def check(files: list[str]) -> None:
+            nonlocal figures
+            figures = self._footer_figures(footer_stats(files), retention, now)
+            if figures is None:
+                figures = self._batch_figures(
+                    self.spark.read.schema(merged.to_struct_type()).parquet(*files),
+                    retention, now,
+                )
+            self._reject_invalid(figures, retention)
+            if figures[0]:
+                # every check passed — NOW mutate the registry (under its
+                # lock; a concurrent ingest may have widened it further,
+                # which the union inside update_schema absorbs)
+                self.warehouse.update_schema(db, ns, metric, incoming)
+
+        published = self.warehouse.append_shards(
+            db, ns, metric, self._shard_writer(conform_frame(df, merged, si)), check
         )
-        n, n_bad, ret_bad, lo, hi = out.agg(
+        n, _, _, lo, hi = figures
+        if n:
+            self._maintain_rollups_on_write(
+                db, ns, metric, lo, hi,
+                lambda: self.spark.read.schema(merged.to_struct_type()).parquet(*published),
+            )
+        return n
+
+    @staticmethod
+    def _batch_figures(frame: DataFrame, retention: int, now: int) -> tuple:
+        """(rows, rows with NULL or negative timestamp or NULL value, rows
+        outside the retention window, min timestamp, max timestamp) of a
+        batch, counted exactly in one Spark job. A bit without timestamp
+        or value does not exist in NSDb (Bit.scala's fields are
+        mandatory) — and admitting NULL values would make rollup-served
+        count/avg diverge from the raw path's NULL-skipping
+        count(target)."""
+        ts = F.col("timestamp")
+        return tuple(frame.agg(
             F.count(F.lit(1)),
-            F.count(F.when(
-                F.col("timestamp").isNull()
-                | (F.col("timestamp") < 0)
-                | F.col("value").isNull(),
-                1,
-            )),
-            ret_bad_col,
-            F.min("timestamp"),
-            F.max("timestamp"),
-        ).first()
+            F.count(F.when(ts.isNull() | (ts < 0) | F.col("value").isNull(), 1)),
+            F.count(F.when((ts < now - retention) | (ts > now + retention), 1))
+            if retention else F.lit(0),
+            F.min(ts),
+            F.max(ts),
+        ).first())
+
+    @staticmethod
+    def _footer_figures(stats: tuple | None, retention: int, now: int) -> tuple | None:
+        """_batch_figures of a clean batch from its footer stats; None when
+        the stats are missing or show a row to reject, whose exact count
+        the error message then needs."""
+        if stats is None:
+            return None
+        rows, ts_nulls, value_nulls, lo, hi = stats
+        if ts_nulls or value_nulls or lo is not None and (
+            lo < 0 or retention and (lo < now - retention or hi > now + retention)
+        ):
+            return None
+        return rows, 0, 0, lo, hi
+
+    @staticmethod
+    def _reject_invalid(figures: tuple, retention: int) -> None:
+        """Raise for a batch whose _batch_figures count a row to reject:
+        retention first, then NULL or negative timestamps (insert_bits'
+        order)."""
+        _, n_bad, ret_bad, _, _ = figures
         if ret_bad:
-            out.unpersist()
             raise RetentionError(
                 f"{ret_bad} rows outside the retention window of {retention} ms"
             )
         if n_bad:
-            out.unpersist()
             raise SchemaError(
                 f"{n_bad} rows with NULL or negative timestamp, or NULL value"
             )
-        if union_err is not None:
-            out.unpersist()
-            raise union_err
-        if n == 0:
-            out.unpersist()
-            return 0
-        # every check passed — NOW mutate the registry (under its lock;
-        # a concurrent ingest may have widened it further, which the
-        # union inside update_schema absorbs)
-        self.warehouse.update_schema(db, ns, metric, incoming)
-        try:
-            (
-                out.repartition(SHARD_COL)
-                .sortWithinPartitions("timestamp")
-                .write.mode("append")
-                .partitionBy(SHARD_COL)
-                .parquet(self.warehouse.data_path(db, ns, metric))
-            )
-            self._maintain_rollups_on_write(db, ns, metric, lo, hi, out.drop(SHARD_COL))
-        finally:
-            out.unpersist()
-        return n
 
     def insert_from_files(
         self,
@@ -484,13 +518,15 @@ class NsdbEngine:
         df = read_bulk(self.spark, path, fmt, options)
         return self.insert_frame(db, ns, metric, df, tags=tags)
 
-    def _maintain_rollups_on_write(self, db, ns, metric, lo, hi, batch_df) -> None:
+    def _maintain_rollups_on_write(self, db, ns, metric, lo, hi, batch) -> None:
         """Incrementally merge an insert batch into every registered
         rollup (temporal: additive count/sum + re-max per fine bucket;
         group: additive n/sum + re-reduced min/max per group). Cost is
         proportional to the ROLLUP size, not history. A bit outside a
         temporal rollup's pinned (lower, upper] axis would change the
-        bucket grid, so that case invalidates everything instead.
+        bucket grid, so that case invalidates everything instead. `batch`
+        returns the batch's rows as a frame; it is called only when the
+        metric has rollups.
 
         Serialized per metric: every merge below is read-merge-overwrite,
         and unserialized concurrent batches would silently drop each
@@ -504,7 +540,7 @@ class NsdbEngine:
         self._bump_metric_version(db, ns, metric)
         try:
             with self._metric_rollup_lock(db, ns, metric):
-                return self._maintain_rollups_locked(db, ns, metric, lo, hi, batch_df)
+                return self._maintain_rollups_locked(db, ns, metric, lo, hi, batch)
         finally:
             self._bump_metric_version(db, ns, metric)
 
@@ -521,23 +557,24 @@ class NsdbEngine:
         with self._rollup_locks_guard:
             return self._rollup_locks.setdefault(key, threading.Lock())
 
-    def _maintain_rollups_locked(self, db, ns, metric, lo, hi, batch_df) -> None:
+    def _maintain_rollups_locked(self, db, ns, metric, lo, hi, batch) -> None:
         specs = self.warehouse.rollups(db, ns, metric)
         if not specs:
             return
-        if self._outside_pins(specs, lo, hi, batch_df):
-            self.warehouse.invalidate_rollups(db, ns, metric)
-            return
         si = self.warehouse.get_info(db, ns, metric)["shardInterval"]
         try:
+            batch_df = batch()
+            if self._outside_pins(specs, lo, hi, batch_df):
+                self.warehouse.invalidate_rollups(db, ns, metric)
+                return
             for spec in specs:
-                batch, _ = self._rollup_partials(spec, batch_df, si)
+                partials, _ = self._rollup_partials(spec, batch_df, si)
                 stored = self.spark.read.parquet(
                     self.warehouse.rollup_path(db, ns, metric, spec)
                 )
                 self.warehouse.rewrite_rollup(
                     db, ns, metric, spec,
-                    self._merge_partials(spec, stored, batch).write.parquet,
+                    self._merge_partials(spec, stored, partials).write.parquet,
                 )
         except Exception:
             # maintenance must never be less safe than invalidation (e.g.
@@ -810,7 +847,7 @@ class NsdbEngine:
                 stmt.condition.expression if stmt.condition else None, ctx
             )
             locations = self.warehouse.locations(db, ns, stmt.metric)
-            serving = self._point_route(stmt, parsed, locations, ivs, si, point_serve)
+            serving = self._point_route(stmt, parsed, locations, ivs, si, point_serve, ctx)
             if serving and isinstance(parsed, analyzer.ParsedSimpleQuery):
                 # a plain SELECT plans as ONE parameterized spark.sql text
                 # over the serving view (shard conjunct folded into the
@@ -853,7 +890,8 @@ class NsdbEngine:
         return schema, analyzer.analyze(stmt, schema)
 
     def _point_route(
-        self, stmt, parsed, locations, ivs, shard_interval: int, point_serve: bool
+        self, stmt, parsed, locations, ivs, shard_interval: int, point_serve: bool,
+        ctx: TimeContext,
     ) -> bool:
         """True when a statement should plan on the interpreted serving
         session — the one serving route for point and aggregate reads.
@@ -864,9 +902,13 @@ class NsdbEngine:
         statement plus a shuffle fanned out over every core.
 
         Past the gate, an aggregate (tag group-by, global, temporal)
-        always serves; a plain SELECT serves only when it is not DISTINCT
-        and its caller fetches at most _POINT_SERVE_MAX_LIMIT rows (its
-        own LIMIT, or the shape path's vouched prefix). DISTINCT and
+        serves, unless it is a temporal read whose bucket axis is longer
+        than the broadcast cap (compiler._BROADCAST_BUCKETS_MAX): a tiny
+        interval over a long shard makes millions of buckets, which one
+        interpreted partition joins and sorts slower than the analytics
+        session. A plain SELECT serves only when it is not DISTINCT and
+        its caller fetches at most _POINT_SERVE_MAX_LIMIT rows (its own
+        LIMIT, or the shape path's vouched prefix). DISTINCT and
         LIMIT-less plain scans keep the codegen session — they are
         data-sized regardless of the shard count."""
         if isinstance(parsed, analyzer.ParsedSimpleQuery) and (
@@ -877,6 +919,13 @@ class NsdbEngine:
             )
         ):
             return False
+        if isinstance(parsed, analyzer.ParsedTemporalAggregatedQuery) and locations:
+            axis = temporal_axis(
+                parsed, ctx, ivs, min(locations), max(locations) + shard_interval
+            )
+            buckets = sum(bucket_count(lo, hi, parsed.interval_ms) for lo, hi in axis)
+            if buckets > _BROADCAST_BUCKETS_MAX:
+                return False
         scanned = touched_shards(locations, ivs, shard_interval)
         return len(scanned) <= self._POINT_SERVE_MAX_SHARDS
 

@@ -6,8 +6,10 @@ consistent, pushes are real-time. Here the same split is:
 
 - `start_parquet_ingestion`: readStream → foreachBatch append into the
   warehouse shard layout; the trigger interval is the visibility knob
-  (default 15 s ≡ nsdb.write.scheduler.interval). Parquet's atomic commit +
-  the checkpoint dir subsume the commit log (exactly-once per batch).
+  (default 15 s ≡ nsdb.write.scheduler.interval). Each batch is staged,
+  validated on the written files and published by rename
+  (Warehouse.append_shards); that and the checkpoint dir subsume the
+  commit log (exactly-once per batch).
 - `stream_filter`: a subscribed *plain* query as a pure streaming filter
   (PublisherActor's per-record match, but evaluated by Spark).
 - `stream_temporal_agg`: a subscribed temporal query as a windowed
@@ -95,7 +97,9 @@ def start_parquet_ingestion(
     registry, type conflicts reject the batch), retention rejection, the
     shard-partitioned timestamp-sorted layout, and incremental rollup
     maintenance (a registered rollup stays fresh under streaming ingest
-    instead of silently serving stale buckets).
+    instead of silently serving stale buckets). A batch costs one Spark
+    write: it is staged, checked on the written files and published by
+    rename, so a rejected batch leaves no rows and no registered fields.
 
     Delivery: foreachBatch is at-least-once on crash, and a parquet
     append is not idempotent — replays are skipped via

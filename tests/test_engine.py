@@ -1693,6 +1693,192 @@ def test_rejected_bulk_ingest_leaves_schema_registry_untouched(engine, spark):
     assert "region" in engine.warehouse.get_schema("default", "default", "vtm").fields
 
 
+def test_empty_insert_frame_returns_promptly_and_leaves_nothing(engine, spark):
+    """A zero-row batch writes no shard file: insert_frame returns 0
+    without waiting on figures that never come, registers none of the
+    frame's fields, and leaves data/ and the staging area as they were —
+    for a brand-new metric, no directory at all."""
+    import os
+    import threading
+
+    engine.warehouse.init_metric("default", "default", "ef", 10_000)
+    engine.insert_bits("default", "default", "ef", [Bit(1000, 1.0)])
+    before = engine.warehouse.get_schema("default", "default", "ef").to_dict()
+    data = engine.warehouse.data_path("default", "default", "ef")
+    files_before = sorted(os.walk(data))
+    empty = spark.createDataFrame([], "timestamp long, value double, region string")
+    for metric in ("ef", "fresh"):
+        out = {}
+        t = threading.Thread(
+            target=lambda m=metric: out.update(n=engine.insert_frame("default", "default", m, empty))
+        )
+        t.start()
+        t.join(timeout=180)
+        assert not t.is_alive() and out == {"n": 0}
+    assert engine.warehouse.get_schema("default", "default", "ef").to_dict() == before
+    assert sorted(os.walk(data)) == files_before
+    staging = os.path.join(engine.warehouse.metric_path("default", "default", "ef"), ".staging")
+    assert not os.path.exists(staging) or os.listdir(staging) == []
+    assert engine.warehouse.metrics("default", "default") == ["ef"]
+    assert not os.path.exists(engine.warehouse.metric_path("default", "default", "fresh"))
+
+
+def test_insert_frame_pins_batch_without_persisting(engine, spark):
+    """Rollup maintenance merges exactly the rows written, even from a
+    source that yields different rows on each evaluation (an unseeded
+    rand() value column): the rollup-routed sum equals the raw-path sum.
+    No insert leaves a persisted RDD behind, whether it lands or is
+    rejected for retention, NULL values or a type conflict."""
+    from pyspark.sql import functions as F
+
+    jsc = spark.sparkContext._jsc
+    engine.warehouse.init_metric("default", "default", "pb", 10_000)
+    engine.insert_bits("default", "default", "pb", [Bit(1000, 1.0, {}, {"g": "a"})])
+    engine.materialize_group_rollup("default", "default", "pb", "g")
+    baseline = jsc.getPersistentRDDs().size()
+    batch = spark.range(200).select(
+        (F.col("id") * 37 + 2000).alias("timestamp"),
+        F.rand().alias("value"),
+        F.when(F.col("id") % 3 == 0, "a").otherwise("b").alias("g"),
+    )
+    assert engine.insert_frame("default", "default", "pb", batch) == 200
+    assert jsc.getPersistentRDDs().size() == baseline
+    sql = "select sum(value) from pb group by g"
+    assert engine.explain_select(sql)["rollup_routed"]
+    routed = dict(rows(engine.execute(sql)))
+    raw = dict(
+        rows(engine.read_metric("default", "default", "pb").groupBy("g").agg(F.sum("value")))
+    )
+    assert routed.keys() == raw.keys() == {"a", "b"}
+    for g in raw:
+        assert routed[g] == pytest.approx(raw[g], rel=1e-9)
+
+    engine.warehouse.init_metric("default", "default", "pr", 10_000, retention_ms=1000)
+    engine.now_fn = lambda: 100_000
+    engine.insert_bits("default", "default", "pr", [Bit(99_500, 1.0, {}, {"g": "a"})])
+    rejected = [
+        (RetentionError, spark.createDataFrame([(1, 2.0, "a")], "timestamp long, value double, g string")),
+        (SchemaError, spark.createDataFrame([(99_600, None, "a")], "timestamp long, value double, g string")),
+        (SchemaError, spark.createDataFrame([(99_600, 2.0, 7)], "timestamp long, value double, g long")),
+    ]
+    # (a rollup-routed read pins its store, so the baseline is retaken)
+    baseline = jsc.getPersistentRDDs().size()
+    for err, df in rejected:
+        with pytest.raises(err):
+            engine.insert_frame("default", "default", "pr", df)
+        assert jsc.getPersistentRDDs().size() == baseline
+    assert engine.execute("select count(*) from pr").collect()[0][0] == 1
+
+
+def test_second_engine_sees_rows_once_published(engine, spark, monkeypatch):
+    """Out-of-process visibility: another engine on the same root caches
+    its reads under Warehouse.mtimes. An insert registers its schema
+    before its rows are published, so a read in between caches the old
+    rows under the new schema mark; the data/ mark must move only after
+    the rename step, and the next read must see the new rows."""
+    from nsdb_spark.catalog import Warehouse
+    from nsdb_spark.engine import NsdbEngine
+    from nsdb_spark.sql.parser import parse
+
+    engine.warehouse.init_metric("default", "default", "xe", 10_000)
+    engine.insert_bits("default", "default", "xe", [Bit(1000, 1.0)])
+    other = NsdbEngine(spark, engine.warehouse.root)
+    stmt = parse("select count(*) from xe", db="default", namespace="default")
+    assert other.collect_select(stmt)[0][0] == 1
+    marks = {}
+    append = Warehouse.append_shards
+
+    def spy(self, db, ns, metric, write, check=None):
+        marks["before"] = self.mtimes(db, ns, metric)
+
+        def checked(files):
+            check(files)
+            marks["checked"] = self.mtimes(db, ns, metric)
+            # staged, registered, not yet published
+            assert other.collect_select(stmt)[0][0] == 1
+
+        published = append(self, db, ns, metric, write, checked)
+        marks["after"] = self.mtimes(db, ns, metric)
+        return published
+
+    monkeypatch.setattr(Warehouse, "append_shards", spy)
+    df = spark.createDataFrame([(2000, 2.0), (3000, 3.0)], "timestamp long, value double")
+    assert engine.insert_frame("default", "default", "xe", df) == 2
+    assert marks["checked"][1] == marks["before"][1]
+    assert marks["after"][1] != marks["checked"][1]
+    assert other.collect_select(stmt)[0][0] == 3
+
+
+def test_concurrent_first_appends_publish_every_accepted_batch(tmp_path):
+    """Concurrent first writes of brand-new metrics, every other one
+    rejected by its check: a rejected write's cleanup removes the
+    directories it created, yet no concurrent staging fails on them,
+    every accepted file is published and nothing is left staged."""
+    import os
+    import sys
+    import threading
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nsdb_spark.catalog import Warehouse
+
+    wh = Warehouse(str(tmp_path / "wh"))
+
+    def write(path):
+        d = os.path.join(path, "shard_start=0")
+        os.makedirs(d)
+        table = pa.table({"timestamp": [1], "value": [1.0]})
+        pq.write_table(table, os.path.join(d, f"part-{uuid.uuid4()}.parquet"))
+
+    def reject(files):
+        raise ValueError("rejected")
+
+    published, errors = [], []
+
+    def worker(i):
+        for j in range(20):
+            try:
+                published.extend(wh.append_shards(
+                    "d", "n", f"m{j}", write, reject if (i + j) % 2 else None
+                ))
+            except ValueError:
+                pass
+            except Exception as e:  # collected for the assert below
+                errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(published) == 80 and all(os.path.isfile(f) for f in published)
+    for j in range(20):
+        staging = os.path.join(wh.metric_path("d", "n", f"m{j}"), ".staging")
+        assert not os.path.exists(staging) or os.listdir(staging) == []
+
+
+def test_long_temporal_axis_plans_off_serving_session(engine):
+    """A 1 s interval over one default 30-day shard is a 2.59M-bucket
+    axis, past the broadcast cap: it plans on the analytics session, not
+    in one interpreted partition. A 1 h interval over the same shard
+    still serves."""
+    engine.insert_bits("default", "default", "ax", [Bit(1000, 1.0), Bit(2000, 2.0)])
+    assert engine.warehouse.locations("default", "default", "ax") == [0]
+    df = engine.execute("select sum(value) from ax group by interval 1s")
+    assert df.sparkSession is engine.spark
+    df = engine.execute("select sum(value) from ax group by interval 1h")
+    assert df.sparkSession is engine._serving_session()
+
+
 def test_explain_select_reports_pruning_and_plan_class(engine):
     from nsdb_spark.model import Bit
 

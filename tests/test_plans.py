@@ -88,20 +88,28 @@ def test_broadcast_bucket_axis_is_one_split(sharded_engine):
     assert "splits=1)" in plan and "splits=" not in plan.replace("splits=1)", "")
 
 
-def _jobs_of(engine, sql: str) -> tuple[int, list]:
-    """(Spark jobs, rows) of planning and collecting one statement."""
-    from nsdb_spark.sql.parser import parse
-
-    sc = engine.spark.sparkContext
-    group = f"jobs-{id(sql)}"
+def _jobs_during(spark, fn) -> tuple[int, object]:
+    """(Spark jobs, result) of one call."""
+    sc = spark.sparkContext
+    group = f"jobs-{id(fn)}"
     sc.setJobGroup(group, group)
     try:
-        rows = engine.collect_select(parse(sql, db="default", namespace="default"))
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     # job-start events reach the status store through the listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group)), rows
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def _jobs_of(engine, sql: str) -> tuple[int, list]:
+    """(Spark jobs, rows) of planning and collecting one statement."""
+    from nsdb_spark.sql.parser import parse
+
+    return _jobs_during(
+        engine.spark,
+        lambda: engine.collect_select(parse(sql, db="default", namespace="default")),
+    )
 
 
 def test_shard_pruned_temporal_read_runs_one_job(sharded_engine):
@@ -137,6 +145,25 @@ def test_shard_pruned_tag_group_by_runs_one_job(sharded_engine):
     jobs, rows = _jobs_of(sharded_engine, sql)
     assert jobs == 1
     assert [tuple(r) for r in rows] == [("x", 6)]
+
+
+def test_insert_frame_is_one_spark_write(engine, spark, tmp_path):
+    """A bulk insert into a metric without rollups is ONE Spark write (its
+    shuffle-map job and its write job): the checks read the staged
+    files' footers, so there is no cached copy of the input and no
+    separate stats job."""
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(t, float(t), "a" if t % 3 else "b") for t in range(0, 60_000, 100)],
+        "timestamp long, value double, g string",
+    ).write.parquet(src)
+    engine.warehouse.init_metric("default", "default", "bulk", 10_000)
+    # (reading a parquet source infers its schema in a job of its own)
+    df = spark.read.parquet(src)
+    jobs, n = _jobs_during(spark, lambda: engine.insert_frame("default", "default", "bulk", df))
+    assert n == 600
+    assert jobs == 2
+    assert engine.warehouse.locations("default", "default", "bulk") == list(range(0, 60_000, 10_000))
 
 
 def test_decontaminate_broadcasts_benchmark_grams(spark):
