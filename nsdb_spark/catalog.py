@@ -106,6 +106,26 @@ class Warehouse:
         # grains/fields for one metric) must not lose one side's entry —
         # the loser's rollup data would sit on disk never routed to
         self._rollup_meta_lock = threading.Lock()
+        self._metric_locks: dict[tuple[str, str, str], threading.Lock] = {}
+        self._metric_locks_guard = threading.Lock()
+
+    def metric_lock(self, db: str, ns: str, metric: str) -> threading.Lock:
+        """The per-metric lock that serializes every change to a metric's
+        shard files and rollup stores. append_shards holds it while it
+        publishes; the engine holds it over each rollup
+        read-build-swap-register sequence (insert maintenance, the
+        materialize builders) and each shard rewrite from its read to its
+        swap (DELETE, retention eviction, compaction, Z-order). So no file
+        is published between a rewrite's read and its swap (the swap would
+        move it aside with the old directory and delete it), a materialize
+        cannot interleave with a maintenance merge (which would clobber a
+        fresh build with a merge of stale state), and neither with a shard
+        swap. Not reentrant: append_shards must not be called under it.
+        Entries are never evicted — a few hundred bytes per metric ever
+        written, bounded by the catalog size."""
+        key = (db, ns, metric)
+        with self._metric_locks_guard:
+            return self._metric_locks.setdefault(key, threading.Lock())
 
     # -- paths ----------------------------------------------------------
     #: filesystem-safe identifier: no separators, no traversal, no dot
@@ -377,10 +397,10 @@ class Warehouse:
         """Add the rows that write(path) stages at path, partitioned by
         shard_start, to the metric's shards; returns the published files.
         check(files), when given, runs first on the staged parquet files;
-        if write or check raises, nothing is published. Each file is then
-        renamed into data/shard_start=<n>/ (its name, unique per write job,
-        is kept), and once all are in, data/'s mark is moved: mtimes
-        changes only after the rows are visible."""
+        if write or check raises, nothing is published. Then, under
+        metric_lock, each file is renamed into data/shard_start=<n>/ (its
+        name, unique per write job, is kept), and once all are in, data/'s
+        mark is moved: mtimes changes only after the rows are visible."""
         dp = self.data_path(db, ns, metric)
         with self._staging(self.metric_path(db, ns, metric)) as stage:
             out = os.path.join(stage, "new")
@@ -391,17 +411,18 @@ class Warehouse:
             if check is not None:
                 check(staged)
             published = []
-            for f in staged:
-                shard = os.path.join(dp, os.path.basename(os.path.dirname(f)))
-                os.makedirs(shard, exist_ok=True)
-                dst = os.path.join(shard, os.path.basename(f))
-                os.rename(f, dst)
-                published.append(dst)
-            if published:
-                # file timestamps come from a coarse kernel clock: two
-                # appends inside one tick would leave the same mark
-                t = max(time.time_ns(), os.stat(dp).st_mtime_ns + 1)
-                os.utime(dp, ns=(t, t))
+            with self.metric_lock(db, ns, metric):
+                for f in staged:
+                    shard = os.path.join(dp, os.path.basename(os.path.dirname(f)))
+                    os.makedirs(shard, exist_ok=True)
+                    dst = os.path.join(shard, os.path.basename(f))
+                    os.rename(f, dst)
+                    published.append(dst)
+                if published:
+                    # file timestamps come from a coarse kernel clock: two
+                    # appends inside one tick would leave the same mark
+                    t = max(time.time_ns(), os.stat(dp).st_mtime_ns + 1)
+                    os.utime(dp, ns=(t, t))
         return published
 
     @staticmethod

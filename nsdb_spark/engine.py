@@ -14,13 +14,13 @@ import hashlib
 import logging
 import threading
 import time
-from collections import OrderedDict
 from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import analyzer
+from .cache import TokenCache
 from .catalog import MetricNotFound, RollupSpec, Warehouse, footer_stats
 from .compiler import (
     _BROADCAST_BUCKETS_MAX,
@@ -40,6 +40,7 @@ from .model import (
     SHARD_COL,
     shard_start,
 )
+from .sources.parquet import read_parquet
 from .sql import ast
 from .sql.parser import parse
 
@@ -49,56 +50,6 @@ _log = logging.getLogger(__name__)
 class RetentionError(Exception):
     """Bit outside the retention window rejected at write
     (MetadataCoordinator.scala:485-489 parity)."""
-
-
-class TokenCache:
-    """A bounded LRU map whose entries are valid only under the token they
-    were stored with (NsdbEngine._cache_token) — the one policy behind the
-    engine's plan, row, frame and serving-view caches:
-
-    - get(key, token) hits only on an EXACT token match, so nothing stale
-      is ever served;
-    - put(key, token, value) replaces an entry unless the stored token's
-      in-process version (token[0]) is newer. That version is the only
-      monotone token component — the mtime components can REGRESS (an
-      out-of-process drop+recreate restarts them), and comparing full
-      tuples would wedge a key into permanent misses. A put that loses a
-      race costs one re-execution, never stale data;
-    - past CAP entries the least recently served entry is evicted."""
-
-    CAP = 256
-
-    def __init__(self):
-        self._entries: "OrderedDict[tuple, tuple]" = OrderedDict()
-        self._lock = threading.Lock()
-
-    def get(self, key: tuple, token: tuple):
-        """The value stored under exactly `token`, else None."""
-        with self._lock:
-            ent = self._entries.get(key)
-            if ent is None or ent[0] != token:
-                return None
-            self._entries.move_to_end(key)
-            return ent[1]
-
-    def put(self, key: tuple, token: tuple, value, publish=None) -> None:
-        """Store value under token (see the class rule). `publish`, when
-        given, runs under the lock only if the put wins, so global state
-        it sets (a temp view) changes in the same order as the entries."""
-        with self._lock:
-            cur = self._entries.get(key)
-            if cur is not None and cur[0][0] > token[0]:
-                return
-            if publish is not None:
-                publish()
-            self._entries[key] = (token, value)
-            self._entries.move_to_end(key)
-            while len(self._entries) > self.CAP:
-                self._entries.popitem(last=False)
-
-    def clear(self) -> None:
-        with self._lock:
-            self._entries.clear()
 
 
 class _Planned(NamedTuple):
@@ -127,12 +78,6 @@ class NsdbEngine:
         self.now_fn = now_fn
         # opt-in HLL count-distinct (exact by default — reference parity)
         self.approx_count_distinct = approx_count_distinct
-        # rollup maintenance is a read-merge-overwrite: two concurrent
-        # insert batches (ThreadingHTTPServer) that both read the same
-        # stored state would each overwrite the other's registers —
-        # serialize per metric (the Warehouse._schema_lock discipline)
-        self._rollup_locks: dict[tuple[str, str, str], threading.Lock] = {}
-        self._rollup_locks_guard = threading.Lock()
         # statement→plan cache: repeated identical SELECTs (the
         # reference's signature Gatling/gRPC workload shape,
         # LoadSimulation.scala:47) would re-pay parse→analyze→spark.read→
@@ -340,8 +285,10 @@ class NsdbEngine:
     def _shard_writer(frame: DataFrame):
         """The bound parquet method that writes frame, partitioned by
         shard, as one file per shard with rows sorted on timestamp, so
-        parquet row-group min/max stats give tight timestamp skipping (the
-        point-tree role in the reference)."""
+        the parquet page index (one min/max per 20k-row page) skips the
+        pages outside a timestamp range (the point-tree role in the
+        reference). Row-group stats rarely help: at the default block
+        size a sf0.1 shard (100k rows, 1.5 MB) is a single row group."""
         return (
             frame.repartition(SHARD_COL)
             .sortWithinPartitions("timestamp")
@@ -539,23 +486,10 @@ class NsdbEngine:
         # without the second bump it would serve them forever).
         self._bump_metric_version(db, ns, metric)
         try:
-            with self._metric_rollup_lock(db, ns, metric):
+            with self.warehouse.metric_lock(db, ns, metric):
                 return self._maintain_rollups_locked(db, ns, metric, lo, hi, batch)
         finally:
             self._bump_metric_version(db, ns, metric)
-
-    def _metric_rollup_lock(self, db: str, ns: str, metric: str) -> threading.Lock:
-        """The per-metric lock serializing every rollup read-build-
-        swap-register sequence and every shard rewrite: insert
-        maintenance, the materialize_* builders, DELETE, retention,
-        compaction and Z-order take it, so a materialize can't interleave
-        with a maintenance merge (which would clobber a fresh build with a
-        merge of stale state) or a shard swap. Entries
-        are never evicted — a few hundred bytes per metric ever written,
-        bounded by the catalog size."""
-        key = (db, ns, metric)
-        with self._rollup_locks_guard:
-            return self._rollup_locks.setdefault(key, threading.Lock())
 
     def _maintain_rollups_locked(self, db, ns, metric, lo, hi, batch) -> None:
         specs = self.warehouse.rollups(db, ns, metric)
@@ -569,8 +503,8 @@ class NsdbEngine:
                 return
             for spec in specs:
                 partials, _ = self._rollup_partials(spec, batch_df, si)
-                stored = self.spark.read.parquet(
-                    self.warehouse.rollup_path(db, ns, metric, spec)
+                stored = read_parquet(
+                    self.spark, self.warehouse.rollup_path(db, ns, metric, spec)
                 )
                 self.warehouse.rewrite_rollup(
                     db, ns, metric, spec,
@@ -866,6 +800,12 @@ class NsdbEngine:
                 df = self._prune_shards(
                     self._read_metric_frame(db, ns, stmt.metric, serving), ivs, si
                 )
+                if serving:
+                    # a few shards' rows in ONE partition: SinglePartition
+                    # satisfies the aggregate's and the axis merge join's
+                    # distribution, so the read plans no Exchange and runs
+                    # one task (a scan reports UnknownPartitioning)
+                    df = df.coalesce(1)
                 compiler = QueryCompiler(
                     self._serving_session() if serving else self.spark,
                     shard_interval_ms=si,
@@ -1067,11 +1007,11 @@ class NsdbEngine:
         """Anti-filter rewrite of only the affected shard partitions
         (SURVEY.md §2.1 DELETE mapping). Untouched shards are not rewritten.
 
-        Runs under the per-metric rollup lock: a materialize racing the
+        Runs under the per-metric lock: a materialize racing the
         rewrite could otherwise register a rollup built from pre-delete
         data AFTER this invalidation — durably serving deleted rows."""
         db, ns = stmt.db or "default", stmt.namespace or "default"
-        with self._metric_rollup_lock(db, ns, stmt.metric):
+        with self.warehouse.metric_lock(db, ns, stmt.metric):
             return self._delete_locked(stmt, time_context)
 
     def _delete_locked(self, stmt, time_context=None) -> int:
@@ -1159,7 +1099,7 @@ class NsdbEngine:
         Under the per-metric lock: a concurrent insert's maintenance merge
         interleaving with this read-build-swap-register would base its
         merge on the pre-materialize state and clobber the fresh build."""
-        with self._metric_rollup_lock(db, ns, metric):
+        with self.warehouse.metric_lock(db, ns, metric):
             si = self.warehouse.get_info(db, ns, metric)["shardInterval"]
             if spec.fine_ms is not None:
                 locations = self.warehouse.locations(db, ns, metric)
@@ -1234,8 +1174,8 @@ class NsdbEngine:
         can be merged without rescanning history — same maintenance model
         as operators/rollup.merge_rollups. Returns the group count."""
         spec = self._materialize(db, ns, metric, RollupSpec("group", field=field))
-        return self.spark.read.parquet(
-            self.warehouse.rollup_path(db, ns, metric, spec)
+        return read_parquet(
+            self.spark, self.warehouse.rollup_path(db, ns, metric, spec)
         ).count()
 
     def _rollup_spec(
@@ -1314,9 +1254,7 @@ class NsdbEngine:
             # fallback. No ignoreMissingFiles here for the same reason:
             # a vanish mid-checkpoint must raise (→ raw fallback below),
             # never silently drop rows.
-            return (
-                self.spark.read.parquet(path).localCheckpoint(eager=True)
-            )
+            return read_parquet(self.spark, path).localCheckpoint(eager=True)
         except Exception as e:
             # the swap window surfaces as PATH_NOT_FOUND at planning or
             # FileNotFound during the checkpoint job — both benign: the
@@ -1453,7 +1391,7 @@ class NsdbEngine:
         # under the per-metric lock for the same reason as delete(): an
         # in-flight materialize must not register a rollup built over
         # shards this eviction is removing, after the invalidation
-        with self._metric_rollup_lock(db, ns, metric):
+        with self.warehouse.metric_lock(db, ns, metric):
             dropped = self.warehouse.drop_shards_older_than(
                 db, ns, metric, self.now_fn() - retention
             )
@@ -1466,11 +1404,11 @@ class NsdbEngine:
     # ------------------------------------------------------------- dump/restore
     # NsdbRestore.scala / restore.proto parity: export a metric as a
     # verified bundle, import it atomically (possibly under a new name).
-    # The engine wrapper serializes against the per-metric rollup lock so
+    # The engine wrapper serializes against the per-metric lock so
     # a dump never snapshots mid-materialization registry state and a
     # restore-with-overwrite never swaps underneath an in-flight write.
     def dump_metric_bundle(self, db: str, ns: str, metric: str, dest: str) -> dict:
-        with self._metric_rollup_lock(db, ns, metric):
+        with self.warehouse.metric_lock(db, ns, metric):
             return self.warehouse.dump_metric(db, ns, metric, dest)
 
     def restore_metric_bundle(
@@ -1511,28 +1449,27 @@ class NsdbEngine:
         staged and swapped in shard by shard (Warehouse.rewrite_shards).
         Returns the compacted shard starts.
 
-        Concurrency contract (no snapshot layer on plain parquet):
-        - a query PLANNED before a compaction and executed after it reads
-          the old file list — vanished files are skipped
-          (ignoreMissingFiles), so such a stale plan can silently return
-          fewer rows. Queries through this engine plan-and-execute
-          promptly, so the window is the query's own runtime; long-lived
-          cached DataFrames must be re-created after compaction.
-        - writes landing in a shard between compaction's read and its
-          swap are lost. Run compaction as a maintenance task with
-          writes to the affected metric paused (or move the warehouse to
-          a transactional table format to lift both caveats).
+        Concurrency contract (no snapshot layer on plain parquet): the
+        read, rewrite and swap run under Warehouse.metric_lock, which
+        inserts also hold while they publish, so an insert lands before
+        the read or after the swap. A query PLANNED before a compaction
+        and executed after it reads the old file list — vanished files
+        are skipped (ignoreMissingFiles), so such a stale plan can
+        silently return fewer rows. Queries through this engine
+        plan-and-execute promptly, so the window is the query's own
+        runtime; long-lived cached DataFrames must be re-created after
+        compaction.
         """
         import math
 
-        # under the per-metric rollup lock, like delete() and retention:
+        # under the per-metric lock, like delete() and retention:
         # a materialize/maintenance merge scanning raw data while this
         # rewrite swaps the shards would (via ignoreMissingFiles) build
         # and REGISTER a rollup from a fraction of the data; a delete()
         # committing between our read and swap would be undone (its
-        # removed rows written back). Same caveats as documented above
-        # still apply to plain concurrent INSERTS.
-        with self._metric_rollup_lock(db, ns, metric):
+        # removed rows written back); an insert publishing in between
+        # would be moved aside with the old shard and deleted.
+        with self.warehouse.metric_lock(db, ns, metric):
             todo = [
                 s for s in self.warehouse.shard_stats(db, ns, metric)
                 if s["n_files"] >= min_files
@@ -1600,11 +1537,11 @@ class NsdbEngine:
         for f in cluster_fields:
             if not schema.has_field(f):
                 raise SchemaError(f"unknown cluster field {f}")
-        # per-metric rollup lock over listing, read and swap, same
+        # per-metric lock over listing, read and swap, same
         # rationale as compact_metric: a concurrent materialize scanning
         # mid-swap would register a partial rollup, and a delete swapping
         # a shard after our listing would be undone or its shard dropped
-        with self._metric_rollup_lock(db, ns, metric):
+        with self.warehouse.metric_lock(db, ns, metric):
             shards = self.warehouse.locations(db, ns, metric)
             if not shards:
                 return []

@@ -5,11 +5,17 @@ value (DECIMAL/double), tags event_type + user_id, dimensions event_id +
 props — so the whole NSDb query surface runs against it through the regular
 parse → analyze → compile pipeline.
 
-Timestamp determinism: events.ts is parquet TIMESTAMP(NANOS, naive).
-Depending on the Spark build it surfaces either as BIGINT nanos (legacy
-nanosAsLong) or as TIMESTAMP_NTZ truncated to micros; `ts_ms` floors either
+Timestamp determinism: events.ts is a naive parquet TIMESTAMP (MICROS in
+the generated files). It surfaces as TIMESTAMP_NTZ, or, for a NANOS file
+read with the legacy nanosAsLong on, as BIGINT nanos; `ts_ms` floors either
 representation to epoch ms (session tz pinned to UTC so the NTZ cast is the
 identity instant), bit-identical to DuckDB's epoch_ms(ts) truncation.
+
+Schema reuse: every registry entry reads its tables through `table`, which
+reads through sources/parquet.read_parquet. The first read of a table file
+infers its schema (one Spark job); later reads of the same file version,
+under the same parquet inference confs (nanosAsLong among them), pass the
+remembered schema and launch no job while the frame is built.
 """
 from __future__ import annotations
 
@@ -23,6 +29,7 @@ from ..analyzer import analyze
 from ..compiler import QueryCompiler, TimeContext
 from ..model import FieldClass, MetricSchema, NsdbType, SchemaField
 from ..sql.parser import parse
+from .parquet import read_parquet
 
 EVENTS_SCHEMA = MetricSchema(
     NsdbType.DECIMAL,
@@ -60,7 +67,7 @@ def ts_ms(df: DataFrame, col: str = "ts") -> Column:
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _configure(spark)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def events_metric(spark: SparkSession, sf_dir: str) -> DataFrame:

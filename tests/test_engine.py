@@ -963,6 +963,51 @@ def test_concurrent_compactions_keep_untouched_shards(engine, monkeypatch):
     assert engine.warehouse.locations("default", "default", "cb") == [0, 200000]
 
 
+def test_insert_during_compaction_is_kept(engine, monkeypatch):
+    """An insert acknowledged while a compaction rewrites its shard is
+    readable afterwards: it publishes under the metric lock the rewrite
+    holds from its read to its swap, so it lands after the swap instead
+    of being moved aside with the old shard directory and deleted. The
+    insert runs from inside compaction's write callback; once it has
+    registered its schema (the step just before publication) it gets a
+    few seconds to publish before the write goes on."""
+    import threading
+
+    wh = engine.warehouse
+    wh.init_metric("default", "default", "cins", 100000)
+    for i in range(2):
+        engine.execute(f"insert into cins ts = {i * 10} tags (k = a) val = {float(i)}")
+    staged = threading.Event()
+    update_schema = wh.update_schema
+
+    def spy_update_schema(*args):
+        out = update_schema(*args)
+        staged.set()
+        return out
+
+    monkeypatch.setattr(wh, "update_schema", spy_update_schema)
+    rewrite_shards = wh.rewrite_shards
+    inserted = []
+    t = threading.Thread(target=lambda: inserted.append(
+        engine.execute("insert into cins ts = 50 tags (k = a) val = 5.0")
+    ))
+
+    def rewrite(db, ns, metric, shards, write):
+        def write_with_insert(path):
+            t.start()
+            assert staged.wait(60)
+            t.join(3)
+            write(path)
+
+        rewrite_shards(db, ns, metric, shards, write_with_insert)
+
+    monkeypatch.setattr(wh, "rewrite_shards", rewrite)
+    assert engine.compact_metric("default", "default", "cins", min_files=2) == [0]
+    t.join(60)
+    assert inserted == [1]
+    assert engine.execute("select count(*) from cins").collect()[0][0] == 3
+
+
 # ------------------------------------------------------------ rollup routing
 
 

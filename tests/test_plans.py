@@ -8,6 +8,8 @@ on (SURVEY.md §4) must be visible in the executed plan, not assumed.
 - aggregations split partial/final with map-side combine (≡ the
   shard→node reduce tree, post_proc/package.scala).
 """
+import itertools
+
 import pytest
 
 from nsdb_spark.model import Bit
@@ -88,10 +90,15 @@ def test_broadcast_bucket_axis_is_one_split(sharded_engine):
     assert "splits=1)" in plan and "splits=" not in plan.replace("splits=1)", "")
 
 
-def _jobs_during(spark, fn) -> tuple[int, object]:
-    """(Spark jobs, result) of one call."""
+#: job group numbers: one group per measured call (an id() of the callable
+#: can repeat once the previous one is freed, merging two calls' jobs)
+_GROUPS = itertools.count()
+
+
+def _jobs_and_tasks(spark, fn) -> tuple[int, int, object]:
+    """(Spark jobs, tasks of their executed stages, result) of one call."""
     sc = spark.sparkContext
-    group = f"jobs-{id(fn)}"
+    group = f"jobs-{next(_GROUPS)}"
     sc.setJobGroup(group, group)
     try:
         out = fn()
@@ -99,7 +106,21 @@ def _jobs_during(spark, fn) -> tuple[int, object]:
         sc.setLocalProperty("spark.jobGroup.id", None)
     # job-start events reach the status store through the listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = 0
+    for j in jobs:
+        for sid in tracker.getJobInfo(j).stageIds:
+            stage = tracker.getStageInfo(sid)
+            if stage is not None and stage.numCompletedTasks > 0:
+                tasks += stage.numTasks
+    return len(jobs), tasks, out
+
+
+def _jobs_during(spark, fn) -> tuple[int, object]:
+    """(Spark jobs, result) of one call."""
+    jobs, _tasks, out = _jobs_and_tasks(spark, fn)
+    return jobs, out
 
 
 def _jobs_of(engine, sql: str) -> tuple[int, list]:
@@ -145,6 +166,73 @@ def test_shard_pruned_tag_group_by_runs_one_job(sharded_engine):
     jobs, rows = _jobs_of(sharded_engine, sql)
     assert jobs == 1
     assert [tuple(r) for r in rows] == [("x", 6)]
+
+
+@pytest.mark.parametrize("sql", [
+    "select count(*) from planm where timestamp >= 40000 and timestamp < 70000 group by g",
+    "select count(*) from planm where timestamp >= 40000 and timestamp < 70000",
+    "select sum(value) from planm where timestamp >= 40000 and timestamp < 70000 "
+    "group by interval 10s",
+])
+def test_shard_pruned_serving_aggregate_is_one_task(sharded_engine, sql):
+    """A shard-pruned tag group-by, global aggregate or temporal read on
+    the serving session reads its pruned shards as ONE partition, so its
+    aggregate and axis merge join need no Exchange: one job of one task,
+    with the shard pruning still in the scan."""
+    from nsdb_spark.sql.parser import parse
+
+    df = sharded_engine.execute(sql)
+    assert df.sparkSession is sharded_engine._serving_session()
+    plan = plan_of(df)
+    assert "Exchange" not in plan
+    i = plan.find("PartitionFilters")
+    assert i >= 0 and "shard_start" in plan[i : i + 120]
+    jobs, tasks, _ = _jobs_and_tasks(
+        sharded_engine.spark,
+        lambda: sharded_engine.collect_select(
+            parse(sql, db="default", namespace="default")
+        ),
+    )
+    assert (jobs, tasks) == (1, 1)
+
+
+def test_known_schema_entry_build_launches_no_job(spark):
+    """Building a registry entry over a testdata directory whose table
+    schema is already known runs no Spark job: the events schema is
+    inferred once (one job), and later reads pass it."""
+    from nsdb_spark.entry_queries import build_queries
+    from nsdb_spark.sources import parquet
+
+    build = build_queries()["nsdb_groupby_sum"]
+    parquet._SCHEMAS.clear()
+    cold, _ = _jobs_during(spark, lambda: build(spark, SF_DIR))
+    warm, df = _jobs_during(spark, lambda: build(spark, SF_DIR))
+    assert (cold, warm) == (1, 0)
+    assert df.collect()
+
+
+def test_rollup_read_of_unchanged_store_skips_schema_job(sharded_engine):
+    """A rollup-routed read of a store whose schema is known runs one job
+    fewer than a read that infers it (every read before stores reused
+    their schema): the inference job is gone, the rows are the same."""
+    from nsdb_spark.sources import parquet
+    from nsdb_spark.sql.parser import parse
+
+    sharded_engine.materialize_rollup("default", "default", "planm", 10000)
+    stmt = parse(
+        "select sum(value) from planm group by interval 20s",
+        db="default", namespace="default",
+    )
+
+    def read():
+        sharded_engine.invalidate_plan_caches()
+        return sharded_engine.collect_select(stmt)
+
+    parquet._SCHEMAS.clear()
+    cold, rows = _jobs_during(sharded_engine.spark, read)
+    warm, again = _jobs_during(sharded_engine.spark, read)
+    assert warm == cold - 1
+    assert again == rows and len(rows) == 5
 
 
 def test_insert_frame_is_one_spark_write(engine, spark, tmp_path):

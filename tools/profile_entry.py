@@ -6,8 +6,10 @@ measures on a warm session:
   exec_s    — action time (collect, matching bench methodology)
   noop_s    — noop-sink write time (guide §1.4; computation without
               result serialization to the driver)
-  jobs      — Spark jobs launched by the timed action
-  stages    — total stages across those jobs
+  build_jobs — Spark jobs launched while the DataFrame is built (a
+               parquet source read without a known schema infers it in one)
+  exec_jobs — Spark jobs launched by the timed action
+  stages    — total stages across the action's jobs
   tasks     — total tasks across those stages
 
 Usage: python tools/profile_entry.py [sf_dir] name [name ...]
@@ -73,14 +75,18 @@ def main() -> None:
             continue
         spark.catalog.clearCache()
 
-        # timed, with job accounting via a job group
-        sc.setJobGroup(f"prof_{name}", name)
+        # timed, with job accounting via one job group per phase
+        sc.setJobGroup(f"prof_build_{name}", name)
         t0 = time.time()
         df = fn(spark, sf_dir)
         t1 = time.time()
+        sc.setJobGroup(f"prof_{name}", name)
         df.collect()
         t2 = time.time()
+        # job-start events reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
         tracker = sc.statusTracker()
+        build_jobs = tracker.getJobIdsForGroup(f"prof_build_{name}")
         job_ids = tracker.getJobIdsForGroup(f"prof_{name}")
         stages = 0
         tasks = 0
@@ -107,7 +113,8 @@ def main() -> None:
                 "exec_s": round(t2 - t1, 3),
                 "total_s": round(t2 - t0, 3),
                 "noop_total_s": round(t4 - t3, 3),
-                "jobs": len(job_ids),
+                "build_jobs": len(build_jobs),
+                "exec_jobs": len(job_ids),
                 "stages": stages,
                 "tasks": tasks,
             }
@@ -119,7 +126,7 @@ def main() -> None:
         print(
             f"{r['total_s']:8.3f}s (build {r['build_s']:6.3f} exec "
             f"{r['exec_s']:6.3f} | noop {r['noop_total_s']:6.3f}) "
-            f"jobs={r['jobs']:3d} stages={r['stages']:3d} "
+            f"jobs={r['build_jobs']:2d}+{r['exec_jobs']:3d} stages={r['stages']:3d} "
             f"tasks={r['tasks']:4d}  {r['name']}"
         )
     spark.stop()
