@@ -14,9 +14,10 @@ Scale design — the corpus is touched ONCE:
 2. `bpe_train`: per merge step, count adjacent symbol pairs WEIGHTED by
    word frequency (one small aggregate), pick the most frequent pair on
    the driver (1-row collect, ties broken lexicographically for
-   determinism), rewrite the symbol arrays (one map), localCheckpoint to
-   keep plan depth flat — the k-means/pagerank iteration discipline:
-   bounded driver state (the merge list), data stays distributed.
+   determinism), rewrite the symbol arrays (one map), a lazy
+   localCheckpoint per round (`rounds.Rounds`) to keep plan depth flat —
+   the k-means/pagerank iteration discipline: bounded driver state (the
+   merge list), data stays distributed.
 3. `bpe_encode`: training already produced each distinct word's final
    segmentation, so encoding is a broadcast join of the corpus token
    stream against the word→tokens table — NO per-word merge loop at
@@ -35,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import explode_nonempty as _explode_nonempty
+from .rounds import Rounds
 
 #: end-of-word marker appended to each word before training (standard —
 #: lets the model distinguish word-final from word-internal pairs).
@@ -72,24 +74,20 @@ def bpe_train(
     deterministically (max count, then lexicographic); rewrite = one
     array fold per word. Stops early when no pair repeats.
     """
-    # lazy checkpoints throughout the loop: iteration i's pair-count
-    # collect is the ONE action that materializes vocab_{i-1}'s
-    # checkpoint — the rewrite and the next pair count run in the same
-    # job. Eager checkpoints cost a second full job per merge (measured
-    # 97 jobs for the 30-merge registry entry).
-    vocab = (
-        word_frequencies(docs, text_col)
-        .select("word", "freq", _initial_symbols().alias("syms"))
-        .localCheckpoint(eager=False)
-    )
     merges: list[tuple[str, str]] = []
-    for _ in range(num_merges):
+    best: list = []
+
+    def step(vocab: DataFrame) -> DataFrame:
         pairs = F.zip_with(
             F.slice(F.col("syms"), 1, F.greatest(F.size("syms") - 1, F.lit(0))),
             F.slice(F.col("syms"), 2, F.greatest(F.size("syms") - 1, F.lit(0))),
             lambda a, b: F.struct(a.alias("l"), b.alias("r")),
         )
-        best = (
+        # the round's ONE action: it materializes the previous round's
+        # lazy checkpoint, so the rewrite and the next pair count run in
+        # the same action (eager checkpoints cost a second full action
+        # per merge: measured 97 jobs for the 30-merge registry entry)
+        best[:] = (
             # ≥2-symbols filter + explode_nonempty: identical rows to the
             # inner explode (size-1 words have no pairs) without the
             # Generate pre-filter re-evaluating the zip_with per row
@@ -103,7 +101,7 @@ def bpe_train(
             .collect()
         )
         if not best:
-            break
+            return vocab
         l, r = best[0]["l"], best[0]["r"]
         merges.append((l, r))
         merged = F.lit(l + r)
@@ -119,9 +117,14 @@ def bpe_train(
                 F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(merged)),
             ).otherwise(F.concat(acc, F.array(s))),
         )
-        vocab = vocab.select(
-            "word", "freq", rewrite.alias("syms")
-        ).localCheckpoint(eager=False)
+        return vocab.select("word", "freq", rewrite.alias("syms"))
+
+    vocab = Rounds(docs.sparkSession).run(
+        word_frequencies(docs, text_col).select(
+            "word", "freq", _initial_symbols().alias("syms")
+        ),
+        step, num_merges, until=lambda _: not best,
+    )
     return merges, vocab.select("word", "freq", F.col("syms").alias("tokens"))
 
 

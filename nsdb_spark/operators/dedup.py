@@ -32,6 +32,8 @@ import operator
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .rounds import Rounds
+
 
 def _parallelize(df: DataFrame) -> DataFrame:
     """Spread a narrow input across the cluster's cores.
@@ -1425,14 +1427,7 @@ def connected_components_alternating(
     Fixpoint edges are (child, root) stars; labels read off them with one
     aggregate. Iteration count is the only driver-side state.
     """
-    e = (
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    prev_sig = None
-    for _ in range(max_iter):
+    def step(e: DataFrame) -> DataFrame:
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
         large = (
@@ -1445,30 +1440,35 @@ def connected_components_alternating(
         sym2 = large.union(large.select(F.col("v").alias("u"), F.col("u").alias("v")))
         smaller = sym2.filter(F.col("v") < F.col("u"))
         mins2 = smaller.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
+        return (
             smaller.join(mins2, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(mins2.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            # lazy: the signature aggregate below is the ONE action per
-            # round — it materializes this checkpoint as a side effect.
-            # An eager checkpoint here was a second full job per round.
-            .localCheckpoint(eager=False)
         )
-        e = small
+
+    sigs: list[tuple] = []
+
+    def fixpoint(e: DataFrame) -> bool:
         # bit_xor: order-independent and overflow-free (ANSI mode forbids
         # a plain sum of 64-bit hashes); edges are distinct so xor can't
-        # cancel duplicates
-        sig_row = e.agg(
+        # cancel duplicates. This aggregate is the round's ONE action: it
+        # materializes the round's lazy checkpoint.
+        sigs.append(tuple(e.agg(
             F.count(F.lit(1)).alias("c"),
             F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).first()
-        sig = (sig_row["c"], sig_row["h"])
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    else:
+        ).first()))
+        return len(sigs) > 1 and sigs[-1] == sigs[-2]
+
+    r = Rounds(pairs.sparkSession)
+    e = r.run(
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .distinct(),
+        step, max_iter, until=fixpoint,
+    )
+    if not r.settled:
         raise RuntimeError(
             f"star contraction did not reach a fixpoint in {max_iter} "
             "rounds — raise max_iter (expected O(log² n) rounds)"
@@ -1505,28 +1505,27 @@ def connected_components(
     label side by side, so the changed? flag is a column computed in the
     same pass — the checkpoint is lazy and the 1-row changed aggregate is
     the action that materializes it. The previous shape paid a second
-    job per round re-JOINING new labels to old (a full extra shuffle)
+    action per round re-JOINING new labels to old (a full extra shuffle)
     just to recover information the update had in hand.
 
     pairs: (doc_a, doc_b) [any extra columns ignored]
     nodes: (doc_id)
     """
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .persist()
-    )
-    labels = nodes.select("doc_id", F.col("doc_id").alias("cluster_id"))
-    labels = labels.localCheckpoint()
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.src == labels.doc_id)
-            .groupBy("dst")
-            .agg(F.min("cluster_id").alias("nmin"))
+    with Rounds(pairs.sparkSession) as r:
+        edges = r.pin(
+            pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+            .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
         )
-        new_labels = (
-            labels.join(neighbor_min, labels.doc_id == neighbor_min.dst, "left")
-            .select(
+
+        def step(labels: DataFrame) -> DataFrame:
+            neighbor_min = (
+                edges.join(labels, edges.src == labels.doc_id)
+                .groupBy("dst")
+                .agg(F.min("cluster_id").alias("nmin"))
+            )
+            return labels.join(
+                neighbor_min, labels.doc_id == neighbor_min.dst, "left"
+            ).select(
                 "doc_id",
                 F.least(
                     F.col("cluster_id"), F.coalesce(F.col("nmin"), F.col("cluster_id"))
@@ -1535,28 +1534,28 @@ def connected_components(
                 # ever decrease); NULL nmin (isolated node) → false
                 (F.col("nmin") < F.col("cluster_id")).alias("__chg"),
             )
-            .localCheckpoint(eager=False)
+
+        def unchanged(labels: DataFrame) -> bool:
+            return not labels.agg(
+                F.max(F.coalesce(F.col("__chg"), F.lit(False)))
+            ).first()[0]
+
+        labels = r.run(
+            nodes.select("doc_id", F.col("doc_id").alias("cluster_id")),
+            step, max_iter, until=unchanged,
         )
-        changed = new_labels.agg(
-            F.max(F.coalesce(F.col("__chg"), F.lit(False)))
-        ).first()[0]
-        labels = new_labels.drop("__chg")
-        if not changed:
-            break
-    else:
-        # loop exhausted WITHOUT converging: returning the partially
-        # propagated labels would silently split one true component into
-        # several cluster_ids (the dedup pipeline then keeps extra
-        # near-duplicates). Fail loudly; long-diameter graphs should use
-        # connected_components_alternating (O(log² n) rounds).
-        edges.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(graph diameter exceeds max_iter) — raise max_iter or use "
-            "connected_components_alternating"
-        )
-    edges.unpersist()
-    return labels
+        if not r.settled:
+            # loop exhausted WITHOUT converging: returning the partially
+            # propagated labels would silently split one true component
+            # into several cluster_ids (the dedup pipeline then keeps extra
+            # near-duplicates). Fail loudly; long-diameter graphs should
+            # use connected_components_alternating (O(log² n) rounds).
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds "
+                "(graph diameter exceeds max_iter) — raise max_iter or use "
+                "connected_components_alternating"
+            )
+        return labels.drop("__chg")
 
 
 def keep_best_per_cluster(

@@ -9,13 +9,17 @@ aggregate, rank state never touches the driver.
 
 Scale notes: ranks and out-degrees co-shuffle on the node key each round
 (Catalyst reuses the exchange), dangling-node mass is a 1-row aggregate
-broadcast into the update, and localCheckpoint caps the plan depth so
-round N doesn't re-execute rounds 1..N-1.
+broadcast into the update, and the round driver (`rounds.Rounds`)
+localCheckpoints each round so round N doesn't re-execute rounds
+1..N-1, and releases the frames an operator pinned.
 """
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from .rounds import Rounds
 
 
 def pagerank(
@@ -34,63 +38,55 @@ def pagerank(
     uniformly each round (standard stochastic-matrix fix), so total rank
     mass stays 1 and results match the textbook formulation.
     """
-    nodes = nodes.persist()
-    n = nodes.count()
-    if n == 0:
-        nodes.unpersist()
-        return nodes.select(F.col(node_col), F.lit(0.0).alias("rank"))
-    # Fold the static per-source 1/out_degree weight into the edge set ONCE
-    # (the reference-to-this was a per-round edges⋈out_deg join); persist so
-    # an expensive edge upstream (e.g. a near-dup pair join) runs one time.
-    out_deg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("__deg"))
-    weighted = (
-        edges.join(out_deg, src)
-        .select(
-            F.col(src).alias("__src"),
-            F.col(dst).alias("__dst"),
-            (F.lit(1.0) / F.col("__deg")).alias("__w"),
+    with Rounds(edges.sparkSession) as r:
+        nodes = r.pin(nodes)
+        n = nodes.count()
+        if n == 0:
+            return nodes.select(F.col(node_col), F.lit(0.0).alias("rank"))
+        # Fold the static per-source 1/out_degree weight into the edge set
+        # ONCE (the reference-to-this was a per-round edges⋈out_deg join),
+        # pinned so an expensive edge upstream (e.g. a near-dup pair join)
+        # runs one time, and pre-hashed on the join key so every round's
+        # join reuses its layout instead of re-exchanging the edge set.
+        out_deg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("__deg"))
+        weighted = r.pin(
+            edges.join(out_deg, src).select(
+                F.col(src).alias("__src"),
+                F.col(dst).alias("__dst"),
+                (F.lit(1.0) / F.col("__deg")).alias("__w"),
+            ),
+            "__src",
         )
-        # pre-hash on the join key with an explicit count: the per-round
-        # join reuses this layout instead of re-exchanging the (large)
-        # edge set every iteration; the explicit N is AQE-coalescing-
-        # exempt — a few-MB edge set otherwise collapses to a handful of
-        # partitions and every round's join runs on them (guide §2.5)
-        .repartition(edges.sparkSession.sparkContext.defaultParallelism, "__src")
-        .persist()
-    )
-    weighted.count()
-    ranks = nodes.select(node_col, F.lit(1.0 / n).alias("rank")).localCheckpoint()
-    for _ in range(iters):
-        contribs = (
-            weighted.join(ranks, F.col("__src") == F.col(node_col))
-            .groupBy(F.col("__dst"))
-            .agg(F.sum(F.col("rank") * F.col("__w")).alias("in_mass"))
-            .withColumnRenamed("__dst", node_col)
-        )
-        # dangling mass = 1 - mass that flowed along edges. `contribs`
-        # appears twice in the plan but shares one shuffle (ReuseExchange),
-        # so there's no driver action and no second aggregation pass.
-        dmass = contribs.agg(
-            (F.lit(1.0) - F.coalesce(F.sum("in_mass"), F.lit(0.0))).alias("__dm")
-        )
-        ranks = (
-            nodes.join(contribs, node_col, "left")
-            .crossJoin(F.broadcast(dmass))
-            .select(
-                node_col,
-                (
-                    F.lit((1.0 - damping) / n)
-                    + damping
-                    * (F.coalesce(F.col("in_mass"), F.lit(0.0)) + F.col("__dm") / n)
-                ).alias("rank"),
+
+        def step(ranks: DataFrame) -> DataFrame:
+            contribs = (
+                weighted.join(ranks, F.col("__src") == F.col(node_col))
+                .groupBy(F.col("__dst"))
+                .agg(F.sum(F.col("rank") * F.col("__w")).alias("in_mass"))
+                .withColumnRenamed("__dst", node_col)
             )
-            # eager: one job per round, plan depth capped at 1 round
-            .localCheckpoint(eager=True)
-        )
-    out = ranks.select(node_col, F.round("rank", 6).alias("rank"))
-    weighted.unpersist()
-    nodes.unpersist()
-    return out
+            # dangling mass = 1 - mass that flowed along edges. `contribs`
+            # appears twice in the plan but shares one shuffle
+            # (ReuseExchange), so there's no driver action and no second
+            # aggregation pass.
+            dmass = contribs.agg(
+                (F.lit(1.0) - F.coalesce(F.sum("in_mass"), F.lit(0.0))).alias("__dm")
+            )
+            return (
+                nodes.join(contribs, node_col, "left")
+                .crossJoin(F.broadcast(dmass))
+                .select(
+                    node_col,
+                    (
+                        F.lit((1.0 - damping) / n)
+                        + damping
+                        * (F.coalesce(F.col("in_mass"), F.lit(0.0)) + F.col("__dm") / n)
+                    ).alias("rank"),
+                )
+            )
+
+        ranks = r.run(nodes.select(node_col, F.lit(1.0 / n).alias("rank")), step, iters)
+        return ranks.select(node_col, F.round("rank", 6).alias("rank"))
 
 
 def label_propagation(
@@ -122,51 +118,45 @@ def label_propagation(
     depth at one round. Same round structure as
     dedup.connected_components' min-label passes.
     """
-    und = (
-        edges.select(F.col(src).alias("__u"), F.col(dst).alias("__v"))
-        .filter(F.col("__u") != F.col("__v"))
-        .distinct()
-        # explicit N: AQE-exempt (see pagerank's edge layout note)
-        .repartition(edges.sparkSession.sparkContext.defaultParallelism, "__v")
-        .persist()
-    )
-    und.count()
-    labels = nodes.select(
-        node_col, F.col(node_col).alias("label")
-    ).localCheckpoint(eager=True)
-    for _ in range(iters):
-        neigh = und.join(
-            labels, und["__v"] == labels[node_col]
-        ).select("__u", "label")
-        counts = neigh.groupBy("__u", "label").agg(
-            F.count(F.lit(1)).alias("cnt")
+    with Rounds(edges.sparkSession) as r:
+        und = r.pin(
+            edges.select(F.col(src).alias("__u"), F.col(dst).alias("__v"))
+            .filter(F.col("__u") != F.col("__v"))
+            .distinct(),
+            "__v",
         )
-        # most frequent label, smallest label on ties: max of
-        # (cnt, -label) — labels are ids, negation stays in bigint
-        best = (
-            counts.groupBy("__u")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("cnt"), (-F.col("label")).alias("nl")
-                    )
-                ).alias("b")
+
+        def step(labels: DataFrame) -> DataFrame:
+            neigh = und.join(
+                labels, und["__v"] == labels[node_col]
+            ).select("__u", "label")
+            counts = neigh.groupBy("__u", "label").agg(
+                F.count(F.lit(1)).alias("cnt")
             )
-            .select(
-                F.col("__u").alias(node_col),
-                (-F.col("b.nl")).alias("new_label"),
+            # most frequent label, smallest label on ties: max of
+            # (cnt, -label) — labels are ids, negation stays in bigint
+            best = (
+                counts.groupBy("__u")
+                .agg(
+                    F.max(
+                        F.struct(
+                            F.col("cnt"), (-F.col("label")).alias("nl")
+                        )
+                    ).alias("b")
+                )
+                .select(
+                    F.col("__u").alias(node_col),
+                    (-F.col("b.nl")).alias("new_label"),
+                )
             )
-        )
-        labels = (
-            labels.join(best, node_col, "left")
-            .select(
+            return labels.join(best, node_col, "left").select(
                 node_col,
                 F.coalesce("new_label", "label").alias("label"),
             )
-            .localCheckpoint(eager=True)
+
+        return r.run(
+            nodes.select(node_col, F.col(node_col).alias("label")), step, iters
         )
-    und.unpersist()
-    return labels
 
 
 def triangle_counts(pairs, nodes):
@@ -403,69 +393,58 @@ def hits_scores(
     """
     if iters < 1:
         raise ValueError("hits_scores: iters must be >= 1")
-    F_ = F
-    e = edges.select(
-        F_.col(src).alias("s"), F_.col(dst).alias("d")
-    ).distinct().localCheckpoint(eager=True)
-    # The two half-step joins key on DIFFERENT endpoints (s then d), so
-    # the checkpointed edge set (partitioned by the distinct's (s, d)
-    # hash) was re-exchanged on every half-step — 2·iters full edge
-    # shuffles. Keep one copy pre-hashed per key (the pagerank
-    # `weighted.repartition("__src")` discipline, guide §2.4): each
-    # round's join then reuses the layout and only the small score frame
-    # moves. The score frames come out of groupBy(s)/groupBy(d) with the
-    # matching partitioning, so the joins are exchange-free on BOTH
-    # sides.
-    P = edges.sparkSession.sparkContext.defaultParallelism
-    e_s = e.repartition(P, "s").persist()
-    e_d = e.repartition(P, "d").persist()
-    n_s = e_s.select("s").distinct().count()
-    if n_s == 0:
-        e_s.unpersist()
-        e_d.unpersist()
-        raise ValueError("hits_scores: empty edge set")
-    h = e_s.select("s").distinct().withColumn(
-        "h", F_.round(F_.lit(1.0 / (n_s ** 0.5)), round_to)
-    )
-
-    def _norm(df: DataFrame, col: str, eager: bool) -> DataFrame:
-        nrm = df.agg(
-            F_.sqrt(F_.sum(F_.col(col) * F_.col(col))).alias("__n")
+    with Rounds(edges.sparkSession) as r:
+        # The two half-step joins key on DIFFERENT endpoints (s then d):
+        # keep one copy of the distinct edge set pre-hashed per key, so
+        # each join reuses the layout and only the small score frame
+        # moves instead of 2·iters full edge shuffles.
+        e_s = r.pin(
+            edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).distinct(),
+            "s",
         )
-        return (
-            df.crossJoin(F_.broadcast(nrm))
-            .select(
-                *[c for c in df.columns if c != col],
-                F_.round(F_.col(col) / F_.col("__n"), round_to).alias(col),
+        e_d = r.pin(e_s, "d")
+        hubs = e_s.select("s").distinct()
+        n_s = hubs.count()
+        if n_s == 0:
+            raise ValueError("hits_scores: empty edge set")
+
+        h = hubs.withColumn("h", F.round(F.lit(1.0 / (n_s ** 0.5)), round_to))
+
+        def _norm(df: DataFrame, col: str, eager: bool) -> DataFrame:
+            nrm = df.agg(F.sqrt(F.sum(F.col(col) * F.col(col))).alias("__n"))
+            return (
+                df.crossJoin(F.broadcast(nrm))
+                .select(
+                    *[c for c in df.columns if c != col],
+                    F.round(F.col(col) / F.col("__n"), round_to).alias(col),
+                )
+                .localCheckpoint(eager=eager)
             )
-            .localCheckpoint(eager=eager)
-        )
 
-    for _ in range(iters):
-        # one ACTION per round (the katz/bpe lazy-checkpoint discipline,
-        # guide §1.2(1)): the authority half-step checkpoints lazily and
-        # materializes inside the hub half-step's eager checkpoint —
-        # plan depth still capped at one half-step, half the driver
-        # round-trips (measured 70 jobs for 4 iterations before)
-        a = _norm(
-            e_s.join(h, "s").groupBy("d").agg(F_.sum("h").alias("a")),
-            "a", eager=False,
+        # Not on Rounds.run: a round is two half-steps and the output
+        # needs both. One ACTION per round (the katz/bpe lazy-checkpoint
+        # discipline, guide §1.2(1)): the authority half-step checkpoints
+        # lazily and materializes inside the hub half-step's eager
+        # checkpoint — plan depth still capped at one half-step, half the
+        # driver round-trips (measured 70 jobs for 4 iterations before).
+        for _ in range(iters):
+            a = _norm(
+                e_s.join(h, "s").groupBy("d").agg(F.sum("h").alias("a")),
+                "a", eager=False,
+            )
+            h = _norm(
+                e_d.join(a, "d").groupBy("s").agg(F.sum("a").alias("h")),
+                "h", eager=True,
+            )
+        return h.select(
+            F.col("s").alias("node"), F.lit("hub").alias("role"),
+            F.col("h").alias("score"),
+        ).unionByName(
+            a.select(
+                F.col("d").alias("node"), F.lit("authority").alias("role"),
+                F.col("a").alias("score"),
+            )
         )
-        h = _norm(
-            e_d.join(a, "d").groupBy("s").agg(F_.sum("a").alias("h")),
-            "h", eager=True,
-        )
-    e_s.unpersist()
-    e_d.unpersist()
-    return h.select(
-        F_.col("s").alias("node"), F_.lit("hub").alias("role"),
-        F_.col("h").alias("score"),
-    ).unionByName(
-        a.select(
-            F_.col("d").alias("node"), F_.lit("authority").alias("role"),
-            F_.col("a").alias("score"),
-        )
-    )
 
 
 def kcore_peel(
@@ -503,35 +482,32 @@ def kcore_peel(
         F.col("a") != F.col("b")
     )
     # Keep the survivor edge set hash-partitioned on `a` ACROSS rounds
-    # with an explicit partition count: the old checkpoint froze the
-    # distinct's AQE-coalesced layout (measured 10-12 partitions for a
+    # with the loop's explicit partition count: the old checkpoint froze
+    # the distinct's AQE-coalesced layout (measured 10-12 partitions for a
     # 137 MB string-keyed cache scanned twice per round — 2/3 of the
     # cores idle), and both the degree aggregate and the a-side semi
     # join re-exchanged it every round. Partitioned by `a`, the degree
     # groupBy and the first semi join are exchange-free; only the b-side
     # semi join and the layout restore move the (shrinking) survivor
-    # set. repartition with an explicit N is exempt from AQE coalescing
-    # (guide §2.4/§2.5).
-    P = edges.sparkSession.sparkContext.defaultParallelism
-    e = (
-        d.union(d.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .repartition(P, "a")
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(rounds):
+    # set.
+    r = Rounds(edges.sparkSession)
+
+    def step(e: DataFrame) -> DataFrame:
         alive = (
             e.groupBy("a")
             .agg(F.count(F.lit(1)).alias("deg"))
             .filter(F.col("deg") >= k)
             .select("a")
         )
-        e = (
-            e.join(alive, "a", "semi")
-            .join(alive.select(F.col("a").alias("b")), "b", "semi")
-            .repartition(P, "a")
-            .localCheckpoint(eager=True)
+        return r.layout(
+            e.join(alive, "a", "semi").join(
+                alive.select(F.col("a").alias("b")), "b", "semi"
+            ),
+            "a",
         )
+
+    sym = d.union(d.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    e = r.run(r.layout(sym.distinct(), "a"), step, rounds)
     return e.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("degree")
     )
@@ -762,40 +738,35 @@ def bfs_hops(
     # pre-hash on the frontier join key: the distinct leaves the edge
     # set partitioned by (a, b), so every round's frontier⋈edges join
     # re-exchanged the FULL edge set — rounds× the only data-sized
-    # shuffle in the operator. localCheckpoint preserves the repartition
-    # layout, so the per-round join moves only the small distance frame
-    # (the pagerank/hits discipline, guide §2.4).
-    e = (
-        d.union(d.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .repartition(edges.sparkSession.sparkContext.defaultParallelism, "a")
-        .localCheckpoint(eager=True)
-    )
-    spark = edges.sparkSession
-    node_type = e.schema["a"].dataType
-    from pyspark.sql import types as T
+    # shuffle in the operator. With the layout pinned, the per-round join
+    # moves only the small distance frame (the pagerank/hits discipline,
+    # guide §2.4).
+    with Rounds(edges.sparkSession) as r:
+        e = r.pin(
+            d.union(d.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct(),
+            "a",
+        )
+        dist = edges.sparkSession.createDataFrame(
+            [(source, 0)],
+            T.StructType(
+                [
+                    T.StructField("node", e.schema["a"].dataType),
+                    T.StructField("hops", T.IntegerType()),
+                ]
+            ),
+        )
 
-    dist = spark.createDataFrame(
-        [(source, 0)],
-        T.StructType(
-            [
-                T.StructField("node", node_type),
-                T.StructField("hops", T.IntegerType()),
-            ]
-        ),
-    ).localCheckpoint(eager=True)
-    for _ in range(rounds):
-        nxt = (
-            e.join(dist, e["a"] == dist["node"])
-            .select(F.col("b").alias("node"), (F.col("hops") + 1).alias("hops"))
-        )
-        dist = (
-            dist.union(nxt)
-            .groupBy("node")
-            .agg(F.min("hops").cast("int").alias("hops"))
-            .localCheckpoint(eager=True)
-        )
-    return dist
+        def step(dist: DataFrame) -> DataFrame:
+            nxt = e.join(dist, e["a"] == dist["node"]).select(
+                F.col("b").alias("node"), (F.col("hops") + 1).alias("hops")
+            )
+            return (
+                dist.union(nxt)
+                .groupBy("node")
+                .agg(F.min("hops").cast("int").alias("hops"))
+            )
+
+        return r.run(dist, step, rounds)
 
 
 def rich_club(
@@ -1003,44 +974,36 @@ def katz_centrality(
     explicitly (the registry pins iters so the oracle can unroll).
 
     pagerank's plan discipline: the edge set pre-hashes on src once
-    and persists; each round is ONE join + aggregate with an eager
-    localCheckpoint capping plan depth. Isolated nodes keep the β = 1
+    and is pinned; each round is one join + aggregate ending in one
+    action, an eager localCheckpoint capping plan depth. Isolated nodes keep the β = 1
     base score via the left join.
 
     Output: (node, katz rounded 6).
     """
-    e = (
-        edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst"))
-        # explicit N: AQE-exempt (see pagerank's edge layout note)
-        .repartition(edges.sparkSession.sparkContext.defaultParallelism, "__src")
-        .persist()
-    )
-    e.count()
-    # persist nodes like pagerank does: the per-round left join re-reads
-    # the vertex set, and an unpersisted `nodes` re-executed its FULL
-    # upstream lineage every round (the registry entry derives it from
-    # the edge join + two distincts — measured ~1 s per round at sf0.1)
-    nodes = nodes.persist()
-    x = nodes.select(node_col, F.lit(1.0).alias("katz")).localCheckpoint()
-    for _ in range(iters):
-        inw = (
-            e.join(x, F.col("__src") == F.col(node_col))
-            .groupBy("__dst")
-            .agg(F.sum("katz").alias("in_sum"))
-            .withColumnRenamed("__dst", node_col)
+    with Rounds(edges.sparkSession) as r:
+        e = r.pin(
+            edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst")),
+            "__src",
         )
-        x = (
-            nodes.join(inw, node_col, "left")
-            .select(
+        # pinned like pagerank's: the per-round left join re-reads the
+        # vertex set, and an unpinned `nodes` re-executed its FULL
+        # upstream lineage every round (the registry entry derives it from
+        # the edge join + two distincts — measured ~1 s per round at sf0.1)
+        nodes = r.pin(nodes)
+
+        def step(x: DataFrame) -> DataFrame:
+            inw = (
+                e.join(x, F.col("__src") == F.col(node_col))
+                .groupBy("__dst")
+                .agg(F.sum("katz").alias("in_sum"))
+                .withColumnRenamed("__dst", node_col)
+            )
+            return nodes.join(inw, node_col, "left").select(
                 node_col,
                 (
-                    F.lit(1.0)
-                    + alpha * F.coalesce(F.col("in_sum"), F.lit(0.0))
+                    F.lit(1.0) + alpha * F.coalesce(F.col("in_sum"), F.lit(0.0))
                 ).alias("katz"),
             )
-            .localCheckpoint(eager=True)
-        )
-    out = x.select(node_col, F.round("katz", 6).alias("katz"))
-    e.unpersist()
-    nodes.unpersist()
-    return out
+
+        x = r.run(nodes.select(node_col, F.lit(1.0).alias("katz")), step, iters)
+        return x.select(node_col, F.round("katz", 6).alias("katz"))

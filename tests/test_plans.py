@@ -9,6 +9,7 @@ on (SURVEY.md §4) must be visible in the executed plan, not assumed.
   shard→node reduce tree, post_proc/package.scala).
 """
 import itertools
+import random
 
 import pytest
 
@@ -1150,3 +1151,71 @@ def test_wedge_expansion_repartition_survives_aqe(spark):
     assert "REPARTITION_BY_NUM" in plan_of(
         graph.common_neighbor_similarity(edges)
     )
+
+
+def _round_graph(spark):
+    """55 nodes and 100 distinct directed edges, seeded."""
+    rng = random.Random(7)
+    pairs = set()
+    while len(pairs) < 100:
+        a, b = rng.randrange(55), rng.randrange(55)
+        if a != b:
+            pairs.add((a, b))
+    return (
+        spark.createDataFrame(sorted(pairs), "src long, dst long"),
+        spark.createDataFrame([(i,) for i in range(55)], "node long"),
+    )
+
+
+#: Spark jobs per round, (jobs at 4 rounds - jobs at 2 rounds) / 2, on
+#: `_round_graph` before the operators moved onto the round driver
+#: (local[4], 8 shuffle partitions, AQE on; each AQE shuffle stage is a
+#: job). The driver may not add work to a round.
+_JOBS_PER_ROUND = {
+    "pagerank": 9, "label_propagation": 6, "hits_scores": 13,
+    "kcore_peel": 6, "bfs_hops": 5, "katz_centrality": 5, "bpe_train": 2,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_JOBS_PER_ROUND))
+def test_iterative_operator_jobs_per_round(spark, name):
+    from nsdb_spark.operators import bpe, graph
+
+    edges, nodes = _round_graph(spark)
+    words = spark.createDataFrame(
+        [("low lower lowest newer newest wider",), ("new newer low widest wide",)] * 3,
+        "text string",
+    )
+    run = {
+        "pagerank": lambda k: graph.pagerank(edges, nodes, iters=k),
+        "label_propagation": lambda k: graph.label_propagation(edges, nodes, iters=k),
+        "hits_scores": lambda k: graph.hits_scores(edges, iters=k),
+        "kcore_peel": lambda k: graph.kcore_peel(edges, k=3, rounds=k),
+        "bfs_hops": lambda k: graph.bfs_hops(edges, 0, rounds=k),
+        "katz_centrality": lambda k: graph.katz_centrality(edges, nodes, iters=k),
+        "bpe_train": lambda k: bpe.bpe_train(words, num_merges=k)[1],
+    }[name]
+    two, _ = _jobs_during(spark, lambda: run(2).collect())
+    four, _ = _jobs_during(spark, lambda: run(4).collect())
+    assert (four - two) / 2 <= _JOBS_PER_ROUND[name]
+
+
+#: total Spark jobs of one call on a 20-pair graph of ten 3-node chains
+#: before the round driver (same session settings as above)
+_CC_JOBS = {"connected_components": 22, "connected_components_alternating": 26}
+
+
+@pytest.mark.parametrize("name", sorted(_CC_JOBS))
+def test_connected_components_jobs(spark, name):
+    from nsdb_spark.operators import dedup
+
+    pairs = spark.createDataFrame(
+        [(4 * c + i, 4 * c + i + 1) for c in range(10) for i in range(2)],
+        "doc_a long, doc_b long",
+    )
+    nodes = spark.createDataFrame([(i,) for i in range(40)], "doc_id long")
+    jobs, rows = _jobs_during(
+        spark, lambda: getattr(dedup, name)(pairs, nodes).collect()
+    )
+    assert {r["cluster_id"] for r in rows if r["doc_id"] % 4 != 3} == set(range(0, 40, 4))
+    assert jobs <= _CC_JOBS[name]
