@@ -14,6 +14,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .rounds import Rounds
+
 
 def topk_per_group(
     df: DataFrame,
@@ -403,44 +405,39 @@ def active_users(
     dau, wau) for buckets the data actually touches.
     """
     b = F.floor(F.col(ts) / F.lit(bucket_ms)).cast("long")
-    present = events.select(F.col(user), b.alias("b")).distinct().persist()
-    dau = present.groupBy("b").agg(F.count(F.lit(1)).alias("dau"))
-    bounds = present.agg(F.min("b"), F.max("b")).first()
-    lo, hi = bounds[0], bounds[1]
-    if lo is None:
-        present.unpersist()  # release the pin on the empty-input path too
-        return events.sparkSession.createDataFrame(
-            [], "bucket_start long, dau long, wau long"
+    with Rounds(events.sparkSession) as r:
+        present = r.pin(events.select(F.col(user), b.alias("b")).distinct())
+        dau = present.groupBy("b").agg(F.count(F.lit(1)).alias("dau"))
+        bounds = present.agg(F.min("b"), F.max("b")).first()
+        lo, hi = bounds[0], bounds[1]
+        if lo is None:
+            return events.sparkSession.createDataFrame(
+                [], "bucket_start long, dau long, wau long"
+            )
+        contrib = (
+            present.select(
+                F.col(user),
+                F.explode(
+                    F.sequence(F.col("b"), F.least(F.col("b") + (window_buckets - 1), F.lit(hi)))
+                ).alias("b"),
+            )
+            .distinct()
+            .groupBy("b")
+            .agg(F.count(F.lit(1)).alias("wau"))
         )
-    contrib = (
-        present.select(
-            F.col(user),
-            F.explode(
-                F.sequence(F.col("b"), F.least(F.col("b") + (window_buckets - 1), F.lit(hi)))
-            ).alias("b"),
+        out = (
+            # drive from contrib: a gap bucket (nobody active THAT day but
+            # users active within the trailing window) must surface as
+            # (dau=0, wau>0) — an inner join would silently drop it and a
+            # WAU dashboard would show a hole where the window is unchanged
+            contrib.join(dau, "b", "left")
+            .select(
+                (F.col("b") * bucket_ms).alias("bucket_start"),
+                F.coalesce("dau", F.lit(0)).alias("dau"),
+                "wau",
+            )
         )
-        .distinct()
-        .groupBy("b")
-        .agg(F.count(F.lit(1)).alias("wau"))
-    )
-    out = (
-        # drive from contrib: a gap bucket (nobody active THAT day but
-        # users active within the trailing window) must surface as
-        # (dau=0, wau>0) — an inner join would silently drop it and a
-        # WAU dashboard would show a hole where the window is unchanged
-        contrib.join(dau, "b", "left")
-        .select(
-            (F.col("b") * bucket_ms).alias("bucket_start"),
-            F.coalesce("dau", F.lit(0)).alias("dau"),
-            "wau",
-        )
-    )
-    # the result is buckets-count rows; materialize it and release the
-    # (users x buckets) presence pin instead of leaving it cached for the
-    # session (ivfpq_search's persist/unpersist discipline)
-    out = out.localCheckpoint(eager=True)
-    present.unpersist()
-    return out
+        return r.finish(out)  # buckets-count rows
 
 
 def psi_by_group(
@@ -864,76 +861,71 @@ def chi2_independence(
     across n). V derives from the ROUNDED chi2 so the value is
     bit-reproducible across engines.
     """
-    grid = (
-        df.filter(F.col(x).isNotNull() & F.col(y).isNotNull())
-        .groupBy(x, y)
-        .agg(F.count(F.lit(1)).alias("obs"))
-        .persist()
-    )
-    rm = grid.groupBy(x).agg(F.sum("obs").alias("rtot"))
-    cm = grid.groupBy(y).agg(F.sum("obs").alias("ctot"))
-    tot = grid.agg(
-        F.sum("obs").alias("n"),
-        F.count_distinct(x).alias("nr"),
-        F.count_distinct(y).alias("nc"),
-        F.least(F.count_distinct(x), F.count_distinct(y)).alias("minrc"),
-    )
-    # rtot/ctot are longs; their raw product overflows int64 once both
-    # margins pass ~3e9 (trivially reached at 100 TB) — route through
-    # double (the oracle's hugeint intermediate is exact, but chi2 rounds
-    # at 6 so the ~1e-16 relative double error is far below the output
-    # grain; both engines agree wherever bigint didn't overflow)
-    exp = F.col("rtot").cast("double") * F.col("ctot") / F.col("n")
-    out = (
-        grid.join(F.broadcast(rm), x)
-        .join(F.broadcast(cm), y)
-        .crossJoin(F.broadcast(tot))
-        .groupBy()
-        .agg(
-            F.greatest(
-                F.round(
-                    F.sum(F.col("obs").cast("double") * F.col("obs") / exp)
-                    - F.max("n"),
-                    6,
-                ),
-                F.lit(0.0),
-            ).alias("chi2"),
-            F.max((F.col("nr") - 1) * (F.col("nc") - 1))
-            .cast("long")
-            .alias("dof"),
-            F.max("n").cast("long").alias("n"),
-            F.max("minrc").cast("long").alias("__minrc"),
+    with Rounds(df.sparkSession) as r:
+        grid = r.pin(
+            df.filter(F.col(x).isNotNull() & F.col(y).isNotNull())
+            .groupBy(x, y)
+            .agg(F.count(F.lit(1)).alias("obs"))
         )
-    )
-    if effect_size:
-        out = out.select(
-            "chi2",
-            "dof",
-            # a 1-category column gives dof 0; V is undefined -> 0.0,
-            # never a division error
-            F.when(
-                F.col("__minrc") > 1,
-                F.round(
-                    F.sqrt(
-                        F.col("chi2")
-                        / F.col("n")
-                        / (F.col("__minrc") - F.lit(1))
+        rm = grid.groupBy(x).agg(F.sum("obs").alias("rtot"))
+        cm = grid.groupBy(y).agg(F.sum("obs").alias("ctot"))
+        tot = grid.agg(
+            F.sum("obs").alias("n"),
+            F.count_distinct(x).alias("nr"),
+            F.count_distinct(y).alias("nc"),
+            F.least(F.count_distinct(x), F.count_distinct(y)).alias("minrc"),
+        )
+        # rtot/ctot are longs; their raw product overflows int64 once both
+        # margins pass ~3e9 (trivially reached at 100 TB) — route through
+        # double (the oracle's hugeint intermediate is exact, but chi2 rounds
+        # at 6 so the ~1e-16 relative double error is far below the output
+        # grain; both engines agree wherever bigint didn't overflow)
+        exp = F.col("rtot").cast("double") * F.col("ctot") / F.col("n")
+        out = (
+            grid.join(F.broadcast(rm), x)
+            .join(F.broadcast(cm), y)
+            .crossJoin(F.broadcast(tot))
+            .groupBy()
+            .agg(
+                F.greatest(
+                    F.round(
+                        F.sum(F.col("obs").cast("double") * F.col("obs") / exp)
+                        - F.max("n"),
+                        6,
                     ),
-                    6,
-                ),
+                    F.lit(0.0),
+                ).alias("chi2"),
+                F.max((F.col("nr") - 1) * (F.col("nc") - 1))
+                .cast("long")
+                .alias("dof"),
+                F.max("n").cast("long").alias("n"),
+                F.max("minrc").cast("long").alias("__minrc"),
             )
-            .otherwise(F.lit(0.0))
-            .alias("cramers_v"),
-            "n",
         )
-    else:
-        out = out.drop("__minrc")
-    # the grid feeds margins + the final sum; materialize the 1-row
-    # result and release the pin (dedup._finish discipline, local copy
-    # to avoid a cross-module import for two lines)
-    out = out.localCheckpoint(eager=True)
-    grid.unpersist()
-    return out
+        if effect_size:
+            out = out.select(
+                "chi2",
+                "dof",
+                # a 1-category column gives dof 0; V is undefined -> 0.0,
+                # never a division error
+                F.when(
+                    F.col("__minrc") > 1,
+                    F.round(
+                        F.sqrt(
+                            F.col("chi2")
+                            / F.col("n")
+                            / (F.col("__minrc") - F.lit(1))
+                        ),
+                        6,
+                    ),
+                )
+                .otherwise(F.lit(0.0))
+                .alias("cramers_v"),
+                "n",
+            )
+        else:
+            out = out.drop("__minrc")
+        return r.finish(out)
 
 
 def welch_ttest(
@@ -1457,57 +1449,54 @@ def basket_pair_lift(
     """
     # the presence frame feeds FOUR consumers (basket count, item counts,
     # both sides of the pair join) — persist it or the distinct scan runs
-    # four times (measured 16 s → 7 s at sf0.1); released via the
-    # localCheckpoint+unpersist finish below
-    present = (
-        df.select(F.col(basket).alias("__b"), F.col(item).alias("__i"))
-        .distinct()
-        .persist()
-    )
-    n_baskets = present.agg(
-        F.count_distinct("__b").cast("double").alias("__n")
-    )
-    item_n = present.groupBy(F.col("__i")).agg(F.count(F.lit(1)).alias("__ni"))
-    pairs = (
-        present.alias("a")
-        .join(
-            present.alias("b"),
-            (F.col("a.__b") == F.col("b.__b")) & (F.col("a.__i") < F.col("b.__i")),
+    # four times (measured 16 s → 7 s at sf0.1)
+    with Rounds(df.sparkSession) as r:
+        present = r.pin(
+            df.select(F.col(basket).alias("__b"), F.col(item).alias("__i"))
+            .distinct()
         )
-        .groupBy(
-            F.col("a.__i").alias("item_a"), F.col("b.__i").alias("item_b")
+        n_baskets = present.agg(
+            F.count_distinct("__b").cast("double").alias("__n")
         )
-        .agg(F.count(F.lit(1)).alias("n_pairs"))
-        .filter(F.col("n_pairs") >= min_pairs)
-    )
-    out = (
-        pairs.join(
-            F.broadcast(item_n.select(F.col("__i").alias("item_a"), F.col("__ni").alias("__na"))),
-            "item_a",
+        item_n = present.groupBy(F.col("__i")).agg(F.count(F.lit(1)).alias("__ni"))
+        pairs = (
+            present.alias("a")
+            .join(
+                present.alias("b"),
+                (F.col("a.__b") == F.col("b.__b")) & (F.col("a.__i") < F.col("b.__i")),
+            )
+            .groupBy(
+                F.col("a.__i").alias("item_a"), F.col("b.__i").alias("item_b")
+            )
+            .agg(F.count(F.lit(1)).alias("n_pairs"))
+            .filter(F.col("n_pairs") >= min_pairs)
         )
-        .join(
-            F.broadcast(item_n.select(F.col("__i").alias("item_b"), F.col("__ni").alias("__nb"))),
-            "item_b",
+        out = (
+            pairs.join(
+                F.broadcast(item_n.select(F.col("__i").alias("item_a"), F.col("__ni").alias("__na"))),
+                "item_a",
+            )
+            .join(
+                F.broadcast(item_n.select(F.col("__i").alias("item_b"), F.col("__ni").alias("__nb"))),
+                "item_b",
+            )
+            .crossJoin(F.broadcast(n_baskets))
+            .select(
+                "item_a",
+                "item_b",
+                "n_pairs",
+                F.round(F.col("n_pairs") / F.col("__n"), 6).alias("support"),
+                F.round(F.col("n_pairs") / F.col("__na"), 6).alias("confidence"),
+                F.round(
+                    F.col("n_pairs") * F.col("__n")
+                    / (F.col("__na").cast("double") * F.col("__nb")),
+                    6,
+                ).alias("lift"),
+            )
         )
-        .crossJoin(F.broadcast(n_baskets))
-        .select(
-            "item_a",
-            "item_b",
-            "n_pairs",
-            F.round(F.col("n_pairs") / F.col("__n"), 6).alias("support"),
-            F.round(F.col("n_pairs") / F.col("__na"), 6).alias("confidence"),
-            F.round(
-                F.col("n_pairs") * F.col("__n")
-                / (F.col("__na").cast("double") * F.col("__nb")),
-                6,
-            ).alias("lift"),
-        )
-    )
-    # frequent pairs only survive the min-support cut: the materialized
-    # result is far smaller than the pinned presence frame it releases
-    out = out.localCheckpoint(eager=True)
-    present.unpersist()
-    return out
+        # frequent pairs only survive the min-support cut: the materialized
+        # result is far smaller than the pinned presence frame it releases
+        return r.finish(out)
 
 
 def linreg_by_group(

@@ -30,6 +30,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .rounds import Rounds
 from .similarity import _as_double, _lit_vec
 
 
@@ -102,13 +103,11 @@ def kmeans_fit(
     # snapping absorbs by design.
     from .dedup import _parallelize
 
-    vecs = _parallelize(
-        emb.select(id_col, _as_double(vec_col).alias("__v"))
-    ).persist()
-    try:
+    with Rounds(emb.sparkSession) as r:
+        vecs = r.pin(_parallelize(emb.select(id_col, _as_double(vec_col).alias("__v"))))
         snap = (lambda x: round(x, round_to)) if round_to is not None else float
         first = vecs.orderBy(id_col).limit(k).select("__v").collect()
-        centroids = [[snap(float(x)) for x in r["__v"]] for r in first]
+        centroids = [[snap(float(x)) for x in row["__v"]] for row in first]
         if len(centroids) < k:
             raise ValueError(
                 f"kmeans_fit: k={k} centroids need at least k vectors, "
@@ -125,16 +124,14 @@ def kmeans_fit(
             )
             nxt = [list(c) for c in centroids]
             touched = set()
-            for r in means:
-                nxt[r["cell"]][r["pos"]] = snap(float(r["m"]))
-                touched.add(r["cell"])
+            for row in means:
+                nxt[row["cell"]][row["pos"]] = snap(float(row["m"]))
+                touched.add(row["cell"])
             if not touched:
                 break
             centroids = nxt
             assert all(len(c) == dim for c in centroids)
         return centroids
-    finally:
-        vecs.unpersist()
 
 
 def kmeans_summary(

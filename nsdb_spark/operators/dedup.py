@@ -59,23 +59,6 @@ def _parallelize(df: DataFrame) -> DataFrame:
     return df
 
 
-def _finish(out: DataFrame, *pins: DataFrame) -> DataFrame:
-    """Materialize `out` and release the cache pins backing it.
-
-    The pair operators persist a shared intermediate (exploded shingles,
-    signatures, bucket rows) that feeds several consumers of one job; the
-    returned frame is lazy, so without this the pinned blocks would stay
-    in storage memory for the whole session (they are the big artifact —
-    the verified output is orders of magnitude smaller). localCheckpoint
-    runs the job once, keeps only the small result, and the intermediates
-    are dropped immediately.
-    """
-    out = out.localCheckpoint(eager=True)
-    for p in pins:
-        p.unpersist()
-    return out
-
-
 # ------------------------------------------------------------------ exact
 
 
@@ -154,36 +137,36 @@ def passage_dup_stats(
     # implicitly; non-null text → ≥1 passage → posexplode_nonempty (no
     # Generate pre-filter re-evaluating the passage transform), and
     # _parallelize spreads the passage build off the one-split scan
-    p = (
-        _parallelize(docs.filter(F.col(text_col).isNotNull()))
-        .select("doc_id", posexplode_nonempty(passages).alias("pos", "passage"))
-        .select(
-            "doc_id",
-            F.xxhash64("passage").alias("ph"),
-            # assert_true is NULL on pass, raises the message otherwise
-            F.when(
-                in_range.isNull(),
-                F.col("doc_id") * F.lit(pos_limit) + F.col("pos"),
-            ).alias("ck"),
+    with Rounds(docs.sparkSession) as r:
+        p = r.pin(
+            _parallelize(docs.filter(F.col(text_col).isNotNull()))
+            .select("doc_id", posexplode_nonempty(passages).alias("pos", "passage"))
+            .select(
+                "doc_id",
+                F.xxhash64("passage").alias("ph"),
+                # assert_true is NULL on pass, raises the message otherwise
+                F.when(
+                    in_range.isNull(),
+                    F.col("doc_id") * F.lit(pos_limit) + F.col("pos"),
+                ).alias("ck"),
+            )
         )
-        .persist()
-    )
-    h = p.groupBy("ph").agg(
-        F.count(F.lit(1)).alias("cnt"), F.min("ck").alias("mn")
-    )
-    dup = F.when((F.col("cnt") > 1) & (F.col("ck") != F.col("mn")), 1).otherwise(0)
-    out = (
-        p.join(h, "ph")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_passages"),
-            F.sum(dup).alias("dup_passages"),
+        h = p.groupBy("ph").agg(
+            F.count(F.lit(1)).alias("cnt"), F.min("ck").alias("mn")
         )
-        .withColumn(
-            "dup_frac", F.round(F.col("dup_passages") / F.col("n_passages"), 6)
+        dup = F.when((F.col("cnt") > 1) & (F.col("ck") != F.col("mn")), 1).otherwise(0)
+        out = (
+            p.join(h, "ph")
+            .groupBy("doc_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_passages"),
+                F.sum(dup).alias("dup_passages"),
+            )
+            .withColumn(
+                "dup_frac", F.round(F.col("dup_passages") / F.col("n_passages"), 6)
+            )
         )
-    )
-    return _finish(out, p)  # one-row-per-doc result; release the passage pin
+        return r.finish(out)  # one row per doc
 
 
 def scrub_duplicate_passages(
@@ -226,53 +209,53 @@ def scrub_duplicate_passages(
     )
     # same null-filter + outer-posexplode + parallelize discipline as
     # passage_dup_stats (see there)
-    p = (
-        _parallelize(docs.filter(F.col(text_col).isNotNull()))
-        .select("doc_id", posexplode_nonempty(passages).alias("pos", "passage"))
-        .select(
-            "doc_id",
-            "pos",
-            "passage",
-            F.xxhash64("passage").alias("ph"),
-            F.when(
-                in_range.isNull(),
-                F.col("doc_id") * F.lit(pos_limit) + F.col("pos"),
-            ).alias("ck"),
+    with Rounds(docs.sparkSession) as r:
+        p = r.pin(
+            _parallelize(docs.filter(F.col(text_col).isNotNull()))
+            .select("doc_id", posexplode_nonempty(passages).alias("pos", "passage"))
+            .select(
+                "doc_id",
+                "pos",
+                "passage",
+                F.xxhash64("passage").alias("ph"),
+                F.when(
+                    in_range.isNull(),
+                    F.col("doc_id") * F.lit(pos_limit) + F.col("pos"),
+                ).alias("ck"),
+            )
         )
-        .persist()
-    )
-    h = p.groupBy("ph").agg(
-        F.count(F.lit(1)).alias("cnt"), F.min("ck").alias("mn")
-    )
-    keep = (F.col("cnt") == 1) | (F.col("ck") == F.col("mn"))
-    kept_struct = F.when(
-        keep, F.struct(F.col("pos"), F.col("passage"))
-    )  # NULL when removed — collect_list drops NULLs
-    out = (
-        p.join(h, "ph")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.when(keep, 1)).alias("n_kept"),
-            F.count(F.when(~keep, 1)).alias("n_removed"),
-            F.array_sort(F.collect_list(kept_struct)).alias("__ks"),
+        h = p.groupBy("ph").agg(
+            F.count(F.lit(1)).alias("cnt"), F.min("ck").alias("mn")
         )
-        .select(
-            "doc_id",
-            "n_kept",
-            "n_removed",
-            F.array_join(
-                F.transform(F.col("__ks"), lambda s: s["passage"]), " "
-            ).alias("__clean"),
+        keep = (F.col("cnt") == 1) | (F.col("ck") == F.col("mn"))
+        kept_struct = F.when(
+            keep, F.struct(F.col("pos"), F.col("passage"))
+        )  # NULL when removed — collect_list drops NULLs
+        out = (
+            p.join(h, "ph")
+            .groupBy("doc_id")
+            .agg(
+                F.count(F.when(keep, 1)).alias("n_kept"),
+                F.count(F.when(~keep, 1)).alias("n_removed"),
+                F.array_sort(F.collect_list(kept_struct)).alias("__ks"),
+            )
+            .select(
+                "doc_id",
+                "n_kept",
+                "n_removed",
+                F.array_join(
+                    F.transform(F.col("__ks"), lambda s: s["passage"]), " "
+                ).alias("__clean"),
+            )
+            .select(
+                "doc_id",
+                "n_kept",
+                "n_removed",
+                F.length("__clean").alias("clean_len"),
+                F.md5("__clean").alias("clean_digest"),
+            )
         )
-        .select(
-            "doc_id",
-            "n_kept",
-            "n_removed",
-            F.length("__clean").alias("clean_len"),
-            F.md5("__clean").alias("clean_digest"),
-        )
-    )
-    return _finish(out, p)
+        return r.finish(out)
 
 
 # ------------------------------------------------------------------ shingles
@@ -357,38 +340,37 @@ def ngram_jaccard_pairs(
     hashes primitives, not UTF-8 — measured to cut both shuffle volume
     and GC-driven run-to-run variance on the pair-generation stage.
     """
-    sized, sh = _shingle_pair_sizes(docs, n, stop_shingle_df_limit)
-    out = (
-        sized.withColumn(
-            "jaccard",
-            F.round(F.col("common") / (F.col("na") + F.col("nb") - F.col("common")), 6),
+    with Rounds(docs.sparkSession) as r:
+        sized = _shingle_pair_sizes(r, docs, n, stop_shingle_df_limit)
+        return r.finish(
+            sized.withColumn(
+                "jaccard",
+                F.round(F.col("common") / (F.col("na") + F.col("nb") - F.col("common")), 6),
+            )
+            .filter(F.col("jaccard") >= threshold)
+            .select("doc_a", "doc_b", "jaccard")
         )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-    return _finish(out, sh)
 
 
 def _shingle_pair_sizes(
-    docs: DataFrame, n: int, stop_shingle_df_limit: int | None
-) -> tuple[DataFrame, DataFrame]:
+    r: Rounds, docs: DataFrame, n: int, stop_shingle_df_limit: int | None
+) -> DataFrame:
     """The ONE shingle-pair pipeline behind both jaccard and containment:
     (doc_a, doc_b, common, na, nb) rows for every pair sharing a shingle
-    (a < b), plus the persisted exploded-shingle pin the caller must
-    release via _finish. Shared so the hash keying / skew guard / join
-    shape can never drift between the two operators."""
+    (a < b), with the exploded shingles pinned in the caller's scope.
+    Shared so the hash keying / skew guard / join shape can never drift
+    between the two operators."""
     # the exploded shingle frame feeds the hot-set build AND three
     # consumers (both join sides + doc counts): persist the RAW stream so
     # the corpus is shingled exactly ONCE. Persisting only the filtered
     # frame (the previous shape) shingled the corpus twice — once for the
     # hot-set broadcast, once for the persisted anti-joined frame —
     # because the hot subquery's lineage sat below the persist point.
-    raw = (
+    raw = r.pin(
         shingles(_parallelize(docs), n)
         # shingle_array always yields ≥1 element → explode_nonempty
         .select("doc_id", explode_nonempty(F.col("shingles")).alias("s"))
         .select("doc_id", F.xxhash64("s").alias("sh"))
-        .persist()
     )
     sh = raw
     if stop_shingle_df_limit is not None:
@@ -407,20 +389,17 @@ def _shingle_pair_sizes(
     # the input exchange on INPUT bytes (the r9 srp/wedge pattern, guide
     # §2.5); both aliases read ONE exchange (ReuseExchange). Per-key
     # fan-out is bounded by the stop-shingle guard, so no salt needed.
-    shp = sh.repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, "sh"
-    )
+    shp = r.layout(sh, "sh")
     a, b = shp.alias("a"), shp.alias("b")
     common = (
         a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count("*").alias("common"))
     )
-    sized = (
+    return (
         common.join(counts.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")), "doc_a")
         .join(counts.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")), "doc_b")
     )
-    return sized, raw
 
 
 def containment_pairs(
@@ -442,31 +421,32 @@ def containment_pairs(
     row; emitting the two directions is a post-aggregation projection,
     not a second join. Same stop-shingle skew guard applies at scale.
     """
-    sized, sh = _shingle_pair_sizes(docs, n, stop_shingle_df_limit)
-    # both directions EXPLODE off one evaluation of `sized`: the previous
-    # union-of-two-projections shape duplicated the whole pair-join
-    # subtree (shingle self-join + two count joins) — the plan ran it
-    # twice, once per direction (measured ~1.9s extra at sf0.1). The
-    # 2-element struct array is provably non-empty → explode_nonempty.
-    # Same rows, same values; row order differs, which no consumer or
-    # oracle depends on (pair sets are order-insensitive).
-    both = sized.select(
-        explode_nonempty(
-            F.array(
-                F.struct(
-                    F.col("doc_a").alias("doc_inner"),
-                    F.col("doc_b").alias("doc_outer"),
-                    F.round(F.col("common") / F.col("na"), 6).alias("containment"),
-                ),
-                F.struct(
-                    F.col("doc_b").alias("doc_inner"),
-                    F.col("doc_a").alias("doc_outer"),
-                    F.round(F.col("common") / F.col("nb"), 6).alias("containment"),
-                ),
-            )
-        ).alias("p")
-    ).select("p.*")
-    return _finish(both.filter(F.col("containment") >= threshold), sh)
+    with Rounds(docs.sparkSession) as r:
+        sized = _shingle_pair_sizes(r, docs, n, stop_shingle_df_limit)
+        # both directions EXPLODE off one evaluation of `sized`: the previous
+        # union-of-two-projections shape duplicated the whole pair-join
+        # subtree (shingle self-join + two count joins) — the plan ran it
+        # twice, once per direction (measured ~1.9s extra at sf0.1). The
+        # 2-element struct array is provably non-empty → explode_nonempty.
+        # Same rows, same values; row order differs, which no consumer or
+        # oracle depends on (pair sets are order-insensitive).
+        both = sized.select(
+            explode_nonempty(
+                F.array(
+                    F.struct(
+                        F.col("doc_a").alias("doc_inner"),
+                        F.col("doc_b").alias("doc_outer"),
+                        F.round(F.col("common") / F.col("na"), 6).alias("containment"),
+                    ),
+                    F.struct(
+                        F.col("doc_b").alias("doc_inner"),
+                        F.col("doc_a").alias("doc_outer"),
+                        F.round(F.col("common") / F.col("nb"), 6).alias("containment"),
+                    ),
+                )
+            ).alias("p")
+        ).select("p.*")
+        return r.finish(both.filter(F.col("containment") >= threshold))
 
 
 # ----------------------------------------------- content-defined chunking
@@ -585,22 +565,23 @@ def cdc_shared_pairs(
             .select("chunk_hash")
         )
         ch = ch.join(F.broadcast(hot), "chunk_hash", "left_anti")
-    ch = ch.persist()
-    a, b = ch.alias("a"), ch.alias("b")
-    out = (
-        a.join(
-            b,
-            (F.col("a.chunk_hash") == F.col("b.chunk_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    with Rounds(docs.sparkSession) as r:
+        ch = r.pin(ch)
+        a, b = ch.alias("a"), ch.alias("b")
+        out = (
+            a.join(
+                b,
+                (F.col("a.chunk_hash") == F.col("b.chunk_hash"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            )
+            .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+            .agg(
+                F.count(F.lit(1)).alias("shared_chunks"),
+                F.sum("a.length").alias("shared_bytes"),
+            )
+            .filter(F.col("shared_chunks") >= min_shared)
         )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(
-            F.count(F.lit(1)).alias("shared_chunks"),
-            F.sum("a.length").alias("shared_bytes"),
-        )
-        .filter(F.col("shared_chunks") >= min_shared)
-    )
-    return _finish(out, ch)
+        return r.finish(out)
 
 
 # ------------------------------------------------------------- decontamination
@@ -745,30 +726,28 @@ def minhash_lsh_pairs(
     # signatures feed banding AND both sides of the verification join:
     # materialize them once (docs × (shingles + num_hashes longs) — the
     # same artifact a production LSH pipeline would write out)
-    sigs = minhash_signatures(docs, n, num_hashes).persist()
-    # band keys via the ONE shared derivation (band_buckets) — the
-    # incremental index path pins `incremental ≡ minhash_lsh_pairs`, so
-    # a second inline copy of the banding scheme is a drift hazard
-    # explicit co-partition on the band keys: the join's OUTPUT is the
-    # per-bucket pair production but AQE coalesces the input exchanges
-    # on INPUT bytes (the r9 srp/wedge-join pattern, guide §2.5); both
-    # aliases read ONE exchange (ReuseExchange — same frame, same keys)
-    buckets = band_buckets(sigs, num_hashes, bands).repartition(
-        sigs.sparkSession.sparkContext.defaultParallelism, "band", "key"
-    )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    with Rounds(docs.sparkSession) as r:
+        sigs = r.pin(minhash_signatures(docs, n, num_hashes))
+        # band keys via the ONE shared derivation (band_buckets) — the
+        # incremental index path pins `incremental ≡ minhash_lsh_pairs`, so
+        # a second inline copy of the banding scheme is a drift hazard
+        # explicit co-partition on the band keys: the join's OUTPUT is the
+        # per-bucket pair production but AQE coalesces the input exchanges
+        # on INPUT bytes (the r9 srp/wedge-join pattern, guide §2.5); both
+        # aliases read ONE exchange (ReuseExchange — same frame, same keys)
+        buckets = r.layout(band_buckets(sigs, num_hashes, bands), "band", "key")
+        a, b = buckets.alias("a"), buckets.alias("b")
+        candidates = (
+            a.join(
+                b,
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.key") == F.col("b.key"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            )
+            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+            .distinct()
         )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    verified = _verify_jaccard(candidates, sigs, threshold)
-    return _finish(verified, sigs)
+        return r.finish(_verify_jaccard(candidates, sigs, threshold))
 
 
 # ------------------------------------------------------------------ simhash
@@ -840,67 +819,82 @@ def simhash_pairs(
     """
     # fingerprints feed both sides of the pair join: one row per doc, one
     # long each — materialize instead of re-hashing the corpus twice
-    fp = simhash_fingerprints(docs, bits).persist()
-    if not banded:
-        a, b = fp.alias("a"), fp.alias("b")
-        pairs = a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
-    else:
-        chunks = max_hamming + 1
-        # rank bits by balance (most informative first), deal round-robin
-        bal = fp.select(
-            *[
-                F.avg(
-                    F.shiftright("fingerprint", k).bitwiseAND(F.lit(1)).cast("double")
-                ).alias(f"b{k}")
-                for k in range(bits)
-            ]
-        ).first()
-        order = sorted(
-            range(bits),
-            key=lambda k: (abs((bal[f"b{k}"] or 0.0) - 0.5), k),
-        )
-        chunk_bits: list[list[int]] = [[] for _ in range(chunks)]
-        for i, k in enumerate(order):
-            chunk_bits[i % chunks].append(k)
+    with Rounds(docs.sparkSession) as r:
+        fp = r.pin(simhash_fingerprints(docs, bits))
+        if not banded:
+            a, b = fp.alias("a"), fp.alias("b")
+            pairs = a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
+        else:
+            chunks = max_hamming + 1
+            # rank bits by balance (most informative first), deal round-robin
+            bal = fp.select(
+                *[
+                    F.avg(
+                        F.shiftright("fingerprint", k).bitwiseAND(F.lit(1)).cast("double")
+                    ).alias(f"b{k}")
+                    for k in range(bits)
+                ]
+            ).first()
+            order = sorted(
+                range(bits),
+                key=lambda k: (abs((bal[f"b{k}"] or 0.0) - 0.5), k),
+            )
+            chunk_bits: list[list[int]] = [[] for _ in range(chunks)]
+            for i, k in enumerate(order):
+                chunk_bits[i % chunks].append(k)
 
-        def chunk_key(c: int):
-            expr = F.lit(0).cast("long")
-            for j, k in enumerate(chunk_bits[c]):
-                expr = expr + F.shiftleft(
-                    F.shiftright("fingerprint", k).bitwiseAND(F.lit(1)).cast("long"),
-                    j,
+            def chunk_key(c: int):
+                expr = F.lit(0).cast("long")
+                for j, k in enumerate(chunk_bits[c]):
+                    expr = expr + F.shiftleft(
+                        F.shiftright("fingerprint", k).bitwiseAND(F.lit(1)).cast("long"),
+                        j,
+                    )
+                return expr.alias(f"c{c}")
+
+            keyed = fp.select(
+                "doc_id", "fingerprint", *[chunk_key(c) for c in range(chunks)]
+            )
+            buckets = keyed.select(
+                "doc_id",
+                "fingerprint",
+                explode_nonempty(
+                    F.array(*[F.struct(F.lit(c).alias("chunk"), F.col(f"c{c}").alias("key")) for c in range(chunks)])
+                ).alias("bk"),
+            ).select("doc_id", "fingerprint", "bk.chunk", "bk.key")
+            # TWO scale rules, both measured on a synthetic 10x SF where 17
+            # of 60 fingerprint bits were near-constant (common words
+            # dominate every doc's bit sums — natural corpora correlate):
+            # (1) the Hamming cut (one codegen'd xor+bit_count) runs INSIDE
+            #     the join, before any distinct — 50k docs produced 1.16 B
+            #     bucket collisions; a distinct on raw collisions shuffles
+            #     all of them, filtering first pipelines with the join so
+            #     only true ≤max_hamming pairs reach an exchange;
+            # (2) the self-join is salted (_salted_self_pair_join) — the
+            #     hottest chunk bucket held 24.6k docs = 303 M productions
+            #     in ONE key group otherwise.
+            a, b, cond = _salted_self_pair_join(buckets, ["chunk", "key"], "doc_id")
+            pairs = (
+                a.join(b, cond)
+                .withColumn(
+                    "hamming",
+                    F.bit_count(
+                        F.col("a.fingerprint").bitwiseXOR(F.col("b.fingerprint"))
+                    ),
                 )
-            return expr.alias(f"c{c}")
-
-        keyed = fp.select(
-            "doc_id", "fingerprint", *[chunk_key(c) for c in range(chunks)]
-        )
-        buckets = keyed.select(
-            "doc_id",
-            "fingerprint",
-            explode_nonempty(
-                F.array(*[F.struct(F.lit(c).alias("chunk"), F.col(f"c{c}").alias("key")) for c in range(chunks)])
-            ).alias("bk"),
-        ).select("doc_id", "fingerprint", "bk.chunk", "bk.key")
-        # TWO scale rules, both measured on a synthetic 10x SF where 17
-        # of 60 fingerprint bits were near-constant (common words
-        # dominate every doc's bit sums — natural corpora correlate):
-        # (1) the Hamming cut (one codegen'd xor+bit_count) runs INSIDE
-        #     the join, before any distinct — 50k docs produced 1.16 B
-        #     bucket collisions; a distinct on raw collisions shuffles
-        #     all of them, filtering first pipelines with the join so
-        #     only true ≤max_hamming pairs reach an exchange;
-        # (2) the self-join is salted (_salted_self_pair_join) — the
-        #     hottest chunk bucket held 24.6k docs = 303 M productions
-        #     in ONE key group otherwise.
-        a, b, cond = _salted_self_pair_join(buckets, ["chunk", "key"], "doc_id")
-        pairs = (
-            a.join(b, cond)
-            .withColumn(
+                .filter(F.col("hamming") <= max_hamming)
+                .select(
+                    F.col("a.doc_id").alias("doc_a"),
+                    F.col("b.doc_id").alias("doc_b"),
+                    "hamming",
+                )
+                .distinct()
+            )
+            return r.finish(pairs)
+        return r.finish(
+            pairs.withColumn(
                 "hamming",
-                F.bit_count(
-                    F.col("a.fingerprint").bitwiseXOR(F.col("b.fingerprint"))
-                ),
+                F.bit_count(F.col("a.fingerprint").bitwiseXOR(F.col("b.fingerprint"))),
             )
             .filter(F.col("hamming") <= max_hamming)
             .select(
@@ -908,22 +902,7 @@ def simhash_pairs(
                 F.col("b.doc_id").alias("doc_b"),
                 "hamming",
             )
-            .distinct()
         )
-        return _finish(pairs, fp)
-    return _finish(
-        pairs.withColumn(
-            "hamming",
-            F.bit_count(F.col("a.fingerprint").bitwiseXOR(F.col("b.fingerprint"))),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            "hamming",
-        ),
-        fp,
-    )
 
 
 # ------------------------------------------------------------------ embeddings
@@ -995,48 +974,47 @@ def embedding_cosine_pairs(
     # analysis before the first task at dim=64; the split keeps the tree
     # O(dim) and CollapseProject will not re-inline a non-cheap expression
     # referenced dim times. Same arithmetic per element → identical values.
-    e = (
-        _parallelize(emb)
-        .select(F.col("vec_id"), v.alias("__v"), norm.alias("__n"))
-        .select(
-            "vec_id",
-            F.array(
-                *[
-                    (F.col("__v").getItem(i) / F.col("__n")).alias(f"x{i}")
-                    for i in range(dim)
-                ]
-            ).alias("v"),
+    with Rounds(emb.sparkSession) as r:
+        e = r.pin(
+            _parallelize(emb)
+            .select(F.col("vec_id"), v.alias("__v"), norm.alias("__n"))
+            .select(
+                "vec_id",
+                F.array(
+                    *[
+                        (F.col("__v").getItem(i) / F.col("__n")).alias(f"x{i}")
+                        for i in range(dim)
+                    ]
+                ).alias("v"),
+            )
         )
-        .persist()
-    )
-    a, b = e.alias("a"), e.alias("b")
-    dot = functools.reduce(
-        operator.add,
-        [F.col("a.v").getItem(i) * F.col("b.v").getItem(i) for i in range(dim)],
-    )
-    # The `+ 0.0 * rand` term is a PUSHDOWN BARRIER, not arithmetic: a
-    # deterministic `cosine` lets the optimizer fold the threshold filter
-    # into the nested-loop JOIN CONDITION, where the 64-term dot product
-    # is evaluated per candidate pair by the interpreted predicate path
-    # AND ahead of the cheap vec_id<vec_id cut (measured 396 task-seconds
-    # for 4M candidates, ~100 us/pair). Marked nondeterministic, the
-    # projection stays ABOVE the join in a whole-stage-codegen'd Project,
-    # the join condition keeps only the id cut, and the score runs once
-    # per surviving pair at codegen speed. Values are bit-identical:
-    # x + 0.0*rand == x for every finite x (the filter admits only
-    # cosine >= threshold > 0, so the -0.0+0.0 sign edge cannot surface).
-    cosine = F.round(dot, 6) + F.lit(0.0) * F.rand(42)
-    return _finish(
-        a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-        .withColumn("cosine", cosine)
-        .filter(F.col("cosine") >= threshold)
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            "cosine",
-        ),
-        e,
-    )
+        a, b = e.alias("a"), e.alias("b")
+        dot = functools.reduce(
+            operator.add,
+            [F.col("a.v").getItem(i) * F.col("b.v").getItem(i) for i in range(dim)],
+        )
+        # The `+ 0.0 * rand` term is a PUSHDOWN BARRIER, not arithmetic: a
+        # deterministic `cosine` lets the optimizer fold the threshold filter
+        # into the nested-loop JOIN CONDITION, where the 64-term dot product
+        # is evaluated per candidate pair by the interpreted predicate path
+        # AND ahead of the cheap vec_id<vec_id cut (measured 396 task-seconds
+        # for 4M candidates, ~100 us/pair). Marked nondeterministic, the
+        # projection stays ABOVE the join in a whole-stage-codegen'd Project,
+        # the join condition keeps only the id cut, and the score runs once
+        # per surviving pair at codegen speed. Values are bit-identical:
+        # x + 0.0*rand == x for every finite x (the filter admits only
+        # cosine >= threshold > 0, so the -0.0+0.0 sign edge cannot surface).
+        cosine = F.round(dot, 6) + F.lit(0.0) * F.rand(42)
+        return r.finish(
+            a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
+            .withColumn("cosine", cosine)
+            .filter(F.col("cosine") >= threshold)
+            .select(
+                F.col("a.vec_id").alias("vec_a"),
+                F.col("b.vec_id").alias("vec_b"),
+                "cosine",
+            )
+        )
 
 
 def _srp_sig_frame(emb: DataFrame, vec_col: str, P, bands: int) -> DataFrame:
@@ -1277,37 +1255,37 @@ def embedding_srp_pairs(
     max_disagree = int(planes - math.ceil(min_agree * planes))
 
     sig = _srp_sig_frame(emb, vec_col, P, bands)
-    # both sides of the candidate self-join read this frame: materialize
-    # it once or the Python signature pass (the only non-JVM stage) runs
-    # twice — same discipline as minhash_lsh_pairs' signatures
-    buckets = sig.select(
-        "vec_id", "sig", F.posexplode("keys").alias("band", "key")
-    ).persist()
-    # salted self-join: band keys skew on clustered embeddings exactly
-    # like SimHash chunks do on natural text (one hot (band, key) group
-    # otherwise serializes the whole candidate production into one task)
-    a, b, cond = _salted_self_pair_join(buckets, ["band", "key"], "vec_id")
-    hamming = functools.reduce(
-        operator.add,
-        [
-            F.bit_count(
-                F.col("a.sig").getItem(wd).bitwiseXOR(F.col("b.sig").getItem(wd))
+    with Rounds(emb.sparkSession) as r:
+        # both sides of the candidate self-join read this frame: materialize
+        # it once or the Python signature pass (the only non-JVM stage) runs
+        # twice — same discipline as minhash_lsh_pairs' signatures
+        buckets = r.pin(
+            sig.select("vec_id", "sig", F.posexplode("keys").alias("band", "key"))
+        )
+        # salted self-join: band keys skew on clustered embeddings exactly
+        # like SimHash chunks do on natural text (one hot (band, key) group
+        # otherwise serializes the whole candidate production into one task)
+        a, b, cond = _salted_self_pair_join(buckets, ["band", "key"], "vec_id")
+        hamming = functools.reduce(
+            operator.add,
+            [
+                F.bit_count(
+                    F.col("a.sig").getItem(wd).bitwiseXOR(F.col("b.sig").getItem(wd))
+                )
+                for wd in range(n_words)
+            ],
+        )
+        cand = (
+            a.join(b, cond)
+            .filter(hamming <= max_disagree)
+            .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
+            .distinct()
+        )
+        return r.finish(
+            _cosine_verify(
+                cand, [(emb, "vec_a"), (emb, "vec_b")], threshold, vec_col, dim
             )
-            for wd in range(n_words)
-        ],
-    )
-    cand = (
-        a.join(b, cond)
-        .filter(hamming <= max_disagree)
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
-    )
-    return _finish(
-        _cosine_verify(
-            cand, [(emb, "vec_a"), (emb, "vec_b")], threshold, vec_col, dim
-        ),
-        buckets,
-    )
+        )
 
 
 def embedding_srp_join(
@@ -1750,31 +1728,31 @@ def minhash_incremental_pairs(
 
     is_new: boolean Column over doc_id marking the newly appended docs.
     """
-    sigs = spark.table(name).persist()
-    # co-partition both bucket streams on the band keys with an explicit
-    # count (AQE-exempt): the probe join's output is the per-bucket
-    # collision set, not its input bytes (guide §2.5, the r9 pattern)
-    P = spark.sparkContext.defaultParallelism
-    all_b = band_buckets(sigs, num_hashes, bands).repartition(P, "band", "key")
-    new_b = band_buckets(sigs.filter(is_new), num_hashes, bands).repartition(
-        P, "band", "key"
-    )
-    cand = (
-        new_b.alias("a")
-        .join(
-            all_b.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
+    with Rounds(spark) as r:
+        # a table the caller cached stays cached (r.pin leaves it alone)
+        sigs = r.pin(spark.table(name))
+        # co-partition both bucket streams on the band keys with an explicit
+        # count (AQE-exempt): the probe join's output is the per-bucket
+        # collision set, not its input bytes (guide §2.5, the r9 pattern)
+        all_b = r.layout(band_buckets(sigs, num_hashes, bands), "band", "key")
+        new_b = r.layout(
+            band_buckets(sigs.filter(is_new), num_hashes, bands), "band", "key"
         )
-        .select(
-            F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_a"),
-            F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_b"),
+        cand = (
+            new_b.alias("a")
+            .join(
+                all_b.alias("b"),
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.key") == F.col("b.key"))
+                & (F.col("a.doc_id") != F.col("b.doc_id")),
+            )
+            .select(
+                F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_a"),
+                F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_b"),
+            )
+            .distinct()
         )
-        .distinct()
-    )
-    verified = _verify_jaccard(cand, sigs, threshold)
-    return _finish(verified, sigs)
+        return r.finish(_verify_jaccard(cand, sigs, threshold))
 
 
 def split_leakage(

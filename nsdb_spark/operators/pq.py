@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .rounds import Rounds
 from .similarity import _as_double
 
 
@@ -356,19 +357,19 @@ def write_ivfpq_index(
     ~shortlist re-rank rows."""
     from ..sources.bucketed import write_partitioned
 
-    res = _residuals(emb, centroids, vec_col, id_col).persist()
-    cbs = pq_train(res, m, ks, iters, vec_col="resid", id_col=id_col, train_size=train_size)
-    # cell rides through the encode pass — re-attaching it by a join on
-    # id would shuffle the whole corpus to recover a column _residuals
-    # already had beside the codes
-    enc = pq_encode(res, cbs, vec_col="resid", id_col=id_col, carry={"cell": "int"})
-    out = (
-        enc.join(emb.select(id_col, vec_col), id_col)
-        .select(id_col, "cell", "codes", vec_col)
-    )
-    write_partitioned(out, name, "cell")
-    res.unpersist()
-    return cbs
+    with Rounds(emb.sparkSession) as r:
+        res = r.pin(_residuals(emb, centroids, vec_col, id_col))
+        cbs = pq_train(res, m, ks, iters, vec_col="resid", id_col=id_col, train_size=train_size)
+        # cell rides through the encode pass — re-attaching it by a join on
+        # id would shuffle the whole corpus to recover a column _residuals
+        # already had beside the codes
+        enc = pq_encode(res, cbs, vec_col="resid", id_col=id_col, carry={"cell": "int"})
+        out = (
+            enc.join(emb.select(id_col, vec_col), id_col)
+            .select(id_col, "cell", "codes", vec_col)
+        )
+        write_partitioned(out, name, "cell")
+        return cbs
 
 
 def ivfpq_topk_indexed(
@@ -447,27 +448,21 @@ def ivfpq_search(
     """
     from .similarity import cosine_topk
 
-    res = _residuals(emb, centroids, vec_col, id_col)
-    # train on the residual distribution (one bounded sample), encode all
-    res = res.persist()
-    cbs = pq_train(res, m, ks, iters, vec_col="resid", id_col=id_col, train_size=train_size)
-    enc = pq_encode(res, cbs, vec_col="resid", id_col=id_col, carry={"cell": "int"})
+    with Rounds(emb.sparkSession) as r:
+        # train on the residual distribution (one bounded sample), encode all
+        res = r.pin(_residuals(emb, centroids, vec_col, id_col))
+        cbs = pq_train(res, m, ks, iters, vec_col="resid", id_col=id_col, train_size=train_size)
+        enc = pq_encode(res, cbs, vec_col="resid", id_col=id_col, carry={"cell": "int"})
 
-    # per probed cell: T_c[j, code] = ||(q - C_c)_j - codebook_j[code]||^2
-    probes, _tables, score = _ivfpq_query_side(
-        query_vec, centroids, cbs, nprobe, id_col=id_col
-    )
-    scored = (
-        enc.filter(F.col("cell").isin(probes))
-        .select(id_col, "cell", "codes")
-        .mapInPandas(score, f"{id_col} long, adist double")
-    )
-    # materialize the k-row result BEFORE releasing the pin: the return
-    # value is lazy, so unpersisting first would recompute the full
-    # residual mapInPandas pass (twice — it feeds two subtrees) at the
-    # caller's action. Same _finish discipline as the dedup operators.
-    cand = scored.orderBy(F.col("adist").asc(), F.col(id_col).asc()).limit(shortlist)
-    hits = emb.join(F.broadcast(cand.select(id_col)), id_col, "semi")
-    out = cosine_topk(hits, query_vec, k, vec_col).localCheckpoint(eager=True)
-    res.unpersist()
-    return out
+        # per probed cell: T_c[j, code] = ||(q - C_c)_j - codebook_j[code]||^2
+        probes, _tables, score = _ivfpq_query_side(
+            query_vec, centroids, cbs, nprobe, id_col=id_col
+        )
+        scored = (
+            enc.filter(F.col("cell").isin(probes))
+            .select(id_col, "cell", "codes")
+            .mapInPandas(score, f"{id_col} long, adist double")
+        )
+        cand = scored.orderBy(F.col("adist").asc(), F.col(id_col).asc()).limit(shortlist)
+        hits = emb.join(F.broadcast(cand.select(id_col)), id_col, "semi")
+        return r.finish(cosine_topk(hits, query_vec, k, vec_col))

@@ -1,29 +1,32 @@
-"""The round driver of the iterative operators (the graph family,
-connected components, BPE training).
+"""The one pin scope of the operators, and the round driver of the
+iterative ones (the graph family, connected components, BPE training).
 
-Every such operator is a loop over a state frame: build the next state
-from the last one plus a few loop invariants, cap the plan depth with a
-localCheckpoint so round N does not re-execute rounds 1..N-1, repeat.
-`Rounds` owns the parts they share:
+An operator that reads an intermediate more than once (exploded
+shingles, signatures, a contingency grid, an iterative loop's edge set)
+caches it for the call and releases it before it returns. `Rounds` owns
+that and the parts the iterative operators share:
 
+- the pins: every frame pinned through it is unpersisted when the `with`
+  block exits, also when the operator raises. A frame the caller had
+  already cached is used as it is and left cached;
+- the finish: `finish(out)` materializes the (small) result with an
+  eager localCheckpoint, so the returned frame no longer reads the pins
+  the block's exit then releases;
+- the layout of a pinned or joined frame: hash-partitioned on its join
+  key into `sc.defaultParallelism` partitions. An explicit count is
+  exempt from AQE coalescing, so a few-MB edge set is not collapsed to a
+  handful of partitions that every round's join then runs on, and each
+  join reuses the layout instead of re-exchanging the frame;
 - the loop: the initial state and every round's state are
   localCheckpointed, and each round ends in one action. In the fixed
   form that action is the eager checkpoint. In the `until` form the
   checkpoints are lazy and the operator's own driver-side read of the
   state materializes them: the convergence test (connected components'
   changed flag, star contraction's edge signature) or, in BPE, the next
-  round's best-pair collect;
-- the layout of a loop invariant: hash-partitioned on its join key into
-  `sc.defaultParallelism` partitions. An explicit count is exempt from
-  AQE coalescing, so a few-MB edge set is not collapsed to a handful of
-  partitions that every round's join then runs on, and each round's
-  join reuses the layout instead of re-exchanging the invariant;
-- the pins: every frame pinned through it is unpersisted when the `with`
-  block exits, also when the operator raises. A frame the caller had
-  already cached is used as it is and left cached.
+  round's best-pair collect.
 
-Checkpointed states are not pins: Spark drops their blocks once the
-frames built on them are garbage-collected.
+Checkpointed states and results are not pins: Spark drops their blocks
+once the frames built on them are garbage-collected.
 """
 from __future__ import annotations
 
@@ -34,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 class Rounds:
-    """Pins, layout and round loop of one iterative operator call."""
+    """Pins, layout and round loop of one operator call."""
 
     def __init__(self, spark: SparkSession):
         self._parts = spark.sparkContext.defaultParallelism
@@ -50,7 +53,7 @@ class Rounds:
             self._pins.pop().unpersist()
 
     def layout(self, df: DataFrame, *keys: str) -> DataFrame:
-        """`df` hash-partitioned on `keys` into the loop's partition count."""
+        """`df` hash-partitioned on `keys` into the scope's partition count."""
         return df.repartition(self._parts, *keys)
 
     def pin(self, df: DataFrame, *keys: str) -> DataFrame:
@@ -60,6 +63,10 @@ class Rounds:
         if df.storageLevel == StorageLevel.NONE:
             self._pins.append(df.persist())
         return df
+
+    def finish(self, out: DataFrame) -> DataFrame:
+        """`out` materialized, so it outlives the pins released at exit."""
+        return out.localCheckpoint(eager=True)
 
     def run(
         self,

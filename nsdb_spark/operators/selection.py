@@ -37,9 +37,12 @@ from pyspark.sql import functions as F
 
 from .dedup import (
     _parallelize,
+    band_buckets,
+    jaccard_expr,
     minhash_signatures,
     portable_word_hash,
 )
+from .rounds import Rounds
 
 # Knuth multiplicative constant — decorrelates the pseudo-weight from the
 # bucket id (bucket < dim <= 2^20, product < 2^52: no 64-bit overflow in
@@ -117,7 +120,6 @@ def dsir_weights(
     is_target: Column,
     buckets: int = 8192,
     text_col: str = "text",
-    materialize: bool = True,
 ) -> DataFrame:
     """(doc_id, logw) — DSIR importance log-weights: per-doc
     log p_target(doc) - log p_raw(doc) under add-1-smoothed hashed
@@ -134,40 +136,37 @@ def dsir_weights(
     """
     # persisted: the token stream feeds the counts aggregate, the totals
     # collect, and the scoring join — unpinned it would be re-exploded 3x
-    tok = (
-        _parallelize(docs)
-        .select("doc_id", is_target.alias("__tgt"), F.explode(F.split(F.col(text_col), " ")).alias("t"))
-        .select("doc_id", "__tgt", _bucket(F.col("t"), buckets).alias("b"))
-        .persist()
-    )
-    # one pass over the token stream: per-bucket raw count + target count
-    # (map-side combinable; output bounded by `buckets` rows)
-    # persisted too (bounded at `buckets` rows): the totals .first() is
-    # an action, so an unpinned counts would re-run this aggregation over
-    # the whole token stream a second time when the scoring job runs
-    counts = tok.groupBy("b").agg(
-        F.count(F.lit(1)).alias("cr"),
-        F.sum(F.when(F.col("__tgt"), 1).otherwise(0)).alias("ct"),
-    ).persist()
-    tot = counts.agg(F.sum("cr").alias("tr"), F.sum("ct").alias("tt")).first()
-    t_raw, t_tgt = int(tot["tr"] or 0), int(tot["tt"] or 0)
-    lam = (
-        F.log(F.col("ct") + 1)
-        - F.lit(float(__import__("math").log(t_tgt + buckets)))
-        - F.log(F.col("cr") + 1)
-        + F.lit(float(__import__("math").log(t_raw + buckets)))
-    )
-    ratio = counts.select("b", lam.alias("lam"))
-    out = (
-        tok.join(F.broadcast(ratio), "b")
-        .groupBy("doc_id")
-        .agg(F.sum("lam").alias("logw"))
-    )
-    if not materialize:
-        return out  # lazy, pins retained — plan tests read this shape
-    from .dedup import _finish
-
-    return _finish(out, tok, counts)
+    with Rounds(docs.sparkSession) as r:
+        tok = r.pin(
+            _parallelize(docs)
+            .select("doc_id", is_target.alias("__tgt"), F.explode(F.split(F.col(text_col), " ")).alias("t"))
+            .select("doc_id", "__tgt", _bucket(F.col("t"), buckets).alias("b"))
+        )
+        # one pass over the token stream: per-bucket raw count + target count
+        # (map-side combinable; output bounded by `buckets` rows)
+        # persisted too (bounded at `buckets` rows): the totals .first() is
+        # an action, so an unpinned counts would re-run this aggregation over
+        # the whole token stream a second time when the scoring job runs
+        counts = r.pin(
+            tok.groupBy("b").agg(
+                F.count(F.lit(1)).alias("cr"),
+                F.sum(F.when(F.col("__tgt"), 1).otherwise(0)).alias("ct"),
+            )
+        )
+        tot = counts.agg(F.sum("cr").alias("tr"), F.sum("ct").alias("tt")).first()
+        t_raw, t_tgt = int(tot["tr"] or 0), int(tot["tt"] or 0)
+        lam = (
+            F.log(F.col("ct") + 1)
+            - F.lit(float(__import__("math").log(t_tgt + buckets)))
+            - F.log(F.col("cr") + 1)
+            + F.lit(float(__import__("math").log(t_raw + buckets)))
+        )
+        ratio = counts.select("b", lam.alias("lam"))
+        return r.finish(
+            tok.join(F.broadcast(ratio), "b")
+            .groupBy("doc_id")
+            .agg(F.sum("lam").alias("logw"))
+        )
 
 
 def dsir_sample(
@@ -312,8 +311,6 @@ def decontaminate_fuzzy(
     never joined to itself and never shuffles for the verification. This
     is the asymmetric version of minhash_lsh_pairs' self-join.
     """
-    from .dedup import band_buckets
-
     def banded(sigs: DataFrame, id_out: str) -> DataFrame:
         # one band-key derivation for the whole repo (dedup.band_buckets)
         # — compatibility with stored signature indexes depends on it
@@ -321,32 +318,27 @@ def decontaminate_fuzzy(
             "doc_id", id_out
         )
 
-    corpus_sigs = minhash_signatures(docs, n, num_hashes, text_col).persist()
-    bench_sigs = minhash_signatures(benchmark, n, num_hashes, text_col).persist()
-    candidates = (
-        banded(corpus_sigs, "doc_id")
-        .join(F.broadcast(banded(bench_sigs, "bench_id")), ["band", "key"])
-        .select("doc_id", "bench_id")
-        .distinct()
-    )
-    bench_sh = bench_sigs.select(
-        F.col("doc_id").alias("bench_id"), F.col("shingles").alias("sh_b")
-    )
-    from .dedup import jaccard_expr
-
-    verified = (
-        candidates.join(corpus_sigs.select("doc_id", F.col("shingles").alias("sh_a")), "doc_id")
-        .join(F.broadcast(bench_sh), "bench_id")
-        # the one shared scoring convention (dedup.jaccard_expr) on this
-        # operator's own broadcast-asymmetric join shape
-        .withColumn("jaccard", jaccard_expr())
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_id", "bench_id", "jaccard")
-    )
-    out = verified.localCheckpoint(eager=True)
-    corpus_sigs.unpersist()
-    bench_sigs.unpersist()
-    return out
+    with Rounds(docs.sparkSession) as r:
+        corpus_sigs = r.pin(minhash_signatures(docs, n, num_hashes, text_col))
+        bench_sigs = r.pin(minhash_signatures(benchmark, n, num_hashes, text_col))
+        candidates = (
+            banded(corpus_sigs, "doc_id")
+            .join(F.broadcast(banded(bench_sigs, "bench_id")), ["band", "key"])
+            .select("doc_id", "bench_id")
+            .distinct()
+        )
+        bench_sh = bench_sigs.select(
+            F.col("doc_id").alias("bench_id"), F.col("shingles").alias("sh_b")
+        )
+        return r.finish(
+            candidates.join(corpus_sigs.select("doc_id", F.col("shingles").alias("sh_a")), "doc_id")
+            .join(F.broadcast(bench_sh), "bench_id")
+            # the one shared scoring convention (dedup.jaccard_expr) on this
+            # operator's own broadcast-asymmetric join shape
+            .withColumn("jaccard", jaccard_expr())
+            .filter(F.col("jaccard") >= threshold)
+            .select("doc_id", "bench_id", "jaccard")
+        )
 
 
 def semantic_survivors(

@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import explode_nonempty as _explode_nonempty
+from .rounds import Rounds
 
 # Small per-language stopword lists (public common words). The heuristic is
 # a plain stopword-hit count — deterministic and engine-portable; swap in a
@@ -325,26 +326,23 @@ def lm_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
     count() action: one scalar job, no driver loop. avg_logp rounds to 3
     decimals (FP-accumulated across engines).
     """
-    from .dedup import _finish
-
-    toks = docs.select(
-        "doc_id", F.explode(_words(text_col)).alias("tok")
-    ).persist()
-    cnt = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt")).persist()
-    # total from the ALREADY-AGGREGATED vocab table (vocab rows), not a
-    # third tokenize pass over the corpus
-    total = cnt.agg(F.sum("cnt")).first()[0] or 0
-    out = (
-        toks.join(cnt, "tok")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.round(F.avg(F.log(F.col("cnt") / F.lit(float(total)))), 3).alias(
-                "avg_logp"
-            ),
+    with Rounds(docs.sparkSession) as r:
+        toks = r.pin(docs.select("doc_id", F.explode(_words(text_col)).alias("tok")))
+        cnt = r.pin(toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt")))
+        # total from the ALREADY-AGGREGATED vocab table (vocab rows), not a
+        # third tokenize pass over the corpus
+        total = cnt.agg(F.sum("cnt")).first()[0] or 0
+        out = (
+            toks.join(cnt, "tok")
+            .groupBy("doc_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_tokens"),
+                F.round(F.avg(F.log(F.col("cnt") / F.lit(float(total)))), 3).alias(
+                    "avg_logp"
+                ),
+            )
         )
-    )
-    return _finish(out, toks, cnt)
+        return r.finish(out)
 
 
 def normalize_text(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -388,33 +386,31 @@ def ngram_novelty(docs: DataFrame, n: int = 3, text_col: str = "text") -> DataFr
     feeds both the df aggregate and the join probe, so it is persisted —
     16 bytes/gram, computed once instead of re-exploding the corpus.
     """
-    from .dedup import _finish, _parallelize, shingle_array
+    from .dedup import _parallelize, shingle_array
 
-    # _parallelize: the shingle build is the expensive stage and runs at
-    # the scan's split count without it (8 single-task stages at sf0.1);
-    # a no-op once the input has >= defaultParallelism splits
-    g = (
-        _parallelize(docs).select(
-            "doc_id", _explode_nonempty(shingle_array(text_col, n)).alias("g")
+    with Rounds(docs.sparkSession) as r:
+        # _parallelize: the shingle build is the expensive stage and runs at
+        # the scan's split count without it (8 single-task stages at sf0.1);
+        # a no-op once the input has >= defaultParallelism splits
+        g = r.pin(
+            _parallelize(docs).select(
+                "doc_id", _explode_nonempty(shingle_array(text_col, n)).alias("g")
+            )
+            .select("doc_id", F.xxhash64("g").alias("gh"))
         )
-        .select("doc_id", F.xxhash64("g").alias("gh"))
-        .persist()
-    )
-    gdf = g.groupBy("gh").agg(F.count(F.lit(1)).alias("df"))
-    out = (
-        g.join(gdf, "gh")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_grams"),
-            F.sum(F.when(F.col("df") == 1, 1).otherwise(0)).alias("novel_grams"),
+        gdf = g.groupBy("gh").agg(F.count(F.lit(1)).alias("df"))
+        out = (
+            g.join(gdf, "gh")
+            .groupBy("doc_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_grams"),
+                F.sum(F.when(F.col("df") == 1, 1).otherwise(0)).alias("novel_grams"),
+            )
+            .withColumn(
+                "novelty", F.round(F.col("novel_grams") / F.col("n_grams"), 6)
+            )
         )
-        .withColumn(
-            "novelty", F.round(F.col("novel_grams") / F.col("n_grams"), 6)
-        )
-    )
-    # one-doc-per-row result; materialize it and release the gram pin
-    # (dedup._finish discipline) instead of caching 16 bytes/gram forever
-    return _finish(out, g)
+        return r.finish(out)
 
 
 def bigram_pmi(
@@ -435,59 +431,56 @@ def bigram_pmi(
     min_count suppresses the low-frequency PMI explosion (a pair seen
     once between two hapaxes maxes the score — standard practice).
     """
-    from .dedup import _finish
-
     words = _words(text_col)
     pairs = _bigrams(words)
     # both count tables feed multiple consumers (joins + the broadcast
-    # totals) — persist so the corpus is tokenized ONCE per table, not
-    # once per consumer (the ngram_novelty/_finish pin discipline)
-    uni = (
-        docs.select(F.explode(words).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n_w"))
-        .persist()
-    )
-    bi_all = (
-        docs.select(F.explode(pairs).alias("bigram"))
-        .groupBy("bigram")
-        .agg(F.count(F.lit(1)).alias("n_pair"))
-        .persist()
-    )
-    bi = bi_all.filter(F.col("n_pair") >= min_count)
-    tot = uni.agg(
-        F.sum("n_w").alias("t_uni"),
-    )
-    # P(w1,w2) normalizes by ALL bigram tokens, not just the kept rows:
-    # totalling after the min_count filter would shift every PMI up by
-    # the constant ln(total/kept) — min_count prunes CANDIDATES, it does
-    # not re-define the distribution
-    tot_bi = bi_all.agg(F.sum("n_pair").alias("t_bi"))
-    scored = (
-        bi.withColumn("w1", F.split("bigram", " ")[0])
-        .withColumn("w2", F.split("bigram", " ")[1])
-        .join(uni.select(F.col("w").alias("w1"), F.col("n_w").alias("n_w1")), "w1")
-        .join(uni.select(F.col("w").alias("w2"), F.col("n_w").alias("n_w2")), "w2")
-        .crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(tot_bi))
-        .select(
-            "bigram",
-            "n_pair",
-            # sort/rank on the UNROUNDED score (repo convention — see
-            # ranking._rank_topk); round only for display
-            F.log(
-                (F.col("n_pair") / F.col("t_bi"))
-                / ((F.col("n_w1") / F.col("t_uni")) * (F.col("n_w2") / F.col("t_uni")))
-            ).alias("__raw"),
+    # totals) — pinned so the corpus is tokenized ONCE per table, not
+    # once per consumer
+    with Rounds(docs.sparkSession) as r:
+        uni = r.pin(
+            docs.select(F.explode(words).alias("w"))
+            .groupBy("w")
+            .agg(F.count(F.lit(1)).alias("n_w"))
         )
-    )
-    topk = scored.orderBy(F.desc("__raw"), F.asc("bigram")).limit(k)
-    w = Window.orderBy(F.desc("__raw"), F.asc("bigram"))
-    out = (
-        topk.withColumn("rank", F.row_number().over(w))
-        .select("bigram", "n_pair", F.round("__raw", 6).alias("pmi"), "rank")
-    )
-    return _finish(out, uni, bi_all)
+        bi_all = r.pin(
+            docs.select(F.explode(pairs).alias("bigram"))
+            .groupBy("bigram")
+            .agg(F.count(F.lit(1)).alias("n_pair"))
+        )
+        bi = bi_all.filter(F.col("n_pair") >= min_count)
+        tot = uni.agg(
+            F.sum("n_w").alias("t_uni"),
+        )
+        # P(w1,w2) normalizes by ALL bigram tokens, not just the kept rows:
+        # totalling after the min_count filter would shift every PMI up by
+        # the constant ln(total/kept) — min_count prunes CANDIDATES, it does
+        # not re-define the distribution
+        tot_bi = bi_all.agg(F.sum("n_pair").alias("t_bi"))
+        scored = (
+            bi.withColumn("w1", F.split("bigram", " ")[0])
+            .withColumn("w2", F.split("bigram", " ")[1])
+            .join(uni.select(F.col("w").alias("w1"), F.col("n_w").alias("n_w1")), "w1")
+            .join(uni.select(F.col("w").alias("w2"), F.col("n_w").alias("n_w2")), "w2")
+            .crossJoin(F.broadcast(tot))
+            .crossJoin(F.broadcast(tot_bi))
+            .select(
+                "bigram",
+                "n_pair",
+                # sort/rank on the UNROUNDED score (repo convention — see
+                # ranking._rank_topk); round only for display
+                F.log(
+                    (F.col("n_pair") / F.col("t_bi"))
+                    / ((F.col("n_w1") / F.col("t_uni")) * (F.col("n_w2") / F.col("t_uni")))
+                ).alias("__raw"),
+            )
+        )
+        topk = scored.orderBy(F.desc("__raw"), F.asc("bigram")).limit(k)
+        w = Window.orderBy(F.desc("__raw"), F.asc("bigram"))
+        out = (
+            topk.withColumn("rank", F.row_number().over(w))
+            .select("bigram", "n_pair", F.round("__raw", 6).alias("pmi"), "rank")
+        )
+        return r.finish(out)
 
 
 def js_divergence_by_group(
@@ -511,41 +504,39 @@ def js_divergence_by_group(
 
     Output: (group, n_words, jsd rounded 6), one row per group.
     """
-    from .dedup import _finish
-
-    grid = (
-        docs.filter(F.col(text_col).isNotNull() & F.col(group).isNotNull())
-        .select(F.col(group).alias("g"), F.explode(_words(text_col)).alias("w"))
-        .groupBy("g", "w")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
-    )
-    gtot = grid.groupBy("g").agg(F.sum("c").alias("gt"))
-    corpus = grid.groupBy("w").agg(F.sum("c").alias("cc"))
-    ctot = grid.agg(F.sum("c").alias("ct"))
-    p = F.col("c") / F.col("gt")
-    q = F.col("cc") / F.col("ct")
-    m2 = p + q  # 2·m where m = (p+q)/2
-    out = (
-        grid.join(F.broadcast(gtot), "g")
-        .join(corpus, "w")
-        .crossJoin(F.broadcast(ctot))
-        .groupBy("g")
-        .agg(
-            F.sum("c").cast("long").alias("n_words"),
-            (
-                F.lit(0.5) * F.sum(p * F.log2(F.lit(2.0) * p / m2))
-                + F.lit(0.5) * F.sum(q * F.log2(F.lit(2.0) * q / m2))
-                + F.lit(0.5) * (F.lit(1.0) - F.sum(q))
-            ).alias("__jsd"),
+    with Rounds(docs.sparkSession) as r:
+        grid = r.pin(
+            docs.filter(F.col(text_col).isNotNull() & F.col(group).isNotNull())
+            .select(F.col(group).alias("g"), F.explode(_words(text_col)).alias("w"))
+            .groupBy("g", "w")
+            .agg(F.count(F.lit(1)).alias("c"))
         )
-        .select(
-            F.col("g").alias(group),
-            "n_words",
-            F.round("__jsd", 6).alias("jsd"),
+        gtot = grid.groupBy("g").agg(F.sum("c").alias("gt"))
+        corpus = grid.groupBy("w").agg(F.sum("c").alias("cc"))
+        ctot = grid.agg(F.sum("c").alias("ct"))
+        p = F.col("c") / F.col("gt")
+        q = F.col("cc") / F.col("ct")
+        m2 = p + q  # 2·m where m = (p+q)/2
+        out = (
+            grid.join(F.broadcast(gtot), "g")
+            .join(corpus, "w")
+            .crossJoin(F.broadcast(ctot))
+            .groupBy("g")
+            .agg(
+                F.sum("c").cast("long").alias("n_words"),
+                (
+                    F.lit(0.5) * F.sum(p * F.log2(F.lit(2.0) * p / m2))
+                    + F.lit(0.5) * F.sum(q * F.log2(F.lit(2.0) * q / m2))
+                    + F.lit(0.5) * (F.lit(1.0) - F.sum(q))
+                ).alias("__jsd"),
+            )
+            .select(
+                F.col("g").alias(group),
+                "n_words",
+                F.round("__jsd", 6).alias("jsd"),
+            )
         )
-    )
-    return _finish(out, grid)
+        return r.finish(out)
 
 
 def lm_bigram_logprob(
@@ -572,42 +563,39 @@ def lm_bigram_logprob(
 
     Output: (doc_id, n_trans, avg_logp rounded 3).
     """
-    from .dedup import _finish
-
     words = _words(text_col)
-    # ≥2-words filter + explode_nonempty: same rows as the inner explode,
-    # no duplicated zip_with evaluation in a Generate pre-filter
-    stream = (
-        docs.filter(F.size(words) >= 2)
-        .select("doc_id", _explode_nonempty(_bigrams(words)).alias("bigram"))
-        .withColumn("w1", F.split("bigram", " ")[0])
-        .withColumn("w2", F.split("bigram", " ")[1])
-        .persist()
-    )
-    bi = stream.groupBy("bigram").agg(F.count(F.lit(1)).alias("n_bi"))
-    uni = (
-        docs.select(F.explode(words).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n_w"))
-        .persist()
-    )
-    tot = uni.agg(F.sum("n_w").alias("t_uni"))
-    p_bi = F.col("n_bi") / F.col("n_w1")          # P(w2 | w1)
-    p_uni = F.col("n_w2") / F.col("t_uni")        # P(w2)
-    out = (
-        stream.join(bi, "bigram")
-        .join(uni.select(F.col("w").alias("w1"), F.col("n_w").alias("n_w1")), "w1")
-        .join(uni.select(F.col("w").alias("w2"), F.col("n_w").alias("n_w2")), "w2")
-        .crossJoin(F.broadcast(tot))
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_trans"),
-            F.round(
-                F.avg(F.log(F.lit(lam) * p_bi + F.lit(1.0 - lam) * p_uni)), 3
-            ).alias("avg_logp"),
+    with Rounds(docs.sparkSession) as r:
+        # ≥2-words filter + explode_nonempty: same rows as the inner explode,
+        # no duplicated zip_with evaluation in a Generate pre-filter
+        stream = r.pin(
+            docs.filter(F.size(words) >= 2)
+            .select("doc_id", _explode_nonempty(_bigrams(words)).alias("bigram"))
+            .withColumn("w1", F.split("bigram", " ")[0])
+            .withColumn("w2", F.split("bigram", " ")[1])
         )
-    )
-    return _finish(out, stream, uni)
+        bi = stream.groupBy("bigram").agg(F.count(F.lit(1)).alias("n_bi"))
+        uni = r.pin(
+            docs.select(F.explode(words).alias("w"))
+            .groupBy("w")
+            .agg(F.count(F.lit(1)).alias("n_w"))
+        )
+        tot = uni.agg(F.sum("n_w").alias("t_uni"))
+        p_bi = F.col("n_bi") / F.col("n_w1")          # P(w2 | w1)
+        p_uni = F.col("n_w2") / F.col("t_uni")        # P(w2)
+        out = (
+            stream.join(bi, "bigram")
+            .join(uni.select(F.col("w").alias("w1"), F.col("n_w").alias("n_w1")), "w1")
+            .join(uni.select(F.col("w").alias("w2"), F.col("n_w").alias("n_w2")), "w2")
+            .crossJoin(F.broadcast(tot))
+            .groupBy("doc_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_trans"),
+                F.round(
+                    F.avg(F.log(F.lit(lam) * p_bi + F.lit(1.0 - lam) * p_uni)), 3
+                ).alias("avg_logp"),
+            )
+        )
+        return r.finish(out)
 
 
 def gopher_rule_flags(

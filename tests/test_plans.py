@@ -24,6 +24,24 @@ def plan_of(df) -> str:
 
 
 @pytest.fixture()
+def finished_plans(monkeypatch):
+    """Plans of the frames operators hand to `Rounds.finish`, read while
+    their pins are still held (the finished frame's own plan is a scan of
+    its checkpoint)."""
+    from nsdb_spark.operators.rounds import Rounds
+
+    plans = []
+    finish = Rounds.finish
+
+    def record(self, out):
+        plans.append(plan_of(out))
+        return finish(self, out)
+
+    monkeypatch.setattr(Rounds, "finish", record)
+    return plans
+
+
+@pytest.fixture()
 def sharded_engine(engine):
     engine.warehouse.init_metric("default", "default", "planm", 10000)
     engine.insert_bits(
@@ -616,17 +634,14 @@ def test_domain_mixture_corpus_never_shuffles(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_dsir_scoring_join_is_broadcast(spark):
+def test_dsir_scoring_join_is_broadcast(spark, finished_plans):
     from pyspark.sql import functions as F
 
     from nsdb_spark.operators import selection
 
     docs = testdata.table(spark, SF_DIR, "documents")
-    # materialize=False: the released operator localCheckpoints (which
-    # truncates the plan); the lazy frame carries the shape to assert
-    plan = plan_of(
-        selection.dsir_weights(docs, F.col("lang") == "en", materialize=False)
-    )
+    selection.dsir_weights(docs, F.col("lang") == "en")
+    (plan,) = finished_plans
     # the fixed buckets-row LM ratio table broadcasts into the token
     # stream; the only SortMergeJoin-free wide op is the doc_id groupBy
     assert "BroadcastHashJoin" in plan
@@ -1083,22 +1098,22 @@ def test_point_serve_sql_route_keeps_partition_pruning(sharded_engine):
     assert sorted(r[0] for r in df.collect()) == [45000, 50000, 55000]
 
 
-def test_embedding_cosine_score_stays_out_of_join_condition(spark, monkeypatch):
+def test_embedding_cosine_score_stays_out_of_join_condition(spark, finished_plans):
     """The threshold filter must NOT fold into the pair join's
     condition: there the 64-term dot product runs on the interpreted
     predicate path for every candidate pair, ahead of the cheap id cut
     (measured 396 task-seconds vs ~1 at sf0.1, round 8). The rand-based
     pushdown barrier keeps the scoring in a Project ABOVE the join, so
-    the join condition may reference only the id columns. _finish is
-    stubbed to identity so the pre-materialization plan is inspectable."""
+    the join condition may reference only the id columns. The plan is
+    read before the result is materialized (finished_plans)."""
     from nsdb_spark.operators import dedup
 
-    monkeypatch.setattr(dedup, "_finish", lambda out, *pins: out)
     emb = spark.createDataFrame(
         [(i, [float(i), 1.0, 0.5, 2.0]) for i in range(8)],
         "vec_id long, embedding array<float>",
     )
-    plan = plan_of(dedup.embedding_cosine_pairs(emb, threshold=0.9))
+    dedup.embedding_cosine_pairs(emb, threshold=0.9)
+    (plan,) = finished_plans
     join_line = next(
         ln for ln in plan.splitlines() if "NestedLoopJoin" in ln or "CartesianProduct" in ln
     )
@@ -1108,19 +1123,19 @@ def test_embedding_cosine_score_stays_out_of_join_condition(spark, monkeypatch):
     assert "[0]" not in join_line
 
 
-def test_containment_pair_join_evaluated_once(spark, monkeypatch):
+def test_containment_pair_join_evaluated_once(spark, finished_plans):
     """Both containment directions must come from ONE evaluation of the
     sized pair frame (a 2-row explode), not a union of two projections
     that duplicates the whole pair-join subtree (round 8: 51 -> 29 jobs,
     1081 -> 543 tasks at sf0.1)."""
     from nsdb_spark.operators import dedup
 
-    monkeypatch.setattr(dedup, "_finish", lambda out, *pins: out)
     docs = spark.createDataFrame(
         [(1, "a b c d e f"), (2, "a b c d e g"), (3, "x y z w q r")],
         "doc_id long, text string",
     )
-    plan = plan_of(dedup.containment_pairs(docs, n=3, threshold=0.1))
+    dedup.containment_pairs(docs, n=3, threshold=0.1)
+    (plan,) = finished_plans
     # one Generate for the direction explode; exactly one pair self-join
     # + two count joins => join-node count must be 3, not 6
     n_joins = sum(

@@ -2,6 +2,10 @@
 on Spark and its oracle_sql() in DuckDB at a given SF, compare row count,
 column names, and order-insensitive exact values.
 
+Each entry also runs on an empty Spark cache and must leave it empty: an
+entry whose result still holds a cached frame prints `PINNED <name>` and
+counts as a failure (an operator that did not release a pin).
+
 Usage: python tools/check_oracles.py [sf_dir] [query_name ...]
 """
 from __future__ import annotations
@@ -66,16 +70,22 @@ def main():
 
     qs = entry.queries()
     os_ = entry.oracle_sql()
+    cache = spark._jsparkSession.sharedState().cacheManager()
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        spark.catalog.clearCache()
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
             failures.append(name)
             print(f"FAIL {name}: spark error: {str(e)[:300]}")
+            continue
+        if not cache.isEmpty():
+            failures.append(name)
+            print(f"PINNED {name}: a cached frame outlived the entry")
             continue
         sql = os_.get(name)
         if sql is None:
