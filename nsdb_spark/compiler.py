@@ -601,12 +601,16 @@ class QueryCompiler:
         schema: MetricSchema,
         parsed: ParsedQuery,
         ctx: TimeContext | None = None,
-        locations: list[int] | None = None,
+        *,
+        locations: list[int],
     ) -> DataFrame:
-        """locations: known shard_start values (partition listing). For
-        temporal queries they give the bucket upper bound without a data
-        scan — at scale this is a metadata lookup, parity with NSDb's
-        location filtering (ReadCoordinator.scala:210-214)."""
+        """locations: the shard_start values of df's data (the partition
+        listing, or a footer-derived extent). A temporal query's bucket
+        axis spans [min(locations), max(locations) + shard interval],
+        clipped by the WHERE intervals: the extent is metadata, never a
+        scan, parity with NSDb's location filtering
+        (ReadCoordinator.scala:210-214). No locations means no data: a
+        temporal query then returns its empty result without a job."""
         ctx = ctx or TimeContext(_now_ms())
         stmt = parsed.statement
         filtered = (
@@ -724,28 +728,19 @@ class QueryCompiler:
         df: DataFrame,
         q: ParsedTemporalAggregatedQuery,
         ctx: TimeContext,
-        locations: list[int] | None,
+        locations: list[int],
     ) -> DataFrame:
         stmt = q.statement
         interval = q.interval_ms
         si = self.shard_interval_ms
+        if not locations:
+            return self._empty_temporal(q, df)
 
         # bucket bounds: shard-aligned data extent clipped by the WHERE range
         # (ReadCoordinator.scala:256-272 + TimeRangeManager.computeRangesFor...)
         cond = stmt.condition.expression if stmt.condition else None
         ivs = extract_time_range(cond, ctx)
-        if locations:
-            data_lower = min(locations)
-            data_upper = max(locations) + si
-        else:
-            # metadata-only fallback: min/max over the (already filtered)
-            # frame; against parquet this reads footers, not rows.
-            row = df.agg(F.min("timestamp"), F.max("timestamp")).first()
-            if row[0] is None:
-                return self._empty_temporal(q, df)
-            data_lower = (row[0] // si) * si
-            data_upper = (row[1] // si) * si + si
-        eff = temporal_axis(q, ctx, ivs, data_lower, data_upper)
+        eff = temporal_axis(q, ctx, ivs, min(locations), max(locations) + si)
         if not eff:
             return self._empty_temporal(q, df)
 

@@ -288,10 +288,13 @@ class NsdbEngine:
         the parquet page index (one min/max per 20k-row page) skips the
         pages outside a timestamp range (the point-tree role in the
         reference). Row-group stats rarely help: at the default block
-        size a sf0.1 shard (100k rows, 1.5 MB) is a single row group."""
+        size a sf0.1 shard (100k rows, 1.5 MB) is a single row group.
+        The sort leads with the shard column: a partitioned write requires
+        that ordering, and a sort on timestamp alone is replaced by one on
+        the shard column only."""
         return (
             frame.repartition(SHARD_COL)
-            .sortWithinPartitions("timestamp")
+            .sortWithinPartitions(SHARD_COL, "timestamp")
             .write.partitionBy(SHARD_COL)
             .parquet
         )
@@ -813,7 +816,7 @@ class NsdbEngine:
                 )
                 out = (
                     compiler.compile(
-                        df.drop(SHARD_COL), schema, parsed, ctx, locations=locations or None
+                        df.drop(SHARD_COL), schema, parsed, ctx, locations=locations
                     ),
                     parsed,
                     False,
@@ -1486,7 +1489,7 @@ class NsdbEngine:
                 db, ns, metric, shards,
                 df.filter(F.col(SHARD_COL).isin(shards))
                 .repartition(n_files, F.col(SHARD_COL))
-                .sortWithinPartitions("timestamp")
+                .sortWithinPartitions(SHARD_COL, "timestamp")
                 .write.partitionBy(SHARD_COL)
                 .parquet,
             )

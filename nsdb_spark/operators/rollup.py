@@ -560,10 +560,12 @@ def temporal_agg_via_rollup(
     shard_ms: int,
     agg: str,
     alias: str,
+    bounds: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Build-then-query convenience used by the registry: proves the
-    rollup path is result-identical to the raw temporal path (same oracle)."""
-    rollup, bounds = build_temporal_rollup(metric_df, fine_ms, shard_ms)
+    rollup path is result-identical to the raw temporal path (same oracle).
+    `bounds` pins the axis as in build_temporal_rollup."""
+    rollup, bounds = build_temporal_rollup(metric_df, fine_ms, shard_ms, bounds)
     return temporal_from_rollup(spark, rollup, bounds, fine_ms, coarse_ms, agg, alias)
 
 

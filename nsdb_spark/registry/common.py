@@ -79,7 +79,7 @@ def _round(df: DataFrame, cols: dict[str, int]) -> DataFrame:
 
 def _nsdb(sql: str, rounds: dict[str, int] | None = None, relative_now: bool = False):
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        now = testdata.events_max_ts(spark, sf_dir) if relative_now else None
+        now = testdata.events_ts_range(sf_dir)[1] if relative_now else None
         df = testdata.run_nsdb_on_events(spark, sf_dir, sql, now_ms=now)
         return _round(df, rounds) if rounds else df
 
@@ -266,9 +266,9 @@ def _pagerank_oracle(iters: int = 5, damping: float = 0.85) -> str:
     steps = []
     for t in range(1, iters + 1):
         steps.append(f"""
-s{t} AS (SELECT we.d AS node, sum(r.rank * we.wt) AS in_mass
+s{t} AS MATERIALIZED (SELECT we.d AS node, sum(r.rank * we.wt) AS in_mass
         FROM we JOIN r{t - 1} r ON we.s = r.node GROUP BY we.d),
-r{t} AS (SELECT d.doc_id AS node,
+r{t} AS MATERIALIZED (SELECT d.doc_id AS node,
          (1.0 - {damping}) / (SELECT n FROM nct)
          + {damping} * (coalesce(s.in_mass, 0)
              + (1.0 - (SELECT coalesce(sum(in_mass), 0) FROM s{t}))
@@ -295,14 +295,14 @@ def _label_prop_oracle(iters: int = 4) -> str:
     steps = []
     for t in range(1, iters + 1):
         steps.append(f"""
-c{t} AS (SELECT e.s AS node, p.label, count(*) AS cnt
+c{t} AS MATERIALIZED (SELECT e.s AS node, p.label, count(*) AS cnt
         FROM edges e JOIN l{t - 1} p ON e.d = p.node GROUP BY 1, 2),
-b{t} AS (SELECT node, label AS new_label FROM (
+b{t} AS MATERIALIZED (SELECT node, label AS new_label FROM (
           SELECT node, label,
                  row_number() OVER (PARTITION BY node
                                     ORDER BY cnt DESC, label ASC) AS rn
           FROM c{t}) WHERE rn = 1),
-l{t} AS (SELECT p.node, coalesce(b.new_label, p.label) AS label
+l{t} AS MATERIALIZED (SELECT p.node, coalesce(b.new_label, p.label) AS label
         FROM l{t - 1} p LEFT JOIN b{t} b USING (node))""")
     return f"""
 WITH {_shingles_cte(capped=True)},{_guarded_pairs_cte(0.5)},{_EDGES_CTE},
@@ -320,14 +320,14 @@ def _modularity_oracle(iters: int = 4) -> str:
     steps = []
     for t in range(1, iters + 1):
         steps.append(f"""
-c{t} AS (SELECT e.s AS node, p.label, count(*) AS cnt
+c{t} AS MATERIALIZED (SELECT e.s AS node, p.label, count(*) AS cnt
         FROM edges e JOIN l{t - 1} p ON e.d = p.node GROUP BY 1, 2),
-b{t} AS (SELECT node, label AS new_label FROM (
+b{t} AS MATERIALIZED (SELECT node, label AS new_label FROM (
           SELECT node, label,
                  row_number() OVER (PARTITION BY node
                                     ORDER BY cnt DESC, label ASC) AS rn
           FROM c{t}) WHERE rn = 1),
-l{t} AS (SELECT p.node, coalesce(b.new_label, p.label) AS label
+l{t} AS MATERIALIZED (SELECT p.node, coalesce(b.new_label, p.label) AS label
         FROM l{t - 1} p LEFT JOIN b{t} b USING (node))""")
     return f"""
 WITH {_shingles_cte(capped=True)},{_guarded_pairs_cte(0.5)},{_EDGES_CTE},

@@ -93,6 +93,7 @@ def register(q):
         rollup.temporal_agg_via_rollup(
             spark, testdata.events_metric(spark, sf), fine_ms=86400000,
             coarse_ms=604800000, shard_ms=SHARD, agg="sum", alias="sum_value",
+            bounds=testdata.events_bounds(sf),
         ),
         {"sum_value": 3},
     )
@@ -100,6 +101,7 @@ def register(q):
         rollup.temporal_agg_via_rollup(
             spark, testdata.events_metric(spark, sf), fine_ms=43200000,
             coarse_ms=172800000, shard_ms=SHARD, agg="avg", alias="avg_value",
+            bounds=testdata.events_bounds(sf),
         ),
         {"avg_value": 3},
     )
@@ -123,7 +125,8 @@ def register(q):
     def _rollup_pct(spark, sf):
         ev = testdata.events_metric(spark, sf)
         r, _b, vr = rollup.build_quantile_rollup(
-            ev, fine_ms=86400000, shard_ms=SHARD, nbins=256
+            ev, fine_ms=86400000, shard_ms=SHARD, nbins=256,
+            bounds=testdata.events_bounds(sf),
         )
         return rollup.percentiles_from_quantile_rollup(
             spark, r, [0.25, 0.5, 0.9, 0.99], vr, nbins=256
@@ -137,7 +140,8 @@ def register(q):
     def _rollup_tpct(spark, sf):
         ev = testdata.events_metric(spark, sf)
         r, b, vr = rollup.build_quantile_rollup(
-            ev, fine_ms=86400000, shard_ms=SHARD, nbins=256
+            ev, fine_ms=86400000, shard_ms=SHARD, nbins=256,
+            bounds=testdata.events_bounds(sf),
         )
         return rollup.temporal_percentile_from_quantile_rollup(
             spark, r, 0.9, b, fine_ms=86400000, coarse_ms=604800000,
@@ -162,7 +166,8 @@ def register(q):
     def _rollup_tcd(spark, sf):
         ev = testdata.events_metric(spark, sf)
         r, b = rollup.build_distinct_rollup(
-            ev, "user_id", fine_ms=86400000, shard_ms=SHARD, m_buckets=4096
+            ev, "user_id", fine_ms=86400000, shard_ms=SHARD, m_buckets=4096,
+            bounds=testdata.events_bounds(sf),
         )
         return rollup.temporal_count_distinct_from_rollup(
             spark, r, b, fine_ms=86400000, coarse_ms=604800000, m_buckets=4096
@@ -175,7 +180,8 @@ def register(q):
         # per bucket) — the 100 TB default for unbounded cardinalities
         ev = testdata.events_metric(spark, sf)
         r, b = rollup.build_hll_rollup(
-            ev, "user_id", fine_ms=86400000, shard_ms=SHARD, p=10
+            ev, "user_id", fine_ms=86400000, shard_ms=SHARD, p=10,
+            bounds=testdata.events_bounds(sf),
         )
         return rollup.temporal_hll_from_rollup(
             spark, r, b, fine_ms=86400000, coarse_ms=604800000, p=10
@@ -187,7 +193,8 @@ def register(q):
         # trending items per window, served from mergeable counts
         ev = testdata.events_metric(spark, sf)
         r, b = rollup.build_group_temporal_rollup(
-            ev, "event_type", fine_ms=86400000, shard_ms=SHARD
+            ev, "event_type", fine_ms=86400000, shard_ms=SHARD,
+            bounds=testdata.events_bounds(sf),
         )
         return rollup.temporal_topk_from_rollup(
             spark, r, b, fine_ms=86400000, coarse_ms=604800000, n_top=3

@@ -16,9 +16,19 @@ reads through sources/parquet.read_parquet. The first read of a table file
 infers its schema (one Spark job); later reads of the same file version,
 under the same parquet inference confs (nanosAsLong among them), pass the
 remembered schema and launch no job while the frame is built.
+
+Temporal extent: a temporal read's bucket axis spans the shard-aligned
+extent of the data, which NSDb takes from shard locations, never from a
+scan (ReadCoordinator.scala:210-214). `events_ts_range` reads the events
+file's ts min/max from its parquet footer statistics (no Spark job, no
+data page), floored to ms as `ts_ms` floors; `events_bounds` snaps it to
+the shard grid. The NSDb pipeline (`run_nsdb_on_events`), the relative-
+time `now` and the rollup entries' `bounds=` all take their extent from
+there, so building a temporal entry runs no Spark job.
 """
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -27,7 +37,7 @@ from pyspark.sql.types import LongType
 
 from ..analyzer import analyze
 from ..compiler import QueryCompiler, TimeContext
-from ..model import FieldClass, MetricSchema, NsdbType, SchemaField
+from ..model import FieldClass, MetricSchema, NsdbType, SchemaField, shard_start
 from ..sql.parser import parse
 from .parquet import read_parquet
 
@@ -83,9 +93,38 @@ def events_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_max_ts(spark: SparkSession, sf_dir: str) -> int:
-    """Deterministic `now` for relative-time queries: the data's max ms."""
-    return events_metric(spark, sf_dir).agg(F.max("timestamp")).first()[0]
+#: ticks per ms of each parquet TIMESTAMP logical type unit
+_PER_MS = {"milliseconds": 1, "microseconds": 1_000, "nanoseconds": 1_000_000}
+
+
+def events_ts_range(sf_dir: str) -> tuple[int, int]:
+    """(min, max) of events.ts in epoch ms, from the parquet footer's
+    column statistics: the unit comes from ts's TIMESTAMP logical type,
+    and each bound floors to ms exactly as `ts_ms` does. Raises
+    ValueError naming the file when the footer has no ts statistics."""
+    import pyarrow.parquet as pq
+
+    path = os.path.join(sf_dir, "events.parquet")
+    meta = pq.ParquetFile(path).metadata
+    i = meta.schema.names.index("ts")
+    lt = meta.schema.column(i).logical_type
+    unit = json.loads(lt.to_json()).get("timeUnit") if lt.type == "TIMESTAMP" else None
+    if unit not in _PER_MS:
+        raise ValueError(f"{path}: ts is not a parquet TIMESTAMP column ({lt})")
+    groups = (meta.row_group(g) for g in range(meta.num_row_groups))
+    stats = [rg.column(i).statistics for rg in groups if rg.num_rows]
+    if not stats or any(st is None or not st.has_min_max for st in stats):
+        raise ValueError(f"{path}: no ts statistics in the parquet footer")
+    per_ms = _PER_MS[unit]
+    return min(st.min_raw for st in stats) // per_ms, max(st.max_raw for st in stats) // per_ms
+
+
+def events_bounds(sf_dir: str) -> tuple[int, int]:
+    """(lower, upper) of events' shard-aligned extent: the start of the
+    shard holding the first row, the end of the shard holding the last."""
+    lo, hi = events_ts_range(sf_dir)
+    si = SHARD_INTERVAL_MS
+    return shard_start(lo, si), shard_start(hi, si) + si
 
 
 def run_nsdb_on_events(
@@ -95,9 +134,13 @@ def run_nsdb_on_events(
     now_ms: int | None = None,
 ) -> DataFrame:
     """Full NSDb pipeline (parse → analyze → compile) over the events
-    metric frame."""
+    metric frame, its shard locations those of the footer extent."""
     stmt = parse(sql)
     parsed = analyze(stmt, EVENTS_SCHEMA)
     ctx = TimeContext(now_ms) if now_ms is not None else TimeContext(0)
     compiler = QueryCompiler(spark, shard_interval_ms=SHARD_INTERVAL_MS)
-    return compiler.compile(events_metric(spark, sf_dir), EVENTS_SCHEMA, parsed, ctx)
+    lower, upper = events_bounds(sf_dir)
+    return compiler.compile(
+        events_metric(spark, sf_dir), EVENTS_SCHEMA, parsed, ctx,
+        locations=list(range(lower, upper, SHARD_INTERVAL_MS)),
+    )

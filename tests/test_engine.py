@@ -907,6 +907,40 @@ def test_compaction_merges_small_files(engine):
     assert after == before
 
 
+def test_shard_files_sorted_on_timestamp(engine, spark, tmp_path):
+    """Every shard file an insert or a compaction writes is sorted on
+    timestamp, also when the input is not: a partitioned write sorts on
+    the shard column, and a sort on timestamp alone gave way to it."""
+    import glob
+    import os
+    import random
+
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    rows = [(t, float(t)) for t in range(0, 6000, 5)]  # 6 shards of 1000 ms
+    random.Random(7).shuffle(rows)
+    src = str(tmp_path / "shuffled.parquet")
+    pd.DataFrame(rows, columns=["timestamp", "value"]).to_parquet(src, index=False)
+    engine.warehouse.init_metric("default", "default", "shuf", 1000)
+    for _ in range(2):
+        engine.insert_frame("default", "default", "shuf", spark.read.parquet(src))
+    dp = engine.warehouse.data_path("default", "default", "shuf")
+
+    def unsorted_files():
+        out = []
+        for f in glob.glob(os.path.join(dp, "shard_start=*", "*.parquet")):
+            ts = pq.read_table(f, columns=["timestamp"]).column(0).to_pylist()
+            if ts != sorted(ts):
+                out.append(f)
+        return out
+
+    assert unsorted_files() == []
+    assert len(engine.compact_metric("default", "default", "shuf", min_files=2)) == 6
+    assert unsorted_files() == []
+    assert engine.execute("select count(*) from shuf").collect()[0][0] == 2 * len(rows)
+
+
 def test_concurrent_compactions_keep_untouched_shards(engine, monkeypatch):
     """Two metrics compacted at once on the one shared session, with B's
     write held until A's compact_metric has returned: B's untouched shard

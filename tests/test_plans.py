@@ -215,19 +215,48 @@ def test_shard_pruned_serving_aggregate_is_one_task(sharded_engine, sql):
     assert (jobs, tasks) == (1, 1)
 
 
-def test_known_schema_entry_build_launches_no_job(spark):
+@pytest.mark.parametrize("name", [
+    "nsdb_groupby_sum", "nsdb_temporal_count", "nsdb_temporal_since",
+    "rollup_temporal_sum",
+])
+def test_known_schema_entry_build_launches_no_job(spark, name):
     """Building a registry entry over a testdata directory whose table
     schema is already known runs no Spark job: the events schema is
-    inferred once (one job), and later reads pass it."""
+    inferred once (one job), later reads pass it, and a temporal entry
+    takes its extent (and `now`) from the events file's footer."""
     from nsdb_spark.entry_queries import build_queries
     from nsdb_spark.sources import parquet
 
-    build = build_queries()["nsdb_groupby_sum"]
+    build = build_queries()[name]
     parquet._SCHEMAS.clear()
     cold, _ = _jobs_during(spark, lambda: build(spark, SF_DIR))
     warm, df = _jobs_during(spark, lambda: build(spark, SF_DIR))
     assert (cold, warm) == (1, 0)
     assert df.collect()
+
+
+def test_temporal_compile_without_locations_is_empty_and_runs_no_job(spark):
+    """A temporal statement compiled with no shard locations (no data)
+    returns the empty temporal result, built and collected without a
+    Spark job."""
+    from nsdb_spark.analyzer import analyze
+    from nsdb_spark.compiler import QueryCompiler, TimeContext
+    from nsdb_spark.sql.parser import parse
+
+    parsed = analyze(
+        parse("select count(*) from events group by interval 1d"), testdata.EVENTS_SCHEMA
+    )
+    compiler = QueryCompiler(spark, shard_interval_ms=testdata.SHARD_INTERVAL_MS)
+    frame = testdata.events_metric(spark, SF_DIR)
+    jobs, df = _jobs_during(
+        spark,
+        lambda: compiler.compile(
+            frame, testdata.EVENTS_SCHEMA, parsed, TimeContext(0), locations=[]
+        ),
+    )
+    assert jobs == 0
+    assert df.columns == ["timestamp", "lower_bound", "upper_bound", "count_value"]
+    assert _jobs_during(spark, df.collect) == (0, [])
 
 
 def test_rollup_read_of_unchanged_store_skips_schema_job(sharded_engine):

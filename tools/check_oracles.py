@@ -6,6 +6,9 @@ Each entry also runs on an empty Spark cache and must leave it empty: an
 entry whose result still holds a cached frame prints `PINNED <name>` and
 counts as a failure (an operator that did not release a pin).
 
+Each OK/FAIL line ends with the entry's Spark seconds (build, execute,
+collect) and its oracle's DuckDB seconds, timed apart.
+
 Usage: python tools/check_oracles.py [sf_dir] [query_name ...]
 """
 from __future__ import annotations
@@ -59,6 +62,8 @@ def main():
         .config("spark.sql.shuffle.partitions", "16")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # stage progress bars would share a line with an OK/FAIL report
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", "8g")
         .getOrCreate()
     )
@@ -81,8 +86,9 @@ def main():
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
             failures.append(name)
-            print(f"FAIL {name}: spark error: {str(e)[:300]}")
+            print(f"FAIL {name}: spark error: {str(e)[:300]} [spark {time.time() - t0:.1f}s]")
             continue
+        spark_s = time.time() - t0
         if not cache.isEmpty():
             failures.append(name)
             print(f"PINNED {name}: a cached frame outlived the entry")
@@ -91,28 +97,32 @@ def main():
         if sql is None:
             print(f"SKIP {name}: no oracle (rows={len(sdf)})")
             continue
+        t0 = time.time()
         try:
             odf = con.execute(sql).fetch_df()
         except Exception as e:
             failures.append(name)
-            print(f"FAIL {name}: duckdb error: {str(e)[:300]}")
+            print(
+                f"FAIL {name}: duckdb error: {str(e)[:300]} "
+                f"[spark {spark_s:.1f}s, duckdb {time.time() - t0:.1f}s]"
+            )
             continue
+        times = f"[spark {spark_s:.1f}s, duckdb {time.time() - t0:.1f}s]"
         scols, srows = normalize(sdf)
         ocols, orows = normalize(odf)
-        dt = time.time() - t0
         if scols != ocols:
             failures.append(name)
-            print(f"FAIL {name}: columns {scols} vs {ocols}")
+            print(f"FAIL {name}: columns {scols} vs {ocols} {times}")
         elif len(srows) != len(orows):
             failures.append(name)
-            print(f"FAIL {name}: rows {len(srows)} vs {len(orows)}")
+            print(f"FAIL {name}: rows {len(srows)} vs {len(orows)} {times}")
             _diff(srows, orows)
         elif srows != orows:
             failures.append(name)
-            print(f"FAIL {name}: value mismatch ({len(srows)} rows)")
+            print(f"FAIL {name}: value mismatch ({len(srows)} rows) {times}")
             _diff(srows, orows)
         else:
-            print(f"OK   {name}: {len(srows)} rows, cols={scols} [{dt:.1f}s]")
+            print(f"OK   {name}: {len(srows)} rows, cols={scols} {times}")
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     spark.stop()
     sys.exit(1 if failures else 0)
