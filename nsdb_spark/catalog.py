@@ -278,6 +278,24 @@ class Warehouse:
                 out.append(int(m.group(1)))
         return sorted(out)
 
+    def shard_files(self, db: str, ns: str, metric: str, shards: list[int]) -> list[str]:
+        """The parquet files of the listed shards, in shard order and by
+        name within a shard (hidden files skipped, as Spark's listing
+        skips them); a shard directory that is gone lists nothing."""
+        dp = self.data_path(db, ns, metric)
+        out = []
+        for start in sorted(shards):
+            sd = os.path.join(dp, f"{SHARD_COL}={start}")
+            try:
+                names = sorted(os.listdir(sd))
+            except FileNotFoundError:
+                continue
+            out += [
+                os.path.join(sd, n) for n in names
+                if n.endswith(".parquet") and not n.startswith((".", "_"))
+            ]
+        return out
+
     def shard_stats(self, db: str, ns: str, metric: str) -> list[dict]:
         """Per-shard location descriptors — the Location(metric, node,
         from, to) listing of the reference's GetLiveLocations
@@ -292,15 +310,9 @@ class Warehouse:
         import pyarrow.parquet as pq
 
         interval = self.get_info(db, ns, metric)["shardInterval"]
-        dp = self.data_path(db, ns, metric)
         out = []
         for start in self.locations(db, ns, metric):
-            sd = os.path.join(dp, f"shard_start={start}")
-            files = [
-                os.path.join(sd, f)
-                for f in os.listdir(sd)
-                if f.endswith(".parquet")
-            ]
+            files = self.shard_files(db, ns, metric, [start])
             rows = 0
             size = 0
             for f in files:

@@ -26,6 +26,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -106,6 +107,47 @@ def compile_expression(e: ast.Expression, ctx: TimeContext) -> Column:
     raise TypeError(f"unknown expression {e!r}")
 
 
+def arrow_expression(e: ast.Expression, ctx: TimeContext) -> pc.Expression:
+    """compile_expression's pyarrow twin, for the point reads the engine
+    serves from the shard files: the same predicate as a pyarrow.compute
+    expression, under Spark's semantics where Arrow's differ. AND/OR are
+    Kleene on both sides; NOT is the complement of coalesce(inner, false);
+    LIKE matches like_to_regex, whose every literal is escaped, so RE2
+    reads it as Java does (a value holding a line break aside: Java's `.`
+    and `$` treat a CR and a final LF specially). `>` and `>=` are the
+    complements of `<=` and `<`: Spark orders NaN above every number, and
+    Arrow compares it as IEEE does, false either way."""
+    if isinstance(e, ast.EqualityExpression):
+        return pc.field(e.dimension) == _resolve_value(e.value, ctx)
+    if isinstance(e, ast.ComparisonExpression):
+        c, v = pc.field(e.dimension), _resolve_value(e.value, ctx)
+        return {">": ~(c <= v), ">=": ~(c < v), "<": c < v, "<=": c <= v}[e.operator]
+    if isinstance(e, ast.RangeExpression):
+        c = pc.field(e.dimension)
+        return (c >= _resolve_value(e.value1, ctx)) & (c <= _resolve_value(e.value2, ctx))
+    if isinstance(e, ast.LikeExpression):
+        return pc.match_substring_regex(pc.field(e.dimension), like_to_regex(e.value))
+    if isinstance(e, ast.NullableExpression):
+        c = pc.field(e.dimension)
+        return c.is_valid() if e.negated else c.is_null()
+    if isinstance(e, ast.NotExpression):
+        return ~pc.coalesce(arrow_expression(e.expression, ctx), pc.scalar(False))
+    if isinstance(e, ast.TupledLogicalExpression):
+        l = arrow_expression(e.expression1, ctx)
+        r = arrow_expression(e.expression2, ctx)
+        return (l & r) if e.operator == "and" else (l | r)
+    raise TypeError(f"unknown expression {e!r}")
+
+
+def projection(schema: MetricSchema, fields: list[str]) -> list[str]:
+    """The columns of a plain SELECT, in output order: every field when
+    `fields` is empty, else timestamp and value (always included,
+    docs/SQL_doc.md:39) then the named fields."""
+    if not fields:
+        return schema.all_field_names()
+    return ["timestamp", "value"] + [f for f in fields if f not in ("timestamp", "value")]
+
+
 # ------------------------------------------------- parameterized-SQL serving
 
 def _sql_ident(name: str) -> str:
@@ -171,12 +213,7 @@ def serving_sql(
     point-statement floor."""
     stmt = parsed.statement
     args: dict = {}
-    fields = parsed.fields
-    if not fields:
-        cols = schema.all_field_names()
-    else:
-        cols = ["timestamp", "value"]
-        cols += [f for f in fields if f not in ("timestamp", "value")]
+    cols = projection(schema, parsed.fields)
     parts = [f"SELECT {', '.join(_sql_ident(c) for c in cols)} FROM {_sql_ident(view)}"]
     conjuncts = []
     if shards:
@@ -630,20 +667,12 @@ class QueryCompiler:
         raise TypeError(f"unknown parsed query {parsed!r}")
 
     # -- simple ---------------------------------------------------------
-    def _projection(self, schema: MetricSchema, fields: list[str]) -> list[str]:
-        if not fields:
-            return schema.all_field_names()
-        # timestamp & value are always included (docs/SQL_doc.md:39)
-        cols = ["timestamp", "value"]
-        cols += [f for f in fields if f not in ("timestamp", "value")]
-        return cols
-
     def _simple(self, df: DataFrame, schema: MetricSchema, q: ParsedSimpleQuery) -> DataFrame:
         stmt = q.statement
         if q.distinct:
             out = df.select(q.fields[0]).distinct()
         else:
-            out = df.select(*self._projection(schema, q.fields))
+            out = df.select(*projection(schema, q.fields))
         out = _order(out, stmt.order)
         if stmt.limit:
             out = out.limit(stmt.limit.value)
@@ -696,7 +725,7 @@ class QueryCompiler:
             return agg_row
         # mixed plain+agg: every row carries the final aggregates
         # (post_proc/package.scala:387-394); single-row broadcast join.
-        rows = df.select(*self._projection(schema, q.plain_fields))
+        rows = df.select(*projection(schema, q.plain_fields))
         rows = _order(rows, stmt.order)
         if stmt.limit:
             rows = rows.limit(stmt.limit.value)

@@ -12,11 +12,13 @@ import dataclasses
 import functools
 import hashlib
 import logging
+import os
 import threading
 import time
 from typing import Any, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.dataset as pads
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from . import analyzer
@@ -26,8 +28,10 @@ from .compiler import (
     _BROADCAST_BUCKETS_MAX,
     QueryCompiler,
     TimeContext,
+    arrow_expression,
     bucket_count,
     extract_time_range,
+    projection,
     serving_sql,
     shard_ranges,
     temporal_axis,
@@ -55,9 +59,39 @@ class RetentionError(Exception):
 class _Planned(NamedTuple):
     """A plan-cache entry."""
 
-    plan: tuple  # (DataFrame, analyzed plan, rollup-routed?)
+    # (DataFrame, analyzed plan, rollup-routed?); DataFrame None when the
+    # rows were read from the shard files (_read_point_rows)
+    plan: tuple
     rows: list | None = None  # collected rows, at most _CACHED_ROWS_MAX
     complete: bool = False  # rows are the statement's whole result
+
+
+def _read_shard_rows(
+    files: list[str], schema: MetricSchema, columns: list[str], predicate, bound: int
+) -> list:
+    """At most `bound` rows of `columns` that match the pyarrow
+    `predicate` (None: every row), read from the shard files in their
+    order with pyarrow under the registry schema, as the Rows Spark's
+    collect returns. Only the projected columns are decoded, and the scan
+    stops once it holds `bound` rows. A file removed after the listing is
+    skipped, as ignoreMissingFiles skips it on the Spark route."""
+    while True:
+        try:
+            table = (
+                pads.dataset(files, schema=schema.to_arrow_schema(), format="parquet")
+                .scanner(columns=sorted(set(columns)), filter=predicate)
+                .head(bound)
+            )
+            break
+        except FileNotFoundError:
+            kept = [f for f in files if os.path.exists(f)]
+            if len(kept) == len(files):
+                raise
+            files = kept
+    rows = [Row(*values) for values in zip(*(table[c].to_pylist() for c in columns))]
+    for r in rows:
+        r.__fields__ = columns
+    return rows
 
 
 def _serving_view(db: str, ns: str, metric: str) -> str:
@@ -107,7 +141,9 @@ class NsdbEngine:
         # with codegen + AQE disabled and one shuffle partition. It is the
         # one route for shard-pruned reads (_point_route): small-LIMIT
         # plain SELECTs and aggregates (tag group-by, global, temporal)
-        # whose pruning leaves at most _POINT_SERVE_MAX_SHARDS shards.
+        # whose pruning leaves at most _POINT_SERVE_MAX_SHARDS shards
+        # (collect_select reads the unordered plain ones from the shard
+        # files instead, _read_point_rows).
         # Novel statements (unique literals — no cache can serve them) pay
         # Janino whole-stage compilation per literal on the default
         # session, and an aggregate's shuffle fans out over every core
@@ -661,7 +697,11 @@ class NsdbEngine:
 
         Statements that differ only in the LIMIT literal additionally
         share one execution of the LIMIT-stripped statement (see
-        _collect_via_shape)."""
+        _collect_via_shape). A novel plain `... LIMIT k` read with no
+        DISTINCT and no ORDER BY, k at most _POINT_SERVE_MAX_LIMIT and its
+        shard pruning leaving at most _POINT_SERVE_MAX_SHARDS shards, runs
+        no Spark job: its rows are read from the shard files with pyarrow
+        (_read_point_rows)."""
         slot = self._cache_slot(stmt)
         key, token = slot
         analysis = None
@@ -685,7 +725,7 @@ class NsdbEngine:
         time_context: TimeContext | None,
         key: tuple,
         token: tuple,
-    ) -> list | None:
+    ) -> tuple[list | None, tuple | None]:
         """Shape-keyed LIMIT binding for the distinct-statement dashboard
         workload: statements identical but for the LIMIT literal compile
         and execute ONCE — the plan-cache entry of the LIMIT-stripped
@@ -700,10 +740,14 @@ class NsdbEngine:
         globally ordered prefix, so the slice is the exact top-k).
         Aggregate classes are excluded because their VALUES depend on the
         limit (global count clamps to LIMIT; temporal LIMIT = takeRight —
-        SURVEY §2.5), not just their row count. Returns (rows, None), or
-        (None, analysis) when the statement isn't shape-eligible: the
-        caller falls through to the normal path with the analysis this
-        ran, if any."""
+        SURVEY §2.5), not just their row count.
+
+        A novel unordered point read (_read_point_rows) fetches its prefix
+        from the shard files with pyarrow, with no Spark job; its entry
+        holds the rows and no DataFrame. Every other shape plans and
+        collects through Spark. Returns (rows, None), or (None, analysis)
+        when the statement isn't shape-eligible: the caller falls through
+        to the normal path with the analysis this ran, if any."""
         k = stmt.limit.value
         if k <= 0:
             return None, None
@@ -713,30 +757,65 @@ class NsdbEngine:
         # analyzed plan, so the serve path pays no schema-file read and
         # no analyze pass
         ent = self._plans.get(skey, token)
-        if ent is None:
-            # the one analysis: LIMIT plays no part in it, so it serves the
-            # normal path too, and the shape once rebound to `nolimit`
-            schema, parsed = analysis = self._analyze(stmt)
-            if not isinstance(parsed, analyzer.ParsedSimpleQuery):
-                return None, analysis
-            plan = self._plan_select(
-                nolimit,
-                time_context,
-                point_serve=k <= self._POINT_SERVE_MAX_LIMIT,
-                slot=(skey, token),
-                analysis=(schema, dataclasses.replace(parsed, statement=nolimit)),
-            )
-        elif not isinstance(ent.plan[1], analyzer.ParsedSimpleQuery):
-            return None, None
-        elif ent.rows is not None and (ent.complete or len(ent.rows) >= k):
-            return ent.rows[:k], None
-        else:
-            plan = ent.plan
+        if ent is not None:
+            if not isinstance(ent.plan[1], analyzer.ParsedSimpleQuery):
+                return None, None
+            if ent.rows is not None and (ent.complete or len(ent.rows) >= k):
+                return ent.rows[:k], None
+        # the one analysis: LIMIT plays no part in it, so it serves the
+        # normal path too, and the shape once rebound to `nolimit`
+        schema, parsed = analysis = self._analyze(stmt)
+        if not isinstance(parsed, analyzer.ParsedSimpleQuery):
+            return None, analysis
+        parsed = dataclasses.replace(parsed, statement=nolimit)
+        point = k <= self._POINT_SERVE_MAX_LIMIT
         bound = max(k, self._CACHED_ROWS_MAX)
-        rows = plan[0].limit(bound).collect()
+        rows = None
+        if point:
+            rows = self._read_point_rows(nolimit, schema, parsed, time_context, bound)
+        if rows is not None:
+            plan = (None, parsed, False)
+        else:
+            plan = self._plan_select(
+                nolimit, time_context, point_serve=point, slot=(skey, token),
+                analysis=(schema, parsed),
+            )
+            rows = plan[0].limit(bound).collect()
         if len(rows) <= self._CACHED_ROWS_MAX:
             self._plans.put(skey, token, _Planned(plan, rows, len(rows) < bound))
         return rows[:k], None
+
+    def _read_point_rows(
+        self, stmt, schema: MetricSchema, parsed, time_context: TimeContext | None,
+        bound: int,
+    ) -> list | None:
+        """The first `bound` rows of a plain SELECT with no DISTINCT and no
+        ORDER BY that _point_route sends to the serving session, read from
+        its touched shards' files in shard order without Spark (the
+        reference's metric reader visits its shards in time order and
+        stops once it has the rows, MetricReaderActor.scala:173-198); None
+        for any other statement. The shard files hold only their own
+        shard's timestamps, so the WHERE alone stands for the shard
+        conjunct of the Spark route."""
+        if parsed.distinct or stmt.order is not None:
+            return None
+        db, ns = stmt.db or "default", stmt.namespace or "default"
+        ctx = time_context or TimeContext(self.now_fn())
+        si = self.warehouse.get_info(db, ns, stmt.metric)["shardInterval"]
+        cond = stmt.condition.expression if stmt.condition else None
+        ivs = extract_time_range(cond, ctx)
+        locations = self.warehouse.locations(db, ns, stmt.metric)
+        if not self._point_route(stmt, parsed, locations, ivs, si, True, ctx):
+            return None
+        return _read_shard_rows(
+            self.warehouse.shard_files(
+                db, ns, stmt.metric, touched_shards(locations, ivs, si)
+            ),
+            schema,
+            projection(schema, parsed.fields),
+            None if cond is None else arrow_expression(cond, ctx),
+            bound,
+        )
 
     #: serving gates (see _point_route): a read plans on the interpreted
     #: serving session only when shard pruning leaves at most
@@ -769,7 +848,7 @@ class NsdbEngine:
         key, token = slot or self._cache_slot(stmt)
         if key is not None:
             hit = self._plans.get(key, token)
-            if hit is not None:
+            if hit is not None and hit.plan[0] is not None:
                 return hit.plan
         db, ns = stmt.db or "default", stmt.namespace or "default"
         schema, parsed = analysis or self._analyze(stmt)
@@ -853,7 +932,12 @@ class NsdbEngine:
         its caller fetches at most _POINT_SERVE_MAX_LIMIT rows (its own
         LIMIT, or the shape path's vouched prefix). DISTINCT and
         LIMIT-less plain scans keep the codegen session — they are
-        data-sized regardless of the shard count."""
+        data-sized regardless of the shard count.
+
+        Of the plain SELECTs this passes, collect_select reads those with
+        no ORDER BY from the shard files without Spark
+        (_read_point_rows); the ordered ones, and every execute_select,
+        plan as one SQL text on the serving session (serving_sql)."""
         if isinstance(parsed, analyzer.ParsedSimpleQuery) and (
             parsed.distinct
             or not point_serve and (

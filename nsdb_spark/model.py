@@ -17,6 +17,7 @@ from dataclasses import dataclass, field as dc_field
 from enum import Enum
 from typing import Any, Mapping
 
+import pyarrow as pa
 from pyspark.sql import types as T
 
 
@@ -45,6 +46,10 @@ class NsdbType(str, Enum):
         return _SPARK_TYPES[self]
 
     @property
+    def arrow_type(self) -> pa.DataType:
+        return _ARROW_TYPES[self]
+
+    @property
     def is_numeric(self) -> bool:
         return self is not NsdbType.VARCHAR
 
@@ -54,6 +59,13 @@ _SPARK_TYPES = {
     NsdbType.BIGINT: T.LongType(),
     NsdbType.DECIMAL: T.DoubleType(),
     NsdbType.VARCHAR: T.StringType(),
+}
+
+_ARROW_TYPES = {
+    NsdbType.INT: pa.int32(),
+    NsdbType.BIGINT: pa.int64(),
+    NsdbType.DECIMAL: pa.float64(),
+    NsdbType.VARCHAR: pa.string(),
 }
 
 RESERVED_FIELDS = ("timestamp", "value")
@@ -211,6 +223,18 @@ class MetricSchema:
         if with_shard:
             struct = struct.add(T.StructField(SHARD_COL, T.LongType(), nullable=False))
         return struct
+
+    def to_arrow_schema(self) -> pa.Schema:
+        """to_struct_type() as a pyarrow schema, for reading shard files
+        without Spark: a shard file written before a field existed reads
+        that column as NULL."""
+        return pa.schema(
+            [
+                pa.field("timestamp", pa.int64(), nullable=False),
+                pa.field("value", self.value_type.arrow_type, nullable=False),
+            ]
+            + [pa.field(n, self.fields[n].nsdb_type.arrow_type) for n in sorted(self.fields)]
+        )
 
     def to_dict(self) -> dict:
         return {

@@ -364,19 +364,23 @@ def percentiles_from_quantile_rollup(
     bin: value = vlo + w·(bin + (q·n − cum_before)/cnt).
 
     Plan shape: the per-bin partials reduce to ≤nbins rows (map-side
-    combinable), the cumulative runs over those ≤nbins rows (the one
-    single-partition window in this operator is over the sketch, not the
-    data), and each q picks its bin with a broadcast-size join. Output
+    combinable), ONE window over those ≤nbins rows yields both the
+    cumulative and the total n (the one single-partition window in this
+    operator is over the sketch, not the data; the rollup is reduced
+    once), and each q picks its bin with a broadcast-size join. Output
     rounded to 6 (order-statistic discipline)."""
     hist = rollup.groupBy("bin").agg(F.sum("cnt").alias("cnt"))
+    by_bin = Window.orderBy("bin")
     cum = hist.select(
-        "bin", "cnt", F.sum("cnt").over(Window.orderBy("bin")).alias("cum")
+        "bin", "cnt",
+        F.sum("cnt").over(by_bin).alias("cum"),
+        F.sum("cnt").over(
+            by_bin.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        ).alias("n"),
     )
-    total = rollup.agg(F.sum("cnt").alias("n"))
     qdf = spark.createDataFrame([(float(q),) for q in qs], "q double")
     sel = (
-        qdf.crossJoin(F.broadcast(total))
-        .join(F.broadcast(cum), F.col("cum") >= F.col("q") * F.col("n"))
+        qdf.join(F.broadcast(cum), F.col("cum") >= F.col("q") * F.col("n"))
         .groupBy("q", "n")
         .agg(F.min_by(F.struct("bin", "cnt", "cum"), F.col("bin")).alias("s"))
     )

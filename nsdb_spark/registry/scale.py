@@ -127,6 +127,7 @@ def register(q):
         r, _b, vr = rollup.build_quantile_rollup(
             ev, fine_ms=86400000, shard_ms=SHARD, nbins=256,
             bounds=testdata.events_bounds(sf),
+            value_range=testdata.events_value_range(sf),
         )
         return rollup.percentiles_from_quantile_rollup(
             spark, r, [0.25, 0.5, 0.9, 0.99], vr, nbins=256
@@ -142,6 +143,7 @@ def register(q):
         r, b, vr = rollup.build_quantile_rollup(
             ev, fine_ms=86400000, shard_ms=SHARD, nbins=256,
             bounds=testdata.events_bounds(sf),
+            value_range=testdata.events_value_range(sf),
         )
         return rollup.temporal_percentile_from_quantile_rollup(
             spark, r, 0.9, b, fine_ms=86400000, coarse_ms=604800000,
@@ -153,7 +155,9 @@ def register(q):
     # per-group percentile from the group-keyed sketch (GROUP BY shape)
     def _rollup_gpct(spark, sf):
         ev = testdata.events_metric(spark, sf)
-        r, vr = rollup.build_group_quantile_rollup(ev, "event_type", nbins=256)
+        r, vr = rollup.build_group_quantile_rollup(
+            ev, "event_type", nbins=256, value_range=testdata.events_value_range(sf)
+        )
         return rollup.group_percentiles_from_quantile_rollup(
             r, "event_type", 0.9, vr, nbins=256
         )

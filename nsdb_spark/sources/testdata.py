@@ -24,7 +24,9 @@ file's ts min/max from its parquet footer statistics (no Spark job, no
 data page), floored to ms as `ts_ms` floors; `events_bounds` snaps it to
 the shard grid. The NSDb pipeline (`run_nsdb_on_events`), the relative-
 time `now` and the rollup entries' `bounds=` all take their extent from
-there, so building a temporal entry runs no Spark job.
+there, so building a temporal entry runs no Spark job. The quantile rollup
+entries take their value grid (`value_range=`) from the same footer
+(`events_value_range`).
 """
 from __future__ import annotations
 
@@ -97,26 +99,43 @@ def events_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PER_MS = {"milliseconds": 1, "microseconds": 1_000, "nanoseconds": 1_000_000}
 
 
+def _footer_min_max(sf_dir: str, column: str):
+    """(path, column descriptor, raw min, raw max) of one events column,
+    from its parquet footer statistics over every non-empty row group.
+    Raises ValueError naming the file when a row group has none."""
+    import pyarrow.parquet as pq
+
+    path = os.path.join(sf_dir, "events.parquet")
+    meta = pq.ParquetFile(path).metadata
+    i = meta.schema.names.index(column)
+    groups = (meta.row_group(g) for g in range(meta.num_row_groups))
+    stats = [rg.column(i).statistics for rg in groups if rg.num_rows]
+    if not stats or any(st is None or not st.has_min_max for st in stats):
+        raise ValueError(f"{path}: no {column} statistics in the parquet footer")
+    lo, hi = min(st.min_raw for st in stats), max(st.max_raw for st in stats)
+    return path, meta.schema.column(i), lo, hi
+
+
 def events_ts_range(sf_dir: str) -> tuple[int, int]:
     """(min, max) of events.ts in epoch ms, from the parquet footer's
     column statistics: the unit comes from ts's TIMESTAMP logical type,
     and each bound floors to ms exactly as `ts_ms` does. Raises
     ValueError naming the file when the footer has no ts statistics."""
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, "events.parquet")
-    meta = pq.ParquetFile(path).metadata
-    i = meta.schema.names.index("ts")
-    lt = meta.schema.column(i).logical_type
+    path, col, lo, hi = _footer_min_max(sf_dir, "ts")
+    lt = col.logical_type
     unit = json.loads(lt.to_json()).get("timeUnit") if lt.type == "TIMESTAMP" else None
     if unit not in _PER_MS:
         raise ValueError(f"{path}: ts is not a parquet TIMESTAMP column ({lt})")
-    groups = (meta.row_group(g) for g in range(meta.num_row_groups))
-    stats = [rg.column(i).statistics for rg in groups if rg.num_rows]
-    if not stats or any(st is None or not st.has_min_max for st in stats):
-        raise ValueError(f"{path}: no ts statistics in the parquet footer")
-    per_ms = _PER_MS[unit]
-    return min(st.min_raw for st in stats) // per_ms, max(st.max_raw for st in stats) // per_ms
+    return lo // _PER_MS[unit], hi // _PER_MS[unit]
+
+
+def events_value_range(sf_dir: str) -> tuple[float, float]:
+    """(min, max) of events.value from the parquet footer's column
+    statistics: the value grid of a quantile rollup, found without a
+    scan. Raises ValueError naming the file when the footer has no value
+    statistics."""
+    _path, _col, lo, hi = _footer_min_max(sf_dir, "value")
+    return float(lo), float(hi)
 
 
 def events_bounds(sf_dir: str) -> tuple[int, int]:

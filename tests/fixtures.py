@@ -78,3 +78,49 @@ def load(engine, metric: str, bits, shard_interval_ms: int | None = None):
         engine.warehouse.init_metric("default", "default", metric, shard_interval_ms)
     engine.insert_bits("default", "default", metric, bits)
     return engine
+
+
+# ------------------------------------------------- point-read route parity
+
+
+def column_route_rows(engine, stmt) -> list[tuple]:
+    """Rows of `stmt` on the codegen-session Column pipeline: the point
+    route forced off, so neither the serving session nor the shard-file
+    read answers."""
+    engine.invalidate_plan_caches()
+    orig = engine._point_route
+    engine._point_route = lambda *a, **k: False
+    try:
+        df, _, _ = engine._plan_select(stmt)
+        assert df.sparkSession is engine.spark
+        return [tuple(r) for r in df.collect()]
+    finally:
+        engine._point_route = orig
+        engine.invalidate_plan_caches()
+
+
+def file_served_rows(engine, stmt) -> list[tuple]:
+    """Rows of collect_select(stmt) with Spark planning forbidden, so only
+    the shard-file read (engine._read_point_rows) can answer."""
+
+    def no_spark(*a, **k):
+        raise AssertionError("planned through Spark")
+
+    engine.invalidate_plan_caches()
+    engine._plan_select = no_spark
+    try:
+        return [tuple(r) for r in engine.collect_select(stmt)]
+    finally:
+        del engine._plan_select
+        engine.invalidate_plan_caches()
+
+
+def assert_limit_rows(got: list[tuple], every: list[tuple], k: int, label: str) -> None:
+    """LIMIT k without ORDER BY: when k covers every match the rows are
+    exactly the matches (as a multiset); otherwise any k of them."""
+    from collections import Counter
+
+    if k >= len(every):
+        assert Counter(got) == Counter(every), label
+    else:
+        assert len(got) == k and not Counter(got) - Counter(every), label

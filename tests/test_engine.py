@@ -1,5 +1,7 @@
 """End-to-end engine tests over the golden fixtures (FIXTURES.md), modelled
 on the reference's ReadCoordinator*Spec golden-output suites."""
+import dataclasses
+
 import pytest
 
 from nsdb_spark.compiler import TimeContext
@@ -13,6 +15,9 @@ from fixtures import (
     LONG_METRIC,
     NEGATIVE_METRIC,
     TEMPORAL_LONG_METRIC,
+    assert_limit_rows,
+    column_route_rows,
+    file_served_rows,
     load,
 )
 
@@ -2399,8 +2404,9 @@ def test_novel_limit_read_analyzes_once(long_engine, monkeypatch):
     def stmt(sql):
         return parse(sql, db="default", namespace="default")
 
-    # warm the base frame, so its own schema read is not counted
-    long_engine.collect_select(stmt("select * from longMetric limit 1"))
+    # warm the base frame, so its own schema read is not counted (an
+    # ordered read: an unordered one is read from the shard files)
+    long_engine.collect_select(stmt("select * from longMetric order by timestamp limit 1"))
     calls = {"analyze": 0, "get_schema": 0}
     orig_analyze = analyzer.analyze
     orig_schema = long_engine.warehouse.get_schema
@@ -2645,7 +2651,11 @@ def test_point_serving_sql_text_route_parity_grid(agg_engine):
     spark.sql text (compiler.serving_sql). Every predicate construct the
     plain class supports must return EXACTLY what the Column pipeline
     returns — clause-by-clause parity with compile_expression — and the
-    plan must actually scan the serving temp view (no silent fallback)."""
+    plan must actually scan the serving temp view (no silent fallback).
+    An unordered variant is also read from the shard files by
+    collect_select (compiler.arrow_expression), with no Spark planning:
+    with LIMIT k it returns every match when k covers them, else k of
+    them."""
     from nsdb_spark.sql.parser import parse
 
     grid = [
@@ -2671,6 +2681,22 @@ def test_point_serving_sql_text_route_parity_grid(agg_engine):
         "timestamp < 9 order by timestamp limit 100",
         "select * from aggregationLongMetric where not "
         "(name = 'Bill' or age is null) order by timestamp limit 100",
+        # unordered: also served from the shard files
+        "select * from aggregationLongMetric limit 4",
+        "select name, age from aggregationLongMetric where name = 'John' limit 100",
+        "select * from aggregationLongMetric where age > 15 limit 2",
+        "select * from aggregationLongMetric where value >= 2 and value <= 4 limit 100",
+        "select * from aggregationLongMetric where age in (15, 16) limit 3",
+        "select * from aggregationLongMetric where name like '$ran$' limit 100",
+        "select * from aggregationLongMetric where age is not null and "
+        "height < 31.0 limit 100",
+        "select * from aggregationLongMetric where not age = 15 limit 100",
+        "select * from aggregationLongMetric where name = 'John' or "
+        "(age >= 16 and height < 32.0) limit 100",
+        "select * from aggregationLongMetric where timestamp > 3 and "
+        "timestamp <= 9 limit 100",
+        "select * from aggregationLongMetric where not "
+        "(name = 'Bill' or age is null) limit 3",
     ]
     for q in grid:
         stmt = parse(q, db="default", namespace="default")
@@ -2682,20 +2708,71 @@ def test_point_serving_sql_text_route_parity_grid(agg_engine):
         assert "nsdb_pt_" in analyzed, q
         got = [tuple(r) for r in df.collect()]
         # reference: the codegen-session Column pipeline on the same data
-        agg_engine.invalidate_plan_caches()
-        orig = agg_engine._point_route
-        agg_engine._point_route = lambda *a, **k: False
-        try:
-            dfr, _, _ = agg_engine._plan_select(stmt)
-            assert dfr.sparkSession is agg_engine.spark
-            want = [tuple(r) for r in dfr.collect()]
-        finally:
-            agg_engine._point_route = orig
-            agg_engine.invalidate_plan_caches()
         if "order by" in q:
-            assert got == want, q
-        else:
-            assert sorted(got) == sorted(want), q
+            assert got == column_route_rows(agg_engine, stmt), q
+            continue
+        every = column_route_rows(agg_engine, dataclasses.replace(stmt, limit=None))
+        k = stmt.limit.value
+        assert_limit_rows(got, every, k, q)
+        assert_limit_rows(file_served_rows(agg_engine, stmt), every, k, q)
+
+
+def test_point_read_from_files_reads_a_later_field_as_null(engine):
+    """A shard file written before a field existed has no column for it:
+    the shard-file read returns NULL there, as the Column route does."""
+    from nsdb_spark.sql.parser import parse
+
+    engine.insert_bits("default", "default", "evo", [
+        Bit(1, 1, {}, {"a": "x"}), Bit(2, 2, {}, {"a": "y"}),
+    ])
+    engine.insert_bits("default", "default", "evo", [Bit(3, 3, {"d": 7}, {"a": "z"})])
+    stmt = parse("select * from evo limit 10", db="default", namespace="default")
+    got = file_served_rows(engine, stmt)
+    assert sorted(got) == [(1, 1, "x", None), (2, 2, "y", None), (3, 3, "z", 7)]
+    every = column_route_rows(engine, dataclasses.replace(stmt, limit=None))
+    assert_limit_rows(got, every, 10, "evo")
+
+
+def test_point_read_from_files_skips_a_file_removed_after_listing(engine, monkeypatch):
+    """A shard file removed between the listing and the read (a swap or
+    an eviction in between) is skipped, not an error, as
+    ignoreMissingFiles skips it on the Spark route."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from nsdb_spark.sql.parser import parse
+
+    engine.insert_bits("default", "default", "gone", [Bit(1, 1, {}, {}), Bit(2, 2, {}, {})])
+    engine.insert_bits("default", "default", "gone", [Bit(3, 3, {}, {})])
+    listed, removed = engine.warehouse.shard_files, []
+
+    def list_then_remove(*args):
+        files = listed(*args)
+        assert len(files) == 2
+        removed.extend(pq.read_table(files[0])["timestamp"].to_pylist())
+        os.remove(files[0])
+        return files
+
+    monkeypatch.setattr(engine.warehouse, "shard_files", list_then_remove)
+    got = engine.collect_select(
+        parse("select * from gone limit 10", db="default", namespace="default")
+    )
+    assert sorted(r.timestamp for r in got) == sorted({1, 2, 3} - set(removed))
+
+
+def test_point_read_from_files_sees_an_insert_between_two_reads(engine):
+    """Two identical unordered point reads with an insert between them:
+    the second sees the inserted row (the write moves the cache token)."""
+    from nsdb_spark.sql.parser import parse
+
+    engine.insert_bits("default", "default", "ins", [Bit(t, t, {}, {}) for t in (1, 2, 3)])
+    stmt = parse(
+        "select * from ins where timestamp >= 0 limit 50", db="default", namespace="default"
+    )
+    assert sorted(r.timestamp for r in engine.collect_select(stmt)) == [1, 2, 3]
+    engine.insert_bits("default", "default", "ins", [Bit(4, 4, {}, {})])
+    assert sorted(r.timestamp for r in engine.collect_select(stmt)) == [1, 2, 3, 4]
 
 
 def test_serving_aggregate_route_parity_grid(engine):
@@ -2775,11 +2852,14 @@ def test_serving_aggregate_route_parity_grid(engine):
 def test_point_serving_view_reregisters_on_mutation(agg_engine):
     """The serving temp view is token-guarded global state: INSERT and
     DELETE must re-register it before the next point serve, and an
-    already-planned statement keeps its analysis-time binding."""
+    already-planned statement keeps its analysis-time binding. The read is
+    ordered: the SQL-text route serves ordered plain SELECTs (an unordered
+    one is read from the shard files)."""
     from nsdb_spark.sql.parser import parse
 
     stmt = parse(
-        "select * from aggregationLongMetric where timestamp = 77 limit 5",
+        "select * from aggregationLongMetric where timestamp = 77 "
+        "order by timestamp limit 5",
         db="default", namespace="default",
     )
     # the serving frame entry's token is the token of the frame the
@@ -2804,7 +2884,8 @@ def test_point_serving_view_put_from_before_invalidate_loses(agg_engine):
     frame put that was in flight across it (token computed before the
     clear, at a counter above anything later tokens will reach) must
     lose to the next read's put, so the view it published is replaced
-    and a row inserted afterwards is served."""
+    and a row inserted afterwards is served. The read is ordered, so it
+    plans over the serving view."""
     import functools
 
     from nsdb_spark.engine import _serving_view
@@ -2812,7 +2893,7 @@ def test_point_serving_view_put_from_before_invalidate_loses(agg_engine):
 
     metric = "aggregationLongMetric"
     stmt = parse(
-        f"select * from {metric} where timestamp = 77 limit 5",
+        f"select * from {metric} where timestamp = 77 order by timestamp limit 5",
         db="default", namespace="default",
     )
     key = ("default", "default", metric, True)

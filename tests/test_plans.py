@@ -217,13 +217,15 @@ def test_shard_pruned_serving_aggregate_is_one_task(sharded_engine, sql):
 
 @pytest.mark.parametrize("name", [
     "nsdb_groupby_sum", "nsdb_temporal_count", "nsdb_temporal_since",
-    "rollup_temporal_sum",
+    "rollup_temporal_sum", "rollup_percentiles", "rollup_temporal_percentile",
+    "rollup_group_percentile",
 ])
 def test_known_schema_entry_build_launches_no_job(spark, name):
     """Building a registry entry over a testdata directory whose table
     schema is already known runs no Spark job: the events schema is
-    inferred once (one job), later reads pass it, and a temporal entry
-    takes its extent (and `now`) from the events file's footer."""
+    inferred once (one job), later reads pass it, a temporal entry
+    takes its extent (and `now`) from the events file's footer, and a
+    quantile rollup entry its value grid."""
     from nsdb_spark.entry_queries import build_queries
     from nsdb_spark.sources import parquet
 
@@ -233,6 +235,20 @@ def test_known_schema_entry_build_launches_no_job(spark, name):
     warm, df = _jobs_during(spark, lambda: build(spark, SF_DIR))
     assert (cold, warm) == (1, 0)
     assert df.collect()
+
+
+def test_rollup_percentiles_reduces_the_rollup_once(spark):
+    """rollup_percentiles takes its total n from the window that yields
+    the cumulative, over the same <= nbins rows: the rollup is reduced
+    once, with no second reduction broadcast into a cross join. Its
+    collect runs 8 jobs at sf0.001 under AQE (10 when n was a separate
+    aggregate)."""
+    from nsdb_spark.entry_queries import build_queries
+
+    df = build_queries()["rollup_percentiles"](spark, SF_DIR)
+    jobs, rows = _jobs_during(spark, df.collect)
+    assert (jobs, len(rows)) == (8, 4)
+    assert "CartesianProduct" not in plan_of(df)
 
 
 def test_temporal_compile_without_locations_is_empty_and_runs_no_job(spark):
@@ -1125,6 +1141,32 @@ def test_point_serve_sql_route_keeps_partition_pruning(sharded_engine):
     assert i >= 0
     assert "shard_start" in plan[i : i + 120]
     assert sorted(r[0] for r in df.collect()) == [45000, 50000, 55000]
+
+
+def test_unordered_point_read_runs_no_spark_job(sharded_engine):
+    """A novel plain `... LIMIT k` read with no ORDER BY, pruned to 3 of
+    planm's 10 shards, is read from the shard files with pyarrow: no
+    Spark job. LIMIT 3 of its 6 matches returns 3 of them, in shard
+    order; LIMIT 10 returns all 6."""
+    sql = "select * from planm where timestamp >= 40000 and timestamp < 70000 limit {}"
+    jobs, rows = _jobs_of(sharded_engine, sql.format(3))
+    assert (jobs, [r.timestamp for r in rows]) == (0, [40000, 45000, 50000])
+    jobs, rows = _jobs_of(sharded_engine, sql.format(10))
+    assert jobs == 0
+    assert sorted(r.timestamp for r in rows) == list(range(40000, 70000, 5000))
+
+
+def test_ordered_point_read_plans_on_the_serving_session(sharded_engine):
+    """The ORDER BY twin of an unordered point read keeps the Spark route:
+    it plans on the interpreted serving session and runs a job."""
+    sql = (
+        "select * from planm where timestamp >= 40000 and timestamp < 70000 "
+        "order by timestamp desc limit 3"
+    )
+    assert sharded_engine.execute(sql).sparkSession is sharded_engine._serving_session()
+    jobs, rows = _jobs_of(sharded_engine, sql)
+    assert jobs >= 1
+    assert [r.timestamp for r in rows] == [65000, 60000, 55000]
 
 
 def test_embedding_cosine_score_stays_out_of_join_condition(spark, finished_plans):

@@ -1336,7 +1336,7 @@ def test_point_sql_text_route_matches_column_route(point_parity_engine, expr, de
     supports — including index-complement NOT over NULL fields.
     timestamps are unique, so ORDER BY timestamp + LIMIT is
     deterministic on both routes."""
-    from nsdb_spark.sql.parser import parse
+    from fixtures import column_route_rows
 
     eng = point_parity_engine
     q = (f"select * from propMetric where {expr} "
@@ -1347,14 +1347,24 @@ def test_point_sql_text_route_matches_column_route(point_parity_engine, expr, de
     assert df.sparkSession is eng._serving_session()
     assert "nsdb_pt_" in df._jdf.queryExecution().analyzed().toString()
     got = [tuple(r) for r in df.collect()]
-    eng.invalidate_plan_caches()
-    orig = eng._point_route
-    eng._point_route = lambda *a, **kw: False
-    try:
-        dfr, _, _ = eng._plan_select(stmt)
-        assert dfr.sparkSession is eng.spark
-        want = [tuple(r) for r in dfr.collect()]
-    finally:
-        eng._point_route = orig
-        eng.invalidate_plan_caches()
-    assert got == want, q
+    assert got == column_route_rows(eng, stmt), q
+
+
+@settings(max_examples=20, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture,
+                                 HealthCheck.too_slow])
+@given(expr=_pt_expr, k=st.integers(1, 25))
+def test_point_file_route_matches_column_route(point_parity_engine, expr, k):
+    """The unordered twin: collect_select reads `... LIMIT k` with no
+    ORDER BY from the shard files (compiler.arrow_expression, no Spark
+    planning) and returns every row the Column pipeline matches when k
+    covers them, else k of them, under random WHERE trees."""
+    import dataclasses
+
+    from fixtures import assert_limit_rows, column_route_rows, file_served_rows
+
+    eng = point_parity_engine
+    q = f"select * from propMetric where {expr} limit {k}"
+    stmt = parse(q, db="default", namespace="default")
+    every = column_route_rows(eng, dataclasses.replace(stmt, limit=None))
+    assert_limit_rows(file_served_rows(eng, stmt), every, k, q)
