@@ -101,7 +101,7 @@ def repl(engine, stdin=None, stdout=None) -> None:
                 )
                 rows = [[k, info[k]] for k in
                         ("plan_class", "time_ranges", "shards_total",
-                         "shards_scanned", "rollup_routed")]
+                         "shards_scanned", "rollup_routed", "route")]
                 print(ascii_table(["property", "value"], rows), file=stdout)
                 print(info["physical_plan"], file=stdout)
                 continue

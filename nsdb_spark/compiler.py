@@ -26,6 +26,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
+import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -146,6 +147,325 @@ def projection(schema: MetricSchema, fields: list[str]) -> list[str]:
     if not fields:
         return schema.all_field_names()
     return ["timestamp", "value"] + [f for f in fields if f not in ("timestamp", "value")]
+
+
+# ------------------------------------------------ shard-file aggregation
+# The pyarrow twin of compile()'s three aggregate classes, for the
+# shard-pruned aggregates the engine reads from the shard files (the
+# reference's per-shard facet reads reduced by post_proc, SURVEY.md §2.5).
+# Each scanned batch is reduced to per-group partials by pyarrow's hash
+# aggregation, and the partials are merged in one combine map keyed by
+# group (or bucket), so memory holds one state per group, never the rows.
+# Where Arrow's semantics differ from Spark's, the partials follow Spark:
+# NaN sorts above every number (Arrow's min/max skip it), grouping keys and
+# distinct values treat -0.0 as 0.0 and every NaN as one value (Arrow
+# splits them), and a BIGINT sum is exact and raises on overflow as the
+# ANSI sum does (Arrow's wraps).
+
+#: hash-aggregate options that skip NULLs (count(tag), count distinct)
+_VALID = pc.CountOptions(mode="only_valid")
+
+#: the one NaN grouping keys and distinct values map to: dict and set
+#: lookups compare identity first, so every NaN lands in one entry
+_NAN = float("nan")
+
+_LONG_MIN, _LONG_MAX = -(1 << 63), (1 << 63) - 1
+
+
+def _spark_key(v):
+    """A grouping key or distinct value as Spark compares it."""
+    if isinstance(v, float):
+        if v != v:
+            return _NAN
+        if v == 0:
+            return 0.0
+    return v
+
+
+def _spark_order(v) -> tuple:
+    """Sort key of Spark's ascending order: NULL first, NaN above every
+    number (reversed, it is the descending order, NULL last)."""
+    if v is None:
+        return (0, False, 0)
+    if isinstance(v, float) and v != v:
+        return (1, True, 0.0)
+    return (1, False, v)
+
+
+def _nan_min(vals):
+    """Spark's min: NaN only when every value is NaN; None when empty."""
+    real = [v for v in vals if v == v]
+    return min(real) if real else (_NAN if vals else None)
+
+
+def _agg_inputs(a: ast.Aggregation, i: int, batch, is_float: bool):
+    """({input name: column}, [(input, hash aggregate, options)]) of one
+    aggregation's per-batch partial (the batch of first/last is sorted on
+    timestamp, so the hash `first` is min_by/max_by on it)."""
+    v = batch.column(a.target)
+    name = f"a{i}"
+    if a.kind == ast.AGG_COUNT:
+        return {name: v}, [(name, "count", _VALID)]
+    if a.kind == ast.AGG_COUNT_DISTINCT:
+        return {name: v}, [(name, "distinct", _VALID)]
+    if a.kind == ast.AGG_SUM and not is_float:
+        # 32-bit halves: neither half's batch sum can wrap, and their
+        # Python-int recombination is exact
+        v = v.cast(pa.int64())
+        return (
+            {name: pc.bit_wise_and(v, 0xFFFFFFFF), f"h{i}": pc.shift_right(v, 32)},
+            [(name, "sum", None), (f"h{i}", "sum", None)],
+        )
+    if a.kind == ast.AGG_SUM:
+        return {name: v}, [(name, "sum", None)]
+    if a.kind == ast.AGG_AVG:
+        return {name: v.cast(pa.float64())}, [(name, "sum", None), (name, "count", None)]
+    if a.kind in (ast.AGG_MIN, ast.AGG_MAX):
+        fn = "min" if a.kind == ast.AGG_MIN else "max"
+        if not is_float:
+            return {name: v}, [(name, fn, None)]
+        nan = pc.is_nan(v)
+        return (
+            {name: pc.if_else(nan, pa.scalar(None, v.type), v), f"n{i}": nan},
+            [(name, fn, None), (f"n{i}", "any", None)],
+        )
+    # first / last
+    return (
+        {name: v, f"t{i}": batch.column("timestamp")},
+        [(name, "first", None), (f"t{i}", "first", None)],
+    )
+
+
+def _merge(kind: str, is_float: bool, state, p):
+    """One aggregation's state merged with a batch partial `p` (the hash
+    aggregate outputs of _agg_inputs, in order)."""
+    if kind == ast.AGG_COUNT_DISTINCT:
+        state = set() if state is None else state
+        state.update(_spark_key(x) for x in p[0])
+        return state
+    if kind == ast.AGG_SUM and not is_float:
+        p = (p[1] << 32) + p[0]
+    elif kind in (ast.AGG_COUNT, ast.AGG_SUM):
+        p = p[0]
+    elif kind in (ast.AGG_MIN, ast.AGG_MAX) and not is_float:
+        p = p[0]
+    if state is None:
+        return p
+    if kind in (ast.AGG_COUNT, ast.AGG_SUM):
+        return state + p
+    if kind == ast.AGG_AVG:
+        return (state[0] + p[0], state[1] + p[1])
+    if kind in (ast.AGG_MIN, ast.AGG_MAX):
+        pick = min if kind == ast.AGG_MIN else max
+        if not is_float:
+            return pick(state, p)
+        m = [x for x in (state[0], p[0]) if x is not None]
+        return (pick(m) if m else None, state[1] or p[1])
+    # first keeps the earlier timestamp, last the later
+    earlier = p[1] < state[1]
+    return p if earlier == (kind == ast.AGG_FIRST) else state
+
+
+def _final(a: ast.Aggregation, is_float: bool, state):
+    """The output value of a merged state; None when no row reached it
+    (sum 0, avg 0.0 and the counts 0, as the Spark route coalesces them)."""
+    if a.kind in (ast.AGG_COUNT, ast.AGG_COUNT_DISTINCT):
+        return 0 if state is None else len(state) if a.kind == ast.AGG_COUNT_DISTINCT else state
+    if a.kind == ast.AGG_SUM:
+        if state is None:
+            return 0.0 if is_float else 0
+        if not is_float and not _LONG_MIN <= state <= _LONG_MAX:
+            from pyspark.errors import ArithmeticException
+
+            raise ArithmeticException(
+                message=f"[ARITHMETIC_OVERFLOW] long overflow in sum({a.target})"
+            )
+        return state
+    if a.kind == ast.AGG_AVG:
+        return state[0] / state[1] if state else 0.0
+    if state is None:
+        return None
+    if a.kind in (ast.AGG_MIN, ast.AGG_MAX) and is_float:
+        m, nan = state
+        if nan and (a.kind == ast.AGG_MAX or m is None):
+            return _NAN
+        return m
+    if a.kind in (ast.AGG_FIRST, ast.AGG_LAST):
+        return state[0]
+    return state
+
+
+def aggregate_columns(parsed: ParsedQuery) -> list[str]:
+    """The columns an aggregate reads from the shard files."""
+    if isinstance(parsed, ParsedGlobalAggregatedQuery):
+        aggs, cols = parsed.aggregations, set()
+    else:
+        aggs = [parsed.aggregation]
+        cols = (
+            {parsed.group_field} if isinstance(parsed, ParsedAggregatedQuery)
+            else {"timestamp"}
+        )
+    cols.update(a.target for a in aggs)
+    if any(a.kind in (ast.AGG_FIRST, ast.AGG_LAST) for a in aggs):
+        cols.add("timestamp")
+    return sorted(cols)
+
+
+def arrow_aggregate(
+    parsed: ParsedQuery,
+    schema: MetricSchema,
+    batches,
+    ctx: TimeContext,
+    locations: list[int],
+    shard_interval_ms: int,
+) -> tuple[list[str], list[tuple]]:
+    """(columns, rows) of a tag group-by, global or temporal aggregate
+    over `batches` (record batches holding its aggregate_columns, already
+    filtered on its WHERE), as compile() computes them on Spark: the same
+    columns in the same order, every cell of the Python type Spark's
+    collect returns, and the same ORDER BY, LIMIT and empty-input rules
+    (global count clamped to LIMIT; temporal empty buckets 0, takeRight
+    LIMIT and the zero-skipping per-(bucket, shard) min). `locations` are
+    the metric's shard starts, whose extent bounds the temporal axis."""
+    stmt = parsed.statement
+    if isinstance(parsed, ParsedGlobalAggregatedQuery):
+        aggs = parsed.aggregations
+    else:
+        aggs = [parsed.aggregation]
+    is_float = pa.types.is_floating(schema.value_type.arrow_type)
+    segs = None
+    if isinstance(parsed, ParsedTemporalAggregatedQuery):
+        ivs = extract_time_range(stmt.condition.expression if stmt.condition else None, ctx)
+        eff = temporal_axis(
+            parsed, ctx, ivs, min(locations), max(locations) + shard_interval_ms
+        ) if locations else []
+        if not eff:
+            return _temporal_columns(aggs[0]), []
+        segs = bucket_segments(eff, parsed.interval_ms)
+    # the zero-skipping temporal min folds per (bucket, shard) first
+    quirk = segs is not None and aggs[0].kind == ast.AGG_MIN
+    states: dict = {}
+    for batch in batches:
+        if aggs[0].kind in (ast.AGG_FIRST, ast.AGG_LAST):
+            order = "ascending" if aggs[0].kind == ast.AGG_FIRST else "descending"
+            batch = batch.take(pc.sort_indices(batch, [("timestamp", order)]))
+        if segs is not None:
+            ts = batch.column("timestamp")
+            keys = {"k": _arrow_bucket(ts, segs, parsed.interval_ms)}
+            if quirk:
+                keys["s"] = pc.multiply(
+                    pc.divide(ts, shard_interval_ms), shard_interval_ms
+                )
+        elif isinstance(parsed, ParsedAggregatedQuery):
+            keys = {"k": batch.column(parsed.group_field)}
+        else:
+            keys = {"k": pa.nulls(batch.num_rows, pa.int8())}
+        inputs, specs = dict(keys), []
+        for i, a in enumerate(aggs):
+            cols, spec = _agg_inputs(a, i, batch, is_float)
+            inputs.update(cols)
+            specs.append(spec)
+        table = pa.table(inputs)
+        if segs is not None:
+            table = table.filter(pc.is_valid(table.column("k")))
+        grouped = table.group_by(list(keys), use_threads=False).aggregate(
+            [s for spec in specs for s in spec]
+        )
+        key_cols = [grouped.column(n).to_pylist() for n in keys]
+        partials = [
+            [grouped.column(f"{col}_{fn}").to_pylist() for col, fn, _ in spec]
+            for spec in specs
+        ]
+        for r, key in enumerate(zip(*key_cols)):
+            st = states.setdefault(tuple(_spark_key(k) for k in key), [None] * len(aggs))
+            for i, a in enumerate(aggs):
+                st[i] = _merge(a.kind, is_float, st[i], tuple(c[r] for c in partials[i]))
+    if segs is not None:
+        return _temporal_rows(parsed, states, segs, quirk, is_float)
+    if isinstance(parsed, ParsedGlobalAggregatedQuery):
+        st = states.get((None,), [None] * len(aggs))
+        row = [_final(a, is_float, s) for a, s in zip(aggs, st)]
+        if stmt.limit:
+            row = [
+                min(v, stmt.limit.value) if a.kind == ast.AGG_COUNT else v
+                for a, v in zip(aggs, row)
+            ]
+        return [agg_alias(a) for a in aggs], [tuple(row)]
+    return _group_rows(parsed, states, is_float)
+
+
+def _arrow_bucket(ts, segs, width: int):
+    """The global backward bucket index of each timestamp (NULL off the
+    axis), compile()'s bucket_index per segment."""
+    k = pa.scalar(None, pa.int64())
+    for off, lower, upper, n in segs:
+        local = pc.min_element_wise(pc.divide(pc.subtract(upper, ts), width), n - 1)
+        k = pc.if_else(
+            pc.and_(pc.greater_equal(ts, lower), pc.less_equal(ts, upper)),
+            pc.add(local, off), k,
+        )
+    return k
+
+
+def _group_rows(parsed: ParsedAggregatedQuery, states: dict, is_float: bool):
+    stmt = parsed.statement
+    a = parsed.aggregation
+    columns = [parsed.group_field, agg_alias(a)]
+    rows = []
+    for (key,), (st,) in states.items():
+        value = _final(a, is_float, st)
+        if a.kind in (ast.AGG_FIRST, ast.AGG_LAST):
+            rows.append((key, value, st[1]))
+        else:
+            rows.append((key, value))
+    if a.kind in (ast.AGG_FIRST, ast.AGG_LAST):
+        columns.append("timestamp")
+    if stmt.order:
+        # ORDER BY value sorts by the aggregate, else by the group field
+        at = 1 if stmt.order.dimension == "value" else 0
+        rows.sort(key=lambda r: _spark_order(r[at]), reverse=stmt.order.descending)
+    if stmt.limit:
+        rows = rows[: stmt.limit.value]
+    return columns, rows
+
+
+def _temporal_columns(a: ast.Aggregation) -> list[str]:
+    return ["timestamp", "lower_bound", "upper_bound", agg_alias(a)]
+
+
+def _temporal_rows(parsed, states: dict, segs, quirk: bool, is_float: bool):
+    stmt = parsed.statement
+    a = parsed.aggregation
+    width = parsed.interval_ms
+    if quirk:
+        # reference quirk (post_proc/package.scala:170-176), as
+        # _temporal_agg: zero (bucket, shard) partial minima are dropped
+        # unless every partial is zero
+        shard_min: dict = {}
+        for (k, _), (st,) in states.items():
+            shard_min.setdefault(k, []).append(_final(a, is_float, st))
+        values = {k: _nan_min([p for p in ps if p != 0]) for k, ps in shard_min.items()}
+    else:
+        values = {k: _final(a, is_float, st) for (k,), (st,) in states.items()}
+    zero = 0.0 if a.kind == ast.AGG_AVG or is_float and a.kind in (
+        ast.AGG_SUM, ast.AGG_MIN, ast.AGG_MAX
+    ) else 0
+    n = segs[-1][0] + segs[-1][3]
+    desc = bool(stmt.order and stmt.order.descending and stmt.order.dimension == "timestamp")
+    lo, hi = 0, n
+    if stmt.limit:
+        # takeRight of the time-sorted axis, as axis_join
+        lo, hi = (max(n - stmt.limit.value, 0), n) if desc else (0, min(stmt.limit.value, n))
+    rows = []
+    for off, lower, upper, nb in segs:
+        for i in range(max(lo - off, 0), min(hi - off, nb)):
+            ub = upper - i * width
+            v = values.get(off + i)
+            rows.append((ub, max(ub - width, lower), ub, zero if v is None else v))
+    # segments and their buckets run newest first
+    if not desc:
+        rows.reverse()
+    return _temporal_columns(a), rows
 
 
 # ------------------------------------------------- parameterized-SQL serving

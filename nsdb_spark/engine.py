@@ -28,6 +28,8 @@ from .compiler import (
     _BROADCAST_BUCKETS_MAX,
     QueryCompiler,
     TimeContext,
+    aggregate_columns,
+    arrow_aggregate,
     arrow_expression,
     bucket_count,
     extract_time_range,
@@ -60,38 +62,52 @@ class _Planned(NamedTuple):
     """A plan-cache entry."""
 
     # (DataFrame, analyzed plan, rollup-routed?); DataFrame None when the
-    # rows were read from the shard files (_read_point_rows)
+    # rows were read from the shard files (collect_select's "files" route)
     plan: tuple
     rows: list | None = None  # collected rows, at most _CACHED_ROWS_MAX
     complete: bool = False  # rows are the statement's whole result
 
 
-def _read_shard_rows(
-    files: list[str], schema: MetricSchema, columns: list[str], predicate, bound: int
-) -> list:
-    """At most `bound` rows of `columns` that match the pyarrow
-    `predicate` (None: every row), read from the shard files in their
-    order with pyarrow under the registry schema, as the Rows Spark's
-    collect returns. Only the projected columns are decoded, and the scan
-    stops once it holds `bound` rows. A file removed after the listing is
-    skipped, as ignoreMissingFiles skips it on the Spark route."""
+def _scan_shard_files(
+    files: list[str], schema: MetricSchema, columns: list[str], predicate, read
+):
+    """read(scanner) over the shard files: a pyarrow scanner of `columns`
+    under the registry schema (a field an older file lacks reads as NULL),
+    filtered on the pyarrow `predicate` (None: every row). Only the
+    projected and filtered columns are decoded. A file removed after the
+    listing is skipped, as ignoreMissingFiles skips it on the Spark route:
+    `read` then runs again over the files that are left."""
     while True:
         try:
-            table = (
+            return read(
                 pads.dataset(files, schema=schema.to_arrow_schema(), format="parquet")
                 .scanner(columns=sorted(set(columns)), filter=predicate)
-                .head(bound)
             )
-            break
         except FileNotFoundError:
             kept = [f for f in files if os.path.exists(f)]
             if len(kept) == len(files):
                 raise
             files = kept
-    rows = [Row(*values) for values in zip(*(table[c].to_pylist() for c in columns))]
+
+
+def _rows(columns: list[str], tuples) -> list:
+    """Tuples as the Rows Spark's collect returns, fields `columns`."""
+    rows = [Row(*values) for values in tuples]
     for r in rows:
         r.__fields__ = columns
     return rows
+
+
+class _FileRead(NamedTuple):
+    """A statement collect_select reads from its touched shards' files."""
+
+    schema: MetricSchema
+    parsed: Any
+    ctx: TimeContext
+    locations: list[int]
+    shard_interval: int
+    files: list[str]
+    predicate: Any  # pyarrow expression of the WHERE, None without one
 
 
 def _serving_view(db: str, ns: str, metric: str) -> str:
@@ -139,11 +155,14 @@ class NsdbEngine:
         self._lock = threading.Lock()
         # SERVING session: a newSession() sharing the SparkContext but
         # with codegen + AQE disabled and one shuffle partition. It is the
-        # one route for shard-pruned reads (_point_route): small-LIMIT
+        # one Spark route for shard-pruned reads (_point_route): small-LIMIT
         # plain SELECTs and aggregates (tag group-by, global, temporal)
-        # whose pruning leaves at most _POINT_SERVE_MAX_SHARDS shards
-        # (collect_select reads the unordered plain ones from the shard
-        # files instead, _read_point_rows).
+        # whose pruning leaves at most _POINT_SERVE_MAX_SHARDS shards.
+        # collect_select reads most of those from the shard files with
+        # pyarrow instead, with no Spark job (_route's "files": unordered
+        # plain SELECTs and every aggregate no rollup serves); ordered
+        # plain SELECTs, mixed plain+aggregate globals and every
+        # execute_select plan here.
         # Novel statements (unique literals — no cache can serve them) pay
         # Janino whole-stage compilation per literal on the default
         # session, and an aggregate's shuffle fans out over every core
@@ -697,11 +716,12 @@ class NsdbEngine:
 
         Statements that differ only in the LIMIT literal additionally
         share one execution of the LIMIT-stripped statement (see
-        _collect_via_shape). A novel plain `... LIMIT k` read with no
-        DISTINCT and no ORDER BY, k at most _POINT_SERVE_MAX_LIMIT and its
-        shard pruning leaving at most _POINT_SERVE_MAX_SHARDS shards, runs
-        no Spark job: its rows are read from the shard files with pyarrow
-        (_read_point_rows)."""
+        _collect_via_shape). A novel statement that _route sends to
+        "files" runs no Spark job: an unordered plain `... LIMIT k` read
+        (_read_point_rows), or a tag group-by, global or temporal
+        aggregate (_read_aggregate_rows), read from the touched shards'
+        files with pyarrow. Its rows go into the statement's plan-cache
+        entry with no DataFrame."""
         slot = self._cache_slot(stmt)
         key, token = slot
         analysis = None
@@ -713,8 +733,17 @@ class NsdbEngine:
                 shaped, analysis = self._collect_via_shape(stmt, time_context, key, token)
                 if shaped is not None:
                     return shaped
-        plan = self._plan_select(stmt, time_context, slot=slot, analysis=analysis)
-        rows = plan[0].collect()
+        analysis = analysis or self._analyze(stmt)
+        read = self._file_read(stmt, analysis, time_context)
+        if read is None:
+            plan = self._plan_select(stmt, time_context, slot=slot, analysis=analysis)
+            rows = plan[0].collect()
+        else:
+            plan = (None, analysis[1], False)
+            if isinstance(read.parsed, analyzer.ParsedSimpleQuery):
+                rows = self._read_point_rows(read, stmt.limit.value)
+            else:
+                rows = self._read_aggregate_rows(read)
         if key is not None and len(rows) <= self._CACHED_ROWS_MAX:
             self._plans.put(key, token, _Planned(plan, list(rows), True))
         return rows
@@ -742,9 +771,9 @@ class NsdbEngine:
         limit (global count clamps to LIMIT; temporal LIMIT = takeRight —
         SURVEY §2.5), not just their row count.
 
-        A novel unordered point read (_read_point_rows) fetches its prefix
-        from the shard files with pyarrow, with no Spark job; its entry
-        holds the rows and no DataFrame. Every other shape plans and
+        A novel unordered point read fetches its prefix from the shard
+        files with pyarrow, with no Spark job (_read_point_rows); its
+        entry holds the rows and no DataFrame. Every other shape plans and
         collects through Spark. Returns (rows, None), or (None, analysis)
         when the statement isn't shape-eligible: the caller falls through
         to the normal path with the analysis this ran, if any."""
@@ -767,55 +796,78 @@ class NsdbEngine:
         schema, parsed = analysis = self._analyze(stmt)
         if not isinstance(parsed, analyzer.ParsedSimpleQuery):
             return None, analysis
-        parsed = dataclasses.replace(parsed, statement=nolimit)
-        point = k <= self._POINT_SERVE_MAX_LIMIT
         bound = max(k, self._CACHED_ROWS_MAX)
-        rows = None
-        if point:
-            rows = self._read_point_rows(nolimit, schema, parsed, time_context, bound)
-        if rows is not None:
+        read = self._file_read(stmt, analysis, time_context)
+        parsed = dataclasses.replace(parsed, statement=nolimit)
+        if read is not None:
             plan = (None, parsed, False)
+            rows = self._read_point_rows(read, bound)
         else:
             plan = self._plan_select(
-                nolimit, time_context, point_serve=point, slot=(skey, token),
-                analysis=(schema, parsed),
+                nolimit, time_context, point_serve=k <= self._POINT_SERVE_MAX_LIMIT,
+                slot=(skey, token), analysis=(schema, parsed),
             )
             rows = plan[0].limit(bound).collect()
         if len(rows) <= self._CACHED_ROWS_MAX:
             self._plans.put(skey, token, _Planned(plan, rows, len(rows) < bound))
         return rows[:k], None
 
-    def _read_point_rows(
-        self, stmt, schema: MetricSchema, parsed, time_context: TimeContext | None,
-        bound: int,
-    ) -> list | None:
-        """The first `bound` rows of a plain SELECT with no DISTINCT and no
-        ORDER BY that _point_route sends to the serving session, read from
-        its touched shards' files in shard order without Spark (the
-        reference's metric reader visits its shards in time order and
-        stops once it has the rows, MetricReaderActor.scala:173-198); None
-        for any other statement. The shard files hold only their own
-        shard's timestamps, so the WHERE alone stands for the shard
-        conjunct of the Spark route."""
-        if parsed.distinct or stmt.order is not None:
-            return None
+    def _file_read(
+        self, stmt, analysis: tuple, time_context: TimeContext | None
+    ) -> _FileRead | None:
+        """The shard-file read of a statement that _route sends to
+        "files", else None: its touched shards' files (listed in shard
+        order, after the caller read the cache token) and its WHERE as a
+        pyarrow expression. The shard files hold only their own shard's
+        timestamps, so the WHERE alone stands for the shard conjunct of
+        the Spark route."""
+        schema, parsed = analysis
         db, ns = stmt.db or "default", stmt.namespace or "default"
         ctx = time_context or TimeContext(self.now_fn())
-        si = self.warehouse.get_info(db, ns, stmt.metric)["shardInterval"]
+        info = self.warehouse.get_info(db, ns, stmt.metric)
+        si = info["shardInterval"]
         cond = stmt.condition.expression if stmt.condition else None
         ivs = extract_time_range(cond, ctx)
         locations = self.warehouse.locations(db, ns, stmt.metric)
-        if not self._point_route(stmt, parsed, locations, ivs, si, True, ctx):
+        if self._route(stmt, parsed, info, locations, ivs, ctx) != "files":
             return None
-        return _read_shard_rows(
+        return _FileRead(
+            schema, parsed, ctx, locations, si,
             self.warehouse.shard_files(
                 db, ns, stmt.metric, touched_shards(locations, ivs, si)
             ),
-            schema,
-            projection(schema, parsed.fields),
             None if cond is None else arrow_expression(cond, ctx),
-            bound,
         )
+
+    @staticmethod
+    def _read_point_rows(read: _FileRead, bound: int) -> list:
+        """The first `bound` rows of a plain SELECT, read from its shard
+        files in shard order without Spark: the scan stops once it holds
+        `bound` rows (the reference's metric reader visits its shards in
+        time order and stops once it has the rows,
+        MetricReaderActor.scala:173-198)."""
+        columns = projection(read.schema, read.parsed.fields)
+        table = _scan_shard_files(
+            read.files, read.schema, columns, read.predicate, lambda s: s.head(bound)
+        )
+        return _rows(columns, zip(*(table[c].to_pylist() for c in columns)))
+
+    @staticmethod
+    def _read_aggregate_rows(read: _FileRead) -> list:
+        """A tag group-by, global or temporal aggregate computed from its
+        shard files without Spark (compiler.arrow_aggregate), as the
+        reference's shard readers compute facet partials that post_proc
+        reduces (ShardReaderActor.scala:163-340). The scanner's batches
+        stream into the aggregation, so memory is bounded by the groups
+        or buckets, not by the rows scanned."""
+        columns, tuples = _scan_shard_files(
+            read.files, read.schema, aggregate_columns(read.parsed), read.predicate,
+            lambda s: arrow_aggregate(
+                read.parsed, read.schema, s.to_batches(), read.ctx,
+                read.locations, read.shard_interval,
+            ),
+        )
+        return _rows(columns, tuples)
 
     #: serving gates (see _point_route): a read plans on the interpreted
     #: serving session only when shard pruning leaves at most
@@ -934,10 +986,13 @@ class NsdbEngine:
         LIMIT-less plain scans keep the codegen session — they are
         data-sized regardless of the shard count.
 
-        Of the plain SELECTs this passes, collect_select reads those with
-        no ORDER BY from the shard files without Spark
-        (_read_point_rows); the ordered ones, and every execute_select,
-        plan as one SQL text on the serving session (serving_sql)."""
+        Of the statements this passes, collect_select reads from the shard
+        files without Spark (_route's "files") every unordered plain
+        SELECT and every tag group-by, global or temporal aggregate that
+        no rollup serves. Ordered plain SELECTs and mixed plain+aggregate
+        globals, like every execute_select, plan on the serving session:
+        a plain SELECT as one SQL text (serving_sql), an aggregate with
+        the Column compiler."""
         if isinstance(parsed, analyzer.ParsedSimpleQuery) and (
             parsed.distinct
             or not point_serve and (
@@ -955,6 +1010,26 @@ class NsdbEngine:
                 return False
         scanned = touched_shards(locations, ivs, shard_interval)
         return len(scanned) <= self._POINT_SERVE_MAX_SHARDS
+
+    def _route(self, stmt, parsed, info: dict, locations, ivs, ctx: TimeContext) -> str:
+        """The route collect_select takes for a statement: "rollup" (a
+        registered rollup serves it, _rollup_route), "files" (read from
+        the touched shards' files with pyarrow, no Spark job), "serving"
+        (planned on the interpreted serving session) or "analytics" (the
+        codegen session). The one gate of the shard-file reads, and the
+        route explain_select reports."""
+        db, ns = stmt.db or "default", stmt.namespace or "default"
+        if self._rollup_route(db, ns, stmt, parsed, info) is not None:
+            return "rollup"
+        if not self._point_route(
+            stmt, parsed, locations, ivs, info["shardInterval"], False, ctx
+        ):
+            return "analytics"
+        if isinstance(parsed, analyzer.ParsedSimpleQuery) and stmt.order is not None or (
+            isinstance(parsed, analyzer.ParsedGlobalAggregatedQuery) and parsed.plain_fields
+        ):
+            return "serving"
+        return "files"
 
     def explain_select(
         self,
@@ -978,7 +1053,11 @@ class NsdbEngine:
           before paying for it;
         - rollup_routed: whether the engine would serve it from a
           materialized rollup instead of the raw metric;
-        - physical_plan: Spark's executed-plan tree for the compiled frame.
+        - route: the route collect_select takes (_route): "files" (read
+          from the shard files with pyarrow, no Spark job), "serving",
+          "analytics" or "rollup";
+        - physical_plan: Spark's executed-plan tree for the compiled frame
+          (the plan execute_select runs; a "files" read runs none).
         """
         stmt = parse(query_string, db=db, namespace=ns)
         if not isinstance(stmt, ast.SelectSQLStatement):
@@ -991,13 +1070,15 @@ class NsdbEngine:
             stmt.condition.expression if stmt.condition else None, ctx
         )
         scanned = touched_shards(locations, ivs, info["shardInterval"])
-        df, parsed, routed = self._plan_select(stmt, ctx)
+        analysis = self._analyze(stmt)
+        df, parsed, routed = self._plan_select(stmt, ctx, analysis=analysis)
         return {
             "plan_class": type(parsed).__name__,
             "time_ranges": [list(iv) for iv in ivs],
             "shards_total": len(locations),
             "shards_scanned": len(scanned),
             "rollup_routed": routed,
+            "route": self._route(stmt, analysis[1], info, locations, ivs, ctx),
             "physical_plan": df._jdf.queryExecution().executedPlan().toString(),
         }
 
@@ -1359,20 +1440,23 @@ class NsdbEngine:
             self.warehouse.invalidate_rollups(db, ns, metric)
             return None
 
-    def _route_via_rollup(self, db, ns, stmt, parsed, info):
-        """Return a rollup-served DataFrame for an eligible temporal or
-        group-by query, else None (raw path). Temporal: agg in
-        _ROLLUP_AGGS (or count-distinct from HLL registers), no WHERE, no
-        SINCE, interval a multiple of a registered rollup's grain whose
-        pinned axis is still current; ORDER BY timestamp and LIMIT keep
-        their quirk semantics (takeRight). Group-by: agg on value in
-        _GROUP_ROLLUP_AGGS, no WHERE, field has a registered rollup."""
+    def _rollup_route(self, db, ns, stmt, parsed, info) -> RollupSpec | None:
+        """The registered rollup that serves a temporal or group-by query,
+        decided from metadata alone (no store read), else None (raw path).
+        Temporal: agg in _ROLLUP_AGGS (or count-distinct from HLL
+        registers), no WHERE, no SINCE, ORDER BY timestamp only, interval
+        a multiple of a registered rollup's grain whose pinned axis is
+        still current. Group-by: agg on value in _GROUP_ROLLUP_AGGS, no
+        WHERE, field has a registered rollup."""
         from .analyzer import ParsedAggregatedQuery, ParsedTemporalAggregatedQuery
-        from .compiler import agg_alias
-        from .operators import rollup as rollup_ops
 
         if isinstance(parsed, ParsedAggregatedQuery):
-            return self._route_group_via_rollup(db, ns, stmt, parsed)
+            a = parsed.aggregation
+            if stmt.condition is not None:
+                return None
+            if a.kind not in self._GROUP_ROLLUP_AGGS or a.target != "value":
+                return None
+            return self._rollup_spec(db, ns, stmt.metric, "group", parsed.group_field)
         if not isinstance(parsed, ParsedTemporalAggregatedQuery):
             return None
         if stmt.condition is not None or parsed.grace_period_ms is not None:
@@ -1404,11 +1488,41 @@ class NsdbEngine:
             min(locations), max(locations) + info["shardInterval"]
         ):
             return None  # axis moved (e.g. retention dropped shards) — stale
+        return spec
+
+    def _route_via_rollup(self, db, ns, stmt, parsed, info):
+        """Return a rollup-served DataFrame for the query _rollup_route
+        gives a rollup, else None (raw path). Temporal ORDER BY timestamp
+        and LIMIT keep their quirk semantics (takeRight); group-by ORDER BY
+        and LIMIT apply as on the raw path."""
+        from .compiler import agg_alias
+        from .operators import rollup as rollup_ops
+
+        spec = self._rollup_route(db, ns, stmt, parsed, info)
+        if spec is None:
+            return None
         stored = self._read_rollup_store(db, ns, stmt.metric, spec)
         if stored is None:
             return None  # swapped away mid-route — raw path serves
+        a = parsed.aggregation
         alias = agg_alias(a)
         limit = stmt.limit.value if stmt.limit else None
+        if spec.kind == "group":
+            v = {
+                ast.AGG_COUNT: F.col("n"),
+                ast.AGG_SUM: F.col("sum_value"),
+                ast.AGG_MIN: F.col("min_value"),
+                ast.AGG_MAX: F.col("max_value"),
+                ast.AGG_AVG: F.col("sum_value") / F.col("n"),
+            }[a.kind]
+            out = stored.select(parsed.group_field, v.alias(alias))
+            if stmt.order:
+                # ORDER BY value sorts by the aggregate, same as the raw path
+                target = alias if stmt.order.dimension == "value" else parsed.group_field
+                out = out.orderBy(
+                    F.col(target).desc() if stmt.order.descending else F.col(target).asc()
+                )
+            return out if limit is None else out.limit(limit)
         descending = bool(stmt.order and stmt.order.descending)
         if spec.kind == "temporal":
             return rollup_ops.temporal_from_rollup(
@@ -1421,39 +1535,6 @@ class NsdbEngine:
         )
         # the estimate rounds to a whole count: the raw path's column shape
         return out.withColumn(alias, F.round(F.col(alias)).cast("long"))
-
-    def _route_group_via_rollup(self, db, ns, stmt, parsed):
-        from .compiler import agg_alias
-
-        a = parsed.aggregation
-        if stmt.condition is not None:
-            return None
-        if a.kind not in self._GROUP_ROLLUP_AGGS or a.target != "value":
-            return None
-        spec = self._rollup_spec(db, ns, stmt.metric, "group", parsed.group_field)
-        if spec is None:
-            return None
-        stored = self._read_rollup_store(db, ns, stmt.metric, spec)
-        if stored is None:
-            return None  # swapped away mid-route — raw path serves
-        alias = agg_alias(a)
-        v = {
-            ast.AGG_COUNT: F.col("n"),
-            ast.AGG_SUM: F.col("sum_value"),
-            ast.AGG_MIN: F.col("min_value"),
-            ast.AGG_MAX: F.col("max_value"),
-            ast.AGG_AVG: F.col("sum_value") / F.col("n"),
-        }[a.kind]
-        out = stored.select(parsed.group_field, v.alias(alias))
-        if stmt.order:
-            # ORDER BY value sorts by the aggregate, same as the raw path
-            target = alias if stmt.order.dimension == "value" else parsed.group_field
-            out = out.orderBy(
-                F.col(target).desc() if stmt.order.descending else F.col(target).asc()
-            )
-        if stmt.limit:
-            out = out.limit(stmt.limit.value)
-        return out
 
     # ------------------------------------------------------------- pruning
     def _prune_shards(self, df, ivs, shard_interval: int):

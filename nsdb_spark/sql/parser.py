@@ -51,6 +51,8 @@ _AGG_FUNCS = {
 
 _TIME_UNITS = {"d", "h", "min", "m", "s"}
 
+_LONG_MIN, _LONG_MAX = -(1 << 63), (1 << 63) - 1
+
 
 class _Token:
     __slots__ = ("kind", "text", "raw")
@@ -148,7 +150,19 @@ class SQLStatementParser:
         t = self._next()
         if t.kind != "number" or "." in t.text:
             raise SQLParseError(f"expected integer near {t.text!r} in {self.sql!r}")
-        return int(t.text)
+        return self._number(t.text)
+
+    def _number(self, text: str, neg: bool = False) -> int | float:
+        """A numeric literal (negated when `neg`). An integer must fit a
+        signed 64-bit long, as the reference reads it with toLong."""
+        if "." in text:
+            return -float(text) if neg else float(text)
+        v = -int(text) if neg else int(text)
+        if not _LONG_MIN <= v <= _LONG_MAX:
+            raise SQLParseError(
+                f"integer {'-' if neg else ''}{text} out of the 64-bit range in {self.sql!r}"
+            )
+        return v
 
     # -- entry ---------------------------------------------------------
     def parse(self) -> ast.Statement:
@@ -340,8 +354,7 @@ class SQLStatementParser:
         neg = self._accept_op("-")
         t = self._next()
         if t.kind == "number":
-            num: Any = float(t.text) if "." in t.text else int(t.text)
-            return ast.AbsoluteComparisonValue(-num if neg else num)
+            return ast.AbsoluteComparisonValue(self._number(t.text, neg))
         if neg:
             raise SQLParseError(f"expected number after '-' near {t.text!r}")
         if t.kind in ("string", "ident"):
@@ -392,8 +405,7 @@ class SQLStatementParser:
         neg = self._accept_op("-")
         t = self._next()
         if t.kind == "number":
-            num: Any = float(t.text) if "." in t.text else int(t.text)
-            return -num if neg else num
+            return self._number(t.text, neg)
         if neg:
             raise SQLParseError(f"expected number after '-' near {t.text!r}")
         if t.kind in ("string", "ident"):

@@ -1,6 +1,7 @@
 """CLI REPL tests — scripted stdin/stdout sessions (the reference's
 nsdb-cli ASCIITableBuilderSpec analog)."""
 import io
+import re
 
 from nsdb_spark.cli import ascii_table, repl
 
@@ -57,6 +58,7 @@ def test_repl_explain(engine):
         "insert into m ts = 1000 tags (g = x) val = 1.0",
         "insert into m ts = 2000 tags (g = y) val = 2.0",
         "explain select * from m where timestamp >= 1500",
+        "explain select count(*) from m where timestamp >= 1500",
         "explain drop metric m",
         "exit",
     ]) + "\n"
@@ -65,6 +67,10 @@ def test_repl_explain(engine):
     text = out.getvalue()
     assert "ParsedSimpleQuery" in text
     assert "shards_scanned" in text
+    # the route column: a LIMIT-less scan plans on the analytics session,
+    # a shard-pruned aggregate is read from the shard files
+    assert re.search(r"route\s*\|\s*analytics", text)
+    assert re.search(r"route\s*\|\s*files", text)
     # plan preview must not execute: no result table for the select
     assert "(1 rows)" not in text and "(2 rows)" not in text
     # non-SELECT explain surfaces the engine error, not a crash

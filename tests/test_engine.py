@@ -15,10 +15,12 @@ from fixtures import (
     LONG_METRIC,
     NEGATIVE_METRIC,
     TEMPORAL_LONG_METRIC,
+    assert_aggregate_file_route,
     assert_limit_rows,
     column_route_rows,
     file_served_rows,
     load,
+    load_aggregate_parity,
 )
 
 
@@ -1816,17 +1818,23 @@ def test_insert_frame_pins_batch_without_persisting(engine, spark):
     from pyspark.sql import functions as F
 
     jsc = spark.sparkContext._jsc
+
+    def persisted() -> set:
+        # ids, not a count: the context cleaner may release an older
+        # test's checkpoint RDD meanwhile, which no insert left behind
+        return set(jsc.getPersistentRDDs().keys())
+
     engine.warehouse.init_metric("default", "default", "pb", 10_000)
     engine.insert_bits("default", "default", "pb", [Bit(1000, 1.0, {}, {"g": "a"})])
     engine.materialize_group_rollup("default", "default", "pb", "g")
-    baseline = jsc.getPersistentRDDs().size()
+    baseline = persisted()
     batch = spark.range(200).select(
         (F.col("id") * 37 + 2000).alias("timestamp"),
         F.rand().alias("value"),
         F.when(F.col("id") % 3 == 0, "a").otherwise("b").alias("g"),
     )
     assert engine.insert_frame("default", "default", "pb", batch) == 200
-    assert jsc.getPersistentRDDs().size() == baseline
+    assert persisted() <= baseline
     sql = "select sum(value) from pb group by g"
     assert engine.explain_select(sql)["rollup_routed"]
     routed = dict(rows(engine.execute(sql)))
@@ -1846,11 +1854,11 @@ def test_insert_frame_pins_batch_without_persisting(engine, spark):
         (SchemaError, spark.createDataFrame([(99_600, 2.0, 7)], "timestamp long, value double, g long")),
     ]
     # (a rollup-routed read pins its store, so the baseline is retaken)
-    baseline = jsc.getPersistentRDDs().size()
+    baseline = persisted()
     for err, df in rejected:
         with pytest.raises(err):
             engine.insert_frame("default", "default", "pr", df)
-        assert jsc.getPersistentRDDs().size() == baseline
+        assert persisted() <= baseline
     assert engine.execute("select count(*) from pr").collect()[0][0] == 1
 
 
@@ -2847,6 +2855,185 @@ def test_serving_aggregate_route_parity_grid(engine):
         db="default", namespace="default",
     )
     assert engine.collect_select(stmt, ctx)[0][3] == 3
+
+
+
+#: every statement touches at most 4 shards, so collect_select reads it
+#: from the files
+_AGG_FILE_GRID = [
+    # tag group-by: every kind, NULL and DECIMAL group keys (-0.0 is 0.0,
+    # every NaN one group), count(tag) skipping NULLs, a tag older files
+    # lack, ORDER BY value or group field, LIMIT with and without order
+    "select count(*) from aggm group by name",
+    "select count(late) from aggm group by name",
+    "select count(distinct value) from aggm group by name",
+    "select count(distinct h) from aggm group by name",
+    "select count(distinct late) from aggl group by name",
+    "select sum(value) from aggm group by h",
+    "select min(value) from aggm group by name order by name",
+    "select max(value) from aggm group by name order by value desc",
+    "select max(value) from aggm group by h order by h",
+    "select avg(value) from aggm where timestamp >= 5000 group by name "
+    "order by value limit 2",
+    "select first(value) from aggm group by name order by name",
+    "select last(value) from aggm where not name = 'b' group by name",
+    "select first(value) from aggl where timestamp > 9000 group by late",
+    "select sum(value) from aggm group by name limit 2",
+    "select max(value) from aggl group by name order by name desc limit 2",
+    "select sum(value) from aggl group by late order by value",
+    "select avg(value) from aggl group by name",
+    "select min(value) from aggl where value < 100 group by late order by value desc",
+    # global: every kind at once, NaN matching `>` (Spark orders NaN above
+    # every number), count clamped to LIMIT, empty input
+    "select count(*), sum(value), min(value), max(value), avg(value), "
+    "count(distinct value) from aggm",
+    "select count(*), sum(value), min(value), max(value), avg(value), "
+    "count(distinct value) from aggl",
+    "select count(late), count(distinct name), sum(value) from aggm "
+    "where timestamp > 12000 limit 3",
+    "select max(value), min(value), count(*) from aggm where value > 2",
+    "select count(*), sum(value), min(value), max(value), avg(value), "
+    "count(distinct name) from aggm where name = 'zz'",
+    "select count(*), sum(value), min(value), max(value), avg(value), "
+    "count(distinct name) from aggl where timestamp < 0",
+    "select sum(value) from aggl where timestamp >= 10000 limit 1",
+    # temporal: empty buckets 0, takeRight LIMIT both ways, disjoint
+    # NOT-complement axes, the zero-skipping min, every kind
+    "select count(*) from aggm group by interval 7s",
+    "select sum(value) from aggm group by interval 5s order by timestamp desc limit 3",
+    "select sum(value) from aggl group by interval 4s order by timestamp limit 3",
+    "select max(value) from aggm where not timestamp in (8000, 21000) "
+    "group by interval 4s",
+    "select count(*) from aggl where timestamp < 3000 or timestamp > 26000 "
+    "group by interval 2s",
+    "select min(value) from aggl group by interval 20s",
+    "select min(value) from aggm group by interval 20s",
+    "select max(value) from aggl group by interval 20s",
+    "select avg(value) from aggl where timestamp > 3000 group by interval 6s limit 4",
+    "select count(distinct name) from aggm group by interval 10s",
+    "select count(distinct value) from aggm group by interval 9s",
+    "select sum(value) from aggl where timestamp > 29000 group by interval 1s",
+    "select count(*) from aggm where timestamp > 40000 group by interval 1s",
+]
+
+
+def test_aggregate_file_route_parity_grid(engine):
+    """collect_select reads a shard-pruned tag group-by, global or
+    temporal aggregate from the shard files with pyarrow, with no Spark
+    planning, and returns what the Column pipeline returns on the
+    analytics session: the same rows, cell types and values (floats to
+    rel 1e-9, NaN equal to NaN; see assert_aggregate_file_route for the
+    group-by rows whose order Spark leaves open)."""
+    import math
+
+    from nsdb_spark.sql.parser import parse
+
+    load_aggregate_parity(engine)
+    for q in _AGG_FILE_GRID:
+        assert_aggregate_file_route(engine, q)
+    # a -0.0 grouping key reads as 0.0, as Spark normalizes it (same_cell
+    # does not see the sign of a zero)
+    stmt = parse("select count(*) from aggm group by h", db="default", namespace="default")
+    zeros = [r[0] for r in file_served_rows(engine, stmt) if r[0] == 0]
+    assert len(zeros) == 1 and math.copysign(1.0, zeros[0]) == 1.0
+
+
+def test_aggregate_file_route_bigint_sum_overflow_raises(engine):
+    """A BIGINT sum past the 64-bit range raises, as Spark's ANSI sum does
+    on the Spark route; the file route never wraps it."""
+    from pyspark.errors import ArithmeticException
+
+    from nsdb_spark.sql.parser import parse
+
+    big = (1 << 62) + 1
+    engine.insert_bits("default", "default", "ovf", [Bit(t, big, {}, {"g": "x"}) for t in (1, 2)])
+    engine.insert_bits("default", "default", "ovf", [Bit(3, big, {}, {"g": "x"})])
+    for q in ("select sum(value) from ovf", "select sum(value) from ovf group by g",
+              "select sum(value) from ovf group by interval 1h"):
+        stmt = parse(q, db="default", namespace="default")
+        with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
+            file_served_rows(engine, stmt)
+        with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
+            column_route_rows(engine, stmt)
+    # the exact sum of values whose 64-bit running sum wraps midway
+    engine.insert_bits("default", "default", "ovf", [Bit(t, -big, {}, {"g": "x"}) for t in (4, 5)])
+    stmt = parse("select sum(value) from ovf", db="default", namespace="default")
+    assert file_served_rows(engine, stmt) == [(big,)]
+
+
+def test_aggregate_read_from_files_skips_a_file_removed_after_listing(engine, monkeypatch):
+    """An aggregate's shard file removed between the listing and the read
+    is skipped, not an error, as ignoreMissingFiles skips it on the Spark
+    route."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from nsdb_spark.sql.parser import parse
+
+    engine.insert_bits("default", "default", "gone", [Bit(1, 1, {}, {}), Bit(2, 2, {}, {})])
+    engine.insert_bits("default", "default", "gone", [Bit(3, 3, {}, {})])
+    listed, removed = engine.warehouse.shard_files, []
+
+    def list_then_remove(*args):
+        files = listed(*args)
+        assert len(files) == 2
+        removed.extend(pq.read_table(files[0])["value"].to_pylist())
+        os.remove(files[0])
+        return files
+
+    monkeypatch.setattr(engine.warehouse, "shard_files", list_then_remove)
+    got = engine.collect_select(
+        parse("select count(*), sum(value) from gone", db="default", namespace="default")
+    )
+    assert [tuple(r) for r in got] == [(3 - len(removed), 6 - sum(removed))]
+
+
+def test_aggregate_read_from_files_sees_an_insert_between_two_reads(engine):
+    """Two identical aggregate reads with an insert between them: the
+    second sees the inserted row (the write moves the cache token)."""
+    from nsdb_spark.sql.parser import parse
+
+    engine.insert_bits("default", "default", "ins", [Bit(t, t, {}, {"g": "x"}) for t in (1, 2, 3)])
+    for q, before, after in (
+        ("select sum(value) from ins group by g", [("x", 6)], [("x", 10)]),
+        ("select count(*) from ins where timestamp >= 0", [(3,)], [(4,)]),
+    ):
+        stmt = parse(q, db="default", namespace="default")
+        assert [tuple(r) for r in engine.collect_select(stmt)] == before
+        engine.insert_bits("default", "default", "ins", [Bit(4, 4, {}, {"g": "x"})])
+        assert [tuple(r) for r in engine.collect_select(stmt)] == after
+        engine.execute("delete from ins where timestamp = 4")
+
+
+def test_explain_select_reports_the_route_collect_select_takes(engine):
+    """explain_select's route names the route collect_select takes,
+    through the same gate: a shard-pruned aggregate is read from the
+    files, an ordered point read plans on the serving session, a DISTINCT
+    read on the analytics session, and a group-by with a registered
+    rollup is served from it. The files case runs no Spark job."""
+    from nsdb_spark.sql.parser import parse
+
+    engine.warehouse.init_metric("default", "default", "rt", 10000)
+    engine.insert_bits(
+        "default", "default", "rt",
+        [Bit(t, t, {}, {"g": "x"}) for t in range(0, 100000, 5000)],
+    )
+    engine.materialize_group_rollup("default", "default", "rt", "g")
+    cases = {
+        "select count(*) from rt where timestamp >= 40000 and timestamp < 70000 "
+        "group by g": "files",
+        "select * from rt where timestamp >= 40000 and timestamp < 70000 "
+        "order by timestamp limit 3": "serving",
+        "select distinct g from rt limit 3": "analytics",
+        "select sum(value) from rt group by g": "rollup",
+    }
+    for q, route in cases.items():
+        assert engine.explain_select(q)["route"] == route, q
+    q = next(iter(cases))
+    engine.invalidate_plan_caches()
+    rows = file_served_rows(engine, parse(q, db="default", namespace="default"))
+    assert rows == [("x", 6)]
 
 
 def test_point_serving_view_reregisters_on_mutation(agg_engine):

@@ -17,7 +17,7 @@ import time
 
 import pytest
 
-from fixtures import LONG_METRIC, load
+from fixtures import AGG_LONG_METRIC, LONG_METRIC, load
 from nsdb_spark.grpc import hpack, proto
 from nsdb_spark.grpc.server import parse_duration_ms, serve_grpc
 from nsdb_spark.grpc.client import GrpcError, NsdbGrpcClient
@@ -285,6 +285,19 @@ def test_grpc_execute_sql_parse_failure_shape(grpc_client):
     assert not out.get("completedSuccessfully", False)  # proto3 default absent
     assert out["reason"] == "sql statement not valid"
     assert out.get("message")
+
+
+
+def test_grpc_integer_literal_outside_64_bits_is_not_valid(engine, grpc_client):
+    """An integer literal no signed 64-bit long holds is rejected as an
+    invalid statement, not failed inside execution."""
+    load(engine, "aggregationLongMetric", AGG_LONG_METRIC)
+    out = grpc_client.execute_sql(
+        "default", "default",
+        "select * from aggregationLongMetric where age < 100000000000000000000 limit 100",
+    )
+    assert not out.get("completedSuccessfully", False)
+    assert out["reason"] == "sql statement not valid"
 
 
 def test_grpc_execute_sql_missing_metric_reason(grpc_client):

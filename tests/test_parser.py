@@ -265,3 +265,41 @@ def test_star_leading_field_list_swallows_rest_reference_parity():
     assert isinstance(parse("select *, age from m").fields, ast.AllFields)
     with pytest.raises(SQLParseError):
         parse("select age, * from m")
+
+
+_BIG = "100000000000000000000"  # 2^66.4: no signed 64-bit long holds it
+
+
+@pytest.mark.parametrize("sql", [
+    f"select * from m where age < {_BIG} limit 100",
+    f"select * from m where age = -{_BIG}",
+    f"select * from m where age in (1, {_BIG})",
+    f"select * from m where timestamp > now - {_BIG} s",
+    f"select * from m limit {_BIG}",
+    "select * from m where age > 9223372036854775808",
+    "select * from m where age > -9223372036854775809",
+    f"select count(*) from m group by interval {_BIG} s",
+    f"select count(*) from m group by interval 1 s since {_BIG} s",
+    f"insert into m ts = {_BIG} val = 1",
+    f"insert into m val = {_BIG}",
+    f"insert into m tags (age = -{_BIG}) val = 1",
+])
+def test_integer_literal_outside_64_bits_is_a_parse_error(sql):
+    """The reference reads every integer literal with toLong: one outside
+    the signed 64-bit range is not a valid statement, wherever it is
+    (comparison values, LIMIT, INSERT timestamp, value and fields,
+    relative and interval quantities)."""
+    with pytest.raises(SQLParseError, match="64-bit"):
+        parse(sql)
+
+
+def test_integer_literal_at_the_64_bit_bounds_parses():
+    s = parse("select * from m where age > -9223372036854775808 limit 9223372036854775807")
+    assert s.condition.expression.value == ast.AbsoluteComparisonValue(-(1 << 63))
+    assert s.limit == ast.LimitOperator((1 << 63) - 1)
+    ins = parse("insert into m ts = 9223372036854775807 val = -9223372036854775808")
+    assert (ins.timestamp, ins.value) == ((1 << 63) - 1, -(1 << 63))
+    # a decimal literal is a double, not bound to 64 bits
+    assert parse(f"select * from m where h < {_BIG}.5").condition.expression.value == (
+        ast.AbsoluteComparisonValue(float(f"{_BIG}.5"))
+    )

@@ -152,13 +152,24 @@ def _jobs_of(engine, sql: str) -> tuple[int, list]:
     )
 
 
+def _executed(engine, sql: str):
+    """The execute_select thunk of one statement: plan and collect through
+    Spark (collect_select reads shard-pruned aggregates from the files)."""
+    from nsdb_spark.sql.parser import parse
+
+    return lambda: engine.execute_select(
+        parse(sql, db="default", namespace="default")
+    ).collect()
+
+
 def test_shard_pruned_temporal_read_runs_one_job(sharded_engine):
     """A temporal read whose pruning leaves 3 of planm's 10 shards plans
     on the interpreted one-partition serving session: the axis join is a
     merge join inside the result job (no broadcast collect job, no
     range-sampling job for the final sort), so the whole read is ONE
     Spark job and the plan has no BroadcastExchange and no
-    WholeStageCodegen span."""
+    WholeStageCodegen span. (execute_select: collect_select reads it from
+    the shard files.)"""
     sql = (
         "select sum(value) from planm where timestamp >= 40000 and "
         "timestamp < 70000 group by interval 10s"
@@ -168,7 +179,7 @@ def test_shard_pruned_temporal_read_runs_one_job(sharded_engine):
     plan = plan_of(df)
     assert "BroadcastExchange" not in plan
     assert "WholeStageCodegen" not in plan
-    jobs, rows = _jobs_of(sharded_engine, sql)
+    jobs, rows = _jobs_during(sharded_engine.spark, _executed(sharded_engine, sql))
     assert jobs == 1
     assert [tuple(r) for r in rows] == [
         (49999, 40000, 49999, 85000),
@@ -179,10 +190,11 @@ def test_shard_pruned_temporal_read_runs_one_job(sharded_engine):
 
 def test_shard_pruned_tag_group_by_runs_one_job(sharded_engine):
     """A shard-pruned tag group-by runs its partial/final aggregate in one
-    job on the serving session: no AQE shuffle-map job before it."""
+    job on the serving session: no AQE shuffle-map job before it
+    (execute_select: collect_select reads it from the shard files)."""
     sql = "select count(*) from planm where timestamp >= 40000 and timestamp < 70000 group by g"
     assert sharded_engine.execute(sql).sparkSession is sharded_engine._serving_session()
-    jobs, rows = _jobs_of(sharded_engine, sql)
+    jobs, rows = _jobs_during(sharded_engine.spark, _executed(sharded_engine, sql))
     assert jobs == 1
     assert [tuple(r) for r in rows] == [("x", 6)]
 
@@ -197,22 +209,50 @@ def test_shard_pruned_serving_aggregate_is_one_task(sharded_engine, sql):
     """A shard-pruned tag group-by, global aggregate or temporal read on
     the serving session reads its pruned shards as ONE partition, so its
     aggregate and axis merge join need no Exchange: one job of one task,
-    with the shard pruning still in the scan."""
-    from nsdb_spark.sql.parser import parse
-
+    with the shard pruning still in the scan (execute_select:
+    collect_select reads it from the shard files)."""
     df = sharded_engine.execute(sql)
     assert df.sparkSession is sharded_engine._serving_session()
     plan = plan_of(df)
     assert "Exchange" not in plan
     i = plan.find("PartitionFilters")
     assert i >= 0 and "shard_start" in plan[i : i + 120]
-    jobs, tasks, _ = _jobs_and_tasks(
-        sharded_engine.spark,
-        lambda: sharded_engine.collect_select(
-            parse(sql, db="default", namespace="default")
-        ),
-    )
+    jobs, tasks, _ = _jobs_and_tasks(sharded_engine.spark, _executed(sharded_engine, sql))
     assert (jobs, tasks) == (1, 1)
+
+
+@pytest.mark.parametrize("sql, want", [
+    ("select count(*) from planm where timestamp >= 40000 and timestamp < 70000 group by g",
+     [("x", 6)]),
+    ("select count(*), max(value) from planm where timestamp >= 40000 and timestamp < 70000",
+     [(6, 65000)]),
+    ("select sum(value) from planm where timestamp >= 40000 and timestamp < 70000 "
+     "group by interval 10s",
+     [(49999, 40000, 49999, 85000), (59999, 49999, 59999, 105000),
+      (69999, 59999, 69999, 125000)]),
+])
+def test_novel_aggregate_read_runs_no_spark_job(sharded_engine, sql, want):
+    """A novel shard-pruned tag group-by, global or temporal aggregate
+    (3 of planm's 10 shards) is read from the shard files with pyarrow
+    through collect_select: no Spark job."""
+    jobs, rows = _jobs_of(sharded_engine, sql)
+    assert (jobs, [tuple(r) for r in rows]) == (0, want)
+
+
+@pytest.mark.parametrize("sql", [
+    # a registered group rollup serves it
+    "select sum(value) from planm group by g",
+    # mixed plain+aggregate global
+    "select value, count(*) from planm where timestamp >= 40000 and timestamp < 70000 "
+    "limit 3",
+])
+def test_rollup_and_mixed_aggregate_reads_keep_spark(sharded_engine, sql):
+    """The twins the file route leaves to Spark: a rollup-eligible
+    group-by (the rollup keeps precedence) and a mixed plain+aggregate
+    global each run a Spark job through collect_select."""
+    sharded_engine.materialize_group_rollup("default", "default", "planm", "g")
+    jobs, rows = _jobs_of(sharded_engine, sql)
+    assert jobs >= 1 and rows
 
 
 @pytest.mark.parametrize("name", [

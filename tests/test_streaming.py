@@ -1186,9 +1186,10 @@ def test_identical_agg_subscriptions_execute_once_per_tick(manager, engine):
     engine execution per tick, fanned out to every callback with
     independent payload dicts — and a tick with NO intervening write
     costs ZERO executions: the historical scan populated the engine's
-    token-guarded result cache and the tick serves it. Every
-    Spark-touching path in the tick plans through _plan_select, so an
-    empty spy log == zero Spark jobs. (The reference re-executes per
+    token-guarded result cache and the tick serves it. Every execution
+    in the tick plans through _plan_select or reads the shard files
+    through _read_aggregate_rows, so an empty spy log == zero
+    executions. (The reference re-executes per
     subscription every tick — PublisherActor.scala:205-218 — so both the
     coalescing and the cache serve are improvements, not parity breaks:
     payloads are identical by construction.)"""
@@ -1201,12 +1202,18 @@ def test_identical_agg_subscriptions_execute_once_per_tick(manager, engine):
 
     execs = []
     orig = engine._plan_select
+    read = engine._read_aggregate_rows
 
     def spy(stmt, tc=None, **kw):
         execs.append(repr(stmt))
         return orig(stmt, tc, **kw)
 
+    def read_spy(file_read):
+        execs.append(repr(file_read.parsed.statement))
+        return read(file_read)
+
     engine._plan_select = spy
+    engine._read_aggregate_rows = read_spy
     try:
         manager.tick(5100)
         # no write landed since the historical scans → zero executions,
@@ -1227,6 +1234,7 @@ def test_identical_agg_subscriptions_execute_once_per_tick(manager, engine):
         manager.tick(10100)
     finally:
         engine._plan_select = orig
+        del engine._read_aggregate_rows
     assert len(execs) == 2 and len(set(execs)) == 2
     for cb in same:
         assert len(cb.pushes) == 3

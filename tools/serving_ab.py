@@ -10,17 +10,21 @@ Measures, in ONE process, the bench's serving scenarios:
                               group-by and temporal alternating (the
                               shard-pruned aggregate route)
 
+Each scenario reports its seconds and, beside them as `<name>_jobs`, the
+Spark jobs it started (the status tracker's job-id delta): a scenario the
+engine answers from its caches or from the shard files shows 0.
+
 Variant knobs (env):
-  SPARK_GRAFT_CPUS     — core count (the 32-vs-8 axis)
+  SPARK_GRAFT_CPUS     — core count (default: the CPUs this process may
+                         run on)
   SERVING_MODE         — interp (current code), interp-nocap (reset the
                          r9 partition caps to the r8 defaults), codegen
-                         (disable the serving route for point AND
-                         aggregate reads: plans stay on the codegen
-                         session)
+                         (disable the shard-file and serving routes for
+                         point AND aggregate reads: plans stay on the
+                         codegen session)
 
 `SERVING_MODE=codegen` against `SERVING_MODE=interp` is the before/after of
-serving shard-pruned aggregates on the interpreted session
-(grpc_100_distinct_aggs).
+the shard-pruned routes (grpc_100_distinct_aggs: the shard files).
 
 Run it alternately across variants from a driver shell; each invocation
 prints one JSON line. 20-iteration warmup per scenario before timing
@@ -39,7 +43,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     mode = os.environ.get("SERVING_MODE", "interp")
 
     from nsdb_spark.session import tuned_builder
@@ -49,7 +53,7 @@ def main() -> None:
         .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", "32g")
+        .config("spark.driver.memory", "2g")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
@@ -62,15 +66,25 @@ def main() -> None:
     from nsdb_spark.sources import testdata
 
     res: dict[str, float] = {}
+    sc = spark.sparkContext
+
+    def jobs_started() -> int:
+        """One past the newest job id (job ids are sequential)."""
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(sc.statusTracker().getJobIdsForGroup(None), default=-1) + 1
+
+    def timed(name: str, run) -> None:
+        """res[name] = seconds of run(); res[name + "_jobs"] = its jobs."""
+        jobs, t0 = jobs_started(), time.time()
+        run()
+        res[name] = round(time.time() - t0, 3)
+        res[f"{name}_jobs"] = jobs_started() - jobs
 
     # --- gatling shape (analytics session, like bench.py) ---
     point = testdata.events_metric(spark, sf_dir).limit(1)
     for _ in range(20):
         point.collect()
-    t0 = time.time()
-    for _ in range(100):
-        point.collect()
-    res["gatling_100_point_queries"] = round(time.time() - t0, 3)
+    timed("gatling_100_point_queries", lambda: [point.collect() for _ in range(100)])
 
     # --- grpc engine scenarios ---
     engine = NsdbEngine(spark, tempfile.mkdtemp(prefix="grpc_ab_"))
@@ -91,34 +105,35 @@ def main() -> None:
         for _ in range(20):
             client.execute_sql("default", "default",
                                "select * from points limit 1")
-        t0 = time.time()
         ok = 0
-        for _ in range(100):
-            r = client.execute_sql("default", "default",
-                                   "select * from points limit 1")
-            if r.get("completedSuccessfully") and r.get("records"):
-                ok += 1
-        res["grpc_100_point_queries"] = round(time.time() - t0, 3)
+
+        def points() -> None:
+            nonlocal ok
+            for _ in range(100):
+                r = client.execute_sql("default", "default",
+                                       "select * from points limit 1")
+                if r.get("completedSuccessfully") and r.get("records"):
+                    ok += 1
+
+        timed("grpc_100_point_queries", points)
 
         for i in range(20):
             client.execute_sql("default", "default",
                                f"select * from points limit {101 + i}")
-        t0 = time.time()
-        for i in range(100):
-            client.execute_sql("default", "default",
-                               f"select * from points limit {i + 1}")
-        res["grpc_100_distinct_queries"] = round(time.time() - t0, 3)
+        timed("grpc_100_distinct_queries", lambda: [
+            client.execute_sql("default", "default", f"select * from points limit {i + 1}")
+            for i in range(100)
+        ])
 
         for i in range(20):
             client.execute_sql(
                 "default", "default",
                 f"select * from points where timestamp >= {100 + i} limit 5")
-        t0 = time.time()
-        for i in range(100):
+        timed("grpc_100_distinct_shapes", lambda: [
             client.execute_sql(
-                "default", "default",
-                f"select * from points where timestamp >= {i} limit 5")
-        res["grpc_100_distinct_shapes"] = round(time.time() - t0, 3)
+                "default", "default", f"select * from points where timestamp >= {i} limit 5")
+            for i in range(100)
+        ])
 
         def agg_sql(lo: int) -> str:
             where = f"where timestamp >= {lo} and timestamp < {lo + 100}"
@@ -128,12 +143,13 @@ def main() -> None:
 
         for i in range(20):
             client.execute_sql("default", "default", agg_sql(100 + i))
-        t0 = time.time()
-        for i in range(100):
-            r = client.execute_sql("default", "default", agg_sql(i))
-            if not r.get("completedSuccessfully"):
-                raise RuntimeError(f"aggregate rpc failed: {r}")
-        res["grpc_100_distinct_aggs"] = round(time.time() - t0, 3)
+        def aggs() -> None:
+            for i in range(100):
+                r = client.execute_sql("default", "default", agg_sql(i))
+                if not r.get("completedSuccessfully"):
+                    raise RuntimeError(f"aggregate rpc failed: {r}")
+
+        timed("grpc_100_distinct_aggs", aggs)
         res["ok"] = ok
     finally:
         client.close()
