@@ -520,9 +520,9 @@ def main() -> None:
         results["grpc_distinct_success_pct"] = 100.0 * ok2 / 100
         # Honest complement #2: 100 distinct SHAPES (unique filter
         # literal per rpc — timestamps span 0..199, so every i yields a
-        # unique statement with non-empty results) — the shape cache
-        # binds only LIMIT slots, so each of these pays the full
-        # parse→analyze→compile→collect path. This is the true uncached
+        # unique statement with non-empty results) — each of these, like
+        # each unique-LIMIT statement above, pays the full
+        # parse→analyze→route→read path. This is the true uncached
         # per-statement floor.
         t0 = time.time()
         ok3 = 0

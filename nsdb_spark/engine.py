@@ -64,8 +64,7 @@ class _Planned(NamedTuple):
     # (DataFrame, analyzed plan, rollup-routed?); DataFrame None when the
     # rows were read from the shard files (collect_select's "files" route)
     plan: tuple
-    rows: list | None = None  # collected rows, at most _CACHED_ROWS_MAX
-    complete: bool = False  # rows are the statement's whole result
+    rows: list | None = None  # the collected result, at most _CACHED_ROWS_MAX
 
 
 def _scan_shard_files(
@@ -98,16 +97,24 @@ def _rows(columns: list[str], tuples) -> list:
     return rows
 
 
-class _FileRead(NamedTuple):
-    """A statement collect_select reads from its touched shards' files."""
+class _Read(NamedTuple):
+    """A SELECT's route and what it reads, decided once (NsdbEngine._route)
+    after the cache token is read: collect_select reads the shard files or
+    plans with it, explain_select reports it."""
 
     schema: MetricSchema
     parsed: Any
     ctx: TimeContext
     locations: list[int]
     shard_interval: int
-    files: list[str]
-    predicate: Any  # pyarrow expression of the WHERE, None without one
+    ivs: list  # the WHERE-implied time intervals
+    spec: RollupSpec | None  # the rollup that serves it (_rollup_route)
+    serving: bool  # _point_route's answer
+    route: str  # "rollup", "files", "serving" or "analytics"
+    # the touched shards' files in shard order and the WHERE as a pyarrow
+    # expression (None without one); on the "files" route only
+    files: list[str] | None = None
+    predicate: Any = None
 
 
 def _serving_view(db: str, ns: str, metric: str) -> str:
@@ -132,9 +139,12 @@ class NsdbEngine:
         # reference's signature Gatling/gRPC workload shape,
         # LoadSimulation.scala:47) would re-pay parse→analyze→spark.read→
         # compile on every call — ~99 ms/rpc of pure plan build at
-        # local[32]. Keyed on (db, ns, metric, statement fingerprint); an
-        # entry holds the plan plus, up to _CACHED_ROWS_MAX, its collected
-        # rows (see collect_select). Valid only under the _cache_token it
+        # local[32]. ONE entry per SELECT, keyed on (db, ns, metric,
+        # statement fingerprint), so statements that differ only in LIMIT
+        # are separate entries; an entry holds the plan, the collected
+        # rows (up to _CACHED_ROWS_MAX, see collect_select), or both:
+        # storing either keeps the other when it was stored under the
+        # same token. Valid only under the _cache_token it
         # was stored with, so any write, delete, drop, restore, retention
         # eviction, or rollup (de)registration invalidates. Time-dependent
         # statements (relative `now`, SINCE grace) bypass — their compiled
@@ -696,10 +706,6 @@ class NsdbEngine:
 
     #: collected rows are cached alongside a plan only under this bound —
     #: the cache is for the dashboard/point-query shape, not bulk scans.
-    #: It is also the shape over-fetch: the first execution of a LIMIT-k
-    #: plain SELECT fetches max(k, this) rows, so every later limit up to
-    #: the bound binds as a slice with NO Spark job (CollectLimit /
-    #: TakeOrdered make the over-fetch nearly free at point-query scale).
     _CACHED_ROWS_MAX = 10_000
 
     def collect_select(
@@ -714,133 +720,39 @@ class NsdbEngine:
         list — callers may mutate their result without poisoning the
         cache.
 
-        Statements that differ only in the LIMIT literal additionally
-        share one execution of the LIMIT-stripped statement (see
-        _collect_via_shape). A novel statement that _route sends to
-        "files" runs no Spark job: an unordered plain `... LIMIT k` read
+        A miss decides the statement's route once (_route) and reads
+        exactly what the statement asks for: a `... LIMIT k` read fetches
+        k rows. A novel statement that _route sends to "files" runs no
+        Spark job: an unordered plain `... LIMIT k` read
         (_read_point_rows), or a tag group-by, global or temporal
         aggregate (_read_aggregate_rows), read from the touched shards'
         files with pyarrow. Its rows go into the statement's plan-cache
-        entry with no DataFrame."""
+        entry with no DataFrame. Every other route plans through
+        _plan_select and collects."""
         slot = self._cache_slot(stmt)
         key, token = slot
-        analysis = None
+        hit = None
         if key is not None:
             hit = self._plans.get(key, token)
-            if hit is not None and hit.complete:
+            if hit is not None and hit.rows is not None:
                 return list(hit.rows)
-            if stmt.limit is not None:
-                shaped, analysis = self._collect_via_shape(stmt, time_context, key, token)
-                if shaped is not None:
-                    return shaped
-        analysis = analysis or self._analyze(stmt)
-        read = self._file_read(stmt, analysis, time_context)
-        if read is None:
-            plan = self._plan_select(stmt, time_context, slot=slot, analysis=analysis)
+        read = self._route(stmt, time_context)
+        if read.route != "files":
+            plan = self._plan_select(stmt, time_context, slot=slot, read=read)
             rows = plan[0].collect()
         else:
-            plan = (None, analysis[1], False)
+            # a plan stored under this token stays cached beside the rows
+            plan = hit.plan if hit is not None else (None, read.parsed, False)
             if isinstance(read.parsed, analyzer.ParsedSimpleQuery):
                 rows = self._read_point_rows(read, stmt.limit.value)
             else:
                 rows = self._read_aggregate_rows(read)
         if key is not None and len(rows) <= self._CACHED_ROWS_MAX:
-            self._plans.put(key, token, _Planned(plan, list(rows), True))
+            self._plans.put(key, token, _Planned(plan, list(rows)))
         return rows
 
-    def _collect_via_shape(
-        self,
-        stmt: ast.SelectSQLStatement,
-        time_context: TimeContext | None,
-        key: tuple,
-        token: tuple,
-    ) -> tuple[list | None, tuple | None]:
-        """Shape-keyed LIMIT binding for the distinct-statement dashboard
-        workload: statements identical but for the LIMIT literal compile
-        and execute ONCE — the plan-cache entry of the LIMIT-stripped
-        statement holds its plan plus an over-fetched row prefix, and
-        each limit binds at serve time as a prefix slice. When the prefix
-        is the whole result, the entry also answers the statement without
-        a LIMIT.
-
-        Scope is deliberately the plain (ParsedSimpleQuery) class only,
-        where LIMIT k = "the first k matching rows" and a prefix of a
-        superset is exactly equivalent (with ORDER BY the superset is the
-        globally ordered prefix, so the slice is the exact top-k).
-        Aggregate classes are excluded because their VALUES depend on the
-        limit (global count clamps to LIMIT; temporal LIMIT = takeRight —
-        SURVEY §2.5), not just their row count.
-
-        A novel unordered point read fetches its prefix from the shard
-        files with pyarrow, with no Spark job (_read_point_rows); its
-        entry holds the rows and no DataFrame. Every other shape plans and
-        collects through Spark. Returns (rows, None), or (None, analysis)
-        when the statement isn't shape-eligible: the caller falls through
-        to the normal path with the analysis this ran, if any."""
-        k = stmt.limit.value
-        if k <= 0:
-            return None, None
-        nolimit = dataclasses.replace(stmt, limit=None)
-        skey = key[:3] + (repr(nolimit),)
-        # cache lookup FIRST — a hit proves eligibility through its
-        # analyzed plan, so the serve path pays no schema-file read and
-        # no analyze pass
-        ent = self._plans.get(skey, token)
-        if ent is not None:
-            if not isinstance(ent.plan[1], analyzer.ParsedSimpleQuery):
-                return None, None
-            if ent.rows is not None and (ent.complete or len(ent.rows) >= k):
-                return ent.rows[:k], None
-        # the one analysis: LIMIT plays no part in it, so it serves the
-        # normal path too, and the shape once rebound to `nolimit`
-        schema, parsed = analysis = self._analyze(stmt)
-        if not isinstance(parsed, analyzer.ParsedSimpleQuery):
-            return None, analysis
-        bound = max(k, self._CACHED_ROWS_MAX)
-        read = self._file_read(stmt, analysis, time_context)
-        parsed = dataclasses.replace(parsed, statement=nolimit)
-        if read is not None:
-            plan = (None, parsed, False)
-            rows = self._read_point_rows(read, bound)
-        else:
-            plan = self._plan_select(
-                nolimit, time_context, point_serve=k <= self._POINT_SERVE_MAX_LIMIT,
-                slot=(skey, token), analysis=(schema, parsed),
-            )
-            rows = plan[0].limit(bound).collect()
-        if len(rows) <= self._CACHED_ROWS_MAX:
-            self._plans.put(skey, token, _Planned(plan, rows, len(rows) < bound))
-        return rows[:k], None
-
-    def _file_read(
-        self, stmt, analysis: tuple, time_context: TimeContext | None
-    ) -> _FileRead | None:
-        """The shard-file read of a statement that _route sends to
-        "files", else None: its touched shards' files (listed in shard
-        order, after the caller read the cache token) and its WHERE as a
-        pyarrow expression. The shard files hold only their own shard's
-        timestamps, so the WHERE alone stands for the shard conjunct of
-        the Spark route."""
-        schema, parsed = analysis
-        db, ns = stmt.db or "default", stmt.namespace or "default"
-        ctx = time_context or TimeContext(self.now_fn())
-        info = self.warehouse.get_info(db, ns, stmt.metric)
-        si = info["shardInterval"]
-        cond = stmt.condition.expression if stmt.condition else None
-        ivs = extract_time_range(cond, ctx)
-        locations = self.warehouse.locations(db, ns, stmt.metric)
-        if self._route(stmt, parsed, info, locations, ivs, ctx) != "files":
-            return None
-        return _FileRead(
-            schema, parsed, ctx, locations, si,
-            self.warehouse.shard_files(
-                db, ns, stmt.metric, touched_shards(locations, ivs, si)
-            ),
-            None if cond is None else arrow_expression(cond, ctx),
-        )
-
     @staticmethod
-    def _read_point_rows(read: _FileRead, bound: int) -> list:
+    def _read_point_rows(read: _Read, bound: int) -> list:
         """The first `bound` rows of a plain SELECT, read from its shard
         files in shard order without Spark: the scan stops once it holds
         `bound` rows (the reference's metric reader visits its shards in
@@ -853,7 +765,7 @@ class NsdbEngine:
         return _rows(columns, zip(*(table[c].to_pylist() for c in columns)))
 
     @staticmethod
-    def _read_aggregate_rows(read: _FileRead) -> list:
+    def _read_aggregate_rows(read: _Read) -> list:
         """A tag group-by, global or temporal aggregate computed from its
         shard files without Spark (compiler.arrow_aggregate), as the
         reference's shard readers compute facet partials that post_proc
@@ -884,76 +796,71 @@ class NsdbEngine:
         self,
         stmt: ast.SelectSQLStatement,
         time_context: TimeContext | None = None,
-        point_serve: bool = False,
         slot: tuple | None = None,
-        analysis: tuple | None = None,
+        read: _Read | None = None,
     ) -> tuple[DataFrame, Any, bool]:
         """Shared SELECT planning: (DataFrame, analyzed plan, rollup-routed?).
         execute_select returns the frame; explain_select reports the rest.
 
-        point_serve: the caller (the shape path, which strips LIMIT
-        before planning) vouches that only a point-read-sized prefix of
-        the result will be fetched — makes the statement eligible for
-        the interpreted serving session even without its own LIMIT.
         slot: the caller's _cache_slot(stmt), when it already has one.
-        analysis: the caller's _analyze(stmt), when it already ran it."""
+        read: the caller's _route(stmt, ...), decided after that slot's
+        token was read, when it already has one."""
         key, token = slot or self._cache_slot(stmt)
+        hit = None
         if key is not None:
             hit = self._plans.get(key, token)
             if hit is not None and hit.plan[0] is not None:
                 return hit.plan
         db, ns = stmt.db or "default", stmt.namespace or "default"
-        schema, parsed = analysis or self._analyze(stmt)
-        ctx = time_context or TimeContext(self.now_fn())
-        info = self.warehouse.get_info(db, ns, stmt.metric)
-        si = info["shardInterval"]
-        routed = self._route_via_rollup(db, ns, stmt, parsed, info)
+        read = read or self._route(stmt, time_context)
+        schema, parsed, ctx = read.schema, read.parsed, read.ctx
+        routed = None
+        if read.spec is not None:
+            routed = self._route_via_rollup(db, ns, stmt, parsed, read.spec)
         if routed is not None:
             out = (routed, parsed, True)
-        else:
-            ivs = extract_time_range(
-                stmt.condition.expression if stmt.condition else None, ctx
+        elif read.serving and isinstance(parsed, analyzer.ParsedSimpleQuery):
+            # a plain SELECT plans as ONE parameterized spark.sql text
+            # over the serving view (shard conjunct folded into the
+            # WHERE): a single py4j roundtrip instead of ~2 per Column
+            # node, which dominated the uncached point-statement floor
+            # (BASELINE.md decomposition). Parity with the Column
+            # pipeline is pinned by the grid + hypothesis tests.
+            self._read_metric_frame(db, ns, stmt.metric, serving=True)
+            text, args = serving_sql(
+                parsed, schema, ctx,
+                view=_serving_view(db, ns, stmt.metric),
+                shards=shard_ranges(read.ivs, read.shard_interval),
             )
-            locations = self.warehouse.locations(db, ns, stmt.metric)
-            serving = self._point_route(stmt, parsed, locations, ivs, si, point_serve, ctx)
-            if serving and isinstance(parsed, analyzer.ParsedSimpleQuery):
-                # a plain SELECT plans as ONE parameterized spark.sql text
-                # over the serving view (shard conjunct folded into the
-                # WHERE): a single py4j roundtrip instead of ~2 per Column
-                # node, which dominated the uncached point-statement floor
-                # (BASELINE.md decomposition). Parity with the Column
-                # pipeline is pinned by the grid + hypothesis tests.
-                self._read_metric_frame(db, ns, stmt.metric, serving=True)
-                text, args = serving_sql(
-                    parsed, schema, ctx,
-                    view=_serving_view(db, ns, stmt.metric),
-                    shards=shard_ranges(ivs, si),
-                )
-                out = (self._serving_session().sql(text, args=args), parsed, False)
-            else:
-                df = self._prune_shards(
-                    self._read_metric_frame(db, ns, stmt.metric, serving), ivs, si
-                )
-                if serving:
-                    # a few shards' rows in ONE partition: SinglePartition
-                    # satisfies the aggregate's and the axis merge join's
-                    # distribution, so the read plans no Exchange and runs
-                    # one task (a scan reports UnknownPartitioning)
-                    df = df.coalesce(1)
-                compiler = QueryCompiler(
-                    self._serving_session() if serving else self.spark,
-                    shard_interval_ms=si,
-                    approx_count_distinct=self.approx_count_distinct,
-                )
-                out = (
-                    compiler.compile(
-                        df.drop(SHARD_COL), schema, parsed, ctx, locations=locations
-                    ),
-                    parsed,
-                    False,
-                )
+            out = (self._serving_session().sql(text, args=args), parsed, False)
+        else:
+            df = self._prune_shards(
+                self._read_metric_frame(db, ns, stmt.metric, read.serving),
+                read.ivs, read.shard_interval,
+            )
+            if read.serving:
+                # a few shards' rows in ONE partition: SinglePartition
+                # satisfies the aggregate's and the axis merge join's
+                # distribution, so the read plans no Exchange and runs
+                # one task (a scan reports UnknownPartitioning)
+                df = df.coalesce(1)
+            compiler = QueryCompiler(
+                self._serving_session() if read.serving else self.spark,
+                shard_interval_ms=read.shard_interval,
+                approx_count_distinct=self.approx_count_distinct,
+            )
+            out = (
+                compiler.compile(
+                    df.drop(SHARD_COL), schema, parsed, ctx, locations=read.locations
+                ),
+                parsed,
+                False,
+            )
         if key is not None:
-            self._plans.put(key, token, _Planned(out))
+            # rows a "files" read stored under this token stay served
+            self._plans.put(
+                key, token, _Planned(out, hit.rows if hit is not None else None)
+            )
         return out
 
     def _analyze(self, stmt: ast.SelectSQLStatement) -> tuple[MetricSchema, Any]:
@@ -964,8 +871,7 @@ class NsdbEngine:
         return schema, analyzer.analyze(stmt, schema)
 
     def _point_route(
-        self, stmt, parsed, locations, ivs, shard_interval: int, point_serve: bool,
-        ctx: TimeContext,
+        self, stmt, parsed, locations, ivs, shard_interval: int, ctx: TimeContext
     ) -> bool:
         """True when a statement should plan on the interpreted serving
         session — the one serving route for point and aggregate reads.
@@ -981,8 +887,7 @@ class NsdbEngine:
         interval over a long shard makes millions of buckets, which one
         interpreted partition joins and sorts slower than the analytics
         session. A plain SELECT serves only when it is not DISTINCT and
-        its caller fetches at most _POINT_SERVE_MAX_LIMIT rows (its own
-        LIMIT, or the shape path's vouched prefix). DISTINCT and
+        its own LIMIT is at most _POINT_SERVE_MAX_LIMIT. DISTINCT and
         LIMIT-less plain scans keep the codegen session — they are
         data-sized regardless of the shard count.
 
@@ -995,10 +900,8 @@ class NsdbEngine:
         the Column compiler."""
         if isinstance(parsed, analyzer.ParsedSimpleQuery) and (
             parsed.distinct
-            or not point_serve and (
-                stmt.limit is None
-                or stmt.limit.value > self._POINT_SERVE_MAX_LIMIT
-            )
+            or stmt.limit is None
+            or stmt.limit.value > self._POINT_SERVE_MAX_LIMIT
         ):
             return False
         if isinstance(parsed, analyzer.ParsedTemporalAggregatedQuery) and locations:
@@ -1011,25 +914,45 @@ class NsdbEngine:
         scanned = touched_shards(locations, ivs, shard_interval)
         return len(scanned) <= self._POINT_SERVE_MAX_SHARDS
 
-    def _route(self, stmt, parsed, info: dict, locations, ivs, ctx: TimeContext) -> str:
-        """The route collect_select takes for a statement: "rollup" (a
-        registered rollup serves it, _rollup_route), "files" (read from
-        the touched shards' files with pyarrow, no Spark job), "serving"
-        (planned on the interpreted serving session) or "analytics" (the
-        codegen session). The one gate of the shard-file reads, and the
-        route explain_select reports."""
+    def _route(
+        self, stmt: ast.SelectSQLStatement, time_context: TimeContext | None = None
+    ) -> _Read:
+        """A SELECT's route, decided once from one schema read, one
+        analysis, at most one read of the rollup registry and one listing
+        of the data directory: "rollup" (a registered rollup serves it,
+        _rollup_route), "files" (read from the touched shards' files with
+        pyarrow, no Spark job), "serving" (planned on the interpreted
+        serving session) or "analytics" (the codegen session). The one
+        gate of the shard-file reads, and the route explain_select
+        reports. A "files" read also lists its touched shards' files (in
+        shard order) and carries its WHERE as a pyarrow expression; the
+        shard files hold only their own shard's timestamps, so the WHERE
+        alone stands for the shard conjunct of the Spark route."""
         db, ns = stmt.db or "default", stmt.namespace or "default"
-        if self._rollup_route(db, ns, stmt, parsed, info) is not None:
-            return "rollup"
-        if not self._point_route(
-            stmt, parsed, locations, ivs, info["shardInterval"], False, ctx
-        ):
-            return "analytics"
+        schema, parsed = self._analyze(stmt)
+        ctx = time_context or TimeContext(self.now_fn())
+        si = self.warehouse.get_info(db, ns, stmt.metric)["shardInterval"]
+        cond = stmt.condition.expression if stmt.condition else None
+        ivs = extract_time_range(cond, ctx)
+        locations = self.warehouse.locations(db, ns, stmt.metric)
+        spec = self._rollup_route(db, ns, stmt, parsed, locations, si)
+        serving = self._point_route(stmt, parsed, locations, ivs, si, ctx)
+        read = _Read(schema, parsed, ctx, locations, si, ivs, spec, serving, "analytics")
+        if spec is not None:
+            return read._replace(route="rollup")
+        if not serving:
+            return read
         if isinstance(parsed, analyzer.ParsedSimpleQuery) and stmt.order is not None or (
             isinstance(parsed, analyzer.ParsedGlobalAggregatedQuery) and parsed.plain_fields
         ):
-            return "serving"
-        return "files"
+            return read._replace(route="serving")
+        return read._replace(
+            route="files",
+            files=self.warehouse.shard_files(
+                db, ns, stmt.metric, touched_shards(locations, ivs, si)
+            ),
+            predicate=None if cond is None else arrow_expression(cond, ctx),
+        )
 
     def explain_select(
         self,
@@ -1058,27 +981,25 @@ class NsdbEngine:
           "analytics" or "rollup";
         - physical_plan: Spark's executed-plan tree for the compiled frame
           (the plan execute_select runs; a "files" read runs none).
+
+        The route and the shard and time figures come from the same
+        _route answer the plan is built with.
         """
         stmt = parse(query_string, db=db, namespace=ns)
         if not isinstance(stmt, ast.SelectSQLStatement):
             raise ValueError("explain accepts SELECT statements only")
-        sdb, sns = stmt.db or "default", stmt.namespace or "default"
-        ctx = time_context or TimeContext(self.now_fn())
-        info = self.warehouse.get_info(sdb, sns, stmt.metric)
-        locations = self.warehouse.locations(sdb, sns, stmt.metric)
-        ivs = extract_time_range(
-            stmt.condition.expression if stmt.condition else None, ctx
-        )
-        scanned = touched_shards(locations, ivs, info["shardInterval"])
-        analysis = self._analyze(stmt)
-        df, parsed, routed = self._plan_select(stmt, ctx, analysis=analysis)
+        slot = self._cache_slot(stmt)
+        read = self._route(stmt, time_context)
+        df, parsed, routed = self._plan_select(stmt, read.ctx, slot=slot, read=read)
         return {
             "plan_class": type(parsed).__name__,
-            "time_ranges": [list(iv) for iv in ivs],
-            "shards_total": len(locations),
-            "shards_scanned": len(scanned),
+            "time_ranges": [list(iv) for iv in read.ivs],
+            "shards_total": len(read.locations),
+            "shards_scanned": len(
+                touched_shards(read.locations, read.ivs, read.shard_interval)
+            ),
             "rollup_routed": routed,
-            "route": self._route(stmt, analysis[1], info, locations, ivs, ctx),
+            "route": read.route,
             "physical_plan": df._jdf.queryExecution().executedPlan().toString(),
         }
 
@@ -1440,9 +1361,12 @@ class NsdbEngine:
             self.warehouse.invalidate_rollups(db, ns, metric)
             return None
 
-    def _rollup_route(self, db, ns, stmt, parsed, info) -> RollupSpec | None:
+    def _rollup_route(
+        self, db, ns, stmt, parsed, locations, shard_interval: int
+    ) -> RollupSpec | None:
         """The registered rollup that serves a temporal or group-by query,
-        decided from metadata alone (no store read), else None (raw path).
+        decided from metadata alone (no store read) and the caller's
+        listing of the metric's shards, else None (raw path).
         Temporal: agg in _ROLLUP_AGGS (or count-distinct from HLL
         registers), no WHERE, no SINCE, ORDER BY timestamp only, interval
         a multiple of a registered rollup's grain whose pinned axis is
@@ -1483,24 +1407,21 @@ class NsdbEngine:
             return None
         if spec is None:
             return None
-        locations = self.warehouse.locations(db, ns, stmt.metric)
         if not locations or spec.bounds != (
-            min(locations), max(locations) + info["shardInterval"]
+            min(locations), max(locations) + shard_interval
         ):
             return None  # axis moved (e.g. retention dropped shards) — stale
         return spec
 
-    def _route_via_rollup(self, db, ns, stmt, parsed, info):
-        """Return a rollup-served DataFrame for the query _rollup_route
-        gives a rollup, else None (raw path). Temporal ORDER BY timestamp
-        and LIMIT keep their quirk semantics (takeRight); group-by ORDER BY
-        and LIMIT apply as on the raw path."""
+    def _route_via_rollup(self, db, ns, stmt, parsed, spec: RollupSpec):
+        """Return a DataFrame served from the rollup `spec` that
+        _rollup_route chose, else None (its store vanished: raw path).
+        Temporal ORDER BY timestamp and LIMIT keep their quirk semantics
+        (takeRight); group-by ORDER BY and LIMIT apply as on the raw
+        path."""
         from .compiler import agg_alias
         from .operators import rollup as rollup_ops
 
-        spec = self._rollup_route(db, ns, stmt, parsed, info)
-        if spec is None:
-            return None
         stored = self._read_rollup_store(db, ns, stmt.metric, spec)
         if stored is None:
             return None  # swapped away mid-route — raw path serves

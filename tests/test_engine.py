@@ -1111,6 +1111,44 @@ def test_rollup_route_fallback_cases(engine, spark):
     assert plan_has_rollup("select count(*) from rf group by interval 4 s")
 
 
+def test_rollup_routed_read_reads_registry_and_data_listing_once(engine, monkeypatch):
+    """A rollup-routed read decides its route from one read of the rollup
+    registry and one listing of the data directory; a registered store
+    that vanished falls back to the raw path."""
+    import shutil
+
+    from fixtures import TEMPORAL_LONG_METRIC, load
+
+    from nsdb_spark.sql.parser import parse
+
+    load(engine, "rr", TEMPORAL_LONG_METRIC, shard_interval_ms=10000)
+    sql = "select count(*) from rr group by interval 2 s"
+    stmt = parse(sql, db="default", namespace="default")
+    raw = [tuple(r) for r in engine.execute(sql).collect()]
+    engine.materialize_rollup("default", "default", "rr", 1000)
+    wh = engine.warehouse
+    calls = {"rollups": 0, "locations": 0}
+    for name in calls:
+        orig = getattr(wh, name)
+
+        def spy(*a, _orig=orig, _name=name, **kw):
+            calls[_name] += 1
+            return _orig(*a, **kw)
+
+        monkeypatch.setattr(wh, name, spy)
+    assert engine.explain_select(sql)["rollup_routed"]
+    engine.invalidate_plan_caches()
+    calls.update(rollups=0, locations=0)
+    assert [tuple(r) for r in engine.collect_select(stmt)] == raw
+    assert calls == {"rollups": 1, "locations": 1}
+    # the store vanishes while its registration stays: raw path
+    [spec] = wh.rollups("default", "default", "rr")
+    shutil.rmtree(wh.rollup_path("default", "default", "rr", spec))
+    engine.invalidate_plan_caches()
+    assert [tuple(r) for r in engine.collect_select(stmt)] == raw
+    assert not engine.explain_select(sql)["rollup_routed"]
+
+
 def _is_group_rollup_plan(plan: str) -> bool:
     # the rollup store is eagerly checkpointed at routing time, so it
     # appears as a Scan ExistingRDD over the partial columns (ReadSchema
@@ -2218,36 +2256,6 @@ def test_result_cache_serves_and_invalidates(long_engine):
     assert len(r3) == len(r1) + 1
 
 
-def test_shape_cache_binds_distinct_limits_one_execution(long_engine):
-    """Statements identical but for the LIMIT literal (the dashboard /
-    gRPC distinct-statement workload) must compile and execute ONCE:
-    every later limit binds as a slice of the shape superset — exact for
-    ordered queries — with no further plan construction."""
-    from nsdb_spark.sql.parser import parse
-
-    plans = []
-    orig = long_engine._plan_select
-
-    def spy(stmt, tc=None, **kw):
-        plans.append(repr(stmt))
-        return orig(stmt, tc, **kw)
-
-    long_engine._plan_select = spy
-    ts = [1, 2, 4, 6, 8, 10]  # the fixture's timestamps
-    try:
-        for k in (2, 7, 1, 10, 4):
-            stmt = parse(
-                f"select * from longMetric order by timestamp limit {k}",
-                db="default", namespace="default",
-            )
-            got = [r["timestamp"] for r in long_engine.collect_select(stmt)]
-            assert got == ts[:k], (k, got)
-    finally:
-        long_engine._plan_select = orig
-    # one compile for the shared (limit-stripped) shape, nothing else
-    assert len(plans) == 1 and "limit=None" in plans[0]
-
-
 def test_serving_session_carries_tuned_and_point_confs(engine):
     """The serving session gets the shared library defaults
     (session.py — codegen fallback at the JIT ceiling) plus the
@@ -2371,9 +2379,10 @@ def test_point_serving_route_interpreted_and_identical(long_engine):
 
 
 def test_shape_cache_mutation_replaces_stale_entry(long_engine):
-    """A write invalidates the shape superset; the NEXT distinct-limit
-    query re-executes, sees the new row, and re-primes the cache (a stale
-    entry must be replaced, not wedge the shape into permanent misses)."""
+    """A write invalidates a statement's cached rows; the NEXT execution
+    re-executes, sees the new row, and re-primes the statement's entry
+    (a stale entry must be replaced, not wedge the statement into
+    permanent misses), so a repeat is served with no replan."""
     from nsdb_spark.sql.parser import parse
 
     def q(k):
@@ -2388,24 +2397,23 @@ def test_shape_cache_mutation_replaces_stale_entry(long_engine):
         "default", "default", "longMetric",
         [Bit(99, 1, {"surname": "Doe"}, {"name": "Zed"})],
     )
-    assert q(2) == [99, 10]  # stale superset not served
+    assert q(3) == [99, 10, 8]  # stale rows not served
     plans = []
     orig = long_engine._plan_select
     long_engine._plan_select = lambda s, tc=None, **kw: (
         plans.append(1), orig(s, tc, **kw),
     )[1]
     try:
-        assert q(4) == [99, 10, 8, 6]  # re-primed: served with no replan
+        assert q(3) == [99, 10, 8]  # re-primed: served with no replan
     finally:
         long_engine._plan_select = orig
     assert plans == []
 
 
 def test_novel_limit_read_analyzes_once(long_engine, monkeypatch):
-    """A novel plain `... LIMIT k` read (the shape path's miss) reads the
-    schema and runs the analyzer once: LIMIT plays no part in analysis,
-    so the shape check's analysis is the plan's too. Its rows are the
-    LIMIT's prefix of the full result."""
+    """A novel plain `... LIMIT k` read reads the schema and runs the
+    analyzer once: the route decision's analysis is the plan's too. Its
+    rows are the LIMIT's prefix of the full result."""
     from nsdb_spark import analyzer
     from nsdb_spark.sql.parser import parse
 
@@ -2434,7 +2442,7 @@ def test_novel_limit_read_analyzes_once(long_engine, monkeypatch):
     )
     assert [r["timestamp"] for r in got] == [4, 6]
     assert calls == {"analyze": 1, "get_schema": 1}
-    # an aggregate LIMIT read falls through the shape check: still once
+    # an aggregate LIMIT read: still once
     calls.update(analyze=0, get_schema=0)
     got = long_engine.collect_select(stmt("select count(*) from longMetric limit 3"))
     assert [tuple(r) for r in got] == [(3,)]
@@ -2476,64 +2484,89 @@ def test_token_cache_exact_token_monotone_put_and_lru():
     assert c.get("k", (2, 1, 1)) is None
 
 
-def test_limit_read_complete_rows_serve_unlimited_statement(long_engine, monkeypatch):
-    """A LIMIT read whose over-fetch exhausted the result stores the
-    complete row set under the LIMIT-stripped statement's plan-cache
-    entry; the same statement without LIMIT is then answered from those
-    rows with no Spark action."""
-    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
-
-    from nsdb_spark.sql.parser import parse
-
-    def stmt(suffix):
-        return parse(
-            f"select * from longMetric order by timestamp{suffix}",
-            db="default", namespace="default",
-        )
-
-    limited = long_engine.collect_select(stmt(" limit 2"))
-    assert [r["timestamp"] for r in limited] == [1, 2]
-    actions = []
-    orig = ClassicDataFrame.collect
-    monkeypatch.setattr(
-        ClassicDataFrame, "collect",
-        lambda self: (actions.append(1), orig(self))[1],
-    )
-    full = long_engine.collect_select(stmt(""))
-    assert [r["timestamp"] for r in full] == [1, 2, 4, 6, 8, 10]
-    assert actions == []
-
-
 def test_shape_cache_store_survives_mtime_regression(long_engine):
     """An out-of-process drop+recreate can REGRESS the token's mtime
     components; the store guard compares only the monotone in-process
-    mutation counter, so the shape key re-primes on the next execution
-    instead of wedging into permanent misses (serving still requires
-    exact token equality, so nothing stale is ever returned)."""
+    mutation counter, so the statement's own key re-primes on the next
+    execution instead of wedging into permanent misses (serving still
+    requires exact token equality, so nothing stale is ever returned)."""
     from nsdb_spark.sql.parser import parse
 
-    def stmt(k):
-        return parse(
-            f"select * from longMetric order by timestamp limit {k}",
-            db="default", namespace="default",
-        )
-
-    long_engine.collect_select(stmt(2))
+    stmt = parse(
+        "select * from longMetric order by timestamp limit 2",
+        db="default", namespace="default",
+    )
+    long_engine.collect_select(stmt)
     entries = long_engine._plans._entries
-    ((skey, (tok, ent)),) = list(entries.items())
-    assert "limit=None" in skey[3]
+    ((key, (tok, ent)),) = list(entries.items())
+    assert key == ("default", "default", "longMetric", repr(stmt))
     # simulate a stored token whose mtime components sit in the future
     # of every token this engine will ever compute again, with no rows
     # (so the serve path misses)
-    entries[skey] = (
+    entries[key] = (
         (tok[0], tok[1] + 10**15, tok[2] + 10**15),
-        ent._replace(rows=None, complete=False),
+        ent._replace(rows=None),
     )
-    rows = long_engine.collect_select(stmt(3))
-    assert len(rows) == 3
-    cur_tok, cur = entries[skey]
+    assert [r["timestamp"] for r in long_engine.collect_select(stmt)] == [1, 2]
+    cur_tok, cur = entries[key]
     assert cur_tok == long_engine._cache_token("default", "default", "longMetric")
-    assert cur.rows is not None  # re-primed: later limits serve as slices
+    assert cur.rows is not None  # re-primed: a repeat serves the rows
+
+
+def test_limit_read_caches_its_own_rows_only(long_engine):
+    """A novel `... ORDER BY timestamp LIMIT k` read fetches k rows: it
+    stores at most k rows under its own statement fingerprint and no
+    entry under the LIMIT-stripped statement."""
+    import dataclasses
+
+    from nsdb_spark.sql.parser import parse
+
+    stmt = parse(
+        "select * from longMetric order by timestamp limit 2",
+        db="default", namespace="default",
+    )
+    got = long_engine.collect_select(stmt)
+    assert [r["timestamp"] for r in got] == [1, 2]
+    entries = long_engine._plans._entries
+    assert list(entries) == [("default", "default", "longMetric", repr(stmt))]
+    (_, ent), = entries.values()
+    assert len(ent.rows) <= 2
+    stripped = repr(dataclasses.replace(stmt, limit=None))
+    assert not any(key[3] == stripped for key in entries)
+
+
+def test_plan_put_keeps_file_read_rows(long_engine):
+    """Planning a statement (explain_select, execute_select) whose rows a
+    shard-file read cached under the same token keeps those rows: the
+    next collect_select serves them with no file read and no plan. The
+    other way round, a shard-file read keeps the plan cached before it."""
+    from nsdb_spark.sql.parser import parse
+
+    sql = "select count(*) from longMetric group by name"
+    stmt = parse(sql, db="default", namespace="default")
+    first = long_engine.collect_select(stmt)
+    assert long_engine.explain_select(sql)["route"] == "files"
+    calls = []
+
+    def no_read(*a, **k):
+        calls.append(a)
+        raise AssertionError("read or planned again")
+
+    long_engine._read_aggregate_rows = no_read
+    long_engine._plan_select = no_read
+    try:
+        assert long_engine.collect_select(stmt) == first
+    finally:
+        del long_engine._read_aggregate_rows
+        del long_engine._plan_select
+    assert calls == []
+    other = parse(
+        "select sum(value) from longMetric group by name",
+        db="default", namespace="default",
+    )
+    df = long_engine.execute_select(other)
+    long_engine.collect_select(other)
+    assert long_engine.execute_select(other) is df
 
 
 def test_shape_cache_excludes_aggregate_classes(long_engine):

@@ -4,7 +4,8 @@ Measures, in ONE process, the bench's serving scenarios:
   gatling_100_point_queries — 100x collect() of events.limit(1) on the
                               analytics session (bench.py:482 shape)
   grpc_100_point_queries    — 100 identical rpcs (statement cache path)
-  grpc_100_distinct_queries — 100 unique-LIMIT rpcs (shape cache path)
+  grpc_100_distinct_queries — 100 unique-LIMIT rpcs (per-statement path:
+                              each LIMIT is its own statement)
   grpc_100_distinct_shapes  — 100 unique-filter rpcs (full plan path)
   grpc_100_distinct_aggs    — 100 unique-bound aggregate rpcs, tag
                               group-by and temporal alternating (the
