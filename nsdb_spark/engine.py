@@ -72,8 +72,12 @@ def _scan_shard_files(
 ):
     """read(scanner) over the shard files: a pyarrow scanner of `columns`
     under the registry schema (a field an older file lacks reads as NULL),
-    filtered on the pyarrow `predicate` (None: every row). Only the
-    projected and filtered columns are decoded. A file removed after the
+    filtered on the pyarrow `predicate` (None: every row). The scanner
+    skips every row group whose statistics rule the predicate out (a
+    shard file is timestamp-sorted in row groups of at most
+    NsdbEngine._SHARD_ROW_GROUP_ROWS rows, so a narrow time range decodes
+    about one group), and decodes only the projected and filtered columns
+    of the groups it keeps. A file removed after the
     listing is skipped, as ignoreMissingFiles skips it on the Spark route:
     `read` then runs again over the files that are left."""
     while True:
@@ -346,23 +350,42 @@ class NsdbEngine:
         self._maintain_rollups_on_write(db, ns, metric, lo, hi, lambda: df.drop(SHARD_COL))
         return len(bits)
 
-    @staticmethod
-    def _shard_writer(frame: DataFrame):
-        """The bound parquet method that writes frame, partitioned by
-        shard, as one file per shard with rows sorted on timestamp, so
-        the parquet page index (one min/max per 20k-row page) skips the
-        pages outside a timestamp range (the point-tree role in the
-        reference). Row-group stats rarely help: at the default block
-        size a sf0.1 shard (100k rows, 1.5 MB) is a single row group.
-        The sort leads with the shard column: a partitioned write requires
-        that ordering, and a sort on timestamp alone is replaced by one on
-        the shard column only."""
+    #: rows per parquet row group in every shard file (not user-settable).
+    #: A shard file is sorted on timestamp, so each group covers a
+    #: disjoint timestamp span and a narrow range decodes about one group.
+    _SHARD_ROW_GROUP_ROWS = 16_384
+
+    @classmethod
+    def _shard_parquet(cls, frame: DataFrame):
+        """The bound parquet method that writes a laid-out frame
+        partitioned by shard, in row groups of at most
+        _SHARD_ROW_GROUP_ROWS rows."""
         return (
-            frame.repartition(SHARD_COL)
-            .sortWithinPartitions(SHARD_COL, "timestamp")
-            .write.partitionBy(SHARD_COL)
+            frame.write.option("parquet.block.row.count.limit", cls._SHARD_ROW_GROUP_ROWS)
+            .partitionBy(SHARD_COL)
             .parquet
         )
+
+    @classmethod
+    def _shard_writer(cls, frame: DataFrame, n_files: int | None = None):
+        """The bound parquet method that writes frame, partitioned by
+        shard, as one file per shard (n_files: the rows hashed by shard
+        into that many tasks) with rows sorted on timestamp, in row groups
+        of at most _SHARD_ROW_GROUP_ROWS rows. Each group's timestamp
+        min/max statistics then skip the groups outside a timestamp range
+        (the point-tree role in the reference), on the pyarrow file route
+        (the scanner's filter) and on the Spark route (parquet filter
+        pushdown) alike. The sort leads with the shard column: a
+        partitioned write requires that ordering, and a sort on timestamp
+        alone is replaced by one on the shard column only. Every write
+        that publishes or rewrites shard files goes through here, except
+        optimize_metric_zorder's, which sorts by its own key."""
+        keyed = (
+            frame.repartition(SHARD_COL)
+            if n_files is None
+            else frame.repartition(n_files, F.col(SHARD_COL))
+        )
+        return cls._shard_parquet(keyed.sortWithinPartitions(SHARD_COL, "timestamp"))
 
     def insert_frame(
         self,
@@ -757,7 +780,8 @@ class NsdbEngine:
         files in shard order without Spark: the scan stops once it holds
         `bound` rows (the reference's metric reader visits its shards in
         time order and stops once it has the rows,
-        MetricReaderActor.scala:173-198)."""
+        MetricReaderActor.scala:173-198). Row groups outside the WHERE's
+        time range are skipped by their statistics, never decoded."""
         columns = projection(read.schema, read.parsed.fields)
         table = _scan_shard_files(
             read.files, read.schema, columns, read.predicate, lambda s: s.head(bound)
@@ -983,7 +1007,8 @@ class NsdbEngine:
           (the plan execute_select runs; a "files" read runs none).
 
         The route and the shard and time figures come from the same
-        _route answer the plan is built with.
+        _route answer the plan is built with; a "rollup" route whose store
+        has vanished reports the raw route its plan falls back to.
         """
         stmt = parse(query_string, db=db, namespace=ns)
         if not isinstance(stmt, ast.SelectSQLStatement):
@@ -991,6 +1016,9 @@ class NsdbEngine:
         slot = self._cache_slot(stmt)
         read = self._route(stmt, time_context)
         df, parsed, routed = self._plan_select(stmt, read.ctx, slot=slot, read=read)
+        route = read.route
+        if route == "rollup" and not routed:  # the store vanished: the raw plan runs
+            route = "serving" if read.serving else "analytics"
         return {
             "plan_class": type(parsed).__name__,
             "time_ranges": [list(iv) for iv in read.ivs],
@@ -999,7 +1027,7 @@ class NsdbEngine:
                 touched_shards(read.locations, read.ivs, read.shard_interval)
             ),
             "rollup_routed": routed,
-            "route": read.route,
+            "route": route,
             "physical_plan": df._jdf.queryExecution().executedPlan().toString(),
         }
 
@@ -1124,7 +1152,7 @@ class NsdbEngine:
         # affected shards are swapped for their kept rows; one left empty
         # is removed (Delta DELETE / replaceWhere granularity)
         self.warehouse.rewrite_shards(
-            db, ns, stmt.metric, affected, keep.write.partitionBy(SHARD_COL).parquet
+            db, ns, stmt.metric, affected, self._shard_writer(keep)
         )
         self.warehouse.invalidate_rollups(db, ns, stmt.metric)
         self._bump_metric_version(db, ns, stmt.metric)
@@ -1529,14 +1557,17 @@ class NsdbEngine:
         min_files: int = 4,
         target_file_bytes: int = 128 * 1024 * 1024,
     ) -> list[int]:
-        """Rewrite fragmented shard partitions into few, sorted files.
+        """Rewrite fragmented shard partitions into one sorted file each.
 
         Every insert/streaming batch appends new files; a hot shard
-        accumulates hundreds of small parquet files, degrading scan
-        planning and footer reads at scale. Compaction rewrites each shard
-        holding >= min_files files into ceil(bytes/target) sorted files,
-        staged and swapped in shard by shard (Warehouse.rewrite_shards).
-        Returns the compacted shard starts.
+        accumulates hundreds of small parquet files, each spanning its
+        own batch's timestamps, degrading scan planning, footer reads and
+        row-group skipping at scale. Compaction rewrites each shard
+        holding >= min_files files through _shard_writer into one
+        timestamp-sorted file of _SHARD_ROW_GROUP_ROWS-row groups (the
+        shards spread over ceil(bytes/target) write tasks), staged and
+        swapped in shard by shard (Warehouse.rewrite_shards). Returns the
+        compacted shard starts.
 
         Concurrency contract (no snapshot layer on plain parquet): the
         read, rewrite and swap run under Warehouse.metric_lock, which
@@ -1573,11 +1604,7 @@ class NsdbEngine:
             df = self._scan_shards(self.spark, db, ns, metric, schema)
             self.warehouse.rewrite_shards(
                 db, ns, metric, shards,
-                df.filter(F.col(SHARD_COL).isin(shards))
-                .repartition(n_files, F.col(SHARD_COL))
-                .sortWithinPartitions(SHARD_COL, "timestamp")
-                .write.partitionBy(SHARD_COL)
-                .parquet,
+                self._shard_writer(df.filter(F.col(SHARD_COL).isin(shards)), n_files),
             )
             # same rows, new files: cached base frames hold a stale file
             # index (reads survive via ignoreMissingFiles but would
@@ -1607,8 +1634,9 @@ class NsdbEngine:
         hyper-rectangle on those columns and parquet column stats skip
         files/row-groups on ANY of them — the lakehouse OPTIMIZE ZORDER
         pattern applied to the NSDb layout. Numeric fields quantize by
-        value, strings by a hash bucket. Same staged shard swap and
-        concurrency contract as compact_metric.
+        value, strings by a hash bucket. Same staged shard swap,
+        concurrency contract and row-group limit (_shard_parquet) as
+        compact_metric.
         """
         from .operators.layout import zorder_key
 
@@ -1676,14 +1704,14 @@ class NsdbEngine:
                     quant.append(F.abs(F.xxhash64(F.col(f))).bitwiseAND(F.lit(mask)))
             self.warehouse.rewrite_shards(
                 db, ns, metric, shards,
-                df.withColumn("__z", zorder_key(quant, bits=bits))
-                .repartitionByRange(
-                    files_per_shard * len(shards), F.col(SHARD_COL), F.col("__z")
-                )
-                .sortWithinPartitions(SHARD_COL, "__z")
-                .drop("__z")
-                .write.partitionBy(SHARD_COL)
-                .parquet,
+                self._shard_parquet(
+                    df.withColumn("__z", zorder_key(quant, bits=bits))
+                    .repartitionByRange(
+                        files_per_shard * len(shards), F.col(SHARD_COL), F.col("__z")
+                    )
+                    .sortWithinPartitions(SHARD_COL, "__z")
+                    .drop("__z")
+                ),
             )
             # rewritten files: invalidate cached base frames (see compact_metric)
             self._bump_metric_version(db, ns, metric)

@@ -5,7 +5,7 @@ import dataclasses
 import pytest
 
 from nsdb_spark.compiler import TimeContext
-from nsdb_spark.engine import RetentionError
+from nsdb_spark.engine import NsdbEngine, RetentionError
 from nsdb_spark.model import Bit, SchemaError
 
 from fixtures import (
@@ -948,6 +948,125 @@ def test_shard_files_sorted_on_timestamp(engine, spark, tmp_path):
     assert engine.execute("select count(*) from shuf").collect()[0][0] == 2 * len(rows)
 
 
+def _row_groups(path: str) -> list[tuple[int, int, int]]:
+    """(rows, timestamp min, timestamp max) of each row group of a
+    parquet file, from its footer."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    ts = md.schema.to_arrow_schema().get_field_index("timestamp")
+    out = []
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        stats = rg.column(ts).statistics
+        out.append((rg.num_rows, stats.min, stats.max))
+    return out
+
+
+def _shard_file_paths(engine, metric: str) -> list[str]:
+    import glob
+    import os
+
+    dp = engine.warehouse.data_path("default", "default", metric)
+    return sorted(glob.glob(os.path.join(dp, "shard_start=*", "*.parquet")))
+
+
+def test_shard_file_row_groups_cover_ascending_timestamp_spans(engine, spark, tmp_path):
+    """insert_frame of more than _SHARD_ROW_GROUP_ROWS rows into one shard
+    writes ceil(n / limit) row groups whose timestamp statistics ascend
+    without overlap, so a narrow range's pyarrow predicate (the one the
+    file route scans with) keeps exactly one row group."""
+    import math
+    import random
+
+    import pandas as pd
+    import pyarrow.dataset as pads
+
+    from nsdb_spark.sql.parser import parse
+
+    limit = NsdbEngine._SHARD_ROW_GROUP_ROWS
+    n = 2 * limit + 100
+    rows = [(t, float(t)) for t in range(n)]
+    random.Random(3).shuffle(rows)
+    src = str(tmp_path / "one_shard.parquet")
+    pd.DataFrame(rows, columns=["timestamp", "value"]).to_parquet(src, index=False)
+    engine.warehouse.init_metric("default", "default", "rg", 10 * n)
+    engine.insert_frame("default", "default", "rg", spark.read.parquet(src))
+    [path] = _shard_file_paths(engine, "rg")
+    groups = _row_groups(path)
+    assert len(groups) == math.ceil(n / limit)
+    assert sum(g[0] for g in groups) == n and max(g[0] for g in groups) <= limit
+    assert all(a[2] < b[1] for a, b in zip(groups, groups[1:]))
+
+    stmt = parse(
+        f"select * from rg where timestamp >= {limit + 10} and timestamp < {limit + 90} "
+        "limit 100",
+        db="default", namespace="default",
+    )
+    read = engine._route(stmt)
+    assert read.route == "files" and read.files == [path]
+    [fragment] = pads.dataset(read.files, format="parquet").get_fragments()
+    [kept] = fragment.split_by_row_group(read.predicate)
+    assert kept.row_groups[0].id == 1
+    assert sorted(r.timestamp for r in engine.collect_select(stmt)) == list(
+        range(limit + 10, limit + 90)
+    )
+
+
+def test_delete_rewrites_a_shard_as_one_timestamp_sorted_file(engine):
+    """DELETE rewrites an affected shard through the shard writer: two
+    interleaved inserts (two files, each spanning the shard's whole
+    timestamp range) become one file sorted on timestamp."""
+    import pyarrow.parquet as pq
+
+    engine.warehouse.init_metric("default", "default", "dsort", 100000)
+    for parity in (0, 1):
+        engine.insert_bits("default", "default", "dsort", [
+            Bit(t, t, {}, {}) for t in range(parity, 200, 2)
+        ])
+    assert len(_shard_file_paths(engine, "dsort")) == 2
+    engine.execute("delete from dsort where timestamp = 7")
+    [path] = _shard_file_paths(engine, "dsort")
+    ts = pq.read_table(path, columns=["timestamp"]).column(0).to_pylist()
+    assert ts == [t for t in range(200) if t != 7]
+
+
+def test_every_shard_write_keeps_the_row_group_limit(engine, spark, monkeypatch):
+    """Every shard file that insert_bits, insert_frame, DELETE, compaction
+    and Z-order write is made of row groups of at most
+    _SHARD_ROW_GROUP_ROWS rows; all but Z-order's are sorted on timestamp,
+    so their groups' timestamp spans ascend."""
+    monkeypatch.setattr(NsdbEngine, "_SHARD_ROW_GROUP_ROWS", 4)
+
+    def check(sorted_on_timestamp=True):
+        paths = _shard_file_paths(engine, "rgl")
+        assert paths
+        for path in paths:
+            groups = _row_groups(path)
+            assert max(g[0] for g in groups) <= 4, (path, groups)
+            if sorted_on_timestamp:
+                assert all(a[2] <= b[1] for a, b in zip(groups, groups[1:])), groups
+        return sum(len(_row_groups(p)) for p in paths)
+
+    engine.warehouse.init_metric("default", "default", "rgl", 100)
+    engine.insert_bits("default", "default", "rgl", [
+        Bit(t, t, {}, {"g": str(t % 3)}) for t in range(0, 300, 3)
+    ])
+    assert check() >= 25
+    engine.insert_frame("default", "default", "rgl", spark.createDataFrame(
+        [(t, t, str(t % 3)) for t in range(1, 300, 3)], "timestamp long, value long, g string"
+    ), tags=["g"])
+    check()
+    engine.execute("delete from rgl where timestamp = 4")
+    check()
+    engine.insert_bits("default", "default", "rgl", [Bit(t, t, {}, {"g": "x"}) for t in (2, 5)])
+    assert engine.compact_metric("default", "default", "rgl", min_files=2) == [0, 100, 200]
+    check()
+    engine.optimize_metric_zorder("default", "default", "rgl", ["g", "value"])
+    check(sorted_on_timestamp=False)
+    assert engine.execute("select count(*) from rgl").collect()[0][0] == 201
+
+
 def test_concurrent_compactions_keep_untouched_shards(engine, monkeypatch):
     """Two metrics compacted at once on the one shared session, with B's
     write held until A's compact_metric has returned: B's untouched shard
@@ -1146,7 +1265,10 @@ def test_rollup_routed_read_reads_registry_and_data_listing_once(engine, monkeyp
     shutil.rmtree(wh.rollup_path("default", "default", "rr", spec))
     engine.invalidate_plan_caches()
     assert [tuple(r) for r in engine.collect_select(stmt)] == raw
-    assert not engine.explain_select(sql)["rollup_routed"]
+    explained = engine.explain_select(sql)
+    assert not explained["rollup_routed"]
+    # the route of the raw plan that runs (16 shards: past the serving gate)
+    assert explained["route"] == "analytics"
 
 
 def _is_group_rollup_plan(plan: str) -> bool:
@@ -2758,6 +2880,28 @@ def test_point_serving_sql_text_route_parity_grid(agg_engine):
         assert_limit_rows(file_served_rows(agg_engine, stmt), every, k, q)
 
 
+@pytest.fixture()
+def small_row_groups(monkeypatch):
+    """Shard files written in row groups of 2 rows, so the small fixtures
+    span many row groups on the file route and on the Spark route."""
+    monkeypatch.setattr(NsdbEngine, "_SHARD_ROW_GROUP_ROWS", 2)
+
+
+def _assert_many_row_groups(engine, metric: str) -> None:
+    groups = [_row_groups(p) for p in _shard_file_paths(engine, metric)]
+    assert max(len(g) for g in groups) > 1
+    assert max(rows for g in groups for rows, _, _ in g) <= 2
+
+
+def test_point_serving_sql_text_route_parity_grid_over_small_row_groups(
+    small_row_groups, engine
+):
+    """The point-read parity grid over shard files of 2-row groups."""
+    load(engine, "aggregationLongMetric", AGG_LONG_METRIC)
+    _assert_many_row_groups(engine, "aggregationLongMetric")
+    test_point_serving_sql_text_route_parity_grid(engine)
+
+
 def test_point_read_from_files_reads_a_later_field_as_null(engine):
     """A shard file written before a field existed has no column for it:
     the shard-file read returns NULL there, as the Column route does."""
@@ -2969,6 +3113,14 @@ def test_aggregate_file_route_parity_grid(engine):
     stmt = parse("select count(*) from aggm group by h", db="default", namespace="default")
     zeros = [r[0] for r in file_served_rows(engine, stmt) if r[0] == 0]
     assert len(zeros) == 1 and math.copysign(1.0, zeros[0]) == 1.0
+
+
+def test_aggregate_file_route_parity_grid_over_small_row_groups(small_row_groups, engine):
+    """The aggregate file-route parity grid over shard files of 2-row
+    groups."""
+    test_aggregate_file_route_parity_grid(engine)
+    for metric in ("aggm", "aggl"):
+        _assert_many_row_groups(engine, metric)
 
 
 def test_aggregate_file_route_bigint_sum_overflow_raises(engine):
