@@ -295,6 +295,38 @@ def _final(a: ast.Aggregation, is_float: bool, state):
     return state
 
 
+def fold_batch(states: dict, keys: dict, batch, aggs, is_float: bool) -> None:
+    """Fold one record batch into `states`, {group key (a tuple for several
+    `keys` columns): one state per aggregation}: pyarrow's hash aggregate
+    reduces the batch to per-group partials, each merged into its state."""
+    inputs, specs = dict(keys), []
+    for i, a in enumerate(aggs):
+        cols, spec = _agg_inputs(a, i, batch, is_float)
+        inputs.update(cols)
+        specs.append(spec)
+    grouped = pa.table(inputs).group_by(list(keys), use_threads=False).aggregate(
+        [s for spec in specs for s in spec]
+    )
+    key_cols = [grouped.column(n).to_pylist() for n in keys]
+    partials = [
+        [grouped.column(f"{col}_{fn}").to_pylist() for col, fn, _ in spec]
+        for spec in specs
+    ]
+    for r, key in enumerate(zip(*key_cols)):
+        key = tuple(_spark_key(k) for k in key)
+        st = states.setdefault(key if len(key) > 1 else key[0], [None] * len(aggs))
+        for i, a in enumerate(aggs):
+            st[i] = _merge(a.kind, is_float, st[i], tuple(c[r] for c in partials[i]))
+
+
+def temporal_zero(a: ast.Aggregation, is_float: bool):
+    """The value of a temporal bucket no row reached: 0, or 0.0 for every
+    avg and a DECIMAL sum, min or max."""
+    return 0.0 if a.kind == ast.AGG_AVG or is_float and a.kind in (
+        ast.AGG_SUM, ast.AGG_MIN, ast.AGG_MAX
+    ) else 0
+
+
 def aggregate_columns(parsed: ParsedQuery) -> list[str]:
     """The columns an aggregate reads from the shard files."""
     if isinstance(parsed, ParsedGlobalAggregatedQuery):
@@ -350,40 +382,23 @@ def arrow_aggregate(
             order = "ascending" if aggs[0].kind == ast.AGG_FIRST else "descending"
             batch = batch.take(pc.sort_indices(batch, [("timestamp", order)]))
         if segs is not None:
-            ts = batch.column("timestamp")
-            keys = {"k": _arrow_bucket(ts, segs, parsed.interval_ms)}
+            k = _arrow_bucket(batch.column("timestamp"), segs, parsed.interval_ms)
+            on_axis = pc.is_valid(k)
+            batch, keys = batch.filter(on_axis), {"k": k.filter(on_axis)}
             if quirk:
                 keys["s"] = pc.multiply(
-                    pc.divide(ts, shard_interval_ms), shard_interval_ms
+                    pc.divide(batch.column("timestamp"), shard_interval_ms),
+                    shard_interval_ms,
                 )
         elif isinstance(parsed, ParsedAggregatedQuery):
             keys = {"k": batch.column(parsed.group_field)}
         else:
             keys = {"k": pa.nulls(batch.num_rows, pa.int8())}
-        inputs, specs = dict(keys), []
-        for i, a in enumerate(aggs):
-            cols, spec = _agg_inputs(a, i, batch, is_float)
-            inputs.update(cols)
-            specs.append(spec)
-        table = pa.table(inputs)
-        if segs is not None:
-            table = table.filter(pc.is_valid(table.column("k")))
-        grouped = table.group_by(list(keys), use_threads=False).aggregate(
-            [s for spec in specs for s in spec]
-        )
-        key_cols = [grouped.column(n).to_pylist() for n in keys]
-        partials = [
-            [grouped.column(f"{col}_{fn}").to_pylist() for col, fn, _ in spec]
-            for spec in specs
-        ]
-        for r, key in enumerate(zip(*key_cols)):
-            st = states.setdefault(tuple(_spark_key(k) for k in key), [None] * len(aggs))
-            for i, a in enumerate(aggs):
-                st[i] = _merge(a.kind, is_float, st[i], tuple(c[r] for c in partials[i]))
+        fold_batch(states, keys, batch, aggs, is_float)
     if segs is not None:
         return _temporal_rows(parsed, states, segs, quirk, is_float)
     if isinstance(parsed, ParsedGlobalAggregatedQuery):
-        st = states.get((None,), [None] * len(aggs))
+        st = states.get(None, [None] * len(aggs))
         row = [_final(a, is_float, s) for a, s in zip(aggs, st)]
         if stmt.limit:
             row = [
@@ -412,7 +427,7 @@ def _group_rows(parsed: ParsedAggregatedQuery, states: dict, is_float: bool):
     a = parsed.aggregation
     columns = [parsed.group_field, agg_alias(a)]
     rows = []
-    for (key,), (st,) in states.items():
+    for key, (st,) in states.items():
         value = _final(a, is_float, st)
         if a.kind in (ast.AGG_FIRST, ast.AGG_LAST):
             rows.append((key, value, st[1]))
@@ -446,10 +461,8 @@ def _temporal_rows(parsed, states: dict, segs, quirk: bool, is_float: bool):
             shard_min.setdefault(k, []).append(_final(a, is_float, st))
         values = {k: _nan_min([p for p in ps if p != 0]) for k, ps in shard_min.items()}
     else:
-        values = {k: _final(a, is_float, st) for (k,), (st,) in states.items()}
-    zero = 0.0 if a.kind == ast.AGG_AVG or is_float and a.kind in (
-        ast.AGG_SUM, ast.AGG_MIN, ast.AGG_MAX
-    ) else 0
+        values = {k: _final(a, is_float, st) for k, (st,) in states.items()}
+    zero = temporal_zero(a, is_float)
     n = segs[-1][0] + segs[-1][3]
     desc = bool(stmt.order and stmt.order.descending and stmt.order.dimension == "timestamp")
     lo, hi = 0, n

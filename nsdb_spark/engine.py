@@ -367,11 +367,10 @@ class NsdbEngine:
         )
 
     @classmethod
-    def _shard_writer(cls, frame: DataFrame, n_files: int | None = None):
+    def _shard_writer(cls, frame: DataFrame):
         """The bound parquet method that writes frame, partitioned by
-        shard, as one file per shard (n_files: the rows hashed by shard
-        into that many tasks) with rows sorted on timestamp, in row groups
-        of at most _SHARD_ROW_GROUP_ROWS rows. Each group's timestamp
+        shard, as one file per shard with rows sorted on timestamp, in
+        row groups of at most _SHARD_ROW_GROUP_ROWS rows. Each group's timestamp
         min/max statistics then skip the groups outside a timestamp range
         (the point-tree role in the reference), on the pyarrow file route
         (the scanner's filter) and on the Spark route (parquet filter
@@ -380,12 +379,9 @@ class NsdbEngine:
         alone is replaced by one on the shard column only. Every write
         that publishes or rewrites shard files goes through here, except
         optimize_metric_zorder's, which sorts by its own key."""
-        keyed = (
-            frame.repartition(SHARD_COL)
-            if n_files is None
-            else frame.repartition(n_files, F.col(SHARD_COL))
+        return cls._shard_parquet(
+            frame.repartition(SHARD_COL).sortWithinPartitions(SHARD_COL, "timestamp")
         )
-        return cls._shard_parquet(keyed.sortWithinPartitions(SHARD_COL, "timestamp"))
 
     def insert_frame(
         self,
@@ -1555,7 +1551,6 @@ class NsdbEngine:
         ns: str,
         metric: str,
         min_files: int = 4,
-        target_file_bytes: int = 128 * 1024 * 1024,
     ) -> list[int]:
         """Rewrite fragmented shard partitions into one sorted file each.
 
@@ -1564,9 +1559,8 @@ class NsdbEngine:
         own batch's timestamps, degrading scan planning, footer reads and
         row-group skipping at scale. Compaction rewrites each shard
         holding >= min_files files through _shard_writer into one
-        timestamp-sorted file of _SHARD_ROW_GROUP_ROWS-row groups (the
-        shards spread over ceil(bytes/target) write tasks), staged and
-        swapped in shard by shard (Warehouse.rewrite_shards). Returns the
+        timestamp-sorted file of _SHARD_ROW_GROUP_ROWS-row groups, staged
+        and swapped in shard by shard (Warehouse.rewrite_shards). Returns the
         compacted shard starts.
 
         Concurrency contract (no snapshot layer on plain parquet): the
@@ -1580,8 +1574,6 @@ class NsdbEngine:
         runtime; long-lived cached DataFrames must be re-created after
         compaction.
         """
-        import math
-
         # under the per-metric lock, like delete() and retention:
         # a materialize/maintenance merge scanning raw data while this
         # rewrite swaps the shards would (via ignoreMissingFiles) build
@@ -1597,14 +1589,11 @@ class NsdbEngine:
             if not todo:
                 return []
             shards = [s["shard_start"] for s in todo]
-            n_files = max(
-                1, math.ceil(sum(s["bytes"] for s in todo) / target_file_bytes)
-            )
             schema = self.warehouse.get_schema(db, ns, metric)
             df = self._scan_shards(self.spark, db, ns, metric, schema)
             self.warehouse.rewrite_shards(
                 db, ns, metric, shards,
-                self._shard_writer(df.filter(F.col(SHARD_COL).isin(shards)), n_files),
+                self._shard_writer(df.filter(F.col(SHARD_COL).isin(shards))),
             )
             # same rows, new files: cached base frames hold a stale file
             # index (reads survive via ignoreMissingFiles but would

@@ -5,75 +5,45 @@ Behaviour parity with PublisherActor (nsdb-core/.../actors/PublisherActor.scala)
 - subscribe: execute the statement once (historical payload), register by
   uuid (PublisherActor.scala:136-204).
 - plain queries: every inserted record is matched against the predicate and
-  pushed immediately (:304-325). NSDb does this via a 1-doc in-memory
-  Lucene index; we evaluate the predicate in-process (no Spark job per
-  record — same latency class).
+  pushed immediately (:304-325), by the engine that serves history (NSDb: a
+  1-doc in-memory Lucene index; here compiler.arrow_expression, the file
+  route's predicate, over a pyarrow table of the published rows).
 - standard aggregations: re-executed on a fixed scheduler and pushed in
   full (:205-218, 5 s default, nsdb.conf:140).
-- temporal aggregations: records accumulate into the current bucket; on
-  each `tick` crossing a bucket boundary the bucket is reduced and pushed,
-  then rolls (:220-254). Late records within the grace period amend
-  retained late buckets, which are re-pushed (:247-298,326-357); records
-  older than `now - grace` are dropped (:342-356).
+- temporal aggregations: records fold into one state per bucket
+  (compiler.fold_batch, the file route's fold); on each `tick` crossing a
+  bucket boundary the bucket is pushed, then rolls (:220-254). Late records
+  within the grace period amend retained late buckets, which are re-pushed
+  (:247-298,326-357); records older than `now - grace` are dropped
+  (:342-356).
 """
 from __future__ import annotations
 
 import copy
 import logging
-import re
 import threading
 import uuid as uuid_mod
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
 from .. import analyzer
-from ..compiler import TimeContext, compile_expression, like_to_regex
-from ..model import MetricSchema
+from ..compiler import (
+    TimeContext,
+    _final,
+    agg_alias,
+    arrow_expression,
+    compile_expression,
+    fold_batch,
+    temporal_zero,
+)
 from ..sql import ast
 from ..sql.parser import parse
 
 _log = logging.getLogger(__name__)
-
-
-def eval_expression(e: ast.Expression, row: dict[str, Any], now_ms: int) -> bool:
-    """In-process predicate evaluation, same semantics as
-    compiler.compile_expression (absent field = None = no match except IS
-    NULL)."""
-    if isinstance(e, ast.NotExpression):
-        return not eval_expression(e.expression, row, now_ms)
-    if isinstance(e, ast.TupledLogicalExpression):
-        l = eval_expression(e.expression1, row, now_ms)
-        r = eval_expression(e.expression2, row, now_ms)
-        return (l and r) if e.operator == "and" else (l or r)
-    v = row.get(e.dimension)
-    if isinstance(e, ast.NullableExpression):
-        return (v is not None) if e.negated else (v is None)
-    if v is None:
-        return False
-    if isinstance(e, ast.EqualityExpression):
-        return v == _resolve(e.value, now_ms)
-    if isinstance(e, ast.ComparisonExpression):
-        # if/elif, not a dict literal: this is the per-record hot path,
-        # and a dict would eagerly evaluate all four comparisons per row
-        w = _resolve(e.value, now_ms)
-        if e.operator == ">":
-            return v > w
-        if e.operator == ">=":
-            return v >= w
-        if e.operator == "<":
-            return v < w
-        return v <= w
-    if isinstance(e, ast.RangeExpression):
-        return _resolve(e.value1, now_ms) <= v <= _resolve(e.value2, now_ms)
-    if isinstance(e, ast.LikeExpression):
-        return re.match(like_to_regex(e.value), str(v)) is not None
-    raise TypeError(f"unknown expression {e!r}")
-
-
-def _resolve(v: ast.ComparisonValue, now_ms: int):
-    if isinstance(v, ast.RelativeComparisonValue):
-        return v.resolve(now_ms)
-    return v.value
 
 
 def _expr_fields(e: ast.Expression) -> set[str]:
@@ -104,20 +74,13 @@ def _has_relative_time(e: ast.Expression) -> bool:
     return any(isinstance(v, ast.RelativeComparisonValue) for v in vals)
 
 
-def _reduce_bucket(values: list, agg: ast.Aggregation):
-    if agg.kind == ast.AGG_COUNT:
-        return len(values)
-    if agg.kind == ast.AGG_COUNT_DISTINCT:
-        return len(set(values))
-    if agg.kind == ast.AGG_SUM:
-        return sum(values)
-    if agg.kind == ast.AGG_MIN:
-        return min(values) if values else 0
-    if agg.kind == ast.AGG_MAX:
-        return max(values) if values else 0
-    if agg.kind == ast.AGG_AVG:
-        return sum(values) / len(values) if values else 0
-    raise ValueError(agg.kind)
+def _kept(table: pa.Table, cond: ast.Condition, now: int) -> list[int]:
+    """The indices of the rows of `table` that `cond` keeps on the file
+    route (compiler.arrow_expression); "#" is no field name the parser reads."""
+    cols = {f: table.column(f) for f in _expr_fields(cond.expression)}
+    cols["#"] = np.arange(table.num_rows)
+    kept = pa.table(cols).filter(arrow_expression(cond.expression, TimeContext(now)))
+    return kept.column("#").to_pylist()
 
 
 @dataclass
@@ -129,9 +92,10 @@ class _Subscription:
     statement: ast.SelectSQLStatement
     parsed: Any
     callback: Callable[[list[dict]], None]
-    # temporal state
+    # temporal state (is_float: a DECIMAL value, as the aggregates see it)
+    is_float: bool = False
     bucket_start: int = 0
-    buckets: dict[int, list] = field(default_factory=dict)  # upper_bound → values
+    buckets: dict[int, list] = field(default_factory=dict)  # upper_bound → [state]
     # rows published while the historical scan is still running are
     # buffered here and routed after it — None once live. Append and
     # swap race (publisher thread vs the subscribing thread's drain), so
@@ -235,6 +199,7 @@ class SubscriptionManager:
             uuid=str(uuid_mod.uuid4()),
             db=db, ns=ns, metric=stmt.metric,
             statement=stmt, parsed=parsed, callback=callback,
+            is_float=pa.types.is_floating(schema.value_type.arrow_type),
             pending=[],
         )
         if isinstance(parsed, analyzer.ParsedTemporalAggregatedQuery):
@@ -269,8 +234,8 @@ class SubscriptionManager:
                     sub.pending = None
                     break
                 buffered, sub.pending = sub.pending, []
-            for rows, now in buffered:
-                self._route(sub, rows, now)
+            for rows, table, now in buffered:
+                self._route(sub, rows, table, now)
         return sub.uuid
 
     def unsubscribe(self, uuid: str) -> None:
@@ -324,82 +289,87 @@ class SubscriptionManager:
         return out
 
     def publish(self, db: str, ns: str, metric: str, rows: list[dict]) -> None:
-        """Called by the ingest path for every batch of inserted records."""
+        """Called by the ingest path for every batch of inserted records.
+        The subscriptions that filter or aggregate share one pyarrow table
+        of them under the registry schema (publishers insert first); a
+        field a row lacks reads NULL, as on the file route."""
         now = self.engine.now_fn()
-        for sub in list(self.subs.values()):
-            if (sub.db, sub.ns, sub.metric) != (db, ns, metric):
-                continue
+        subs = [
+            s for s in list(self.subs.values()) if (s.db, s.ns, s.metric) == (db, ns, metric)
+        ]
+        table = None
+        if any(
+            s.statement.condition is not None
+            or isinstance(s.parsed, analyzer.ParsedTemporalAggregatedQuery)
+            for s in subs
+        ):
+            schema = self.engine.warehouse.get_schema(db, ns, metric)
+            table = pa.Table.from_pylist(rows, schema=schema.to_arrow_schema())
+        for sub in subs:
             with sub.pending_lock:
                 if sub.pending is not None:  # historical scan in flight
-                    sub.pending.append((rows, now))
+                    sub.pending.append((rows, table, now))
                     continue
-            self._route(sub, rows, now)
+            self._route(sub, rows, table, now)
 
-    def _route(self, sub: _Subscription, rows: list[dict], now: int) -> None:
-        with sub.route_lock:
-            return self._route_locked(sub, rows, now)
-
-    def _route_locked(self, sub: _Subscription, rows: list[dict], now: int) -> None:
-        if isinstance(sub.parsed, analyzer.ParsedSimpleQuery):
-            cond = sub.statement.condition
-            matched = [
-                r for r in rows
-                if cond is None or eval_expression(cond.expression, r, now)
-            ]
-            if matched:
-                sub.callback(matched)
-        elif isinstance(sub.parsed, analyzer.ParsedTemporalAggregatedQuery):
-            self._accumulate_temporal(sub, rows, now)
-
-    def _accumulate_temporal(self, sub: _Subscription, rows: list[dict], now: int) -> None:
-        p = sub.parsed
-        interval = p.interval_ms
-        grace = p.grace_period_ms
+    def _route(
+        self, sub: _Subscription, rows: list[dict], table: pa.Table | None, now: int
+    ) -> None:
         cond = sub.statement.condition
-        amended: set[int] = set()
-        for r in rows:
-            if cond is not None and not eval_expression(cond.expression, r, now):
-                continue
-            ts = r["timestamp"]
-            if grace is not None and ts < now - grace:
-                continue  # too late: dropped (PublisherActor.scala:342-356)
-            # upper-INCLUSIVE buckets (lb, ub], matching the compiled
-            # historical axis (compiler: floor((upper-ts)/interval)) —
-            # a boundary timestamp must land in the same bucket live as
-            # a re-subscription would report it historically
-            k = -((ts - sub.bucket_start) // -interval)  # ceil
-            ub = sub.bucket_start + k * interval
-            if grace is None and ub <= sub.bucket_start:
-                # amendment of closed buckets is a grace-period feature;
-                # without one, late records drop (and their buckets were
-                # already released — see tick)
-                continue
-            tgt = p.aggregation.target
-            target = r.get("value") if tgt in ("*", "value") else r.get(tgt)
-            if target is None:
-                # NULL/absent aggregation target: every agg skips it
-                # (count(tag) skips NULL tags on the batch path too); a
-                # None in the bucket would poison sum/min/max at close
-                continue
-            sub.buckets.setdefault(ub, []).append(target)
-            # amend only buckets tick() has actually CLOSED and pushed
-            # (ub <= bucket_start — the same closed test as the
-            # grace-is-None guard above). `ub <= now` would fire a bogus
-            # amended push for an elapsed-but-unpushed bucket, which the
-            # next tick would then deliver AGAIN unamended.
-            if ub <= sub.bucket_start:
-                amended.add(ub)
-        for ub in sorted(amended):
+        try:
+            with sub.route_lock:
+                if isinstance(sub.parsed, analyzer.ParsedSimpleQuery):
+                    kept = range(len(rows)) if cond is None else _kept(table, cond, now)
+                    # the published dicts themselves: the payload keeps its shape
+                    matched = [rows[i] for i in kept]
+                    if matched:
+                        sub.callback(matched)
+                elif isinstance(sub.parsed, analyzer.ParsedTemporalAggregatedQuery):
+                    self._accumulate_temporal(sub, table, now)
+        except Exception:
+            # per-sub isolation, as in tick(): the rows are already
+            # written, so a failing subscription (a broken callback) must
+            # neither fail the write nor starve the subscriptions after it
+            _log.exception("publish failed for subscription %s", sub.uuid)
+
+    def _accumulate_temporal(self, sub: _Subscription, table: pa.Table, now: int) -> None:
+        p = sub.parsed
+        start, width, grace = sub.bucket_start, p.interval_ms, p.grace_period_ms
+        ts = pc.field("timestamp")
+        # without a grace period, late records drop: amendment of closed
+        # buckets is a grace-period feature (and their buckets were
+        # already released — see tick); with one, records older than
+        # now - grace drop (PublisherActor.scala:342-356)
+        keep = ts > start if grace is None else ts >= now - grace
+        # a NULL (or absent) aggregation target is skipped by every
+        # aggregate, as count(tag) skips NULL tags on the batch path
+        keep &= pc.field(p.aggregation.target).is_valid()
+        if sub.statement.condition is not None:
+            keep &= arrow_expression(sub.statement.condition.expression, TimeContext(now))
+        table = table.filter(keep)
+        # upper-INCLUSIVE buckets (lb, ub], matching the compiled
+        # historical axis (compiler: floor((upper-ts)/interval)) — a
+        # boundary timestamp must land in the same bucket live as a
+        # re-subscription would report it historically
+        ubs = start - (start - table.column("timestamp").to_numpy()) // width * width
+        fold_batch(sub.buckets, {"k": pa.array(ubs)}, table, [p.aggregation], sub.is_float)
+        # amend only buckets tick() has actually CLOSED and pushed
+        # (ub <= bucket_start). `ub <= now` would fire a bogus amended
+        # push for an elapsed-but-unpushed bucket, which the next tick
+        # would then deliver AGAIN unamended.
+        for ub in sorted(set(ubs[ubs <= start].tolist())):
             sub.callback([self._bucket_payload(sub, ub, amended=True)])
 
     def _bucket_payload(self, sub: _Subscription, ub: int, amended: bool = False) -> dict:
         p = sub.parsed
-        value = _reduce_bucket(sub.buckets.get(ub, []), p.aggregation)
+        a = p.aggregation
+        (state,) = sub.buckets.get(ub, [None])
+        value = _final(a, sub.is_float, state)
         return {
             "timestamp": ub,
             "lower_bound": ub - p.interval_ms,
             "upper_bound": ub,
-            f"{p.aggregation.kind}_{p.aggregation.target}": value,
+            agg_alias(a): temporal_zero(a, sub.is_float) if value is None else value,
             "amended": amended,
         }
 
@@ -486,9 +456,9 @@ class SubscriptionManager:
                             del sub.buckets[old]
                     else:
                         # no grace ⇒ no amendments: release the closed
-                        # bucket's values immediately — otherwise a
-                        # long-lived subscription accumulates every raw
-                        # value forever (unbounded driver memory)
+                        # bucket's state immediately — otherwise a
+                        # long-lived subscription keeps one state per
+                        # elapsed bucket forever (unbounded driver memory)
                         sub.buckets.pop(ub, None)
         # standard aggregations are handled by tick()'s coalescing loop
         # (one execution per distinct statement, fanned out); plain

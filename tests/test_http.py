@@ -163,6 +163,42 @@ def test_subscribe_poll_unsubscribe(engine):
         srv.shutdown()
 
 
+def test_failing_subscriber_neither_fails_the_write_nor_starves_others(engine):
+    """A subscription whose callback raises on a live push is logged and
+    skipped: the next subscription on the metric still gets the row,
+    /data answers 200 and the row reads back."""
+    from nsdb_spark.streaming.subscribe import SubscriptionManager
+
+    sub = SubscriptionManager(engine)
+    srv, _ = http_api.serve(engine, subscription_manager=sub)
+    port = srv.server_address[1]
+    try:
+        _post(port, "/data", {
+            "metric": "live", "bit": {"timestamp": 1000, "value": 1.0,
+                                      "dimensions": {}, "tags": {"k": "a"}}})
+        historical = []
+
+        def broken(rows):
+            if not historical:
+                historical.append(rows)
+                return
+            raise RuntimeError("subscriber boom")
+
+        got = []
+        sub.subscribe("select * from live", broken)
+        sub.subscribe("select * from live", got.append)
+        code, body = _post(port, "/data", {
+            "metric": "live", "bit": {"timestamp": 2000, "value": 2.0,
+                                      "dimensions": {}, "tags": {"k": "b"}}})
+        assert code == 200 and body["status"] == "OK"
+        assert [[r["timestamp"] for r in p] for p in got[1:]] == [[2000]]
+        code, body = _post(port, "/query", {
+            "metric": "live", "queryString": "select * from live order by timestamp"})
+        assert [r["timestamp"] for r in body["records"]] == [1000, 2000]
+    finally:
+        srv.shutdown()
+
+
 def _get_with_body(port, path, payload):
     req = urllib.request.Request(
         f"http://127.0.0.1:{port}{path}",

@@ -7,9 +7,8 @@ from pyspark.sql import functions as F
 
 from nsdb_spark.compiler import TimeContext
 from nsdb_spark.model import Bit
+from nsdb_spark.sql import ast
 from nsdb_spark.streaming import SubscriptionManager, start_parquet_ingestion
-from nsdb_spark.streaming.subscribe import eval_expression
-from nsdb_spark.sql.parser import parse
 
 from fixtures import LONG_METRIC, load
 
@@ -123,20 +122,127 @@ def test_scheduler_logs_failed_tick_and_keeps_running(engine, caplog, monkeypatc
     assert failed and "tick boom" in str(failed[0].exc_info[1])
 
 
-def test_eval_expression_matches_compiler_semantics():
-    stmt = parse("select * from m where value >= 2 and (name like Fra$ or age is null)")
-    e = stmt.condition.expression
-    assert eval_expression(e, {"value": 3, "name": "Frank", "age": 1}, 0)
-    assert eval_expression(e, {"value": 3, "name": "Bill"}, 0)  # age absent
-    assert not eval_expression(e, {"value": 1, "name": "Frank", "age": 1}, 0)
-    assert not eval_expression(e, {"value": 3, "name": "Bill", "age": 1}, 0)
+def test_publish_predicate_matches_compiler_semantics(manager, engine):
+    """A plain subscription's WHERE keeps what the compiled predicate
+    keeps: an absent field is NULL, which only IS NULL matches."""
+    engine.insert_bits("default", "default", "m", [Bit(1, 3, {}, {"name": "X", "age": 1})])
+    cb = Collector()
+    manager.subscribe(
+        "select * from m where value >= 2 and (name like Fra$ or age is null)", cb
+    )
+    manager.publish("default", "default", "m", [
+        {"timestamp": 10, "value": 3, "name": "Frank", "age": 1},
+        {"timestamp": 11, "value": 3, "name": "Bill"},  # age absent
+        {"timestamp": 12, "value": 1, "name": "Frank", "age": 1},
+        {"timestamp": 13, "value": 3, "name": "Bill", "age": 1},
+    ])
+    assert [[r["timestamp"] for r in p] for p in cb.pushes[1:]] == [[10, 11]]
 
 
-def test_eval_relative_time():
-    stmt = parse("select * from m where timestamp >= now - 1 s")
-    e = stmt.condition.expression
-    assert eval_expression(e, {"timestamp": 9500}, 10_000)
-    assert not eval_expression(e, {"timestamp": 8000}, 10_000)
+def test_publish_relative_time_predicate(manager, engine):
+    """`now - 1 s` resolves against the publish time."""
+    engine.now_fn = lambda: 10_000
+    cb = Collector()
+    manager.subscribe("select * from people where timestamp >= now - 1 s", cb)
+    manager.publish("default", "default", "people", [
+        {"timestamp": 9500, "value": 1, "name": "X", "surname": "Y"},
+        {"timestamp": 8000, "value": 1, "name": "X", "surname": "Y"},
+    ])
+    assert [[r["timestamp"] for r in p] for p in cb.pushes[1:]] == [[9500]]
+
+
+def _same(live, hist) -> bool:
+    """Equal values of one Python type, NaN equal to NaN."""
+    if type(live) is not type(hist):
+        return False
+    return live == hist or live != live and hist != hist
+
+
+def test_live_predicates_match_historical_over_nan_and_null(manager, engine):
+    """A live push keeps the rows the historical read of the same
+    statement returns: Spark orders NaN above every number, and a NULL
+    tag fails every predicate but IS NULL."""
+    nan = float("nan")
+    rows = [
+        (10, nan, "Frank"), (11, 3.0, "Frank"), (12, 7.0, None),
+        (13, nan, None), (14, 5.0, "Bill"),
+    ]
+    engine.insert_bits("default", "default", "pn", [
+        Bit(t, v, {}, {} if n is None else {"name": n}) for t, v, n in rows
+    ])
+    published = [
+        {"timestamp": t, "value": v, **({} if n is None else {"name": n})}
+        for t, v, n in rows
+    ]
+    for where in ("value > 5", "value >= 5", "not value < 5",
+                  "name like Fr$", "name is null"):
+        cb = Collector()
+        uuid = manager.subscribe(f"select * from pn where {where}", cb)
+        manager.publish("default", "default", "pn", published)
+        manager.unsubscribe(uuid)
+        hist = sorted(r["timestamp"] for r in cb.pushes[0])
+        live = sorted(r["timestamp"] for p in cb.pushes[1:] for r in p)
+        assert hist and live == hist, where
+
+
+@pytest.mark.parametrize("value_type", ["DECIMAL", "BIGINT"])
+def test_live_temporal_buckets_match_historical(manager, engine, value_type):
+    """For every temporal aggregation, a closed live bucket carries the
+    value (and the Python type) of the historical row for the same
+    bucket: NaN in either arrival order, ordinary values and an empty
+    bucket (0 or 0.0, as the historical axis emits it)."""
+    nan = float("nan")
+    if value_type == "DECIMAL":
+        # (1000, 2000]: NaN then 3.0; (2000, 3000]: 3.0 then NaN;
+        # (3000, 4000] empty; (4000, 5000]: ordinary values
+        batches = [[(1500, nan)], [(1600, 3.0)], [(2500, 3.0)], [(2600, nan)],
+                   [(4200, 1.5), (4300, -2.0)], [(4400, 4.0)]]
+    else:
+        batches = [[(1500, 3)], [(1600, -4)], [(2500, 1 << 40)], [(2600, 7)],
+                   [(4200, 5), (4300, 5)], [(4400, -1)]]
+    metric = f"tb_{value_type.lower()}"
+    engine.warehouse.init_metric("default", "default", metric, 60_000)
+    engine.insert_bits("default", "default", metric, [
+        Bit(t, v, {}, {"name": "n"}) for b in batches for t, v in b
+    ])
+    engine.now_fn = lambda: 1000
+    wrong = []
+    for kind in sorted(ast.TEMPORAL_AGGREGATIONS):
+        agg = "count(distinct value)" if kind == "count_distinct" else f"{kind}(value)"
+        col = f"{kind}_value"
+        cb = Collector()
+        uuid = manager.subscribe(
+            f"select {agg} from {metric} group by interval 1 s", cb,
+            time_context=TimeContext(1000),
+        )
+        hist = {r["upper_bound"]: r[col] for r in cb.pushes[0]}
+        for b in batches:
+            manager.publish("default", "default", metric, [
+                {"timestamp": t, "value": v, "name": "n"} for t, v in b
+            ])
+        manager.tick(5000)
+        manager.unsubscribe(uuid)
+        live = {r["upper_bound"]: r[col] for p in cb.pushes[1:] for r in p}
+        assert sorted(live) == [2000, 3000, 4000, 5000]
+        wrong += [(kind, ub, v, hist[ub]) for ub, v in live.items() if not _same(v, hist[ub])]
+    assert wrong == []
+
+
+def test_temporal_bucket_holds_one_state(manager, engine):
+    """An open bucket holds one aggregate state however many rows reach
+    it, not the rows' values."""
+    cb = Collector()
+    engine.now_fn = lambda: 1000
+    quid = manager.subscribe(
+        "select count(*) from people group by interval 1 s", cb,
+        time_context=TimeContext(1000),
+    )
+    for i in range(1000):
+        manager.publish("default", "default", "people",
+                        [{"timestamp": 1001 + i % 999, "value": i, "name": "X", "surname": "Y"}])
+    assert manager.subs[quid].buckets == {2000: [1000]}
+    manager.tick(2100)
+    assert cb.pushes[-1][0]["count_value"] == 1000
 
 
 def test_structured_streaming_ingestion(engine, spark, tmp_path):
